@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR. A warmup pass at sf0.001 first runs every query so
@@ -7,30 +6,28 @@ import org.apache.spark.sql.SparkSession
   * (both are per-plan-shape caches that a long-lived cluster app would
   * have warm). */
 object Bench {
+  /** SPARK_GRAFT_CPUS as a positive core count (default 32). Any other
+    * value fails naming the variable: it sizes the session, and it names
+    * the per-core `bench_full_c<cpus>.json` table. */
+  def cpusFromEnv(): Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def parseCpus(raw: Option[String]): Int = raw match {
+    case None => 32
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS='$v' must be a positive integer core count"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions) // run under the library's own rules
-      // Default = cpus (the gate table); SPARK_GRAFT_SHUFFLE_PARTITIONS
-      // overrides for scale-attribution legs — "does a superlinear octave
-      // row linearize when partitions scale with the corpus, the way a
-      // real cluster would scale them?" (the ScaleSmokeMain experiment,
-      // available on the bench surface since r11).
+    val cpus = cpusFromEnv()
+    // SPARK_GRAFT_SHUFFLE_PARTITIONS overrides the per-core default for
+    // scale-attribution legs: does a superlinear octave row linearize
+    // when partitions scale with the corpus, the way a real cluster
+    // would scale them? (BASELINE.md "Round 11: Bench integrity".)
+    val spark = GraftSession.builder("graft-bench", cpus)
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Split multi-file tables file-per-task instead of packing them
-      // back into one split: the gate corpora are small enough that the
-      // default 128 MB packing collapses a 32-file table into ONE scan
-      // task, serializing every scan-bound per-row kernel (m04 measured
-      // 19x instead of ~4x at sf1.0). The production analog is simply
-      // "size maxPartitionBytes to the cluster", per SURVEY §5.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus.toString))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Deterministic name-sorted order for BOTH the warm-up and the timed
@@ -45,8 +42,17 @@ object Bench {
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => filter.forall(_.findFirstIn(n).isDefined) }
     val warmDir = "/root/testdata/sf0.001"
-    ordered.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
+    // A warm-up failure is not fatal (the timed pass reports the query on
+    // its own), but it is never silent: stderr, plus "warm_failed" in both
+    // JSON lines — a query that throws at sf0.001 reaches its timed reps
+    // with cold JIT/codegen caches, which taints its number.
+    val warmFailed = ordered.flatMap { case (name, fn) =>
+      try { fn(spark, warmDir).count(); None }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up $name failed: ${e.getClass.getName}: " +
+          s"${String.valueOf(e.getMessage).take(300)}")
+        Some(name)
+      }
     }
     // Three timed reps, report min: same query, same plan — min is the
     // machine-noise-robust steady-state capability (the first rep also
@@ -169,11 +175,13 @@ object Bench {
       // downstream tables can see exactly what was rejected. Only the
       // default multi-rep protocol opts in (REPS=1 big-SF sweeps keep
       // their one-pass semantics).
+      // A flagged row is recorded even when both extra reps throw.
       val times =
-        if (base.size >= 2 && reps >= 3 && base.max / base.min > 2.0)
-          base ++ (1 to 2).flatMap(_ => timedRep())
-        else base
-      if (times.size > base.size) noisyReps(name) = times
+        if (base.size >= 2 && reps >= 3 && base.max / base.min > 2.0) {
+          val all = base ++ (1 to 2).flatMap(_ => timedRep())
+          noisyReps(name) = all
+          all
+        } else base
       name -> (if (times.nonEmpty) times.min else -1.0)
     }
     // 3-decimal floats: the consumer captures only the TAIL of this
@@ -196,22 +204,21 @@ object Bench {
     val probeSamplesJson =
       s""","probe_samples":{"scan":${probeScanSamples.map(f3).mkString("[", ",", "]")},""" +
       s""""shuffle":${probeShufSamples.map(f3).mkString("[", ",", "]")}}"""
+    def entry(k: String, v: String): String = Json.quote(k) + ":" + v
+    def nameList(key: String, names: Seq[String]): String =
+      if (names.isEmpty) ""
+      else names.distinct.sorted.map(Json.quote).mkString(s",${Json.quote(key)}:[", ",", "]")
     val noisyJson =
       if (noisyReps.isEmpty) ""
-      else noisyReps.map { case (k, ts) =>
-        s"\"" + k + "\":" + ts.map(f3).mkString("[", ",", "]")
-      }.mkString(",\"noisy_reps\":{", ",", "}")
+      else noisyReps.map { case (k, ts) => entry(k, ts.map(f3).mkString("[", ",", "]")) }
+        .mkString(",\"noisy_reps\":{", ",", "}")
     val probes = s""""probe_pre":${probeJson(probePre)},"probe_post":${probeJson(probePost)}""" +
-      probeBand +
-      (if (predFailed.isEmpty) ""
-       else predFailed.distinct.sorted
-         .mkString(",\"pred_failed\":[\"", "\",\"", "\"]"))
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
+      probeBand + nameList("pred_failed", predFailed.toSeq) + nameList("warm_failed", warmFailed)
+    val qs = results.map { case (k, v) => entry(k, f3(v)) }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // Full line carries every raw probe sample; the compact tail line
     // below carries only the [min, median, max] band (tail-buffer budget).
-    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,$probes$probeSamplesJson$noisyJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,$probes$probeSamplesJson$noisyJson,"sf":${Json.quote(sfDir)}}"""
     println(line)
     // The stdout consumer captures only the last ~2000 chars of this
     // process's output, which truncates the ~220-entry map's HEAD — so
@@ -238,11 +245,11 @@ object Bench {
     // though the full line above arrives head-truncated. Slowest-first:
     // if only one slice survives, it should be the one worth reading.
     val slowest = results.sortBy(-_._2).iterator
-      .map { case (k, v) => s"\"" + k + "\":" + f3(v) }
+      .map { case (k, v) => entry(k, f3(v)) }
       .scanLeft(("", 0)) { case ((_, len), e) => (e, len + e.length + 1) }
       .drop(1).takeWhile(_._2 <= 1200).map(_._1).toSeq
     val compact = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${
-      slowest.mkString("{", ",", "}")},"n_queries":${results.size},"n_noisy":${noisyReps.size},$probes,"sf":"$sfDir"}"""
+      slowest.mkString("{", ",", "}")},"n_queries":${results.size},"n_noisy":${noisyReps.size},$probes,"sf":${Json.quote(sfDir)}}"""
     println(compact)
     spark.stop()
   }

@@ -67,7 +67,7 @@ class PlanCache(maxEntries: Int = 128) {
   /** The cached DataFrame for a parquet PATH (r14): a bare
     * `spark.read.parquet(p)` pays directory listing + footer schema
     * inference on EVERY call (~50–75 ms measured per table at sf0.1 —
-    * R14LoadProbeMain), which a metastore-backed deployment pays once
+    * OPTIMIZATION_r14.md §5), which a metastore-backed deployment pays once
     * at registration; this is that catalog seam for the path-addressed
     * testdata tables (the reference resolves every table through
     * andb/catalog the same way). Same contract as [[sql]]: the PLAN is

@@ -57,7 +57,8 @@ object Dedup {
     * (r9 verdict item 5: expose the knob as first-class profiles). Band
     * geometry is FIXED — 12 bands of 10 bits over two 63-bit hyperplane
     * words, probe Hamming ≤ 2 per band, the geometry the offline ROC
-    * sweep (LshProbeMain export mode, table in BASELINE.md) found
+    * sweep (BASELINE.md "Round 9: d05 retune — the measured geometry
+    * sweep") found
     * Pareto at every gate setting; profiles move the two knobs a user
     * actually trades on:
     *   - tGlobal: global 126-bit Hamming gate (None = no gate)
@@ -176,8 +177,7 @@ object Dedup {
     * stats, and verify), the df-capped cold-gram stream (df computed by a
     * count window on the join's own exchange), and per-doc hot-gram
     * counts for the no-false-drop prefilter. */
-  private def gramIndex(s: SparkSession, d: String,
-      ckptCold: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
+  private def gramIndex(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     val hs = Tables.documents(s, d)
       .select(col("doc_id"), shingleHashSet(col("text")).as("hs"))
       .localCheckpoint()
@@ -187,11 +187,14 @@ object Dedup {
     // each gram's df in place (gram sets are distinct per doc, so
     // occurrences = document frequency), and the filtered stream is
     // already partitioned for the join — no separate full-gram groupBy,
-    // no broadcast anti-join pass.
+    // no broadcast anti-join pass. The stream stays unmaterialized:
+    // checkpointing it measured ~1.8× WORSE on the ccLabels shape
+    // (OPTIMIZATION_r14.md §7) — the barrier serializes the prefilter
+    // pipeline, and the window's exchange is already reused by every
+    // consumer.
     val wGram = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-    val cold0 = ex.withColumn("df", count(lit(1)).over(wGram))
+    val cold = ex.withColumn("df", count(lit(1)).over(wGram))
       .filter(col("df") <= GramDfCap).drop("df")
-    val cold = if (ckptCold) cold0.localCheckpoint() else cold0
     // Per-doc hot-gram counts (n - cold-gram count) for the prefilter.
     val hotCnt = hs.select(col("doc_id"), size(col("hs")).as("n"))
       .join(cold.groupBy(col("doc_id")).agg(count(lit(1)).as("n_cold")), Seq("doc_id"), "left")
@@ -228,7 +231,8 @@ object Dedup {
     * side is broadcastable — yet at sf1.0 its compressed runtime size
     * sits exactly ON AQE's 10 MB broadcast boundary, and the executed
     * plan flipped BHJ↔SMJ between reps IN THE SAME JVM on identical
-    * data (JoinProbeMain, r13: BHJ/SMJ/BHJ across 3 reps — d04's r12
+    * data (BASELINE.md "Round 13: the d04 watch row CLOSED with a
+    * mechanism": BHJ/SMJ/BHJ across 3 reps — d04's r12
     * "1.43× regression" and d16's three rounds of allowlist churn were
     * this flip, not context). A shuffle join is the plan a real cluster
     * needs anyway; pinning it makes the plan deterministic at every SF.
@@ -241,26 +245,12 @@ object Dedup {
     * 3.70/3.82: statistically a tie inside the box's noise envelope, so
     * MERGE wins on scale posture (sort spills gracefully; no
     * per-partition hash-build memory bound to size) and on being
-    * Spark's own preference for fact-fact joins. GRAFT_POSTINGS_JOIN
-    * overrides for A/B legs only — the default IS the pin. Validated
-    * against Spark's join-hint set at load: an unresolvable hint is a
-    * WARNING Spark silently drops, reverting the join to exactly the
-    * AQE boundary coin the pin exists to remove (r13 advice) — a typo
-    * must fail the leg, not quietly unpin it. */
-  private[operators] val PostingsJoinHint = {
-    val allowed = Set("merge", "shuffle_hash", "broadcast", "shuffle_replicate_nl")
-    val v = sys.env.getOrElse("GRAFT_POSTINGS_JOIN", "merge")
-    require(allowed(v),
-      s"GRAFT_POSTINGS_JOIN='$v' is not a Spark join hint " +
-        s"(${allowed.mkString("/")}) — an unresolved hint would be " +
-        "silently ignored, un-pinning the postings join")
-    v
-  }
+    * Spark's own preference for fact-fact joins. */
+  private[operators] val PostingsJoinHint = "merge"
 
-  private def ngramPairs(s: SparkSession, d: String, jacNum: Int, jacDen: Int,
-      ckptCold: Boolean = false): DataFrame = {
+  private def ngramPairs(s: SparkSession, d: String, jacNum: Int, jacDen: Int): DataFrame = {
     val minJac = jacNum.toDouble / jacDen
-    val (hs, cold, hotCnt) = gramIndex(s, d, ckptCold)
+    val (hs, cold, hotCnt) = gramIndex(s, d)
     // Rename the join key on one side: a self-join on the shared lineage
     // ambiguously resolves a("h") === b("h") (Spark warns "trivially
     // true" and falls back to positional disambiguation — correct today,
@@ -299,12 +289,6 @@ object Dedup {
   private[operators] def ccLabels(s: SparkSession, d: String): DataFrame =
     Graph.minLabelPropagation(
       ngramPairs(s, d, 9, 10).select(col("a_id"), col("b_id")))
-
-  /** Test-only A/B hook for the r14 gramIndex cold-stream measurement
-    * (R14GramAbMain) — no behavior change at the default. */
-  private[graft] def probeNgramPairs(s: SparkSession, d: String,
-      jacNum: Int, jacDen: Int, ckptCold: Boolean): DataFrame =
-    ngramPairs(s, d, jacNum, jacDen, ckptCold)
 
   /** d12 core over any (doc_id, text) frame: per-doc duplicated-position
     * stats from positional 5-gram hashes. Positions collapse to
@@ -806,7 +790,7 @@ object Dedup {
     // a recall device, not a pruner — making the candidate stream Θ(n²)
     // (measured 144 s at sf1.0, 131× for 10× data). The retuned plan
     // (geometry swept offline over the all-pairs (xor, cos) export —
-    // LshProbeMain `export` mode; full ROC table in BASELINE.md):
+    // full ROC table in BASELINE.md "Round 9: d05 retune"):
     //
     //   1. TWO independent 63-bit hyperplane words per vector (seed
     //      offsets 0 / 63) — 126 bits total.

@@ -140,8 +140,7 @@ object Graph {
     * `cutEvery = 1` (two references per iteration → cut every round). */
   private[graft] def pageRankLoop(
       nodes: DataFrame, edges: DataFrame, iters: Int,
-      dangling: Boolean = true, cutEvery: Int = 1,
-      eagerCut: Boolean = false, fusedFixedCost: Boolean = true): DataFrame = {
+      dangling: Boolean = true, cutEvery: Int = 1): DataFrame = {
     val nodesC = nodes.localCheckpoint()
     val edgesC = edges.localCheckpoint()
     val deg = edgesC.groupBy(col("src")).agg(sum(col("w")).as("wdeg")).localCheckpoint()
@@ -149,99 +148,66 @@ object Graph {
     // re-paying an edges⋈deg shuffle inside every iteration (per-row
     // values are untouched; only where the join happens moves).
     val edgesW = edgesC.join(deg, "src").localCheckpoint()
-    if (fusedFixedCost) {
-      // r15 (verdict item 4): the loop family is scheduler-latency bound
-      // at gate SF (SF-invariant fixed cost, r14 adjudication), and two
-      // of the per-iteration jobs were LOOP-INVARIANT work re-planned
-      // every round: (a) the node-count aggregate + its crossJoin
-      // broadcast — n never changes, so it is counted ONCE on the
-      // already-materialized checkpoint and folded in as a literal
-      // (ConstantFolding evaluates 0.15/n with the identical IEEE
-      // division the per-row form used — bit-identical by construction);
-      // (b) the dangling-mass ANTI-JOIN against deg — whether a node has
-      // out-weight never changes, so the flag is attached to the node
-      // table once and the per-iteration dangling mass becomes a
-      // filter+sum over the checkpointed ranks, no join at all. Job
-      // count per iteration and bit-identity are both pinned by
-      // G01LoopAbMain (listener-counted jobs, collected-rank equality);
-      // `fusedFixedCost = false` keeps the r14 form for A/B legs.
-      val nVal = nodesC.count().toDouble
-      val nodesD =
-        if (dangling)
-          nodesC.join(deg.select(col("src").as("id"), lit(true).as("has_out")),
-              Seq("id"), "left")
-            .select(col("id"), coalesce(col("has_out"), lit(false)).as("has_out"))
-            .localCheckpoint()
-        else nodesC
-      var ranks =
-        if (dangling)
-          nodesD.select(col("id"), (lit(1.0) / lit(nVal)).as("r"), col("has_out"))
-            .localCheckpoint()
-        else
-          nodesD.select(col("id"), (lit(1.0) / lit(nVal)).as("r")).localCheckpoint()
-      for (i <- 1 to iters) {
-        val contribs = edgesW
-          .join(ranks.select(col("id").as("src"), col("r")), "src")
-          .groupBy(col("dst")).agg(sum(col("r") * col("w") / col("wdeg")).as("cin"))
-        ranks =
-          if (dangling) {
-            val dang = ranks.filter(!col("has_out"))
-              .agg(coalesce(sum(col("r")), lit(0.0)).as("dang"))
-            nodesD.crossJoin(dang)
-              .join(contribs, col("id") === col("dst"), "left")
-              .select(col("id"),
-                grid9(lit(0.15) / lit(nVal) +
-                  lit(0.85) * (coalesce(col("cin"), lit(0.0)) + col("dang") / lit(nVal))).as("r"),
-                col("has_out"))
-          } else {
-            nodesD
-              .join(contribs, col("id") === col("dst"), "left")
-              .select(col("id"),
-                grid9(lit(0.15) / lit(nVal) +
-                  lit(0.85) * coalesce(col("cin"), lit(0.0))).as("r"))
-          }
-        if (dangling || i % cutEvery == 0 || i == iters)
-          ranks = ranks.localCheckpoint(eager = eagerCut)
-      }
-      ranks.select(col("id"), col("r"))
-    } else {
-    val nn = nodesC.agg(count(lit(1)).cast("double").as("n"))
-    var ranks = nodesC.crossJoin(nn)
-      .select(col("id"), (lit(1.0) / col("n")).as("r")).localCheckpoint()
+    // r15 (commit 0b0bd51): the loop family is scheduler-latency bound
+    // at gate SF (SF-invariant fixed cost, r14 adjudication), and two
+    // of the per-iteration jobs were LOOP-INVARIANT work re-planned
+    // every round: (a) the node-count aggregate + its crossJoin
+    // broadcast — n never changes, so it is counted ONCE on the
+    // already-materialized checkpoint and folded in as a literal
+    // (ConstantFolding evaluates 0.15/n with the identical IEEE
+    // division the per-row form used — bit-identical by construction);
+    // (b) the dangling-mass ANTI-JOIN against deg — whether a node has
+    // out-weight never changes, so the flag is attached to the node
+    // table once and the per-iteration dangling mass becomes a
+    // filter+sum over the checkpointed ranks, no join at all. Values
+    // are gated by the r15 oracle parity (CORRECTNESS_r15.json /
+    // VERIFY_r15.json: g01 and t20 hash-exact against DuckDB).
+    val nVal = nodesC.count().toDouble
+    val nodesD =
+      if (dangling)
+        nodesC.join(deg.select(col("src").as("id"), lit(true).as("has_out")),
+            Seq("id"), "left")
+          .select(col("id"), coalesce(col("has_out"), lit(false)).as("has_out"))
+          .localCheckpoint()
+      else nodesC
+    var ranks =
+      if (dangling)
+        nodesD.select(col("id"), (lit(1.0) / lit(nVal)).as("r"), col("has_out"))
+          .localCheckpoint()
+      else
+        nodesD.select(col("id"), (lit(1.0) / lit(nVal)).as("r")).localCheckpoint()
     for (i <- 1 to iters) {
       val contribs = edgesW
-        .join(ranks.withColumnRenamed("id", "src"), "src")
+        .join(ranks.select(col("id").as("src"), col("r")), "src")
         .groupBy(col("dst")).agg(sum(col("r") * col("w") / col("wdeg")).as("cin"))
       ranks =
         if (dangling) {
-          val dang = ranks
-            .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left_anti")
+          val dang = ranks.filter(!col("has_out"))
             .agg(coalesce(sum(col("r")), lit(0.0)).as("dang"))
-          nodesC.crossJoin(nn).crossJoin(dang)
+          nodesD.crossJoin(dang)
             .join(contribs, col("id") === col("dst"), "left")
             .select(col("id"),
-              grid9(lit(0.15) / col("n") +
-                lit(0.85) * (coalesce(col("cin"), lit(0.0)) + col("dang") / col("n"))).as("r"))
+              grid9(lit(0.15) / lit(nVal) +
+                lit(0.85) * (coalesce(col("cin"), lit(0.0)) + col("dang") / lit(nVal))).as("r"),
+              col("has_out"))
         } else {
-          nodesC.crossJoin(nn)
+          nodesD
             .join(contribs, col("id") === col("dst"), "left")
             .select(col("id"),
-              grid9(lit(0.15) / col("n") +
+              grid9(lit(0.15) / lit(nVal) +
                 lit(0.85) * coalesce(col("cin"), lit(0.0))).as("r"))
         }
       if (dangling || i % cutEvery == 0 || i == iters)
-        // LAZY cut by default (r14): the cut still truncates lineage
-        // (the RDD is built at call time — under AQE its shuffle stages
-        // even materialize here) but skips the per-iteration RESULT
-        // materialization job, deferring it to the next consumer — the
-        // g07 half-step discipline applied loop-wide. A/B on g01
-        // (R14LoopAbMain, one-JVM interleaved, 7 reps at sf0.1): lazy
-        // min/median 2.59/2.85 vs eager 2.76/3.09 s, results
-        // bit-identical. eagerCut=true restores the r13 form for legs.
-        ranks = ranks.localCheckpoint(eager = eagerCut)
+        // LAZY cut (r14, commit fd1e1c0): the cut still truncates
+        // lineage (the RDD is built at call time — under AQE its shuffle
+        // stages even materialize here) but skips the per-iteration
+        // RESULT materialization job, deferring it to the next consumer.
+        // Measured on g01 (OPTIMIZATION_r14.md §8, one-JVM interleaved,
+        // 7 reps at sf0.1): lazy min/median 2.59/2.85 vs eager
+        // 2.76/3.09 s, results bit-identical.
+        ranks = ranks.localCheckpoint(eager = false)
     }
-    ranks
-    }
+    ranks.select(col("id"), col("r"))
   }
 
   /** The per-iteration (contrib, dangling, rank) CTE triples of
@@ -304,12 +270,10 @@ object Graph {
     * non-increasing and bounded below by m), so it only accelerates —
     * PropertySpec pins label-identity across chaseAfter ∈
     * {always, default, never}. */
-  /** Default adaptive-chase trigger round (see [[minLabelPropagation]]).
-    * GRAFT_CHASE_AFTER overrides for A/B legs (junk degrades to the
-    * default — an ops knob must not crash the job); 2 is the measured
-    * sweet spot on the r11 A/B table in BASELINE.md. */
-  private lazy val DefaultChaseAfter: Int =
-    sys.env.get("GRAFT_CHASE_AFTER").flatMap(_.toIntOption).getOrElse(2)
+  /** Default adaptive-chase trigger round (see [[minLabelPropagation]]):
+    * 2 is the measured sweet spot (BASELINE.md "Round 11: adaptive
+    * chase — the A/B table, trigger kept at 2"). */
+  private val DefaultChaseAfter: Int = 2
 
   /** Each propagation round supersedes the previous round's checkpoint —
     * without freeing it a deep graph caches one (or, with the chase, two)
@@ -415,13 +379,6 @@ object Graph {
     * g05's peel so a future change (e.g. a self-loop filter) can't
     * drift between consumers. localCheckpoint'd: every caller feeds it
     * to ≥2 downstream joins. */
-  /** Test-only accessors for the r11 g09 stage diagnostics
-    * (ProbeG09Stages) — no behavior, just visibility. */
-  private[graft] def probeUndirectedEdges(s: SparkSession, d: String): DataFrame =
-    undirectedEdges(s, d)
-  private[graft] def probeNeighborJaccard(s: SparkSession, d: String): DataFrame =
-    neighborJaccard(s, d)
-
   private def undirectedEdges(s: SparkSession, d: String): DataFrame =
     interactionEdges(s, d)
       .select(least(col("src"), col("dst")).as("u"),
@@ -443,8 +400,8 @@ object Graph {
     * semantics: the result is exact on the degree-≤cap subgraph.
     *
     * Measured cost knee (scale-smoke corpus = 40 replica copies of the
-    * sf0.1 interaction graph, local[8], warm first-count — G09CapProbeMain,
-    * also in BASELINE.md "g09 hub-cap sweep"):
+    * sf0.1 interaction graph, local[8], warm first-count — BASELINE.md
+    * "Round 6: g09 hub-cap sweep"):
     * {{{
     *   capDeg   co-neighbor pairs   wall (count)
     *     128        13.4M              49 s
@@ -458,9 +415,7 @@ object Graph {
     * targets (max degree ≫ cap), the cap is therefore the whole cost
     * model, exactly like d04's GramDfCap. */
   private[graft] def neighborJaccard(s: SparkSession, d: String,
-      capDeg: Long = 256L, minJac: Double = 0.5,
-      ckptCdeg: Boolean = false, degPrefilter: Boolean = false,
-      partitionedJoin: Boolean = true): DataFrame = {
+      capDeg: Long = 256L, minJac: Double = 0.5): DataFrame = {
     val und = undirectedEdges(s, d)
     val deg = degreesOf(und)
     val keep = deg.filter(col("dg") <= capDeg)
@@ -473,76 +428,49 @@ object Graph {
       .localCheckpoint()
     // capped-subgraph degrees (≠ deg: a kept node may lose capped
     // neighbors), one node-keyed aggregate. It feeds both the deg_a and
-    // deg_b joins; materializing it once was A/B-measured in r14
-    // (R14AbMain, one-JVM interleaved, 7 reps at sf0.1: ckpt min/median
-    // 5.16/6.30 vs 5.58/6.17) — a WASH inside noise, so the default
-    // keeps the r13 plan (no checkpoint; the duplicate aggregate rides
-    // a reused exchange and is node-sized). `ckptCdeg` stays as the
-    // A/B hook so the call is not re-litigated blind at larger SFs.
-    val cdeg0 = adj.select(col("u").as("x"))
+    // deg_b joins; materializing it once was A/B-measured a WASH inside
+    // noise (OPTIMIZATION_r14.md §6: ckpt min/median 5.16/6.30 vs
+    // 5.58/6.17 at sf0.1), so it stays unmaterialized — the duplicate
+    // aggregate rides a reused exchange and is node-sized.
+    val cdeg = adj.select(col("u").as("x"))
       .union(adj.select(col("v").as("x")))
       .groupBy(col("x")).agg(count(lit(1)).as("cd"))
-    val cdeg = if (ckptCdeg) cdeg0.localCheckpoint() else cdeg0
-    // r15 (verdict item 1): the r11 stage attribution pinned the PAIR
-    // ENUMERATION + AGGREGATE as g09's dominant cost — and the r15 probe
-    // found WHY it never parallelized (8→32 core ratio 0.95): the
-    // checkpointed adjacency holds the 1–2 partitions AQE coalesced its
-    // parent exchange to at gate SF, so the Σ_w C(d_w,2) candidate
-    // stream (12.25M rows from a 191k-row incidence at sf0.1) and its
-    // partial aggregate ran on 1–2 cores (probe: join 1.9 s, join+agg
-    // 6.3 s, nearly all single-task). The fix is partitioning, not a
-    // smaller stream: re-establish hash partitioning on w at the
-    // session's shuffle parallelism (scale-adaptive — the conf the
-    // cluster sizes, not a local constant) so the self-join and the
-    // partial aggregate fan out. At 100 TB the plan is unchanged (the
-    // SMJ needs this exact exchange anyway and reuses it for both
-    // sides); at gate SF it undoes the 1-partition collapse.
+    // r15 (commit 0b0bd51): the r11 stage attribution pinned the PAIR
+    // ENUMERATION + AGGREGATE as g09's dominant cost — and it never
+    // parallelized (8→32 core ratio 0.95): the checkpointed adjacency
+    // holds the 1–2 partitions AQE coalesced its parent exchange to at
+    // gate SF, so the Σ_w C(d_w,2) candidate stream (12.25M rows from a
+    // 191k-row incidence at sf0.1) and its partial aggregate ran on 1–2
+    // cores. The fix is partitioning, not a smaller stream:
+    // re-establish hash partitioning on w at the session's shuffle
+    // parallelism (scale-adaptive — the conf the cluster sizes, not a
+    // local constant) so the self-join and the partial aggregate fan
+    // out (5.38 → 1.53 s at sf0.1, VERDICT.md r15). At 100 TB the plan
+    // is unchanged (the SMJ needs this exact exchange anyway and reuses
+    // it for both sides); at gate SF it undoes the 1-partition collapse.
     //
-    // A DEGREE-ratio prefilter (jac ≤ min(cd)/max(cd), so jac ≥ t needs
-    // max·t ≤ min — lossless with +1 integer slack) was also built and
-    // A/B-measured this round (G09AbMain): value-identical at sf0.01
-    // (312 rows) but SLOWER at sf0.1 (min 6.17 vs 5.40 — the attach
-    // join + wider incidence rows cost more than the filter saves on
-    // this degree-homogeneous synthetic graph). REJECTED as default;
-    // `degPrefilter = true` keeps the hook for power-law corpora where
-    // the ratio condition actually bites.
+    // A lossless DEGREE-ratio prefilter (jac ≤ min(cd)/max(cd)) was also
+    // measured in r15 and rejected: value-identical at sf0.01 but SLOWER
+    // at sf0.1 (min 6.17 vs 5.40 s — the attach join + wider incidence
+    // rows cost more than the filter saves on this degree-homogeneous
+    // graph; VERDICT.md r15).
     val np = s.sessionState.conf.numShufflePartitions
-    def parted(df: DataFrame): DataFrame =
-      if (partitionedJoin) df.repartition(np, col("w")) else df
-    if (degPrefilter) {
-      val inc = parted(adj.select(col("u").as("w"), col("v").as("n"))
-        .union(adj.select(col("v").as("w"), col("u").as("n")))
-        .join(cdeg.select(col("x").as("n"), col("cd")), "n"))
-      val pairs = inc.as("l").join(inc.as("r"),
-          col("l.w") === col("r.w") && col("l.n") < col("r.n") &&
-            greatest(col("l.cd"), col("r.cd")) * lit(minJac) <=
-              least(col("l.cd"), col("r.cd")) + lit(1L))
-        .groupBy(col("l.n").as("a_id"), col("r.n").as("b_id"))
-        .agg(count(lit(1)).as("inter"),
-          max(col("l.cd")).as("deg_a"), max(col("r.cd")).as("deg_b"))
-      pairs
-        .withColumn("jac", grid9(col("inter").cast("double")
-          / (col("deg_a") + col("deg_b") - col("inter"))))
-        .filter(col("jac") >= minJac)
-        .select(col("a_id"), col("b_id"), col("inter"),
-          col("deg_a"), col("deg_b"), col("jac"))
-    } else {
-      // co-neighbor pairs via shared neighbor w: (w,a) ⋈ (w,b), a<b
-      val inc = parted(adj.select(col("u").as("w"), col("v").as("n"))
-        .union(adj.select(col("v").as("w"), col("u").as("n"))))
-      val pairs = inc.as("l").join(inc.as("r"),
-          col("l.w") === col("r.w") && col("l.n") < col("r.n"))
-        .groupBy(col("l.n").as("a_id"), col("r.n").as("b_id"))
-        .agg(count(lit(1)).as("inter"))
-      pairs
-        .join(cdeg.select(col("x").as("a_id"), col("cd").as("deg_a")), "a_id")
-        .join(cdeg.select(col("x").as("b_id"), col("cd").as("deg_b")), "b_id")
-        .withColumn("jac", grid9(col("inter").cast("double")
-          / (col("deg_a") + col("deg_b") - col("inter"))))
-        .filter(col("jac") >= minJac)
-        .select(col("a_id"), col("b_id"), col("inter"),
-          col("deg_a"), col("deg_b"), col("jac"))
-    }
+    // co-neighbor pairs via shared neighbor w: (w,a) ⋈ (w,b), a<b
+    val inc = adj.select(col("u").as("w"), col("v").as("n"))
+      .union(adj.select(col("v").as("w"), col("u").as("n")))
+      .repartition(np, col("w"))
+    val pairs = inc.as("l").join(inc.as("r"),
+        col("l.w") === col("r.w") && col("l.n") < col("r.n"))
+      .groupBy(col("l.n").as("a_id"), col("r.n").as("b_id"))
+      .agg(count(lit(1)).as("inter"))
+    pairs
+      .join(cdeg.select(col("x").as("a_id"), col("cd").as("deg_a")), "a_id")
+      .join(cdeg.select(col("x").as("b_id"), col("cd").as("deg_b")), "b_id")
+      .withColumn("jac", grid9(col("inter").cast("double")
+        / (col("deg_a") + col("deg_b") - col("inter"))))
+      .filter(col("jac") >= minJac)
+      .select(col("a_id"), col("b_id"), col("inter"),
+        col("deg_a"), col("deg_b"), col("jac"))
   }
 
   /** The oracle twin of [[undirectedEdges]]: `und(u, v)` from `edges0`. */

@@ -761,7 +761,7 @@ object TextAnalysis {
         // cutEvery=5 cuts the eager materialization jobs from ten to
         // two (safe: one ranks reference per iteration on this path, so
         // lineage between cuts grows linearly — measured best of the
-        // 2/5/10 sweep in T20ProbeMain).
+        // 2/5/10 sweep, commit 4a6ac04).
         Graph.pageRankLoop(nodes, edges, TrIters, dangling = false, cutEvery = 5)
           .orderBy(col("r").desc, col("id").asc).limit(30)
           .select(col("id").as("word"), col("r").as("textrank"))

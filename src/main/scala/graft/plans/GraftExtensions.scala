@@ -15,12 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
   * andb/catalog/function.py): SQL-callable vector functions plus a
   * logical-plan rewrite, injected without forking Spark.
   *
-  * Enable with:
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)            // programmatic, or
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * }}}
+  * [[graft.GraftSession]] installs it on every session it builds; a
+  * session built elsewhere enables it with
+  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

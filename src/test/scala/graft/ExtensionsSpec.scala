@@ -105,4 +105,20 @@ class ExtensionsSpec extends AnyFunSuite {
     val gotCoerced = coerced.select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(gotCoerced == expected, "Cast-path rewrite changed semantics")
   }
+
+  test("the GraftSession-built suite session carries the shared confs and rules") {
+    val conf = spark.sessionState.conf
+    assert(conf.sessionLocalTimeZone == "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "false")
+    assert(conf.filesMaxPartitionBytes == 4L * 1024 * 1024)
+    assert(conf.numShufflePartitions == 4)
+    assert(spark.sparkContext.master == "local[4]")
+    Seq("graft_cosine", "graft_dot", "graft_minhash", "graft_quality").foreach { f =>
+      assert(spark.catalog.functionExists(f), s"$f not injected")
+    }
+    val rules = spark.sessionState.optimizer.extendedOperatorOptimizationRules
+    assert(rules.contains(graft.plans.NormalizeConstantCosine))
+    assert(rules.contains(graft.plans.ThresholdedLevenshtein))
+  }
 }

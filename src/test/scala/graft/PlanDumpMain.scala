@@ -2,9 +2,9 @@ package graft
 
 /** r14 optimization-round instrument: dump the EXECUTED
   * `.explain("formatted")` plan of named queries to files — the
-  * before/after evidence the plans/r14/ deliverable pins. Uses the
-  * Bench session shape (local[32], shuffle.partitions=32,
-  * maxPartitionBytes=4m) so the dumped plan is the one the bench runs.
+  * before/after evidence the plans/r14/ deliverable pins. Builds the
+  * Bench session ([[GraftSession]] at SPARK_GRAFT_CPUS cores) so the
+  * dumped plan is the one the bench runs.
   *
   * Run: sbt "Test/runMain graft.PlanDumpMain <outDir> <suffix> <q1,q2,...> [sfDir]"
   * writes <outDir>/<query>_<suffix>.txt per query.
@@ -15,17 +15,7 @@ object PlanDumpMain {
     val suffix = args(1)
     val names = args(2).split(",").filter(_.nonEmpty).toSeq
     val dir = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("plan-dump", Bench.cpusFromEnv()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (n <- names) {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke: replicate the sf0.1 corpus REP× with replica-disjoint
@@ -24,20 +23,14 @@ object ScaleSmokeMain {
     val keep = args.drop(1).contains("keep")
     val nosplit = args.drop(1).contains("nosplit")
     val only = args.drop(1).filterNot(a => a == "keep" || a == "nosplit")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("scale-smoke")
-      .withExtensions(new graft.plans.GraftExtensions)
-      // Default 32 matches every historical table; SMOKE_SHUFFLE_PARTITIONS
-      // exists for the spill-attribution experiments (does a superlinear
-      // doubling row linearize when partitions scale with the corpus, the
-      // way a real cluster would scale them?).
+    // Default 32 shuffle partitions matches every historical table;
+    // SMOKE_SHUFFLE_PARTITIONS exists for the spill-attribution
+    // experiments (does a superlinear doubling row linearize when
+    // partitions scale with the corpus, the way a real cluster would
+    // scale them?).
+    val spark = GraftSession.builder("scale-smoke", 8)
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SMOKE_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -102,14 +102,8 @@ object Sf1Gen {
     val rep = args.headOption.map(_.toInt).getOrElse(10)
     val src = "/root/testdata/sf0.1"
     val out = args.drop(1).headOption.getOrElse("/tmp/graft_sf1.0")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .appName("sf1-gen")
+    val spark = GraftSession.builder("sf1-gen", 16)
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val reps = spark.range(rep).select(col("id").cast("long").as("rep"))

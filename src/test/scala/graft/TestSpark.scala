@@ -2,20 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole suite — built WITH GraftExtensions so
-  * every spec runs under the injected functions + optimizer rule (which
-  * must be semantics-preserving; ExtensionsSpec asserts they fire). */
+/** One shared session for the whole suite — built by [[GraftSession]], so
+  * every spec runs under the same confs as the mains and under the
+  * injected functions + optimizer rule (which must be
+  * semantics-preserving; ExtensionsSpec asserts they fire). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder("graft-test", 4).getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
 }

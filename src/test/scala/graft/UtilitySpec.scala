@@ -113,4 +113,22 @@ class UtilitySpec extends AnyFunSuite {
     assert(Ddl.drop(spark, "lineitem"))
     assert(Ddl.indexHint(Seq("l_shipdate")).contains("sortWithinPartitions"))
   }
+
+  test("Json.quote escapes quotes, backslashes and control characters") {
+    val raw = "a\"b\\c\u0001d\te\nf"
+    val quoted = Json.quote(raw)
+    assert(quoted == "\"a\\\"b\\\\c\\u0001d\\te\\nf\"")
+    // and a real JSON parser reads it back to the original string
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(quoted).asText == raw)
+  }
+
+  test("Bench parses SPARK_GRAFT_CPUS as a positive core count") {
+    assert(Bench.parseCpus(None) == 32)
+    assert(Bench.parseCpus(Some(" 4 ")) == 4)
+    Seq("*", "0", "-2", "four", "").foreach { bad =>
+      val e = intercept[IllegalArgumentException](Bench.parseCpus(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"))
+    }
+  }
 }
