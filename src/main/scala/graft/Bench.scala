@@ -164,24 +164,13 @@ object Bench {
           None
         }
       }
-      val base = (1 to reps).flatMap(_ => timedRep())
-      // Per-query noise rejection (r15, verdict item 3): min-of-3 cannot
-      // reject this box's single-row 4–12× spikes (r14 c32 leg: d03
-      // 2.597 s vs 0.207 same-code c8; d01/d04/d08 same pattern). A row
-      // whose rep spread exceeds 2× gets two EXTRA reps and reports the
-      // min of all — the min is still the same statistic, computed on a
-      // sample robust to one or two co-scheduled-box blowouts. Flagged
-      // rows land in the JSON ("noisy_reps") with every raw rep time so
-      // downstream tables can see exactly what was rejected. Only the
-      // default multi-rep protocol opts in (REPS=1 big-SF sweeps keep
-      // their one-pass semantics).
-      // A flagged row is recorded even when both extra reps throw.
-      val times =
-        if (base.size >= 2 && reps >= 3 && base.max / base.min > 2.0) {
-          val all = base ++ (1 to 2).flatMap(_ => timedRep())
-          noisyReps(name) = all
-          all
-        } else base
+      val times = (1 to reps).flatMap(_ => timedRep())
+      // Every row reports the min of the same `reps` reps. A row whose
+      // rep spread exceeds 2× (single-row 4–12× spikes on a shared host,
+      // r14 c32 leg) lands in the JSON ("noisy_reps") with every raw rep
+      // time, so downstream tables can see which mins came from a noisy
+      // sample.
+      if (times.size >= 2 && times.max / times.min > 2.0) noisyReps(name) = times
       name -> (if (times.nonEmpty) times.min else -1.0)
     }
     // 3-decimal floats: the consumer captures only the TAIL of this

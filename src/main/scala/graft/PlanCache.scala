@@ -50,19 +50,8 @@ class PlanCache(maxEntries: Int = 128) {
     * every other session's cache hits — that would be the cache
     * blocking the very work it amortizes. A racing duplicate build is
     * possible and harmless (last put wins). */
-  def sql(spark: SparkSession, text: String): DataFrame = {
-    val key = Key(spark, spark.catalog.currentDatabase, text)
-    synchronized {
-      val cached = lru.get(key)
-      if (cached != null) { hitCount += 1; return cached }
-    }
-    val df = spark.sql(text)
-    synchronized {
-      val cached = lru.get(key)
-      if (cached != null) { hitCount += 1; cached }
-      else { missCount += 1; lru.put(key, df); df }
-    }
-  }
+  def sql(spark: SparkSession, text: String): DataFrame =
+    lookup(Key(spark, spark.catalog.currentDatabase, text), spark.sql(text))
 
   /** The cached DataFrame for a parquet PATH (r14): a bare
     * `spark.read.parquet(p)` pays directory listing + footer schema
@@ -77,13 +66,17 @@ class PlanCache(maxEntries: Int = 128) {
     * [[invalidate]]d (the repo's generators write corpora before any
     * session reads them, and the managed-table paths never route
     * through this). */
-  def path(spark: SparkSession, p: String): DataFrame = {
-    val key = Key(spark, "", "path:" + p)
+  def path(spark: SparkSession, p: String): DataFrame =
+    lookup(Key(spark, "", "path:" + p), spark.read.parquet(p))
+
+  /** The double-checked LRU lookup behind [[sql]] and [[path]]: `build`
+    * runs outside the lock, only on a miss. */
+  private def lookup(key: Key, build: => DataFrame): DataFrame = {
     synchronized {
       val cached = lru.get(key)
       if (cached != null) { hitCount += 1; return cached }
     }
-    val df = spark.read.parquet(p)
+    val df = build
     synchronized {
       val cached = lru.get(key)
       if (cached != null) { hitCount += 1; cached }

@@ -53,45 +53,18 @@ object Dedup {
     * dups, which d01/p01's exact pass already catches). */
   private val GramDfCap = 1000
 
-  /** Named recall/compute profile for d05/d26's embedding near-dup rule
-    * (r9 verdict item 5: expose the knob as first-class profiles). Band
-    * geometry is FIXED — 12 bands of 10 bits over two 63-bit hyperplane
-    * words, probe Hamming ≤ 2 per band, the geometry the offline ROC
-    * sweep (BASELINE.md "Round 9: d05 retune — the measured geometry
-    * sweep") found
-    * Pareto at every gate setting; profiles move the two knobs a user
-    * actually trades on:
-    *   - tGlobal: global 126-bit Hamming gate (None = no gate)
-    *   - minCos:  exact-cosine verify threshold
-    * Shipped numbers at sf0.1 (d26 keeps the REGISTERED profile's
-    * recall standing as an oracle-checked row; per-profile ROC rows in
-    * BASELINE.md):
-    *   shipped      gate ≤50, cos ≥0.45 — candidates 4.6% of pairs, recall 90.3%
-    *   high_recall  no gate,  cos ≥0.45 — candidates 49.9%, recall ~98%
-    *   production   gate ≤50, cos ≥0.90 — near-dup threshold; the rule
-    *                retains essentially every ≥0.9 pair (expected
-    *                Hamming at cos 0.9 ≈ 18/126 bits, ~8σ inside the
-    *                gate), so recall ~1 while the verify set collapses
-    * Selection: GRAFT_D05_PROFILE env, read ONCE at registration —
-    * query fn and oracle SQL are generated from the same values, so
-    * they cannot diverge within a Verify run. */
-  private[operators] final case class EmbDedupProfile(
-      name: String, tGlobal: Option[Int], minCos: Double)
-  private[operators] val EmbDedupProfiles: Map[String, EmbDedupProfile] = Map(
-    "shipped" -> EmbDedupProfile("shipped", Some(50), 0.45),
-    "high_recall" -> EmbDedupProfile("high_recall", None, 0.45),
-    "production" -> EmbDedupProfile("production", Some(50), 0.90))
-  // lazy (r11, driver advice): a bad env value must surface as this
-  // IllegalArgumentException at first use — an eager val would throw
-  // inside the object initializer, so the user would see
-  // ExceptionInInitializerError once and NoClassDefFoundError on every
-  // later touch of Dedup, burying the message. A lazy val in an object
-  // re-throws the ORIGINAL exception on each access instead.
-  private[operators] lazy val embProfile: EmbDedupProfile = {
-    val n = sys.env.getOrElse("GRAFT_D05_PROFILE", "shipped")
-    EmbDedupProfiles.getOrElse(n, throw new IllegalArgumentException(
-      s"unknown GRAFT_D05_PROFILE=$n — known: ${EmbDedupProfiles.keys.mkString(", ")}"))
-  }
+  /** d05/d26's embedding near-dup rule. Band geometry is FIXED — 12
+    * bands of 10 bits over two 63-bit hyperplane words, probe Hamming ≤ 2
+    * per band, the geometry the offline ROC sweep (BASELINE.md "Round 9:
+    * d05 retune — the measured geometry sweep") found Pareto at every
+    * gate setting. The two knobs a user trades on are fixed at the
+    * shipped values: a global 126-bit Hamming gate ≤ 50 and an
+    * exact-cosine verify threshold ≥ 0.45 — candidates 4.6% of pairs,
+    * recall 90.3% at sf0.1 (d26 keeps that recall standing as an
+    * oracle-checked row). Query fns and oracle SQL read the same
+    * constants, so they cannot diverge. */
+  private val EmbGlobalGate = 50
+  private val EmbMinCos = 0.45
 
   /** Stored-side size gate for d05's band join (r9 advice item 1): the
     * broadcast hint is right while the 12-rows/vector band table fits
@@ -99,11 +72,7 @@ object Dedup {
     * must DEGRADE to the shuffled (band, bv) equi-join, not fail on
     * broadcast limits. The count comes free from the memoized corpus
     * fingerprint ("<n>_<Σid>_<Σemb>") — no extra job. */
-  // lazy for the same reason as [[embProfile]]: junk in the env var
-  // must raise a readable NumberFormatException at first use, not
-  // poison the whole object.
-  private lazy val EmbBroadcastMaxVecs =
-    sys.env.getOrElse("GRAFT_D05_BROADCAST_MAX_VECS", "10000000").toLong
+  private val EmbBroadcastMaxVecs = 10000000L
 
   /** Shared DuckDB CTE computing exact pairwise Jaccard via an inverted
     * shingle index (the string-shingle mirror of the Spark plan shape).
@@ -781,11 +750,9 @@ object Dedup {
               WHERE s.doc_id >= 5 GROUP BY s.doc_id""")),
 
     // ---- d05: embedding-cosine near-dup pairs -------------------------
-    // Banded hyperplane-LSH candidates + an optional map-side GLOBAL
-    // Hamming gate + exact-cosine verify, under a NAMED recall/compute
-    // profile ([[EmbDedupProfile]], round-10: the r9 verdict asked for
-    // the knob to be a first-class parameter, not a sweep-harness
-    // afterthought). Round-9 retune (the round-8 verdict's weak
+    // Banded hyperplane-LSH candidates + a map-side GLOBAL
+    // Hamming gate + exact-cosine verify ([[EmbGlobalGate]],
+    // [[EmbMinCos]]). Round-9 retune (the round-8 verdict's weak
     // flag): the old 3-bit×21 geometry collided ~94% of RANDOM pairs —
     // a recall device, not a pruner — making the candidate stream Θ(n²)
     // (measured 144 s at sf1.0, 131× for 10× data). The retuned plan
@@ -818,16 +785,15 @@ object Dedup {
     ("d05_dedup_embedding",
       (s, d) => {
         val bandBits = 10; val bpw = 6; val probeH = 2
-        val prof = embProfile
         val e = Tables.embeddings(s, d)
         val sigs = e.select(col("vec_id"),
           hyperplaneSig(col("embedding"), 63).as("s1"),
           hyperplaneSig(col("embedding"), 63, 63).as("s2"))
-        // Contract (profile `prof.name`): (∃ band within Hamming ≤2)
-        // [∧ (global Hamming ≤ tGlobal)] ∧ (cos ≥ minCos). The oracle
-        // re-derives the SAME rule from the exported signature words
-        // (the d03 pattern); recall < 1 BY DESIGN and is measured,
-        // oracle-checked, in d26 under the same profile.
+        // Contract: (∃ band within Hamming ≤2) ∧ (global Hamming ≤
+        // EmbGlobalGate) ∧ (cos ≥ EmbMinCos). The oracle re-derives the
+        // SAME rule from the exported signature words (the d03
+        // pattern); recall < 1 BY DESIGN and is measured,
+        // oracle-checked, in d26 under the same rule.
         val corpusKey = OracleExport.embKeyFor(e, d)
         OracleExport.writeOnce(sigs, OracleExport.EmbLshSigsPath, corpusKey)
         val banded = sigs.select(col("vec_id"), col("s1"), col("s2"),
@@ -874,13 +840,11 @@ object Dedup {
             col("x.band").as("band"),
             col("x.s1").bitwiseXOR(col("y.s1")).as("x1"),
             col("x.s2").bitwiseXOR(col("y.s2")).as("x2"))
-        // Global gate FIRST (when the profile has one): two popcounts
-        // kill ~93% of the fan before the 12-branch first-band dedup
-        // chain runs (predicate order inside the conjunction is
-        // evaluation order).
-        val gated = prof.tGlobal.fold(candsRaw)(t =>
-          candsRaw.filter(bit_count(col("x1")) + bit_count(col("x2")) <= t))
-        val cands = gated
+        // Global gate FIRST: two popcounts kill ~93% of the fan before
+        // the 12-branch first-band dedup chain runs (predicate order
+        // inside the conjunction is evaluation order).
+        val cands = candsRaw
+          .filter(bit_count(col("x1")) + bit_count(col("x2")) <= EmbGlobalGate)
           .filter(col("band") ===
             Lsh.firstBandWithinH(col("x1"), col("x2"), bandBits, bpw, probeH))
           .select(col("a_id"), col("b_id"))
@@ -889,20 +853,16 @@ object Dedup {
           .join(emb.select(col("vec_id").as("a_id"), col("embedding").as("ea")), "a_id")
           .join(emb.select(col("vec_id").as("b_id"), col("embedding").as("eb")), "b_id")
           .select(col("a_id"), col("b_id"), cosine(col("ea"), col("eb")).as("cos_sim"))
-          .filter(col("cos_sim") >= prof.minCos)
+          .filter(col("cos_sim") >= EmbMinCos)
       },
       // Oracle evaluation ORDER is inverted relative to the engine
       // (cosine first, signature rule second) because that is the order
       // DuckDB can afford: re-deriving candidates via the probe join
       // would materialize ~650× more rows than the exact-cosine set.
-      // Same result set either way: rule ∩ (cos ≥ embProfile.minCos)
-      // under the registered profile's gate — membership checked per
-      // qualifying pair from the exported signature words.
-      Some {
-        val gate = embProfile.tGlobal.map(t =>
-          s"bit_count(xor(sa.s1, sb.s1)) + bit_count(xor(sa.s2, sb.s2)) <= $t AND ")
-          .getOrElse("")
-        s"""WITH sigs AS MATERIALIZED (
+      // Same result set either way: rule ∩ (cos ≥ EmbMinCos) —
+      // membership checked per qualifying pair from the exported
+      // signature words.
+      Some(s"""WITH sigs AS MATERIALIZED (
                  SELECT vec_id, s1, s2
                  FROM ${OracleExport.readSql(OracleExport.EmbLshSigsPath)}
                  WHERE corpus_key = ${OracleExport.embKeySql}),
@@ -910,16 +870,15 @@ object Dedup {
                  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
                         list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) AS cos_sim
                  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-                 WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= ${embProfile.minCos})
+                 WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= $EmbMinCos)
                SELECT h.a_id, h.b_id, h.cos_sim
                FROM hp h
                JOIN sigs sa ON sa.vec_id = h.a_id
                JOIN sigs sb ON sb.vec_id = h.b_id
-               WHERE $gate(len(list_filter(range(0, 6),
+               WHERE bit_count(xor(sa.s1, sb.s1)) + bit_count(xor(sa.s2, sb.s2)) <= $EmbGlobalGate AND (len(list_filter(range(0, 6),
                         i -> bit_count((xor(sa.s1, sb.s1) >> (i * 10)) & 1023) <= 2)) > 0
                    OR len(list_filter(range(0, 6),
-                        i -> bit_count((xor(sa.s2, sb.s2) >> (i * 10)) & 1023) <= 2)) > 0)"""
-      }),
+                        i -> bit_count((xor(sa.s2, sb.s2) >> (i * 10)) & 1023) <= 2)) > 0)""")),
 
     // ---- d11: fuzzy near-dup via bounded edit distance -----------------
     // Levenshtein ≤ k over short documents — the title/URL/snippet fuzzy-
@@ -1741,10 +1700,9 @@ object Dedup {
               ORDER BY span_len DESC, doc_a, doc_b, pos_a, pos_b""")),
 
     // ---- d26: embedding-dedup candidate eval (precision/recall) --------
-    // d21's shape for d05: how good is the REGISTERED profile's
-    // signature rule ([[embProfile]] — band probe, optional global
-    // gate) against the exact ≥minCos cosine truth? Whichever profile
-    // GRAFT_D05_PROFILE selects is the one this row oracle-checks. d21 can afford the full exact truth (its gram space
+    // d21's shape for d05: how good is d05's signature rule (band
+    // probe ∧ global gate, [[EmbGlobalGate]]) against the exact
+    // ≥[[EmbMinCos]] cosine truth? d21 can afford the full exact truth (its gram space
     // is df-capped); here the exact truth IS the quadratic job d05
     // exists to avoid, so the eval runs on a DETERMINISTIC BOUNDED
     // SAMPLE: the 2,000 vectors with the smallest md5(vec_id) (q81's
@@ -1759,7 +1717,6 @@ object Dedup {
     ("d26_embdedup_eval",
       (s, d) => {
         val bandBits = 10; val bpw = 6; val probeH = 2
-        val prof = embProfile
         val e = Tables.embeddings(s, d)
         val sigs = e.select(col("vec_id"), col("embedding"),
           hyperplaneSig(col("embedding"), 63).as("s1"),
@@ -1782,12 +1739,11 @@ object Dedup {
         val bandHit = Lsh.firstBandWithinH(
           col("sa1").bitwiseXOR(col("sb1")),
           col("sa2").bitwiseXOR(col("sb2")), bandBits, bpw, probeH) >= 0
-        val candRule = prof.tGlobal.fold(bandHit)(t =>
-          bit_count(col("sa1").bitwiseXOR(col("sb1")))
-            + bit_count(col("sa2").bitwiseXOR(col("sb2"))) <= t && bandHit)
+        val candRule = bit_count(col("sa1").bitwiseXOR(col("sb1"))) +
+          bit_count(col("sa2").bitwiseXOR(col("sb2"))) <= EmbGlobalGate && bandHit
         val pairs = a.join(broadcast(b), col("a_id") < col("b_id"))
           .select(
-            (cosine(col("ea"), col("eb")) >= prof.minCos).as("is_true"),
+            (cosine(col("ea"), col("eb")) >= EmbMinCos).as("is_true"),
             candRule.as("is_cand"))
         pairs.agg(
             count(when(col("is_true"), 1)).as("n_true_pairs"),
@@ -1810,11 +1766,9 @@ object Dedup {
                  FROM embeddings e JOIN sigs s USING (vec_id)
                  ORDER BY md5(CAST(e.vec_id AS VARCHAR)) LIMIT 2000),
                pr AS MATERIALIZED (
-                 SELECT list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= ${embProfile.minCos}
+                 SELECT list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= $EmbMinCos
                           AS is_true,
-                        (${embProfile.tGlobal.map(t =>
-                           s"bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) <= $t AND ")
-                           .getOrElse("")}(len(list_filter(range(0, 6),
+                        (bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) <= $EmbGlobalGate AND (len(list_filter(range(0, 6),
                                 i -> bit_count((xor(a.s1, b.s1) >> (i * 10)) & 1023) <= 2)) > 0
                            OR len(list_filter(range(0, 6),
                                 i -> bit_count((xor(a.s2, b.s2) >> (i * 10)) & 1023) <= 2)) > 0))

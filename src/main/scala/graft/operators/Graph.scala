@@ -275,17 +275,6 @@ object Graph {
     * chase — the A/B table, trigger kept at 2"). */
   private val DefaultChaseAfter: Int = 2
 
-  /** Each propagation round supersedes the previous round's checkpoint —
-    * without freeing it a deep graph caches one (or, with the chase, two)
-    * full label tables PER ROUND, linear memory growth the fixpoint never
-    * reads again. Safe because the new round's checkpoint is already
-    * materialized (localCheckpoint is eager) before the old one is
-    * dropped, so no live plan can recompute through the truncated
-    * lineage. Shared helper: [[graft.unpersistCheckpoint]] (r13 — the
-    * fold-back path needed the same discipline). */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    graft.unpersistCheckpoint(df)
-
   private[graft] def minLabelPropagation(
       edges: DataFrame, maxIter: Int = 50,
       chaseAfter: Int = DefaultChaseAfter): DataFrame = {
@@ -316,7 +305,13 @@ object Graph {
       // are unpersisted, or its lineage-truncated read would fail.
       val next = step.localCheckpoint(eager = false)
       changed = next.filter(col("label") =!= col("old")).count()
-      unpersistCheckpoint(labels) // previous round's table, superseded by next
+      // Each round supersedes the previous round's checkpoint — without
+      // freeing it a deep graph caches one (or, with the chase, two) full
+      // label tables PER ROUND, linear memory growth the fixpoint never
+      // reads again. Safe because the superseding checkpoint is
+      // materialized before the old one is dropped, so no live plan
+      // recomputes through the truncated lineage.
+      graft.unpersistCheckpoint(labels) // previous round's table, superseded by next
       labels = next.select(col("doc_id"), col("label"))
       iter += 1
       if (changed > 0 && iter >= chaseAfter) {
@@ -336,7 +331,7 @@ object Graph {
               least(col("label"), coalesce(col("lv"), col("label"))).as("label"))
         }
         val chasedCp = chased.localCheckpoint()
-        unpersistCheckpoint(labels) // next's checkpoint, superseded by the chase
+        graft.unpersistCheckpoint(labels) // next's checkpoint, superseded by the chase
         labels = chasedCp
       }
     }

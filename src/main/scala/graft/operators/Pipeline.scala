@@ -1184,63 +1184,17 @@ object Pipeline {
       .withColumn("logw", col("logw_micro").cast("double") / 1000000)
   }
 
-  /** The DSIR model build shared by the oracle-contract md5 path and
-    * the production xxhash64 twin: gram stream → hashed buckets →
-    * smoothed micronat log-ratio LUT, collected once (≤ DsirBuckets
-    * rows — bounded driver state, never corpus-proportional). */
-  private def buildDsirTable(docs: DataFrame,
-      bucket: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Array[Long] = {
-    val model = dsirGrams(docs).select(col("lang"), explode(col("gs")).as("gram"))
-      .select(col("lang"), bucket(col("gram")).as("bucket"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("cr"),
-        count(when(col("lang") === "en", 1)).as("ct"))
-    val tot = model.agg(sum(col("cr")).as("nr"), sum(col("ct")).as("nt"))
-    val lrm = model.crossJoin(broadcast(tot))
-      .select(col("bucket"),
-        floor((log((col("ct") + 0.5) / (col("nt") + 4096.0)) -
-          log((col("cr") + 0.5) / (col("nr") + 4096.0))) * 1000000 + 0.5)
-          .cast("long").as("lrm"))
-    val table = Array.fill[Long](DsirBuckets)(0L)
-    lrm.collect().foreach(r => table(r.getInt(0)) = r.getLong(1))
-    table
-  }
-
-  /** p19's PRODUCTION-hash twin (round-7 watch item): identical model
-    * shape — unigram+bigram stream, 8192 buckets, smoothed micronat
-    * log-ratio LUT, one scan-fused scoring pass — but bucketed by the
-    * engine-native xxhash64 kernel instead of md5. The md5 form stays
-    * the REGISTERED operator because md5 IS the cross-engine oracle
-    * contract (DuckDB recomputes the buckets independently); a
-    * deployment that doesn't need an external referee should score
-    * with this path — same LUT discipline, ~an order of magnitude
-    * less per-gram hash work. NewOpsSpec pins score-ordering
-    * agreement between the two paths on the corpus. */
-  private[graft] def dsirBucketFast(g: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    pmod(xxhash64(g), lit(DsirBuckets.toLong)).cast("int")
-
-  private[graft] def dsirWeightsFast(docs: DataFrame): DataFrame = {
-    val table = buildDsirTable(docs, dsirBucketFast)
-    val lut = typedLit(table.toSeq)
-    dsirGrams(docs).select(col("doc_id"),
-        size(col("gs")).cast("long").as("n_grams"),
-        aggregate(
-          transform(col("gs"), gm => element_at(lut, dsirBucketFast(gm) + 1)),
-          lit(0L), (a, v) => a + v).as("logw_micro"))
-      .withColumn("logw", col("logw_micro").cast("double") / 1000000)
-  }
-
   /** p19's registered form, fused to ONE gram+md5 pass (r14): the
     * split/bigram construction and the md5 bucket hash are the
-    * operator's dominant cost, and the [[buildDsirTable]]+[[dsirScore]]
-    * composition ran that kernel over the whole corpus TWICE — once to
-    * build the model, once to score against it. Here the per-doc
+    * operator's dominant cost, and a model build followed by
+    * [[dsirScore]] runs that kernel over the whole corpus TWICE — once
+    * to build the model, once to score against it. Here the per-doc
     * BUCKET ARRAY (ints — the md5 pass's entire output) is
     * materialized once (localCheckpoint — the d02/d04
     * kernel-materialization pattern); the model build explodes the
-    * checkpointed int arrays (identical bucket multiset and identical
-    * log-ratio expression order to [[buildDsirTable]], so the micronat
-    * LUT is bit-equal) and the scoring pass keeps its PLAN-GATED
+    * checkpointed int arrays (the bucket multiset and log-ratio
+    * expression order of a build over the text, so the micronat LUT
+    * is bit-equal) and the scoring pass keeps its PLAN-GATED
     * map-side shape (PlanShapeSpec: no exchange, no join — the scored
     * corpus never shuffles to apply a fixed-size model), folding the
     * LUT literal over the same arrays instead of re-hashing the text.

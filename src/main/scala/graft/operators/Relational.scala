@@ -128,7 +128,8 @@ object Relational {
         .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("r_name"), col("n_name"))
         .agg(count(lit(1)).as("n_cust"), sum(col("c_acctbal")).as("total_bal")),
-      Some("""SELECT r_name, n_name, count(*) AS n_cust, sum(c_acctbal) AS total_bal
+      Some("""SELECT /*+ BROADCAST(nation), BROADCAST(region) */
+                     r_name, n_name, count(*) AS n_cust, sum(c_acctbal) AS total_bal
               FROM customer JOIN nation ON c_nationkey = n_nationkey
                             JOIN region ON n_regionkey = r_regionkey
               GROUP BY r_name, n_name""")),
@@ -242,7 +243,7 @@ object Relational {
                      CASE WHEN o_totalprice >= 400000 THEN 'high'
                           WHEN o_totalprice >= 150000 THEN 'mid'
                           ELSE 'low' END AS bucket,
-                     'O' || CAST(o_orderkey AS VARCHAR) AS okey_str,
+                     'O' || CAST(o_orderkey AS STRING) AS okey_str,
                      CAST(FLOOR(o_totalprice) AS BIGINT) AS floor_price,
                      o_orderkey % 7 AS key_mod
               FROM orders""")),
@@ -329,7 +330,8 @@ object Relational {
           && col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
         .groupBy(col("n_name"))
         .agg(cents(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("revenue")),
-      Some("""SELECT n_name,
+      Some("""SELECT /*+ BROADCAST(nation), BROADCAST(region) */
+                     n_name,
                      FLOOR(sum(l_extendedprice * (1 - l_discount)) * 100 + 0.5) / 100 AS revenue
               FROM customer, orders, lineitem, supplier, nation, region
               WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
@@ -381,9 +383,8 @@ object Relational {
     ("q28_dml_update",
       (s, d) => Dml.update(Tables.supplier(s, d), col("s_acctbal") < 0,
         Map("s_acctbal" -> (col("s_acctbal") * 1.1))),
-      Some("""SELECT s_suppkey, s_name,
-                     CASE WHEN s_acctbal < 0 THEN s_acctbal * 1.1 ELSE s_acctbal END AS s_acctbal,
-                     s_nationkey
+      Some("""SELECT s_suppkey, s_name, s_nationkey,
+                     CASE WHEN s_acctbal < 0 THEN s_acctbal * 1.1 ELSE s_acctbal END AS s_acctbal
               FROM supplier""")),
 
     // ---- table-function scan (FunctionScan analog) --------------------
@@ -480,11 +481,11 @@ object Relational {
         .agg(cents(sum(col("o_totalprice"))))
         .na.fill(0.0),
       Some("""SELECT year(o_orderdate) AS order_year,
-                     coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS "AUTOMOBILE",
-                     coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'BUILDING' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS "BUILDING",
-                     coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'FURNITURE' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS "FURNITURE",
-                     coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'HOUSEHOLD' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS "HOUSEHOLD",
-                     coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'MACHINERY' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS "MACHINERY"
+                     coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS AUTOMOBILE,
+                     coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'BUILDING' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS BUILDING,
+                     coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'FURNITURE' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS FURNITURE,
+                     coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'HOUSEHOLD' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS HOUSEHOLD,
+                     coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'MACHINERY' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS MACHINERY
               FROM orders JOIN customer ON o_custkey = c_custkey
               GROUP BY year(o_orderdate)""")),
 
@@ -845,7 +846,7 @@ object Relational {
       Some("""SELECT o_orderkey, o_custkey,
                      lead(o_totalprice, 1) OVER w AS next_price,
                      lag(o_totalprice, 2) OVER w AS lag2_price,
-                     ntile(4) OVER w AS quartile,
+                     CAST(ntile(4) OVER w AS BIGINT) AS quartile,
                      percent_rank() OVER w AS pr,
                      cume_dist() OVER w AS cd,
                      first_value(o_totalprice) OVER wf AS first_price,
@@ -1808,7 +1809,7 @@ object Relational {
       Some("""SELECT l_returnflag, l_linestatus, year(l_shipdate) AS ship_year,
                      count(*) AS n_rows, sum(l_quantity) AS sum_qty,
                      FLOOR(sum(l_extendedprice) * 100 + 0.5) / 100 AS sum_price
-              FROM lineitem GROUP BY ALL""")),
+              FROM lineitem GROUP BY ALL ORDER BY ALL""")),
 
     // ---- q78: DISTINCT ON / latest-row-per-key --------------------------
     // "The latest order per customer" — the semantics DuckDB/Postgres

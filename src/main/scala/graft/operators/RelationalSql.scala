@@ -2,13 +2,19 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** The relational block (q01–q80) as executable Spark SQL TEXT — the
+/** The relational block (q01–q99) as executable Spark SQL TEXT — the
   * interface a user of the reference actually writes first, since AnDB's
   * entire user surface is SQL strings through its parser
   * (andb/sql/parser/lexer.py:11-131). Each entry produces the same result
   * (names and values) as the corresponding DataFrame plan in
   * [[Relational.defs]]; SqlParitySpec asserts that equality for every
   * entry on every run.
+  *
+  * One text per query: a query's text is its DuckDB oracle text unless
+  * [[overrides]] holds a Spark spelling for it. The TPC-H twins q86, q90
+  * and q94 thus keep the canonical correlated EXISTS / scalar-subquery
+  * forms, and SqlParitySpec checks Spark's decorrelator against the
+  * rewrite the DataFrame side spells out.
   *
   * Usage: `Ddl.registerAll(spark, sfDir)` then
   * `spark.sql(RelationalSql.sql("q25_tpch_q1"))`.
@@ -80,203 +86,23 @@ object RelationalSql {
     sql(name)
   }
 
-  val sql: Map[String, String] = Map(
-    "q01_scan_filter_project" ->
-      """SELECT l_orderkey, l_partkey, l_quantity FROM lineitem
-        |WHERE l_quantity < 10 AND l_shipdate >= TIMESTAMP '1998-01-01'""".stripMargin,
-
-    "q02_predicates" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-        |WHERE c_mktsegment IN ('BUILDING','AUTOMOBILE')
-        |  AND c_acctbal BETWEEN 0 AND 5000
-        |  AND c_name LIKE '%5%'
-        |  AND NOT (c_nationkey = 3)
-        |  AND c_name IS NOT NULL""".stripMargin,
-
-    "q03_agg_group" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
-        |       sum(l_quantity) AS sum_qty, avg(l_extendedprice) AS avg_price,
-        |       min(l_discount) AS min_disc, max(l_tax) AS max_tax
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |HAVING count(*) > 100""".stripMargin,
-
-    "q04_agg_global" ->
-      """SELECT count(*) AS n_rows, count(DISTINCT l_partkey) AS n_parts,
-        |       sum(l_quantity) AS sum_qty,
-        |       FLOOR(avg(l_discount) * 1000000 + 0.5) / 1000000 AS avg_disc,
-        |       min(l_shipdate) AS min_ship, max(l_shipdate) AS max_ship
-        |FROM lineitem""".stripMargin,
-
-    "q05_sort_limit" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100 OFFSET 10""".stripMargin,
-
-    "q06_distinct" ->
-      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
-
-    "q07_join_hash" ->
-      """SELECT o_orderpriority, count(*) AS n_items,
-        |       sum(l_extendedprice * (1 - l_discount)) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "q08_join_broadcast" ->
-      """SELECT /*+ BROADCAST(nation), BROADCAST(region) */
-        |       r_name, n_name, count(*) AS n_cust, sum(c_acctbal) AS total_bal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |              JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-
-    "q09_join_left" ->
-      """SELECT c_custkey, count(o_orderkey) AS n_orders,
-        |       FLOOR(coalesce(sum(o_totalprice), 0.0) * 100 + 0.5) / 100 AS spent
-        |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey""".stripMargin,
-
-    "q10_join_right" ->
-      """SELECT n_name, count(s_suppkey) AS n_supp
-        |FROM supplier RIGHT JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-
-    "q11_join_full" ->
-      """SELECT coalesce(c.nk, p.nk) AS nk,
-        |       coalesce(n_cust, 0L) AS n_cust, coalesce(n_supp, 0L) AS n_supp
-        |FROM (SELECT c_nationkey AS nk, count(*) AS n_cust FROM customer GROUP BY 1) c
-        |FULL JOIN (SELECT s_nationkey AS nk, count(*) AS n_supp FROM supplier
-        |           WHERE s_acctbal < 0 GROUP BY 1) p
-        |ON c.nk = p.nk""".stripMargin,
-
-    "q12_join_cross" ->
-      "SELECT r_name, n_name FROM region CROSS JOIN nation",
-
-    "q13_join_semi" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)""".stripMargin,
-
-    "q14_join_anti" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')""".stripMargin,
-
-    "q15_union_all" ->
-      """SELECT nk, count(*) AS n FROM (
-        |  SELECT c_nationkey AS nk FROM customer
-        |  UNION ALL SELECT s_nationkey AS nk FROM supplier)
-        |GROUP BY nk""".stripMargin,
-
-    "q16_union" ->
-      """SELECT c_nationkey AS nk FROM customer WHERE c_acctbal < -900
-        |UNION SELECT s_nationkey AS nk FROM supplier WHERE s_acctbal < -900""".stripMargin,
-
-    "q17_intersect" ->
-      """SELECT c_nationkey AS nk FROM customer WHERE c_acctbal < -500
-        |INTERSECT SELECT s_nationkey AS nk FROM supplier WHERE s_acctbal < -500""".stripMargin,
-
-    "q18_except" ->
-      """SELECT c_nationkey AS nk FROM customer WHERE c_acctbal < -500
-        |EXCEPT SELECT s_nationkey AS nk FROM supplier WHERE s_acctbal < -500""".stripMargin,
-
-    "q19_case_cast" ->
-      """SELECT o_orderkey,
-        |       CASE WHEN o_totalprice >= 400000 THEN 'high'
-        |            WHEN o_totalprice >= 150000 THEN 'mid'
-        |            ELSE 'low' END AS bucket,
-        |       'O' || CAST(o_orderkey AS STRING) AS okey_str,
-        |       CAST(FLOOR(o_totalprice) AS BIGINT) AS floor_price,
-        |       o_orderkey % 7 AS key_mod
-        |FROM orders""".stripMargin,
-
-    "q20_window_rank" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn, rnk FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |         row_number() OVER w AS rn, rank() OVER w AS rnk
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_custkey
-        |               ORDER BY o_totalprice DESC, o_orderkey ASC))
-        |WHERE rn <= 3""".stripMargin,
-
-    "q21_window_agg" ->
-      """SELECT o_custkey, o_orderkey,
-        |       FLOOR(sum(o_totalprice) OVER (PARTITION BY o_custkey
-        |         ORDER BY o_orderdate ASC, o_orderkey ASC
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 100 + 0.5) / 100 AS run_spend,
-        |       lag(o_totalprice, 1) OVER (PARTITION BY o_custkey
-        |         ORDER BY o_orderdate ASC, o_orderkey ASC) AS prev_price
-        |FROM orders""".stripMargin,
-
-    "q22_cte" ->
-      """WITH cust_tot AS (
-        |  SELECT o_custkey, sum(o_totalprice) AS total FROM orders GROUP BY o_custkey)
-        |SELECT c_mktsegment, count(*) AS n_cust,
-        |       FLOOR(avg(total) * 100 + 0.5) / 100 AS avg_spend
-        |FROM customer JOIN cust_tot ON c_custkey = o_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "q23_scalar_subquery" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders) * 1.9""".stripMargin,
-
-    "q24_multijoin" ->
-      """SELECT /*+ BROADCAST(nation), BROADCAST(region) */
-        |       n_name,
-        |       FLOOR(sum(l_extendedprice * (1 - l_discount)) * 100 + 0.5) / 100 AS revenue
-        |FROM customer, orders, lineitem, supplier, nation, region
-        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |  AND r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY n_name""".stripMargin,
-
-    "q25_tpch_q1" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       sum(l_quantity) AS sum_qty,
-        |       sum(l_extendedprice) AS sum_base_price,
-        |       sum(l_extendedprice * (1 - l_discount)) AS sum_disc_price,
-        |       sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) AS sum_charge,
-        |       avg(l_quantity) AS avg_qty,
-        |       avg(l_extendedprice) AS avg_price,
-        |       avg(l_discount) AS avg_disc,
-        |       count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '2001-09-01'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q26_dml_insert" ->
-      """SELECT r_regionkey, r_name FROM region
-        |UNION ALL SELECT r_regionkey, r_name
-        |          FROM VALUES (5, 'CYBER'), (6, 'MOON') AS t(r_regionkey, r_name)""".stripMargin,
-
-    "q27_dml_delete" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation
-        |WHERE n_regionkey IS DISTINCT FROM 2""".stripMargin,
-
-    "q28_dml_update" ->
-      """SELECT s_suppkey, s_name, s_nationkey,
-        |       CASE WHEN s_acctbal < 0 THEN s_acctbal * 1.1 ELSE s_acctbal END AS s_acctbal
-        |FROM supplier""".stripMargin,
-
+  /** Spark texts for the queries whose oracle spelling Spark's dialect
+    * does not parse or types differently (DuckDB-only functions, casts
+    * and clauses), whose oracle checks the q33 sketch export, or whose
+    * Spark text keeps the DataFrame plan's shape where the oracle spells
+    * a slower equivalent. SqlParitySpec asserts that no entry equals its
+    * oracle text. */
+  private[graft] val overrides: Map[String, String] = Map(
     "q29_explode" ->
       """SELECT word, count(*) AS n FROM (
         |  SELECT explode(split(text, ' ')) AS word
         |  FROM documents WHERE doc_id < 50)
         |GROUP BY word""".stripMargin,
 
-    "q30_having_expr" ->
-      """SELECT p_brand, count(*) AS n_parts, sum(p_retailprice) AS tot_price
-        |FROM part GROUP BY p_brand
-        |HAVING count(*) > 50 AND sum(p_retailprice) > 40000""".stripMargin,
-
     "q31_json" ->
       """SELECT CAST(get_json_object(props, '$.k') AS INT) AS k_val,
         |       count(*) AS n, sum(value) AS sum_value
         |FROM events GROUP BY 1""".stripMargin,
-
-    "q32_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-        |       FLOOR(sum(l_quantity) * 100 + 0.5) / 100 AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
 
     "q39_cube" ->
       """SELECT l_returnflag, l_linestatus, grouping_id() AS gid,
@@ -297,36 +123,13 @@ object RelationalSql {
         |       percentile_approx(l_extendedprice, 0.5, 1000) AS approx_median_price
         |FROM lineitem GROUP BY l_returnflag""".stripMargin,
 
-    "q34_pivot" ->
-      """SELECT year(o_orderdate) AS order_year,
-        |       coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS AUTOMOBILE,
-        |       coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'BUILDING' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS BUILDING,
-        |       coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'FURNITURE' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS FURNITURE,
-        |       coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'HOUSEHOLD' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS HOUSEHOLD,
-        |       coalesce(FLOOR(sum(CASE WHEN c_mktsegment = 'MACHINERY' THEN o_totalprice END) * 100 + 0.5) / 100, 0.0) AS MACHINERY
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY year(o_orderdate)""".stripMargin,
-
+    // stack() is the map-side generate the DataFrame plan runs; the
+    // oracle's UNION ALL would scan part twice.
     "q40_unpivot" ->
       """SELECT p_partkey,
         |       stack(2, 'size', CAST(p_size AS DOUBLE), 'retailprice', p_retailprice)
         |         AS (metric, value)
         |FROM part WHERE p_partkey <= 100""".stripMargin,
-
-    "q41_recursive_cte" ->
-      """WITH RECURSIVE months(month_num) AS (
-        |  SELECT 1 UNION ALL SELECT month_num + 1 FROM months WHERE month_num < 12)
-        |SELECT month_num, count(*) AS n_orders,
-        |       FLOOR(sum(o_totalprice) * 100 + 0.5) / 100 AS revenue
-        |FROM months JOIN orders
-        |  ON month(o_orderdate) = month_num AND year(o_orderdate) = 2000
-        |GROUP BY month_num""".stripMargin,
-
-    "q42_lateral" ->
-      """SELECT r_name, t.max_bal FROM region,
-        |LATERAL (SELECT max(c_acctbal) AS max_bal
-        |         FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |         WHERE n_regionkey = r_regionkey) t""".stripMargin,
 
     "q35_window_range" ->
       """WITH o AS (SELECT o_custkey, o_orderkey,
@@ -345,26 +148,6 @@ object RelationalSql {
         |       CAST(add_months(o_orderdate, 3) AS TIMESTAMP) AS due_date,
         |       datediff(TIMESTAMP '2002-01-01', o_orderdate) AS age_days
         |FROM orders WHERE year(o_orderdate) = 2000""".stripMargin,
-
-    "q37_grouped_topk" ->
-      """SELECT c_mktsegment, o_orderkey, o_totalprice FROM (
-        |  SELECT c_mktsegment, o_orderkey, o_totalprice,
-        |         row_number() OVER (PARTITION BY c_mktsegment
-        |           ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-        |  FROM orders JOIN customer ON o_custkey = c_custkey)
-        |WHERE rn <= 3""".stripMargin,
-
-    "q38_dml_merge" ->
-      """WITH base AS (SELECT o_orderkey, o_totalprice FROM orders),
-        |updates AS (
-        |  SELECT o_orderkey, o_totalprice * 1.1 AS o_totalprice
-        |  FROM base WHERE o_orderkey % 100 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000L AS o_orderkey, 42.0 AS o_totalprice
-        |  FROM base WHERE o_orderkey % 1000 = 0)
-        |SELECT coalesce(u.o_orderkey, b.o_orderkey) AS o_orderkey,
-        |       FLOOR(coalesce(u.o_totalprice, b.o_totalprice) * 100 + 0.5) / 100 AS total
-        |FROM base b FULL OUTER JOIN updates u ON b.o_orderkey = u.o_orderkey""".stripMargin,
 
     // Spark's parser accepts the window form directly; Catalyst would
     // rewrite the correlated-subquery spelling into the same aggregate —
@@ -398,48 +181,6 @@ object RelationalSql {
         |       array_join(array_sort(collect_set(c_mktsegment)), ',') AS segs
         |FROM customer GROUP BY c_nationkey""".stripMargin,
 
-    "q47_cond_agg" ->
-      """SELECT l_returnflag, count(*) AS n_rows,
-        |       count(*) FILTER (WHERE l_quantity < 10) AS n_cheap,
-        |       FLOOR(avg(l_extendedprice) FILTER (WHERE l_discount > 0.05) * 100 + 0.5) / 100 AS avg_hi_disc,
-        |       sum(DISTINCT l_quantity) AS sum_dq,
-        |       bool_or(l_quantity >= 49) AS has_big
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q48_null_semantics" ->
-      """SELECT o_orderkey,
-        |       nullif(o_orderpriority, '1-URGENT') AS pri_or_null,
-        |       coalesce(nullif(o_orderpriority, '1-URGENT'), 'WAS-URGENT') AS pri_filled,
-        |       o_orderpriority <=> '1-URGENT' AS is_urgent,
-        |       greatest(o_totalprice, 200000.0D) AS floor_200k,
-        |       least(o_totalprice, 200000.0D) AS cap_200k
-        |FROM orders""".stripMargin,
-
-    "q49_window_nav" ->
-      """SELECT o_orderkey, o_custkey,
-        |       lead(o_totalprice, 1) OVER w AS next_price,
-        |       lag(o_totalprice, 2) OVER w AS lag2_price,
-        |       CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        |       percent_rank() OVER w AS pr,
-        |       cume_dist() OVER w AS cd,
-        |       first_value(o_totalprice) OVER wf AS first_price,
-        |       last_value(o_totalprice) OVER wf AS last_price,
-        |       nth_value(o_totalprice, 2) OVER wf AS second_price
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-        |       wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin,
-
-    "q50_stats_agg" ->
-      """SELECT l_returnflag, count(*) AS n_rows,
-        |       FLOOR(stddev_samp(l_quantity) * 1000000 + 0.5) / 1000000 AS sd_qty,
-        |       FLOOR(var_samp(l_quantity) * 1000000 + 0.5) / 1000000 AS var_qty,
-        |       FLOOR(stddev_pop(l_quantity) * 1000000 + 0.5) / 1000000 AS sd_pop_qty,
-        |       FLOOR(corr(l_quantity, l_partkey) * 1000000 + 0.5) / 1000000 AS corr_qp,
-        |       FLOOR(covar_samp(l_quantity, l_partkey) * 100 + 0.5) / 100 AS covar_qp,
-        |       median(l_quantity) AS med_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
     "q51_array_funcs" ->
       """WITH m AS (SELECT doc_id,
         |       regexp_extract_all(text, '[a-z0-9]+', 0) AS toks,
@@ -453,46 +194,6 @@ object RelationalSql {
         |       element_at(sorted, 3) AS third_sorted,
         |       array_join(reverse(slice(toks, 1, 3)), '|') AS head3_rev
         |FROM m""".stripMargin,
-
-    "q52_exists" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders o
-        |WHERE EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey
-        |                AND l.l_quantity >= 48
-        |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAYS)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l2
-        |                  WHERE l2.l_orderkey = o.o_orderkey
-        |                    AND l2.l_discount > 0.09)""".stripMargin,
-
-    "q53_set_all" ->
-      """SELECT l_suppkey, qty, 'both' AS tag FROM (
-        |  SELECT l_suppkey, CAST(l_quantity AS BIGINT) AS qty FROM lineitem
-        |  WHERE l_shipdate >= timestamp '1995-01-01' AND l_shipdate < timestamp '1998-01-01'
-        |  INTERSECT ALL
-        |  SELECT l_suppkey, CAST(l_quantity AS BIGINT) AS qty FROM lineitem
-        |  WHERE l_shipdate >= timestamp '1998-01-01' AND l_shipdate < timestamp '2002-01-01')
-        |UNION ALL
-        |SELECT l_suppkey, qty, 'only_early' AS tag FROM (
-        |  SELECT l_suppkey, CAST(l_quantity AS BIGINT) AS qty FROM lineitem
-        |  WHERE l_shipdate >= timestamp '1995-01-01' AND l_shipdate < timestamp '1998-01-01'
-        |  EXCEPT ALL
-        |  SELECT l_suppkey, CAST(l_quantity AS BIGINT) AS qty FROM lineitem
-        |  WHERE l_shipdate >= timestamp '1998-01-01' AND l_shipdate < timestamp '2002-01-01')""".stripMargin,
-
-    "q54_math_funcs" ->
-      """SELECT o_orderkey,
-        |       abs(o_totalprice - 150000.0) AS abs_dev,
-        |       CAST(signum(o_totalprice - 150000.0) AS BIGINT) AS sgn,
-        |       CAST(o_orderkey % 7 AS BIGINT) AS mod7,
-        |       CAST(ceil(o_totalprice / 1000.0) AS BIGINT) AS k_ceil,
-        |       CAST(floor(o_totalprice / 1000.0) AS BIGINT) AS k_floor,
-        |       sqrt(o_totalprice) AS sq,
-        |       o_totalprice * o_totalprice AS sq2,
-        |       FLOOR(ln(o_totalprice) * 1000000 + 0.5) / 1000000 AS ln_p,
-        |       FLOOR(exp(o_totalprice / 500000.0) * 1000000 + 0.5) / 1000000 AS exp_p,
-        |       FLOOR(sin(o_totalprice / 100000.0) * 1000000 + 0.5) / 1000000 AS sin_p
-        |FROM orders""".stripMargin,
 
     "q55_map_funcs" ->
       """SELECT o_custkey,
@@ -515,12 +216,6 @@ object RelationalSql {
         |       variant_get(parse_json(props), '$.k', 'long') % 2 = 0 AS k_even
         |FROM events WHERE event_id < 500""".stripMargin,
 
-    "q57_null_ordering" ->
-      """SELECT o_orderkey, nullif(o_orderpriority, '1-URGENT') AS pri_n, o_totalprice
-        |FROM orders
-        |ORDER BY pri_n DESC NULLS FIRST, o_totalprice ASC NULLS LAST, o_orderkey ASC
-        |LIMIT 60""".stripMargin,
-
     "q58_percentile" ->
       """SELECT l_returnflag, count(*) AS cnt,
         |       percentile(l_quantity, array(0.25D, 0.5D, 0.75D))[0] AS q25,
@@ -528,29 +223,6 @@ object RelationalSql {
         |       percentile(l_quantity, array(0.25D, 0.5D, 0.75D))[2] AS q75,
         |       percentile_disc(0.5) WITHIN GROUP (ORDER BY l_extendedprice) AS med_price_disc
         |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q59_histogram" ->
-      """SELECT GREATEST(1, LEAST(12, CAST(FLOOR(o_totalprice * 12 / 600000) + 1 AS INT))) AS bucket,
-        |       count(*) AS cnt,
-        |       FLOOR(sum(o_totalprice) * 100 + 0.5) / 100 AS sum_price
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "q61_scd2" ->
-      """WITH cur AS (SELECT c_custkey, c_acctbal FROM customer),
-        |upd AS (SELECT c_custkey, c_acctbal + 100 AS c_acctbal
-        |        FROM cur WHERE c_custkey % 17 = 0)
-        |SELECT c.c_custkey, c.c_acctbal,
-        |       CAST(0 AS BIGINT) AS valid_from_us,
-        |       CASE WHEN u.c_custkey IS NOT NULL
-        |            THEN CAST(1700000000000000 AS BIGINT) END AS valid_to_us,
-        |       u.c_custkey IS NULL AS is_current
-        |FROM cur c LEFT JOIN upd u ON u.c_custkey = c.c_custkey
-        |UNION ALL
-        |SELECT c_custkey, c_acctbal,
-        |       CAST(1700000000000000 AS BIGINT) AS valid_from_us,
-        |       CAST(NULL AS BIGINT) AS valid_to_us,
-        |       true AS is_current
-        |FROM upd""".stripMargin,
 
     "q60_window_distinct" ->
       """WITH e AS (
@@ -590,33 +262,6 @@ object RelationalSql {
         |SELECT user_id, count(*) AS n_islands, max(len) AS longest_run,
         |       sum(len) AS active_hours
         |FROM islands GROUP BY user_id""".stripMargin,
-
-    "q63_window_funcs" ->
-      """WITH t AS (
-        |  SELECT o_orderkey, o_orderpriority,
-        |         CAST(floor(o_totalprice) AS BIGINT) AS spend
-        |  FROM orders)
-        |SELECT o_orderkey, o_orderpriority, spend,
-        |       CAST(ntile(4) OVER (PARTITION BY o_orderpriority
-        |         ORDER BY spend DESC, o_orderkey ASC) AS BIGINT) AS quartile,
-        |       floor(percent_rank() OVER (PARTITION BY o_orderpriority
-        |         ORDER BY spend DESC, o_orderkey ASC) * 1000000 + 0.5)
-        |         / 1000000 AS pct_rank,
-        |       floor(cume_dist() OVER (PARTITION BY o_orderpriority
-        |         ORDER BY spend DESC, o_orderkey ASC) * 1000000 + 0.5)
-        |         / 1000000 AS cum_dist,
-        |       nth_value(o_orderkey, 2) OVER (PARTITION BY o_orderpriority
-        |         ORDER BY spend DESC, o_orderkey ASC
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |         AS second_key
-        |FROM t""".stripMargin,
-
-    "q64_division" ->
-      """WITH np AS (SELECT count(DISTINCT o_orderpriority) AS np FROM orders)
-        |SELECT o_custkey, count(*) AS n_orders
-        |FROM orders CROSS JOIN np
-        |GROUP BY o_custkey, np.np
-        |HAVING count(DISTINCT o_orderpriority) = np.np""".stripMargin,
 
     "q65_reorder_gap" ->
       """WITH o AS (SELECT o_custkey, o_orderkey,
@@ -691,27 +336,6 @@ object RelationalSql {
         |        sequence(CAST(1 AS BIGINT), CAST(p_size AS BIGINT)) AS arr
         |      FROM part WHERE p_partkey < 300)""".stripMargin,
 
-    "q71_bitwise" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        |       bit_and(o_orderkey & 255) AS band,
-        |       bit_or(o_orderkey & 255) AS bor,
-        |       bit_xor(o_orderkey & 255) AS bxor,
-        |       CAST(sum(bit_count(o_orderkey & 255)) AS BIGINT) AS total_bits,
-        |       max(shiftleft(o_orderkey & 255, 2)) AS max_shl2
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "q72_inline_lookup" ->
-      """SELECT prio_rank, o_orderpriority, count(*) AS n_orders,
-        |       CAST(FLOOR(sum(o_totalprice * (1.0 - discount)) * 100 + 0.5)
-        |         AS BIGINT) AS disc_cents
-        |FROM orders
-        |JOIN (VALUES ('1-URGENT', CAST(1 AS BIGINT), CAST(0.0 AS DOUBLE)),
-        |             ('2-HIGH', 2L, 0.05D), ('3-MEDIUM', 3L, 0.1D),
-        |             ('4-NOT SPECIFIED', 4L, 0.2D), ('5-LOW', 5L, 0.25D))
-        |  AS r(o_orderpriority, prio_rank, discount)
-        |  USING (o_orderpriority)
-        |GROUP BY 1, 2""".stripMargin,
-
     "q73_try_arith" ->
       s"""SELECT o_orderpriority, count(*) AS n_orders,
         |       count(big) AS n_in_range,
@@ -758,6 +382,8 @@ object RelationalSql {
         |      FROM supplier)
         |GROUP BY 1""".stripMargin,
 
+    // The struct-array sort the DataFrame plan runs; the oracle's
+    // two-key window rank is its DuckDB proof.
     "q76_struct_ops" ->
       """SELECT o_custkey,
         |       arr[0].cents AS top_cents, arr[0].o_orderkey AS top_okey,
@@ -771,12 +397,6 @@ object RelationalSql {
         |            FROM orders)
         |      GROUP BY o_custkey)
         |WHERE size(arr) >= 2""".stripMargin,
-
-    "q77_group_by_all" ->
-      """SELECT l_returnflag, l_linestatus, year(l_shipdate) AS ship_year,
-        |       count(*) AS n_rows, sum(l_quantity) AS sum_qty,
-        |       FLOOR(sum(l_extendedprice) * 100 + 0.5) / 100 AS sum_price
-        |FROM lineitem GROUP BY ALL ORDER BY ALL""".stripMargin,
 
     "q78_distinct_on" ->
       """SELECT o_custkey, o_orderkey AS last_orderkey,
@@ -806,6 +426,8 @@ object RelationalSql {
         |      FROM part)
         |GROUP BY 1 ORDER BY 1""".stripMargin,
 
+    // The broadcast-cutoff rewrite the DataFrame plan runs; the oracle's
+    // rank() window needs a global sort.
     "q80_fetch_ties" ->
       """WITH b AS (SELECT o_orderkey, o_custkey,
         |             CAST(FLOOR(o_totalprice / 1000) AS BIGINT) AS price_band
@@ -860,194 +482,6 @@ object RelationalSql {
         |         <= CAST(n AS DOUBLE) / accuracy + 1 AS within_bound
         |FROM r""".stripMargin,
 
-    // ---- TPC-H battery twins: the text a reference user would type.
-    // q86's twin keeps the canonical double-correlated EXISTS / NOT
-    // EXISTS form — SqlParitySpec then machine-checks the DataFrame
-    // side's one-shuffle aggregate rewrite against Spark's own
-    // correlated-subquery planner output.
-    "q82_tpch_q3" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |       FLOOR(sum(l_extendedprice * (1 - l_discount)) * 100 + 0.5) / 100 AS revenue
-        |FROM customer, orders, lineitem
-        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
-        |  AND l_orderkey = o_orderkey
-        |  AND o_orderdate < TIMESTAMP '1999-01-01'
-        |  AND l_shipdate > TIMESTAMP '1999-01-01'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, o_orderdate, l_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "q83_tpch_q7" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |       CAST(year(l_shipdate) AS BIGINT) AS l_year,
-        |       FLOOR(sum(l_extendedprice * (1 - l_discount)) * 100 + 0.5) / 100 AS volume
-        |FROM supplier, lineitem, orders, customer, nation n1, nation n2
-        |WHERE s_suppkey = l_suppkey AND l_orderkey = o_orderkey
-        |  AND o_custkey = c_custkey AND s_nationkey = n1.n_nationkey
-        |  AND c_nationkey = n2.n_nationkey
-        |  AND ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
-        |    OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3'))
-        |  AND l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "q84_tpch_q9" ->
-      """SELECT n_name AS nation,
-        |       CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |       FLOOR(sum(l_extendedprice * (1 - l_discount)
-        |                 - 0.6 * p_retailprice * l_quantity) * 100 + 0.5) / 100
-        |         AS sum_profit
-        |FROM lineitem, part, supplier, nation, orders
-        |WHERE l_partkey = p_partkey AND p_name LIKE '%widget%'
-        |  AND l_suppkey = s_suppkey AND s_nationkey = n_nationkey
-        |  AND l_orderkey = o_orderkey
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q85_tpch_q18" ->
-      """SELECT c_name, c_custkey, o_orderkey, o_orderdate,
-        |       o_totalprice, sum(l_quantity) AS sum_qty
-        |FROM customer, orders, lineitem
-        |WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
-        |                     GROUP BY l_orderkey
-        |                     HAVING sum(l_quantity) > 300)
-        |  AND c_custkey = o_custkey AND o_orderkey = l_orderkey
-        |GROUP BY 1, 2, 3, 4, 5
-        |ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
-        |LIMIT 100""".stripMargin,
-
-    "q86_tpch_q21" ->
-      """SELECT s_name, count(*) AS numwait
-        |FROM supplier, lineitem l1, orders
-        |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
-        |  AND o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_returnflag = 'R')
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin,
-
-    "q87_tpch_q8" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |       FLOOR(sum(CASE WHEN n2.n_name = 'NATION_5'
-        |                      THEN l_extendedprice * (1 - l_discount)
-        |                      ELSE 0 END)
-        |             / sum(l_extendedprice * (1 - l_discount))
-        |             * 1000000 + 0.5) / 1000000 AS mkt_share
-        |FROM lineitem, part, supplier, orders, customer,
-        |     nation n1, nation n2, region
-        |WHERE l_partkey = p_partkey AND p_type = 'STANDARD'
-        |  AND l_suppkey = s_suppkey AND l_orderkey = o_orderkey
-        |  AND o_custkey = c_custkey AND c_nationkey = n1.n_nationkey
-        |  AND n1.n_regionkey = r_regionkey AND r_name = 'ASIA'
-        |  AND s_nationkey = n2.n_nationkey
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1""".stripMargin,
-
-    "q88_tpch_q10" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-        |       FLOOR(sum(l_extendedprice * (1 - l_discount)) * 100 + 0.5) / 100 AS revenue
-        |FROM customer, orders, lineitem, nation
-        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND o_orderdate >= TIMESTAMP '1997-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-07-01'
-        |  AND l_returnflag = 'R' AND c_nationkey = n_nationkey
-        |GROUP BY 1, 2, 3, 4
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-
-    "q89_tpch_q13" ->
-      """SELECT c_count, count(*) AS custdist
-        |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
-        |      FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |        AND o_orderpriority <> '1-URGENT'
-        |      GROUP BY c_custkey)
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    // The canonical correlated form — Spark's decorrelator must arrive
-    // at the same per-part-aggregate plan the DataFrame side spells out.
-    "q90_tpch_q17" ->
-      """SELECT FLOOR(sum(l_extendedprice) / 7.0 * 100 + 0.5) / 100 AS avg_yearly
-        |FROM lineitem, part
-        |WHERE p_partkey = l_partkey
-        |  AND p_brand = 'Brand#13' AND p_type = 'PROMO'
-        |  AND l_quantity < (SELECT 0.2 * avg(l_quantity)
-        |                    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin,
-
-    "q91_tpch_q22" ->
-      """SELECT c_nationkey AS cntrycode, count(*) AS numcust,
-        |       FLOOR(sum(c_acctbal) * 100 + 0.5) / 100 AS totacctbal
-        |FROM customer
-        |WHERE c_nationkey IN (1,3,5,7,9,11,13)
-        |  AND c_acctbal > (SELECT avg(c_acctbal) FROM customer
-        |                   WHERE c_acctbal > 0.0
-        |                     AND c_nationkey IN (1,3,5,7,9,11,13))
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey
-        |                    AND o_orderdate >= TIMESTAMP '1999-01-01')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q92_tpch_q12" ->
-      """SELECT l_linestatus,
-        |       sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-        |                THEN 1L ELSE 0L END) AS high_line_count,
-        |       sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
-        |                THEN 1L ELSE 0L END) AS low_line_count
-        |FROM orders, lineitem
-        |WHERE o_orderkey = l_orderkey
-        |  AND l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q93_tpch_q14" ->
-      """SELECT FLOOR(100.0D * sum(CASE WHEN p_type = 'PROMO'
-        |                               THEN l_extendedprice * (1 - l_discount)
-        |                               ELSE 0D END)
-        |             / sum(l_extendedprice * (1 - l_discount))
-        |             * 1000000 + 0.5) / 1000000 AS promo_revenue
-        |FROM lineitem, part
-        |WHERE l_partkey = p_partkey
-        |  AND l_shipdate >= TIMESTAMP '1997-09-01'
-        |  AND l_shipdate < TIMESTAMP '1997-10-01'""".stripMargin,
-
-    // The canonical EXISTS form — Spark must plan the same LEFT SEMI
-    // the DataFrame side spells out.
-    "q94_tpch_q4" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1997-07-01'
-        |  AND o_orderdate < TIMESTAMP '1997-10-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q95_tpch_q5" ->
-      """SELECT n_name, FLOOR(sum(l_extendedprice * (1 - l_discount))
-        |                     * 100 + 0.5) / 100 AS revenue
-        |FROM customer, orders, lineitem, supplier, nation, region
-        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |  AND r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1997-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1 ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "q96_tpch_q6" ->
-      """SELECT FLOOR(sum(l_extendedprice * l_discount) * 100 + 0.5) / 100
-        |         AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_discount >= 0.05D AND l_discount <= 0.07D
-        |  AND l_quantity < 24""".stripMargin,
-
     "q97_tpch_q15" ->
       """WITH revenue AS (
         |  SELECT l_suppkey AS supplier_no,
@@ -1061,18 +495,6 @@ object RelationalSql {
         |FROM supplier JOIN revenue ON s_suppkey = supplier_no
         |WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
         |ORDER BY s_suppkey""".stripMargin,
-
-    "q98_tpch_q19" ->
-      """SELECT FLOOR(sum(l_extendedprice * (1 - l_discount))
-        |             * 100 + 0.5) / 100 AS revenue
-        |FROM lineitem, part
-        |WHERE p_partkey = l_partkey
-        |  AND ((p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-        |        AND l_quantity BETWEEN 1 AND 11)
-        |    OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-        |        AND l_quantity BETWEEN 10 AND 20)
-        |    OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
-        |        AND l_quantity BETWEEN 20 AND 30))""".stripMargin,
 
     "q99_tpch_q20" ->
       """WITH pq AS (
@@ -1090,4 +512,10 @@ object RelationalSql {
         |                    WHERE sq > tot * 0.3D)
         |ORDER BY s_suppkey""".stripMargin
   )
+
+  /** Each relational query's SQL text: its DuckDB oracle text from
+    * [[Relational.defs]], which Spark parses as-is, with [[overrides]]
+    * laid over it. */
+  val sql: Map[String, String] =
+    Relational.defs.collect { case (n, _, Some(o)) => n -> o }.toMap ++ overrides
 }

@@ -443,29 +443,6 @@ class NewOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("p19 production-hash twin: xxhash64 scoring tracks the md5 oracle path") {
-    // The registered p19 pays two md5-per-gram corpus passes because
-    // md5 IS the cross-engine oracle contract; the deployment path is
-    // the same LUT discipline over xxhash64 buckets. The twin is only
-    // legitimate if it ORDERS the corpus the same way — different
-    // buckets mean different collision sets, so scores can't be equal,
-    // but the 8192-bucket statistics must dominate hash choice.
-    val docs = Tables.documents(spark, TestSpark.sf)
-    val slow = run("p19_dsir_weights").select("doc_id", "logw").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val fast = graft.operators.Pipeline.dsirWeightsFast(docs)
-      .select("doc_id", "logw").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(slow.keySet == fast.keySet, "twin must score every doc")
-    def ranks(m: Map[Long, Double]) = m.toSeq.sortBy(_._2).zipWithIndex
-      .map { case ((id, _), i) => id -> i.toDouble }.toMap
-    val (ra, rb) = (ranks(slow), ranks(fast))
-    val n = slow.size.toDouble
-    val d2 = slow.keys.map(k => math.pow(ra(k) - rb(k), 2)).sum
-    val rho = 1 - 6 * d2 / (n * (n * n - 1))
-    assert(rho >= 0.98, s"score-ordering agreement degraded: spearman=$rho")
-  }
-
   test("d25 planted spans come back at exact length — no grid truncation, no over-chaining") {
     import spark.implicits._
     def words(prefix: String, n: Int) = (1 to n).map(i => s"$prefix$i").mkString(" ")

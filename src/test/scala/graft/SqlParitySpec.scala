@@ -51,6 +51,18 @@ class SqlParitySpec extends AnyFunSuite {
     }
   }
 
+  test("no SQL override repeats its oracle text") {
+    // A query whose oracle text Spark runs as-is has no override: its SQL
+    // text IS the oracle text, so the two cannot drift apart.
+    import graft.operators.{Relational, RelationalSql}
+    def norm(s: String) = s.trim.split("\\s+").mkString(" ")
+    val oracle = Relational.defs.collect { case (n, _, Some(o)) => n -> norm(o) }.toMap
+    val repeats = RelationalSql.overrides.collect {
+      case (n, t) if oracle.get(n).contains(norm(t)) => n
+    }
+    assert(repeats.isEmpty, s"overrides equal to their oracle text: ${repeats.toSeq.sorted}")
+  }
+
   test("parameterized statements bind by value and match the literal form") {
     // The reference's PARAMETER placeholder surface (lexer.py:35) on
     // Spark 4's parameterized sql: same text, different args, no string
