@@ -1832,16 +1832,13 @@ object Dedup {
   //
   // The registered d13 builds the corpus band table in memory each run —
   // correct, but at 100 TB the corpus side must be a standing layout
-  // written ONCE at ingest and only PROBED per crawl. These two entry
-  // points are that layout (proven equal to the in-memory form, with
-  // directory pruning and a shuffle-free corpus side, in AnnIndexSpec):
+  // written ONCE at ingest and only PROBED per crawl. These entry points
+  // are that layout (proven equal to the in-memory form, with a
+  // shuffle-free corpus side, in AnnIndexSpec). All three tables are
+  // plain bucketed tables:
   //
-  //   - `<prefix>_bands`  — the MinHash band table, PARTITIONED by
-  //     pb = pmod(hash(band, sig), parts) and BUCKETED by (band, sig).
-  //     The partition column turns a probe into directory-pruned I/O
-  //     (the batch's distinct pb set — at most `parts` ints, bounded
-  //     driver state — selects which directories are read at all), and
-  //     the bucketing pre-shuffles the corpus on the band-join key, so
+  //   - `<prefix>_bands`  — the MinHash band table, BUCKETED by
+  //     (band, sig): the corpus is pre-shuffled on the band-join key, so
   //     the per-crawl join shuffles ONLY the batch side.
   //   - `<prefix>_hashes` — (doc_id, md5) bucketed by hash: the stage-1
   //     exact anti-join reads the corpus pre-shuffled on its key.
@@ -1849,20 +1846,31 @@ object Dedup {
   //     doc_id: exact-Jaccard verification joins candidates to persisted
   //     gram sets — the corpus TEXT is never re-read, never re-shingled.
   //
+  // Why the band table is NOT also partitioned by a hash of (band, sig)
+  // so a crawl reads only "its" directories: a batch of B docs emits
+  // bands·B = 8B band keys, which hit a fraction 1 − (1 − 1/P)^(8B) of P
+  // hash directories — at P = 128 that is 27% for B = 5, 96% for B = 50
+  // (one serve_ingest admission read 123 of 128 directories) and
+  // effectively all for B ≥ 100. Such a prune saves under 5% of band
+  // I/O at real batch sizes, yet it cost a 128-directory write at build
+  // time, an eager checkpoint + driver collect on every admission, and
+  // its own dynamic-partition-overwrite compaction path. Dropping it
+  // took serve_ingest's layout build from a median 6.3 s to 2.7 s and an
+  // admission from 12 Spark jobs to 9 on a 4-vCPU box (BASELINE.md,
+  // "perfbench, nproc=4").
+  //
   // Per-crawl cost: signature/gram work O(batch), candidates
-  // O(batch·dup_rate), corpus I/O = narrow pre-shuffled projections with
-  // the band read directory-pruned — no corpus recompute, no corpus
-  // shuffle, ever. All three builders are the SAME kernels the in-memory
-  // d02/d13 use (minhashBandTable / md5 / shingleHashSet), so geometry
-  // cannot drift between the layout and the operators measured on it.
+  // O(batch·dup_rate), corpus I/O = narrow pre-shuffled projections — no
+  // corpus recompute, no corpus shuffle, ever. All three builders are
+  // the SAME kernels the in-memory d02/d13 use (minhashBandTable / md5 /
+  // shingleHashSet), so geometry cannot drift between the layout and
+  // the operators measured on it.
   def writeCorpusDedupLayout(corpus: DataFrame, prefix: String,
       shingleN: Int = 3, bands: Int = 8, rows: Int = 4,
-      parts: Int = 128, buckets: Int = 8): Unit = {
+      buckets: Int = 8): Unit = {
     import graft.sources.Io
-    val bt = Lsh.minhashBandTable(corpus, shingleN, bands, rows)
-      .withColumn("pb", pmod(hash(col("band"), col("sig")), lit(parts)))
-    Io.writePartitionedBucketed(bt, s"${prefix}_bands",
-      Seq("pb"), Seq("band", "sig"), buckets)
+    Io.writeBucketedBy(Lsh.minhashBandTable(corpus, shingleN, bands, rows),
+      s"${prefix}_bands", Seq("band", "sig"), buckets)
     Io.writeBucketedBy(corpus.select(col("doc_id"), md5(col("text")).as("h")),
       s"${prefix}_hashes", Seq("h"), buckets)
     Io.writeBucketedBy(corpus.select(col("doc_id"), shingleHashSet(col("text")).as("hs")),
@@ -1870,26 +1878,20 @@ object Dedup {
   }
 
   /** d13's cascade probing the persisted corpus layout: exact md5 anti
-    * join → banded candidates against the pb-pruned band directories →
-    * exact-Jaccard verify against persisted gram sets → LEFT ANTI drop.
-    * Same stages, same kernels, same band geometry as the registered
-    * d13; AnnIndexSpec pins result equality. */
+    * join → banded candidates against the bucketed corpus band table
+    * (only the batch side shuffles) → exact-Jaccard verify against
+    * persisted gram sets → LEFT ANTI drop. Same stages, same kernels,
+    * same band geometry as the registered d13; AnnIndexSpec pins result
+    * equality. */
   def incrementalDedupOnLayout(spark: SparkSession, prefix: String, batch: DataFrame,
-      shingleN: Int = 3, bands: Int = 8, rows: Int = 4, parts: Int = 128): DataFrame = {
+      shingleN: Int = 3, bands: Int = 8, rows: Int = 4): DataFrame = {
     val exactSurv = batch
       .withColumn("h", md5(col("text")))
       .join(spark.table(s"${prefix}_hashes").select(col("h")), Seq("h"), "left_anti")
       .drop("h")
       .localCheckpoint() // feeds the band table AND the final anti-join
-    val bat = Lsh.minhashBandTable(exactSurv, shingleN, bands, rows)
-      .withColumn("pb", pmod(hash(col("band"), col("sig")), lit(parts)))
-      .localCheckpoint() // feeds the pb collect AND the band join
-    // Bounded driver state (≤ `parts` ints): which corpus band
-    // directories can possibly hold a matching (band, sig) — everything
-    // else is pruned before a byte of I/O.
-    val pbs = bat.select(col("pb")).distinct().collect().map(_.getInt(0)).toSeq
-    val corp = spark.table(s"${prefix}_bands").filter(col("pb").isin(pbs: _*))
-    val cands = bat.as("a").join(corp.as("b"),
+    val cands = Lsh.minhashBandTable(exactSurv, shingleN, bands, rows).as("a")
+      .join(spark.table(s"${prefix}_bands").as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
       .filter(col("a.band") === Lsh.firstMatchingBandArrays(col("a.bsig"), col("b.bsig")))
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
@@ -1904,7 +1906,7 @@ object Dedup {
   /** d13's production seam as a LIVE STREAM (r11): crawl micro-batches
     * arrive via `writeStream.foreachBatch`, each one runs the SAME
     * cascade as the registered d13 against the PERSISTED corpus layout
-    * ([[incrementalDedupOnLayout]] — exact md5 anti-join, pb-pruned
+    * ([[incrementalDedupOnLayout]] — exact md5 anti-join, bucketed
     * band probe, exact-Jaccard verify), and the batch's admitted
     * survivors commit through the (appId, batchId) exactly-once ledger
     * ([[graft.sources.Versioned.commitBatchAppend]]), so a crash-
@@ -1927,12 +1929,12 @@ object Dedup {
       appId: String): (DataFrame, Long) => Unit =
     (batch, batchId) => {
       // Writer-entry torn-swap recovery (r14): the sink restarts after
-      // ANY service crash — including one that died inside a grams/
-      // hashes compaction swap, which leaves the table renamed away and
+      // ANY service crash — including one that died inside a layout
+      // table's compaction swap, which leaves the table renamed away and
       // the probe's spark.table() failing until recovery. Every WRITER
       // entry point finishes the swap first (the fold does the same);
       // read-only probes (the d13 query surface) stay pure.
-      Seq(s"${prefix}_grams", s"${prefix}_hashes")
+      layoutTables(prefix)
         .foreach(graft.sources.Io.finishTornCompaction(batch.sparkSession, _))
       val surv = incrementalDedupOnLayout(batch.sparkSession, prefix, batch)
       graft.sources.Versioned.commitBatchAppend(
@@ -1972,9 +1974,9 @@ object Dedup {
     *     doc_id (corpus side bucketed by doc_id — exchange-free),
     *     hashes guard on h (bucketed by h — exchange-free; an admitted
     *     doc whose h was already folded is probe-equivalent either
-    *     way), bands guard on (doc_id, band) with the corpus side
-    *     directory-pruned to the delta's pb set. The clean path pays
-    *     none of these scans — that is what the intent marker buys.
+    *     way), bands guard on (doc_id, band) against the whole band
+    *     table. The clean path pays none of these scans — that is what
+    *     the intent marker buys.
     *   - Concurrent folds are NOT supported (one maintenance job at a
     *     time — the same operational contract as Versioned.optimize);
     *     crash recovery and replays are.
@@ -2002,20 +2004,18 @@ object Dedup {
   def refreshCorpusLayout(spark: SparkSession, prefix: String,
       admittedPath: String, texts: DataFrame,
       shingleN: Int = 3, bands: Int = 8, rows: Int = 4,
-      parts: Int = 128, buckets: Int = 8): Option[Long] = {
+      buckets: Int = 8): Option[Long] = {
     import graft.sources.{Io, Versioned}
     val intentApp = s"$prefix.fold.intent"
     val doneApp = s"$prefix.fold.done"
-    // A compaction that died in its DROP→RENAME window leaves grams/
-    // hashes with no catalog entry; the appends below refuse to create
+    // A compaction that died in its DROP→RENAME window leaves a layout
+    // table with no catalog entry; the appends below refuse to create
     // a missing table (Io.requireStanding), so finish the swap FIRST —
     // otherwise a recoverable torn compaction would either fail the
     // fold or (before r14's append guard) silently recreate the table
     // with only the delta rows and lose the standing corpus on the
-    // NEXT compaction's rollback (r13 advice). Bands compact via
-    // dynamic-partition overwrite — no swap window, nothing to finish.
-    Seq(s"${prefix}_grams", s"${prefix}_hashes")
-      .foreach(Io.finishTornCompaction(spark, _))
+    // NEXT compaction's rollback (r13 advice).
+    layoutTables(prefix).foreach(Io.finishTornCompaction(spark, _))
     val v = Versioned.currentVersion(spark, admittedPath)
     val doneV = Versioned.lastCommittedBatch(spark, admittedPath, doneApp)
     if (doneV.exists(_ >= v)) return None // fully-replayed fold
@@ -2025,9 +2025,8 @@ object Dedup {
     // Every exit below — including the require()s and any append/commit
     // failure — must free the localCheckpoint blocks, or a long-lived
     // stream→fold session leaks exactly the blocks the checkpoints
-    // pinned (r13 advice). docs/bt are registered as they are created.
+    // pinned (r13 advice). docs is registered once it is created.
     var docsCp: DataFrame = null
-    var btCp: DataFrame = null
     try {
     if (delta.isEmpty) return None
     // Fresh-doc_id precondition (see Scaladoc): repeats within the window
@@ -2056,25 +2055,18 @@ object Dedup {
       .localCheckpoint() // feeds all three kernels
     docsCp = docs
     val bt = Lsh.minhashBandTable(docs, shingleN, bands, rows)
-      .withColumn("pb", pmod(hash(col("band"), col("sig")), lit(parts)))
-      .localCheckpoint() // feeds pb collect + (guard +) append
-    btCp = bt
     val hs = docs.select(col("doc_id"), shingleHashSet(col("text")).as("hs"))
     val hh = docs.select(col("doc_id"), md5(col("text")).as("h"))
-    val (btNew, hsNew, hhNew) = if (!torn) (bt, hs, hh) else {
-      val pbs = bt.select(col("pb")).distinct().collect().map(_.getInt(0)).toSeq
-      val corpBands = spark.table(s"${prefix}_bands")
-        .filter(col("pb").isin(pbs: _*)).select(col("doc_id"), col("band"))
-      (bt.join(corpBands, Seq("doc_id", "band"), "left_anti"),
+    val (btNew, hsNew, hhNew) = if (!torn) (bt, hs, hh) else
+      (bt.join(spark.table(s"${prefix}_bands").select(col("doc_id"), col("band")),
+          Seq("doc_id", "band"), "left_anti"),
         hs.join(spark.table(s"${prefix}_grams").select(col("doc_id")),
           Seq("doc_id"), "left_anti"),
         hh.join(spark.table(s"${prefix}_hashes").select(col("h")),
           Seq("h"), "left_anti"))
-    }
     // Bands FIRST (the torn-detection probe order the guards assume),
     // then grams, then hashes, then the done marker.
-    Io.appendPartitionedBucketed(btNew, s"${prefix}_bands",
-      Seq("pb"), Seq("band", "sig"), buckets)
+    Io.appendBucketedBy(btNew, s"${prefix}_bands", Seq("band", "sig"), buckets)
     Io.appendBucketedBy(hsNew, s"${prefix}_grams", Seq("doc_id"), buckets)
     Io.appendBucketedBy(hhNew, s"${prefix}_hashes", Seq("h"), buckets)
     Versioned.commitBatchAppend(spark, admittedPath, doneApp, v,
@@ -2085,51 +2077,42 @@ object Dedup {
     // failed append (a torn fold's retry re-derives them) — or they
     // accumulate linearly (the minLabelPropagation lesson, r12 advice).
     } finally {
-      if (btCp != null) graft.unpersistCheckpoint(btCp)
       if (docsCp != null) graft.unpersistCheckpoint(docsCp)
       graft.unpersistCheckpoint(delta)
     }
   }
 
   /** The maintenance half [[refreshCorpusLayout]] makes necessary (r12
-    * verdict): each fold appends up to parts×buckets files to
-    * `<prefix>_bands` and `buckets` each to `<prefix>_grams`/`_hashes`,
-    * so at production fold cadence the standing layout accumulates
-    * small files without bound — the hot probe path degrades long
-    * before 100 TB. This pass rewrites what crossed the threshold and
-    * nothing else:
+    * verdict): each fold appends up to `buckets` files to each of
+    * `<prefix>_bands`, `<prefix>_grams` and `<prefix>_hashes`, so at
+    * production fold cadence the standing layout accumulates small
+    * files without bound — the hot probe path degrades long before
+    * 100 TB. This pass rewrites each table whose file count crossed
+    * `maxFilesPerBucket` per bucket, and nothing else, through the one
+    * shadow-table + catalog-rename path
+    * ([[graft.sources.Io.compactBucketedTable]]), with torn-swap
+    * recovery on entry ([[graft.sources.Io.finishTornCompaction]]).
     *
-    *   - `<prefix>_bands` — partition-selectively: only pb= directories
-    *     with more than `maxFilesPerBucket` files per bucket rewrite,
-    *     via dynamic-partition overwrite (cold directories untouched;
-    *     a killed pass leaves each directory wholly old or wholly new);
-    *   - `<prefix>_grams` / `<prefix>_hashes` — shadow-table + catalog
-    *     rename when over threshold, with torn-swap recovery on entry
-    *     ([[graft.sources.Io.finishTornCompaction]]).
-    *
-    * Invariants, spec-pinned in AnnIndexSpec: bucket spec and partition
-    * layout survive (exchange elision + directory pruning after =
-    * before), probe results byte-identical, and the FOLD LEDGER is
-    * untouched — compaction never reads or writes the admitted log, so
-    * a fold → compact → torn fold → recovery sequence stays exactly-
-    * once (the recovery guards anti-join the same rows they would have,
-    * just from fewer files). Same operational contract as the fold: one
-    * maintenance job at a time; crash recovery supported.
+    * Invariants, spec-pinned in AnnIndexSpec: the bucket spec survives
+    * (exchange elision after = before), probe results are
+    * byte-identical, and the FOLD LEDGER is untouched — compaction never
+    * reads or writes the admitted log, so a fold → compact → torn fold →
+    * recovery sequence stays exactly-once (the recovery guards anti-join
+    * the same rows they would have, just from fewer files). Same
+    * operational contract as the fold: one maintenance job at a time;
+    * crash recovery supported.
     *
     * Returns per-table (filesBefore, filesAfter) for the tables that
     * were actually rewritten. */
   def compactCorpusLayout(spark: SparkSession, prefix: String,
       targetFileBytes: Long = 128L << 20,
-      maxFilesPerBucket: Int = 2): Map[String, (Int, Int)] = {
-    import graft.sources.Io
-    val out = Map.newBuilder[String, (Int, Int)]
-    Io.compactPartitionedBucketedTable(spark, s"${prefix}_bands",
-        targetFileBytes, maxFilesPerBucket)
-      .foreach(out += s"${prefix}_bands" -> _)
-    Seq(s"${prefix}_grams", s"${prefix}_hashes").foreach { t =>
-      Io.compactBucketedTable(spark, t, targetFileBytes, maxFilesPerBucket)
-        .foreach(out += t -> _)
-    }
-    out.result()
-  }
+      maxFilesPerBucket: Int = 2): Map[String, (Int, Int)] =
+    layoutTables(prefix).flatMap { t =>
+      graft.sources.Io.compactBucketedTable(spark, t, targetFileBytes, maxFilesPerBucket)
+        .map(t -> _)
+    }.toMap
+
+  /** The three standing tables of the corpus dedup layout under `prefix`. */
+  private def layoutTables(prefix: String): Seq[String] =
+    Seq(s"${prefix}_bands", s"${prefix}_grams", s"${prefix}_hashes")
 }

@@ -78,32 +78,6 @@ object Io {
       .format("parquet").saveAsTable(table)
   }
 
-  /** The canonical 100 TB fact-table layout: partitioned by the
-    * low-cardinality filter columns AND bucketed by the recurring join
-    * key — a probe prunes partitions first, then the join on the bucket
-    * key needs no exchange. IoSpec proves both properties together. */
-  def writePartitionedBucketed(df: DataFrame, table: String,
-      partitionCols: Seq[String], bucketKeys: Seq[String], buckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .bucketBy(buckets, bucketKeys.head, bucketKeys.tail: _*)
-      .sortBy(bucketKeys.head, bucketKeys.tail: _*)
-      .format("parquet").saveAsTable(table)
-
-  /** [[appendBucketedBy]] for the partitioned+bucketed layout: new files
-    * land inside the matching partition directories, per bucket id —
-    * standing files untouched, pruning and exchange elision unchanged
-    * (Spark validates the partition/bucket spec against the catalog). */
-  def appendPartitionedBucketed(df: DataFrame, table: String,
-      partitionCols: Seq[String], bucketKeys: Seq[String], buckets: Int): Unit = {
-    requireStanding(df.sparkSession, table)
-    df.write.mode(SaveMode.Append)
-      .partitionBy(partitionCols: _*)
-      .bucketBy(buckets, bucketKeys.head, bucketKeys.tail: _*)
-      .sortBy(bucketKeys.head, bucketKeys.tail: _*)
-      .format("parquet").saveAsTable(table)
-  }
-
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
@@ -185,38 +159,23 @@ object Io {
 
   // ---- standing bucketed-layout compaction (r13) ------------------------
   //
-  // [[appendBucketedBy]]/[[appendPartitionedBucketed]] are the
-  // incremental-maintenance WRITES; this is the maintenance half they
-  // make necessary: every fold/append lands new files BESIDE the standing
-  // ones (per bucket id, per partition dir), so at production cadence the
-  // hot read path accumulates small files without bound — listing cost,
-  // task-scheduling overhead, and row-group fragmentation degrade the
-  // probe long before 100 TB. Compaction rewrites the layout to
-  // size-bounded files while preserving the THREE properties the layout
-  // exists for: the catalog bucket spec (exchange elision), the
-  // partition directories (pruning), and row content (byte-identical
-  // probe results). AnnIndexSpec asserts all three post-compaction.
+  // [[appendBucketedBy]] is the incremental-maintenance WRITE; this is
+  // the maintenance half it makes necessary: every fold/append lands new
+  // files BESIDE the standing ones (per bucket id), so at production
+  // cadence the hot read path accumulates small files without bound —
+  // listing cost, task-scheduling overhead, and row-group fragmentation
+  // degrade the probe long before 100 TB. Compaction rewrites the layout
+  // to size-bounded files while preserving the TWO properties the layout
+  // exists for: the catalog bucket spec (exchange elision) and row
+  // content (byte-identical probe results). AnnIndexSpec asserts both
+  // post-compaction.
   //
   // Crash-safety contract (same single-maintainer model as the fold
   // itself — one maintenance job at a time, crash recovery supported):
-  //   - partitioned tables compact per-partition via DYNAMIC partition
-  //     overwrite: output is fully staged under `.spark-staging-*`
-  //     before commit, and a crash BEFORE commit leaves every standing
-  //     directory untouched. The commit itself is NOT atomic per
-  //     partition — commitJob deletes each target directory then
-  //     renames the staged one in, so a driver death inside that window
-  //     can leave a partition's rows only under the abandoned staging
-  //     dir (r13 advice). [[compactPartitionedBucketedTable]] therefore
-  //     refuses to run while a leftover `.spark-staging-*` dir exists
-  //     under the table root: the staged files are the rewritten rows
-  //     of the hot partitions, so recovery is mechanical (move each
-  //     staged `pc=` dir into place, or restore from the standing table
-  //     if its directory survived) but deliberately manual — compacting
-  //     over the evidence would make the loss permanent;
-  //   - unpartitioned tables compact via a __compact shadow table +
-  //     catalog rename; [[finishTornCompaction]] rolls an interrupted
-  //     swap forward (orig dropped → rename shadow in) or back (both
-  //     present → drop shadow) and is called automatically on entry.
+  // a table compacts via a __compact shadow table + catalog rename;
+  // [[finishTornCompaction]] rolls an interrupted swap forward (orig
+  // dropped → rename shadow in) or back (both present → drop shadow) and
+  // is called automatically on entry.
 
   private def tableMeta(spark: SparkSession, table: String) =
     spark.sessionState.catalog.getTableMetadata(
@@ -297,82 +256,6 @@ object Io {
     spark.sql(s"DROP TABLE `$table`")
     spark.sql(s"ALTER TABLE `$shadow` RENAME TO `$table`")
     Some((files, tableFileCount(spark, table)))
-  }
-
-  /** Compact a PARTITIONED + bucketed table, partition-selectively: only
-    * directories whose file count crossed `maxFilesPerBucket` per bucket
-    * are rewritten (the fold appends concentrate there; cold partitions
-    * are never touched — at 100 TB this is the difference between a
-    * bounded maintenance pass and a full-table rewrite). The rewrite is
-    * one dynamic-partition-overwrite insert of exactly the hot
-    * partitions' rows, coalesced to ceil(hotBytes / targetFileBytes)
-    * tasks; the bucket spec comes from the catalog (insertInto writes
-    * under the table's own spec — probed empirically: bucket-id file
-    * naming, pruning, and exchange elision all survive the rewrite).
-    * Crash-safety: staged-then-swapped per directory, but the swap
-    * window is not atomic — see the contract block above; a leftover
-    * `.spark-staging-*` dir under the root fails the call loud.
-    * Returns (filesBefore, filesAfter) over the hot partitions, or None
-    * when every partition is under threshold. */
-  def compactPartitionedBucketedTable(spark: SparkSession, table: String,
-      targetFileBytes: Long = 128L << 20,
-      maxFilesPerBucket: Int = 2): Option[(Int, Int)] = {
-    val meta = tableMeta(spark, table)
-    val spec = meta.bucketSpec.getOrElse(sys.error(
-      s"compactPartitionedBucketedTable($table): not a bucketed table"))
-    val partCols = meta.partitionColumnNames
-    require(partCols.size == 1,
-      s"compactPartitionedBucketedTable($table): exactly one partition " +
-        s"column supported, got $partCols")
-    val root = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stale = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(".spark-staging"))
-    require(stale.isEmpty,
-      s"compactPartitionedBucketedTable($table): leftover staging dir(s) " +
-        s"${stale.map(_.getPath.getName).mkString(", ")} under the table " +
-        "root — a prior dynamic-partition-overwrite died inside its " +
-        "commit window. Recover first (move staged `pc=` dirs into place, " +
-        "or verify every standing partition directory survived and delete " +
-        "the staging dir); compacting over it would orphan those rows " +
-        "permanently.")
-    val pc = partCols.head
-    val dirs = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$pc="))
-    val hot = dirs.map { d =>
-      val (n, bytes) = dataFileStats(spark, d.getPath)
-      (d.getPath.getName.stripPrefix(s"$pc="), n, bytes)
-    }.filter(_._2 > maxFilesPerBucket * spec.numBuckets)
-    if (hot.isEmpty) return None
-    val filesBefore = hot.map(_._2).sum
-    val n = math.max(1,
-      math.ceil(hot.map(_._3).sum.toDouble / targetFileBytes).toInt)
-    // Hive-style dir names are URL-escaped; our layouts use primitive
-    // partition values (pb ints), where name == value string and the
-    // isin comparison casts to the column type.
-    val hotVals = hot.map(_._1)
-    // Session-level, not a writer option: the analyzer's self-overwrite
-    // check (verifyNotReadPath) consults the SESSION conf — with static
-    // overwrite a table can't be rewritten from its own rows at all;
-    // dynamic mode stages output and swaps per-directory at commit,
-    // which is exactly the crash-safety contract documented above.
-    val pomKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(pomKey)
-    spark.conf.set(pomKey, "dynamic")
-    try {
-      spark.table(table).filter(col(pc).isin(hotVals: _*))
-        .coalesce(n)
-        .write.mode(SaveMode.Overwrite)
-        .insertInto(table)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(pomKey, v)
-        case None => spark.conf.unset(pomKey)
-      }
-    }
-    val filesAfter = hot.map(h => dataFileStats(spark,
-      new org.apache.hadoop.fs.Path(root, s"$pc=${h._1}"))._1).sum
-    Some((filesBefore, filesAfter))
   }
 
   /** Morton (Z-order) interleave of two ≤`bits`-bit non-negative longs:

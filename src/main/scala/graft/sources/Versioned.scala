@@ -349,18 +349,23 @@ object Versioned {
     require(appId.nonEmpty && !appId.exists(c => c == '/' || c == '\n' || c == '\r'),
       s"invalid appId '$appId': must be non-empty, no '/', no newlines")
 
-  /** Highest micro-batch id `appId` has ever committed to this table —
-    * read from the commit metadata lines, newest manifest first. The
-    * O(commits) scan is the recovery-path cost only; the steady-state
-    * sink remembers its own last id. */
+  /** Highest micro-batch id `appId` has ever committed to this table:
+    * the id on the NEWEST manifest carrying the app's `#txn=` tag.
+    * [[commitBatchAppend]] refuses any id ≤ the last committed one, so
+    * an app's committed ids only ever increase with the version — the
+    * newest tag is the maximum on every ledger this protocol writes.
+    * Manifests are read newest first and the scan stops at the first
+    * tag, so a sink that commits every batch reads one manifest per
+    * call (plus the version listing); only an app whose last commit is
+    * far back in the history pays a longer walk. */
   def lastCommittedBatch(spark: SparkSession, path: String,
       appId: String): Option[Long] = {
     requireAppId(appId)
     val prefix = s"#txn=$appId/"
     versions(spark, path).reverse.iterator
-      .flatMap(v => readManifestLines(spark, path, v)
-        .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix).toLong))
-      .reduceOption((a: Long, b: Long) => math.max(a, b))
+      .flatMap(v => readManifestLines(spark, path, v).find(_.startsWith(prefix)))
+      .map(_.stripPrefix(prefix).toLong)
+      .nextOption()
   }
 
   /** Exactly-once streaming append — the lakehouse foreachBatch sink

@@ -276,7 +276,7 @@ class AnnIndexSpec extends AnyFunSuite {
         .forEach(p => Files.delete(p))
   }
 
-  test("d13 probes a persisted corpus layout: directory-pruned, corpus side shuffle-free, equal to in-memory") {
+  test("d13 probes a persisted corpus layout: corpus side shuffle-free, equal to in-memory") {
     import graft.operators.{Dedup, Lsh}
     val docs = Tables.documents(spark, TestSpark.sf)
     val isBatch = col("doc_id") % 5 === 0
@@ -292,24 +292,7 @@ class AnnIndexSpec extends AnyFunSuite {
       .collect().map(_.toString).toSet
     assert(got == mem, s"missing=${(mem -- got).take(3)} extra=${(got -- mem).take(3)}")
 
-    // 2. Directory pruning: a small crawl's band keys map to a bounded
-    //    pb set (≤ parts ints of driver state), and the probe reads ONLY
-    //    those pb= directories — most of the corpus band table is never
-    //    touched. (Independently recomputed here with the same shared
-    //    kernel, so the assertion can't drift from the operator.)
-    val small = docs.filter(col("doc_id") % 97 === 3)
-    val pbs = Lsh.minhashBandTable(small, 3, 8, 4)
-      .select(pmod(hash(col("band"), col("sig")), lit(128)).as("pb"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    assert(pbs.nonEmpty && pbs.size <= 64, s"pruning vacuous: ${pbs.size} of 128 dirs")
-    val corp = spark.table("graft_corpus_bands").filter(col("pb").isin(pbs.toSeq: _*))
-    val plan = corp.queryExecution.executedPlan.treeString
-    assert(plan.contains("PartitionFilters: [pb"), plan.take(600))
-    val touched = corp.select(input_file_name().as("f")).distinct().collect()
-      .map(r => "pb=([0-9]+)".r.findFirstMatchIn(r.getString(0)).get.group(1).toInt).toSet
-    assert(touched.subsetOf(pbs), s"read outside probed dirs: ${touched -- pbs}")
-
-    // 3. The per-crawl band join shuffles ONLY the batch side: with
+    // 2. The per-crawl band join shuffles ONLY the batch side: with
     //    broadcast off (at scale neither side fits), the corpus scan is
     //    bucketed on the join key and feeds the join with no exchange —
     //    exactly one hash exchange (the batch) in the whole join plan.
@@ -410,9 +393,7 @@ class AnnIndexSpec extends AnyFunSuite {
       Versioned.read(spark, admitted).limit(0))
     val tornBands = Lsh.minhashBandTable(
         crawl2.select(col("doc_id"), col("text")), 3, 8, 4)
-      .withColumn("pb", pmod(hash(col("band"), col("sig")), lit(128)))
-    Io.appendPartitionedBucketed(tornBands, s"${prefix}_bands",
-      Seq("pb"), Seq("band", "sig"), 8)
+    Io.appendBucketedBy(tornBands, s"${prefix}_bands", Seq("band", "sig"), 8)
     assert(Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore).nonEmpty)
     assert(snap(prefix) == rebuildOnAdmissions(), "torn-recovery fold != rebuild")
     (layoutTables(prefix) ++ layoutTables(rb)).foreach(dropManaged)
@@ -474,16 +455,9 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(snap(prefix) == contentBefore, "compaction changed table content")
     assert(probe() == probeBefore, "compaction changed probe results")
 
-    // 2. The layout properties survive: band probes stay directory-
-    //    pruned, and the band join still reads the corpus pre-shuffled
-    //    (bucket spec preserved through the rewrite → one exchange, the
-    //    batch side only).
-    val pbs = Lsh.minhashBandTable(crawl2.select(col("doc_id"), col("text")), 3, 8, 4)
-      .select(pmod(hash(col("band"), col("sig")), lit(128)).as("pb"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val pruned = spark.table(s"${prefix}_bands").filter(col("pb").isin(pbs.toSeq: _*))
-    assert(pruned.queryExecution.executedPlan.treeString
-      .contains("PartitionFilters: [pb"), "directory pruning lost")
+    // 2. The layout property survives: the band join still reads the
+    //    corpus pre-shuffled (bucket spec preserved through the rewrite
+    //    → one exchange, the batch side only).
     val sess = spark.newSession()
     sess.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val batJ = Lsh.minhashBandTable(
@@ -504,10 +478,9 @@ class AnnIndexSpec extends AnyFunSuite {
     val v = Versioned.currentVersion(spark, admitted)
     Versioned.commitBatchAppend(spark, admitted, s"$prefix.fold.intent", v,
       Versioned.read(spark, admitted).limit(0))
-    Io.appendPartitionedBucketed(
-      Lsh.minhashBandTable(crawl2.select(col("doc_id"), col("text")), 3, 8, 4)
-        .withColumn("pb", pmod(hash(col("band"), col("sig")), lit(128))),
-      s"${prefix}_bands", Seq("pb"), Seq("band", "sig"), 8)
+    Io.appendBucketedBy(
+      Lsh.minhashBandTable(crawl2.select(col("doc_id"), col("text")), 3, 8, 4),
+      s"${prefix}_bands", Seq("band", "sig"), 8)
     assert(Dedup.compactCorpusLayout(spark, prefix, maxFilesPerBucket = 0).nonEmpty)
     assert(Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore).nonEmpty)
     def rebuildOnAdmissions(): Seq[Seq[String]] = {
@@ -560,11 +533,12 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("torn compaction then fold: the fold finishes the swap first, fold == rebuild") {
     // The r13-advice hole: a compaction dying between DROP TABLE and
-    // RENAME leaves grams/hashes with no catalog entry; a fold's append
+    // RENAME leaves a layout table with no catalog entry; a fold's append
     // used to CREATE the table fresh with only the delta rows, and the
     // next compaction's rollback then dropped the shadow holding the
     // standing corpus. Pin the fix end-to-end: the fold rolls the swap
-    // forward on entry and lands exactly the from-scratch rebuild.
+    // forward on entry and lands exactly the from-scratch rebuild, and
+    // the sink (the other writer entry) rolls it forward before probing.
     import graft.operators.Dedup
     import graft.sources.Versioned
     val docs = Tables.documents(spark, TestSpark.sf)
@@ -593,21 +567,28 @@ class AnnIndexSpec extends AnyFunSuite {
 
     // Next epoch admits new docs, THEN a compaction dies in its swap
     // window: shadow complete, original dropped — the exact DROP→RENAME
-    // crash state, on BOTH swap tables, sitting between admission and
-    // fold (the interleaving the r13 advice called untested).
-    sink(crawl2.toDF(), 1L)
-    Seq(s"${prefix}_grams", s"${prefix}_hashes").foreach { t =>
+    // crash state, on ALL THREE layout tables, sitting between admission
+    // and fold (the interleaving the r13 advice called untested).
+    def tearSwaps(): Unit = layoutTables(prefix).foreach { t =>
       spark.sql(s"ALTER TABLE `$t` RENAME TO `${t}__compact`")
       assert(!spark.catalog.tableExists(t))
     }
+    def assertSwapsFinished(writer: String): Unit = layoutTables(prefix).foreach { t =>
+      assert(spark.catalog.tableExists(t) &&
+        !spark.catalog.tableExists(s"${t}__compact"),
+        s"$t: torn swap not finished by the $writer")
+    }
+    sink(crawl2.toDF(), 1L)
+    tearSwaps()
 
     // The fold must recover the swap, not recreate tables from the delta.
     assert(Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore).nonEmpty)
-    Seq(s"${prefix}_grams", s"${prefix}_hashes").foreach { t =>
-      assert(spark.catalog.tableExists(t) &&
-        !spark.catalog.tableExists(s"${t}__compact"),
-        s"$t: torn swap not finished by the fold")
-    }
+    assertSwapsFinished("fold")
+    // The sink must recover it before its probe reads the tables; the
+    // re-offered epoch is already folded, so it admits nothing.
+    tearSwaps()
+    sink(crawl2.toDF(), 2L)
+    assertSwapsFinished("sink")
     def snap(p: String): Seq[Seq[String]] =
       layoutTables(p).map(t => spark.table(t).collect().map(_.toString).sorted.toSeq)
     val admittedTexts = Versioned.read(spark, admitted).select(col("doc_id"))

@@ -91,7 +91,7 @@ object CompactPayoffMain {
       (System.nanoTime() - t) / 1e9
     }
     // Probe batch: fixed new-vocab slice — exercises the full cascade
-    // (md5 anti-join, pb-pruned band join, gram verify) on every call.
+    // (md5 anti-join, bucketed band join, gram verify) on every call.
     val probeBatch = pool.filter(col("doc_id") % 11 === 0)
       .select((col("doc_id") + 900000000L).as("doc_id"),
         array_join(transform(split(col("text"), " "),

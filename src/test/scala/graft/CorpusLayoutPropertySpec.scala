@@ -40,10 +40,9 @@ class CorpusLayoutPropertySpec extends AnyFunSuite {
   import graft.operators.{Dedup, Lsh}
   import graft.sources.{Io, Versioned}
 
-  // Small geometry: same code paths as production (128/8), sized so a
-  // schedule is seconds, not minutes. parts MUST agree between layout
-  // writes and probes — pb is `hash(band, sig) % parts`.
-  private val Parts = 8
+  // Small geometry: same code paths as production (8 buckets), sized so
+  // a schedule is seconds, not minutes. The probe reads the bucket count
+  // from the catalog, so only layout writes and folds take it.
   private val Buckets = 1
 
   private sealed trait Op
@@ -51,16 +50,18 @@ class CorpusLayoutPropertySpec extends AnyFunSuite {
   private case object Fold extends Op
   private case object KilledFold extends Op
   private case object Compact extends Op
-  private case class TornFwd(grams: Boolean) extends Op
-  private case class TornBack(grams: Boolean) extends Op
+  private case class TornFwd(table: String) extends Op
+  private case class TornBack(table: String) extends Op
 
+  /** Suffix of the layout table a torn swap hits. */
+  private val genLayoutTable: Gen[String] = Gen.oneOf("bands", "grams", "hashes")
   private val genOp: Gen[Op] = Gen.frequency(
     5 -> Gen.const(Admit),
     3 -> Gen.const(Fold),
     1 -> Gen.const(KilledFold),
     2 -> Gen.const(Compact),
-    1 -> Gen.oneOf(true, false).map(TornFwd),
-    1 -> Gen.oneOf(true, false).map(TornBack))
+    1 -> genLayoutTable.map(TornFwd),
+    1 -> genLayoutTable.map(TornBack))
   private val genSchedule: Gen[List[Op]] =
     Gen.chooseNum(4, 10).flatMap(n => Gen.listOfN(n, genOp))
 
@@ -82,7 +83,7 @@ class CorpusLayoutPropertySpec extends AnyFunSuite {
       (layoutTables ++ layoutTables.map(_ + "__compact") ++
         layoutTables.map(_.replace(prefix, prefix + "_rb")))
         .foreach(t => graft.Ddl.dropManagedTable(spark, t))
-      Dedup.writeCorpusDedupLayout(corpus, prefix, parts = Parts, buckets = Buckets)
+      Dedup.writeCorpusDedupLayout(corpus, prefix, buckets = Buckets)
 
       var epoch = 0
       val slices = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -90,9 +91,9 @@ class CorpusLayoutPropertySpec extends AnyFunSuite {
       def textStore: DataFrame =
         (docs +: slices.toSeq).reduce(_ unionByName _).select(col("doc_id"), col("text"))
 
-      // The production sink's body with the spec's geometry (the
-      // registered sink hard-pins the 128/8 production geometry):
-      // writer-entry torn recovery, probe, ledger commit.
+      // One crawl epoch through the production sink: writer-entry torn
+      // recovery on all three tables, probe, ledger commit.
+      val sink = Dedup.streamingIncrementalDedupSink(prefix, admitted, "glpapp")
       def admitOnce(): Unit = {
         epoch += 1
         // Per-WORD vocab transform (the SoakMain construction): the
@@ -111,10 +112,7 @@ class CorpusLayoutPropertySpec extends AnyFunSuite {
         val batch = fresh.unionByName(dup).localCheckpoint()
         slices += batch
         expectedAdmitted ++= fresh.select(col("doc_id")).collect().map(_.getLong(0))
-        Seq(s"${prefix}_grams", s"${prefix}_hashes")
-          .foreach(Io.finishTornCompaction(spark, _))
-        val surv = Dedup.incrementalDedupOnLayout(spark, prefix, batch, parts = Parts)
-        Versioned.commitBatchAppend(spark, admitted, "glpapp", epoch.toLong, surv)
+        sink(batch, epoch.toLong)
       }
       def unfoldedDelta: DataFrame = {
         val v = Versioned.currentVersion(spark, admitted)
@@ -122,14 +120,13 @@ class CorpusLayoutPropertySpec extends AnyFunSuite {
         Versioned.changesBetween(spark, admitted, doneV.getOrElse(0L), v)
           .select(col("doc_id"))
       }
-      def swapTable(grams: Boolean) = if (grams) s"${prefix}_grams" else s"${prefix}_hashes"
 
       ops.foreach {
         case Admit => admitOnce()
         case Fold =>
           if (epoch == 0) admitOnce()
           Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore,
-            parts = Parts, buckets = Buckets)
+            buckets = Buckets)
         case KilledFold =>
           if (epoch == 0) admitOnce()
           val delta = unfoldedDelta.join(textStore, Seq("doc_id"))
@@ -138,27 +135,25 @@ class CorpusLayoutPropertySpec extends AnyFunSuite {
             // append, no grams/hashes, no done marker. The torn rows
             // must be recovered (not duplicated) by whichever fold runs
             // next. Recover swap state first — this is a writer too.
-            Seq(s"${prefix}_grams", s"${prefix}_hashes")
-              .foreach(Io.finishTornCompaction(spark, _))
+            layoutTables.foreach(Io.finishTornCompaction(spark, _))
             val v = Versioned.currentVersion(spark, admitted)
             Versioned.commitBatchAppend(spark, admitted, s"$prefix.fold.intent", v,
               Versioned.read(spark, admitted).limit(0))
             val bt = Lsh.minhashBandTable(delta, 3, 8, 4)
-              .withColumn("pb", pmod(hash(col("band"), col("sig")), lit(Parts)))
-            Io.appendPartitionedBucketed(bt.filter(col("pb") % 2 === 0),
-              s"${prefix}_bands", Seq("pb"), Seq("band", "sig"), Buckets)
+            Io.appendBucketedBy(bt.filter(col("band") % 2 === 0),
+              s"${prefix}_bands", Seq("band", "sig"), Buckets)
           }
         case Compact =>
           // maxFilesPerBucket=0 so every populated table rewrites — the
           // property is about interleaving safety, not thresholds.
           Dedup.compactCorpusLayout(spark, prefix, maxFilesPerBucket = 0)
-        case TornFwd(g) =>
-          val t = swapTable(g)
+        case TornFwd(suffix) =>
+          val t = s"${prefix}_$suffix"
           if (spark.catalog.tableExists(t) &&
               !spark.catalog.tableExists(s"${t}__compact"))
             spark.sql(s"ALTER TABLE `$t` RENAME TO `${t}__compact`")
-        case TornBack(g) =>
-          val t = swapTable(g)
+        case TornBack(suffix) =>
+          val t = s"${prefix}_$suffix"
           if (spark.catalog.tableExists(t) &&
               !spark.catalog.tableExists(s"${t}__compact")) {
             val meta = spark.sessionState.catalog.getTableMetadata(
@@ -176,7 +171,7 @@ class CorpusLayoutPropertySpec extends AnyFunSuite {
       // remaining admissions, so the invariants compare settled states.
       if (epoch == 0) admitOnce()
       Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore,
-        parts = Parts, buckets = Buckets)
+        buckets = Buckets)
 
       // ---- invariant 1: exactly-once admission -------------------------
       val got = Versioned.read(spark, admitted)
@@ -199,7 +194,7 @@ class CorpusLayoutPropertySpec extends AnyFunSuite {
         .select(col("doc_id")).join(textStore, Seq("doc_id"))
       Dedup.writeCorpusDedupLayout(
         corpus.select(col("doc_id"), col("text")).unionByName(admittedTexts),
-        rb, parts = Parts, buckets = Buckets)
+        rb, buckets = Buckets)
       def snap(p: String): Seq[Seq[String]] =
         Seq(s"${p}_bands", s"${p}_hashes", s"${p}_grams")
           .map(t => spark.table(t).collect().map(_.toString).sorted.toSeq)

@@ -62,49 +62,6 @@ class IoSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS bands_bkt")
   }
 
-  test("partitioned+bucketed fact layout: pruning AND exchange-free join together") {
-    // The canonical 100 TB arrangement: partition by the filter column,
-    // bucket by the join key — one layout serves both access paths.
-    spark.sql("DROP TABLE IF EXISTS events_pb")
-    val wh = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), "events_pb")
-    if (wh.exists())
-      Files.walk(wh.toPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    val events = Tables.events(spark, TestSpark.sf)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    Io.writePartitionedBucketed(events, "events_pb",
-      Seq("event_type"), Seq("user_id"), buckets = 4)
-    // Deterministic probe set: an unordered distinct().limit(50) could
-    // pick different users in the two independent executions below.
-    val users = Tables.events(spark, TestSpark.sf)
-      .select(col("user_id")).distinct().orderBy(col("user_id")).limit(50)
-    val j = spark.table("events_pb")
-      .filter(col("event_type") === "click")
-      .hint("merge")
-      .join(users.hint("shuffle_merge"), Seq("user_id"))
-    val plan = j.queryExecution.executedPlan.treeString
-    // Partition pruning from the filter reached the fact scan...
-    assert(plan.contains("PartitionFilters: [isnotnull(event_type"), plan.take(500))
-    // ...the scan is bucketed...
-    assert(plan.contains("Bucketed: true"), plan.take(500))
-    // ...and the FACT branch (join → bucketed scan) has no exchange: only
-    // the small probe side may shuffle to meet the buckets. Walk the plan
-    // lines from the join to the events_pb scan and reject any Exchange
-    // in between.
-    val lines = plan.linesIterator.toVector
-    val scanIdx = lines.indexWhere(_.contains("events_pb["))
-    val joinIdx = lines.lastIndexWhere(_.contains("SortMergeJoin"), scanIdx)
-    assert(joinIdx >= 0 && scanIdx > joinIdx, plan.take(600))
-    val factBranch = lines.slice(joinIdx + 1, scanIdx)
-    assert(!factBranch.exists(_.contains("Exchange")),
-      s"exchange on the bucketed fact side:\n${factBranch.mkString("\n")}")
-    val expected = events.filter(col("event_type") === "click")
-      .join(users, Seq("user_id")).count()
-    assert(j.count() == expected)
-    spark.sql("DROP TABLE IF EXISTS events_pb")
-  }
-
   test("csv and json roundtrip preserve values") {
     val nation = Tables.nation(spark, TestSpark.sf)
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
@@ -251,52 +208,15 @@ class IoSpec extends AnyFunSuite {
     // which turns a torn compaction swap into silent data loss (the
     // recreated delta-only table reads as the "original" and the next
     // rollback drops the shadow holding the standing corpus). Appends
-    // are maintenance, never creation: both layout append paths must
+    // are maintenance, never creation: the layout append path must
     // fail loud on a missing table.
     import spark.implicits._
     val df = Seq((1L, "a")).toDF("k", "v")
     spark.sql("DROP TABLE IF EXISTS io_no_create")
-    val e1 = intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       Io.appendBucketedBy(df, "io_no_create", Seq("k"), 2)
     }
-    assert(e1.getMessage.contains("finishTornCompaction"))
-    val dfp = Seq((1L, 0, "a")).toDF("k", "p", "v")
-    val e2 = intercept[IllegalArgumentException] {
-      Io.appendPartitionedBucketed(dfp, "io_no_create", Seq("p"), Seq("k"), 2)
-    }
-    assert(e2.getMessage.contains("finishTornCompaction"))
+    assert(e.getMessage.contains("finishTornCompaction"))
     assert(!spark.catalog.tableExists("io_no_create"))
-  }
-
-  test("partitioned compaction refuses to run over a leftover staging dir") {
-    // Dynamic-partition overwrite's commit window is not atomic: a
-    // driver death between a target dir's delete and the staged dir's
-    // rename leaves that partition's rows ONLY under .spark-staging-*.
-    // Compacting over that state would orphan the rows permanently, so
-    // the pass must fail loud and point at the evidence.
-    import spark.implicits._
-    spark.sql("DROP TABLE IF EXISTS io_staging_guard")
-    Io.writePartitionedBucketed(
-      Seq((1L, 0, "a"), (2L, 1, "b")).toDF("k", "p", "v"),
-      "io_staging_guard", Seq("p"), Seq("k"), 2)
-    val root = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier("io_staging_guard")).location)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stale = new org.apache.hadoop.fs.Path(root, ".spark-staging-deadbeef")
-    fs.mkdirs(stale)
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Io.compactPartitionedBucketedTable(spark, "io_staging_guard",
-          maxFilesPerBucket = 0)
-      }
-      assert(e.getMessage.contains(".spark-staging-deadbeef"))
-      // Clearing the evidence unblocks the pass.
-      fs.delete(stale, true)
-      assert(Io.compactPartitionedBucketedTable(spark, "io_staging_guard",
-        maxFilesPerBucket = 0).nonEmpty)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS io_staging_guard")
-    }
   }
 }

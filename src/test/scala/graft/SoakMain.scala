@@ -150,8 +150,8 @@ object SoakMain {
         .reduce(_ unionByName _)).localCheckpoint()
     // Threshold-triggered compaction rides the fold cadence (r13
     // verdict item 4): every fold is followed by a compactCorpusLayout
-    // call at the DEFAULT threshold — it rewrites only when a table/
-    // partition actually crossed maxFilesPerBucket, so across the chain
+    // call at the DEFAULT threshold — it rewrites only when a table
+    // actually crossed maxFilesPerBucket, so across the chain
     // the file count stays bounded by the threshold instead of growing
     // one file-generation per fold. The soak passes only if the
     // threshold fired at least twice — proving the trigger fires on
@@ -208,11 +208,10 @@ object SoakMain {
     val v = graft.sources.Versioned.currentVersion(spark, admitted)
     graft.sources.Versioned.commitBatchAppend(spark, admitted,
       s"$prefix.fold.intent", v, graft.sources.Versioned.read(spark, admitted).limit(0))
-    graft.sources.Io.appendPartitionedBucketed(
+    graft.sources.Io.appendBucketedBy(
       graft.operators.Lsh.minhashBandTable(
-        late.select(col("doc_id"), col("text")), 3, 8, 4)
-        .withColumn("pb", pmod(hash(col("band"), col("sig")), lit(128))),
-      s"${prefix}_bands", Seq("pb"), Seq("band", "sig"), 8)
+        late.select(col("doc_id"), col("text")), 3, 8, 4),
+      s"${prefix}_bands", Seq("band", "sig"), 8)
     println("[soak] fold killed after intent + partial bands append")
     val t2 = System.nanoTime()
     val rec = graft.operators.Dedup.refreshCorpusLayout(spark, prefix, admitted, lateStore)

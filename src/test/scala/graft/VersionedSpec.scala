@@ -109,6 +109,23 @@ class VersionedSpec extends AnyFunSuite {
     assert(Versioned.vacuum(spark, path, minAgeMs = 0) == 0)
   }
 
+  test("lastCommittedBatch stops at the newest tagged manifest") {
+    // Committed ids per appId only increase with the version, so the
+    // newest tag is the ledger's maximum and older manifests are never
+    // read: an unparseable tag on an older version must not matter.
+    val path = freshTable()
+    (1L to 3L).foreach(b => Versioned.commitBatchAppend(spark, path, "app", b,
+      Seq((b.toInt, "x")).toDF("a", "b")))
+    assert(Versioned.versions(spark, path) == Seq(1L, 2L, 3L))
+    val m1 = java.nio.file.Paths.get(path, "_versions", f"${1L}%020d.manifest")
+    val lines = new String(Files.readAllBytes(m1), "UTF-8")
+    assert(lines.contains("#txn=app/1\n"))
+    Files.write(m1, lines.replace("#txn=app/1\n", "#txn=app/not-a-number\n")
+      .getBytes("UTF-8"))
+    assert(Versioned.lastCommittedBatch(spark, path, "app").contains(3L))
+    assert(Versioned.lastCommittedBatch(spark, path, "other").isEmpty)
+  }
+
   test("foreachBatch sink end-to-end: a real stream lands as versioned commits") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
