@@ -33,12 +33,11 @@ object Ddl {
 
   /** CREATE TABLE t AS <parquet dir>/name.parquet. The catalog exposes the
     * LOGICAL schema: events' TIMESTAMP(NANOS) storage quirk is normalized
-    * to a timestamp here (Tables.events), exactly as the reference's
+    * to a timestamp here (Tables.table), exactly as the reference's
     * catalog maps storage types to query types (andb/catalog/type.py) —
     * SQL text over `events` sees `ts` as a timestamp, not raw nanos. */
   def createTable(spark: SparkSession, name: String, sfDir: String): Unit =
-    (if (name == "events") Tables.events(spark, sfDir)
-     else Tables.load(spark, sfDir, name)).createOrReplaceTempView(name)
+    Tables.table(spark, sfDir, name).createOrReplaceTempView(name)
 
   /** CREATE VIEW v AS <df>. */
   def createView(df: DataFrame, name: String): Unit =

@@ -31,7 +31,10 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
-  /** The driver has generated events.parquet two ways across rounds:
+  /** A table by name, in the logical schema SQL text sees: the one loader
+    * `Ddl.createTable` and the SQL binder share.
+    *
+    * The testdata's events.parquet comes in two encodings:
     * ts as TIMESTAMP(NANOS) — which Spark's reader rejects, so sessions
     * set spark.sql.legacy.parquet.nanosAsLong and it surfaces as
     * nanos-since-epoch, converted here with integer `div` (a double
@@ -41,13 +44,14 @@ object Tables {
     * timestamp column (ts, o_orderdate, l_shipdate) reads as a session-TZ
     * TIMESTAMP under the UTC session — identical micros, and the type
     * unix_micros/watermarks require. */
-  def events(s: SparkSession, d: String): DataFrame = {
+  def table(s: SparkSession, d: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val raw = load(s, d, "events")
-    if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    val raw = load(s, d, name)
+    if (name == "events" && raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw
   }
+  def events(s: SparkSession, d: String): DataFrame = table(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

@@ -5,25 +5,32 @@ import org.apache.spark.sql.SparkSession
 /** The relational block (q01–q99) as executable Spark SQL TEXT — the
   * interface a user of the reference actually writes first, since AnDB's
   * entire user surface is SQL strings through its parser
-  * (andb/sql/parser/lexer.py:11-131). Each entry produces the same result
-  * (names and values) as the corresponding DataFrame plan in
-  * [[Relational.defs]]; SqlParitySpec asserts that equality for every
-  * entry on every run.
+  * (andb/sql/parser/lexer.py:11-131).
   *
   * One text per query: a query's text is its DuckDB oracle text unless
   * [[overrides]] holds a Spark spelling for it. The TPC-H twins q86, q90
   * and q94 thus keep the canonical correlated EXISTS / scalar-subquery
-  * forms, and SqlParitySpec checks Spark's decorrelator against the
-  * rewrite the DataFrame side spells out.
+  * forms, and Spark's decorrelator plans them.
   *
-  * Usage: `Ddl.registerAll(spark, sfDir)` then
+  * For 82 of the 99 queries this text IS the registered query:
+  * [[Relational.defs]] runs it through
+  * [[org.apache.spark.sql.graft.BoundSql]], which binds its table names
+  * to the data directory. The other 17 keep a DataFrame plan in
+  * [[Relational.defs]] (see its header for why), and their text is the
+  * same query spelled in SQL. SqlParitySpec asserts, for every entry,
+  * that the registered query and this text run over the catalog give
+  * the same columns and rows.
+  *
+  * Usage: `BoundSql(spark, sfDir, "q25_tpch_q1")`, or
+  * `Ddl.registerAll(spark, sfDir)` then
   * `spark.sql(RelationalSql.sql("q25_tpch_q1"))`.
   *
   * The strings parse through the SAME Catalyst front end as the DataFrame
   * API, so pushdown / pruning / join selection / codegen are identical —
-  * SQL-vs-DataFrame is a syntax choice, not a performance one (q37 is the
-  * one semantic exception: its SQL form is the row_number window
-  * equivalent of the bounded-heap GroupedTopK physical operator).
+  * SQL-vs-DataFrame is a syntax choice, not a performance one. q37's
+  * text is the row_number window equivalent of the bounded-heap
+  * GroupedTopK physical operator its DataFrame plan runs, which SQL
+  * cannot name.
   */
 object RelationalSql {
 
@@ -89,9 +96,8 @@ object RelationalSql {
   /** Spark texts for the queries whose oracle spelling Spark's dialect
     * does not parse or types differently (DuckDB-only functions, casts
     * and clauses), whose oracle checks the q33 sketch export, or whose
-    * Spark text keeps the DataFrame plan's shape where the oracle spells
-    * a slower equivalent. SqlParitySpec asserts that no entry equals its
-    * oracle text. */
+    * Spark text spells a cheaper plan than the oracle's equivalent.
+    * SqlParitySpec asserts that no entry equals its oracle text. */
   private[graft] val overrides: Map[String, String] = Map(
     "q29_explode" ->
       """SELECT word, count(*) AS n FROM (
@@ -123,8 +129,8 @@ object RelationalSql {
         |       percentile_approx(l_extendedprice, 0.5, 1000) AS approx_median_price
         |FROM lineitem GROUP BY l_returnflag""".stripMargin,
 
-    // stack() is the map-side generate the DataFrame plan runs; the
-    // oracle's UNION ALL would scan part twice.
+    // stack() is a map-side generate; the oracle's UNION ALL would scan
+    // part twice.
     "q40_unpivot" ->
       """SELECT p_partkey,
         |       stack(2, 'size', CAST(p_size AS DOUBLE), 'retailprice', p_retailprice)
@@ -365,9 +371,9 @@ object RelationalSql {
         |      FROM lineitem)
         |GROUP BY 1""".stripMargin,
 
-    // Spark SQL text has no UNION BY NAME — this twin is the explicit
-    // null-fill desugaring (the one the DataFrame API performs), and
-    // SqlParitySpec pins it equal to unionByName(allowMissingColumns).
+    // Spark SQL text has no UNION BY NAME — this text is the explicit
+    // null-fill desugaring (the one unionByName(allowMissingColumns)
+    // performs).
     "q75_union_by_name" ->
       """SELECT substring(uname, 1, 8) AS feed, count(*) AS n_rows,
         |       count(segment) AS n_with_segment, count(nk) AS n_with_nk,
@@ -382,8 +388,8 @@ object RelationalSql {
         |      FROM supplier)
         |GROUP BY 1""".stripMargin,
 
-    // The struct-array sort the DataFrame plan runs; the oracle's
-    // two-key window rank is its DuckDB proof.
+    // A struct-array sort; the oracle's two-key window rank is its
+    // DuckDB proof.
     "q76_struct_ops" ->
       """SELECT o_custkey,
         |       arr[0].cents AS top_cents, arr[0].o_orderkey AS top_okey,
@@ -407,9 +413,9 @@ object RelationalSql {
         |      FROM orders)
         |WHERE rn = 1""".stripMargin,
 
-    // Spark's parser has no quantified comparisons — this twin is the
+    // Spark's parser has no quantified comparisons — this text is the
     // decorrelated scalar-subquery rewrite (empty-set edges spelled
-    // out), the same desugaring the DataFrame plan performs.
+    // out).
     "q79_quantified_cmp" ->
       """SELECT p_brand, count(*) AS n_parts,
         |       sum(CASE WHEN mx IS NULL THEN 1L
@@ -426,8 +432,8 @@ object RelationalSql {
         |      FROM part)
         |GROUP BY 1 ORDER BY 1""".stripMargin,
 
-    // The broadcast-cutoff rewrite the DataFrame plan runs; the oracle's
-    // rank() window needs a global sort.
+    // The broadcast-cutoff rewrite: a 10-row top-k gives the threshold;
+    // the oracle's rank() window needs a global sort.
     "q80_fetch_ties" ->
       """WITH b AS (SELECT o_orderkey, o_custkey,
         |             CAST(FLOOR(o_totalprice / 1000) AS BIGINT) AS price_band

@@ -399,7 +399,7 @@ class AnnIndexSpec extends AnyFunSuite {
     (layoutTables(prefix) ++ layoutTables(rb)).foreach(dropManaged)
   }
 
-  test("standing-layout compaction: files shrink, probes byte-identical, pruning + elision survive, fold ledger intact") {
+  test("standing-layout compaction: files shrink, probes byte-identical, exchange elision survives, fold ledger intact") {
     import graft.operators.{Dedup, Lsh}
     import graft.sources.{Io, Versioned}
     val docs = Tables.documents(spark, TestSpark.sf)

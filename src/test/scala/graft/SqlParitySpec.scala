@@ -51,6 +51,28 @@ class SqlParitySpec extends AnyFunSuite {
     }
   }
 
+  test("BoundSql binds a query to its data directory, not to the registered views") {
+    import graft.operators.RelationalSql
+    import org.apache.spark.sql.graft.BoundSql
+    val small = TestSpark.sf
+    val large = new java.io.File(TestSpark.sf).getParent + "/sf0.01"
+    val name = "q25_tpch_q1"
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def views() = spark.catalog.listTables().collect()
+      .map(t => (t.name, t.database, t.tableType, t.isTemporary)).toSet
+    Ddl.registerAll(spark, small)
+    val smallRows = rows(spark.sql(RelationalSql.sql(name)))
+    try {
+      Ddl.registerAll(spark, large)
+      val largeRows = rows(spark.sql(RelationalSql.sql(name)))
+      assert(smallRows != largeRows)
+      val before = views()
+      assert(rows(BoundSql(spark, small, name)) == smallRows)
+      assert(rows(BoundSql(spark, large, name)) == largeRows)
+      assert(views() == before)
+    } finally Ddl.registerAll(spark, small)
+  }
+
   test("no SQL override repeats its oracle text") {
     // A query whose oracle text Spark runs as-is has no override: its SQL
     // text IS the oracle text, so the two cannot drift apart.

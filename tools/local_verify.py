@@ -56,9 +56,11 @@ def main():
     # single-operator loop — only those are dumped and compared).
     only = pos[2] if len(pos) > 2 else ""
     if "--run" in sys.argv:
+        # No check=True: Verify exits 1 when a query fails but still
+        # dumps the rest, and the compare below reports the missing dump.
         subprocess.run(
             ["sbt", "-batch", f'runMain graft.Verify {sf_dir} {out_dir} {only}'.rstrip()],
-            cwd="/root/repo", check=True)
+            cwd=Path(__file__).resolve().parent.parent)
 
     oracle = json.loads((out_dir / "oracle_sql.json").read_text())
     con = duckdb.connect()
@@ -156,6 +158,13 @@ def main():
             print(f"  ✓ {name} rows={len(got_rows)}")
         else:
             n_fail += 1
+    # A query whose dump is missing (it failed, or was never run) is a
+    # FAIL, not a silent drop from PASS: every oracle name — every
+    # requested name in single-operator mode — must have a dump.
+    for name in sorted(only_set or oracle.keys()):
+        if not (out_dir / name).is_dir():
+            n_fail += 1
+            print(f"  ✗ {name}: no engine dump")
     tmo_note = f" TIMEOUT={n_timeout}" + (f" ({','.join(timed_out)})" if timed_out else "")
     print(f"ZERO-ROW={len(zero_row)}" + (f" ({','.join(zero_row)})" if zero_row else ""))
     if zero_row:
