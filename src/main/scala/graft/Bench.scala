@@ -4,7 +4,9 @@ package graft
   * SPARK_GRAFT_SF_DIR. A warmup pass at sf0.001 first runs every query so
   * the timed pass measures execution, not JVM JIT + codegen compilation
   * (both are per-plan-shape caches that a long-lived cluster app would
-  * have warm). */
+  * have warm). The full line also carries `codegen_compilations`, each
+  * query's count of classes compiled during its timed reps (the compact
+  * tail line carries their sum). */
 object Bench {
   /** SPARK_GRAFT_CPUS as a positive core count (default 32). Any other
     * value fails naming the variable: it sizes the session, and it names
@@ -137,6 +139,9 @@ object Bench {
     // Rows that tripped the >2× rep-spread guard, with ALL their raw rep
     // times (the flagged-row evidence verdict r14 item 3 asked for).
     val noisyReps = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+    def compilations: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiled = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val results = ordered.zipWithIndex.map { case ((name, fn), idx) =>
       if (interleaveAt(idx)) probeSample()
       pred.foreach { pf =>
@@ -164,7 +169,13 @@ object Bench {
           None
         }
       }
+      // Classes Janino compiled during the timed reps (Spark's process-
+      // wide CodegenMetrics counter): the warm-up ran the same plan
+      // shapes at sf0.001, so a non-zero count is code that differs by
+      // data-dependent literals or plan choices, not first-run cost.
+      val c0 = compilations
       val times = (1 to reps).flatMap(_ => timedRep())
+      compiled(name) = compilations - c0
       // Every row reports the min of the same `reps` reps. A row whose
       // rep spread exceeds 2× (single-row 4–12× spikes on a shared host,
       // r14 c32 leg) lands in the JSON ("noisy_reps") with every raw rep
@@ -204,10 +215,12 @@ object Bench {
     val probes = s""""probe_pre":${probeJson(probePre)},"probe_post":${probeJson(probePost)}""" +
       probeBand + nameList("pred_failed", predFailed.toSeq) + nameList("warm_failed", warmFailed)
     val qs = results.map { case (k, v) => entry(k, f3(v)) }.mkString("{", ",", "}")
+    val compiledJson = compiled.map { case (k, c) => entry(k, c.toString) }
+      .mkString(",\"codegen_compilations\":{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // Full line carries every raw probe sample; the compact tail line
     // below carries only the [min, median, max] band (tail-buffer budget).
-    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,$probes$probeSamplesJson$noisyJson,"sf":${Json.quote(sfDir)}}"""
+    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs$compiledJson,$probes$probeSamplesJson$noisyJson,"sf":${Json.quote(sfDir)}}"""
     println(line)
     // The stdout consumer captures only the last ~2000 chars of this
     // process's output, which truncates the ~220-entry map's HEAD — so
@@ -238,7 +251,7 @@ object Bench {
       .scanLeft(("", 0)) { case ((_, len), e) => (e, len + e.length + 1) }
       .drop(1).takeWhile(_._2 <= 1200).map(_._1).toSeq
     val compact = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${
-      slowest.mkString("{", ",", "}")},"n_queries":${results.size},"n_noisy":${noisyReps.size},$probes,"sf":${Json.quote(sfDir)}}"""
+      slowest.mkString("{", ",", "}")},"n_queries":${results.size},"n_noisy":${noisyReps.size},"codegen_compilations_total":${compiled.values.sum},$probes,"sf":${Json.quote(sfDir)}}"""
     println(compact)
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** The reference's DDL surface (CREATE/DROP/ALTER TABLE, CREATE INDEX/
   * VIEW/DATABASE, andb/sql/parser/lexer.py:13-17) and its ANALYZE-style
@@ -119,8 +120,10 @@ object Ddl {
     * model state its probe needs (centroids / band geometry) — the
     * catalog row the reference keeps for an index OID. */
   sealed trait IndexDef { def table: String; def using: String }
+  /** `schema` is the layout's read-back schema, recorded at CREATE
+    * INDEX so a probe plans without a footer-inference job. */
   final case class IvfIndexDef(table: String, path: String,
-      cents: Array[Array[Float]]) extends IndexDef { val using = "ivf" }
+      cents: Array[Array[Float]], schema: StructType) extends IndexDef { val using = "ivf" }
   /** Unlike IVF's plain-array model state, an LSH probe's exact re-rank
     * needs the FULL vectors (the band table stores only ids) — so
     * createIndex also registers the vectors as a catalog table
@@ -152,8 +155,8 @@ object Ddl {
     val d = using.toLowerCase match {
       case "ivf" =>
         val cents = graft.operators.AnnIndex.trainCentroids(df, k)
-        graft.operators.AnnIndex.writeIvf(df, cents, location)
-        IvfIndexDef(name, location, cents)
+        IvfIndexDef(name, location, cents,
+          graft.operators.AnnIndex.writeIvf(df, cents, location))
       case "lsh" =>
         val cat = s"${name}_bands"
         val vecs = s"${name}_vectors"
@@ -204,8 +207,8 @@ object Ddl {
     * bucket-pruned probe — without the caller knowing the method. */
   def probeIndex(spark: SparkSession, name: String, qv: Array[Float],
       k: Int, nProbe: Int = 4): DataFrame = Option(indexes.get(name)) match {
-    case Some(IvfIndexDef(_, path, cents)) =>
-      graft.operators.AnnIndex.probeIvf(spark, path, qv, cents, nProbe, k)
+    case Some(IvfIndexDef(_, path, cents, schema)) =>
+      graft.operators.AnnIndex.probeIvf(spark, path, qv, cents, nProbe, k, Some(schema))
     case Some(l: LshIndexDef) =>
       graft.operators.AnnIndex.probeLsh(
         spark, l.catalogTable, spark.table(l.vectorsTable), qv,

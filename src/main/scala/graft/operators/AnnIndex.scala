@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.sources.Io
 import org.apache.spark.sql.graft.VectorExpressions.{cosine, hyperplaneSig}
 
@@ -171,18 +172,24 @@ object AnnIndex {
   // ---- IVF persistent layout ------------------------------------------
 
   /** Write the vectors partitioned by IVF cell: one directory per cell,
-    * so a probe's equality/IN filter on `cell` is directory pruning. */
+    * so a probe's equality/IN filter on `cell` is directory pruning.
+    * Returns the layout's read-back schema, which a probe can pass to
+    * [[probeIvf]] instead of inferring it from footers. */
   def writeIvf(e: DataFrame, cents: Array[Array[Float]], path: String,
-      mode: String = "overwrite"): Unit =
-    Io.writePartitioned(
-      e.withColumn("cell", cellOf(col("embedding"), cents)), path, Seq("cell"), mode)
+      mode: String = "overwrite"): StructType = {
+    val layout = e.withColumn("cell", cellOf(col("embedding"), cents))
+    Io.writePartitioned(layout, path, Seq("cell"), mode)
+    Io.readBackSchema(layout, Seq("cell"))
+  }
 
   /** Probe the written IVF layout: filter to the query's nProbe cells
     * (partition-pruned I/O — asserted in AnnIndexSpec), exact cosine on
-    * the survivors, distributed top-k. */
+    * the survivors, distributed top-k. With the layout's `schema` the
+    * read runs no footer-inference job. */
   def probeIvf(spark: SparkSession, path: String, qv: Array[Float],
-      cents: Array[Array[Float]], nProbe: Int, k: Int): DataFrame =
-    Io.readParquet(spark, path)
+      cents: Array[Array[Float]], nProbe: Int, k: Int,
+      schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
       .filter(col("cell").isin(probeCells(qv, cents, nProbe): _*))
       .select(col("vec_id"), cosine(col("embedding"), lit(qv)).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id").asc)
@@ -372,13 +379,7 @@ object AnnIndex {
     * plans in StreamingSpec. */
   def probeLshVersioned(spark: SparkSession, path: String, qv: Array[Float],
       bandBits: Int, nBands: Int, k: Int): DataFrame = {
-    requireBandGeometry(bandBits, nBands)
-    val qRow = spark.range(1)
-      .select(hyperplaneSig(lit(qv), bandBits * nBands).as("sig"))
-      .select(col("sig"), bandKeys(col("sig"), bandBits, nBands).as("bkeys"))
-      .head()
-    val qsig = qRow.getLong(0)
-    val qKeys = qRow.getSeq[Long](1)
+    val (qsig, qKeys) = queryBandKeys(spark, qv, bandBits, nBands)
     // Per-commit-dir reads unioned (each txn dir is its own
     // hive-partitioned root); the bkey filter pushes into every child
     // scan, so each commit's directories prune independently. The IN
@@ -396,6 +397,35 @@ object AnnIndex {
       .limit(k)
   }
 
+  /** The query's signature and packed band keys, computed on the driver
+    * by the SAME `hyperplaneSig`/`bandKeys` expressions the writer packs
+    * with (so the probe's packing cannot diverge from the index's):
+    * the analyzer resolves them over the literal vector and they are
+    * evaluated in place. No Spark job runs and no class is compiled. */
+  private def queryBandKeys(spark: SparkSession, qv: Array[Float],
+      bandBits: Int, nBands: Int): (Long, Seq[Long]) = {
+    requireBandGeometry(bandBits, nBands)
+    val sig = hyperplaneSig(lit(qv), bandBits * nBands)
+    val Seq(s, keys) = spark.range(1).select(sig, bandKeys(sig, bandBits, nBands))
+      .queryExecution.analyzed.expressions.map(_.eval())
+    (s.asInstanceOf[Long],
+      keys.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq)
+  }
+
+  /** The LSH probe's conf clone of `spark`, one per caller session.
+    * Spark keys its compiled-class cache by the session's class loader,
+    * so a fresh clone per probe recompiled every class of the probe plan
+    * (three per call, whatever the vector) instead of reusing them. */
+  private def probeSessionFor(spark: SparkSession): SparkSession =
+    probeSessions.computeIfAbsent(spark, { s =>
+      val clone = s.newSession()
+      clone.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+      clone
+    })
+
+  private val probeSessions = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SparkSession]())
+
   /** Probe the bucketed band table: `bkey IN (query's nBands keys)` reads
     * only the matching buckets (bucket pruning — asserted in
     * AnnIndexSpec), first-matching-band drops duplicate candidates
@@ -412,21 +442,12 @@ object AnnIndex {
     * `spark.newSession()` — shared catalog and cluster, isolated conf —
     * so the rule stays enabled for everything else and the returned
     * DataFrame (and any plan derived from it: added filters, .count())
-    * keeps pruning under the clone's conf. */
+    * keeps pruning under the clone's conf. The clone is made once per
+    * caller session and reused ([[probeSessionFor]]). */
   def probeLsh(spark: SparkSession, table: String, vectors: DataFrame,
       qv: Array[Float], bandBits: Int, nBands: Int, k: Int): DataFrame = {
-    requireBandGeometry(bandBits, nBands)
-    val probeSession = spark.newSession()
-    probeSession.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    // One 1-row job yields the query signature AND its packed band keys
-    // through the SAME bandKeys expression the writer used — the packing
-    // cannot diverge between the index and the probe.
-    val qRow = probeSession.range(1)
-      .select(hyperplaneSig(lit(qv), bandBits * nBands).as("sig"))
-      .select(col("sig"), bandKeys(col("sig"), bandBits, nBands).as("bkeys"))
-      .head()
-    val qsig = qRow.getLong(0)
-    val qKeys = qRow.getSeq[Long](1)
+    val (qsig, qKeys) = queryBandKeys(spark, qv, bandBits, nBands)
+    val probeSession = probeSessionFor(spark)
     val cands = probeSession.table(table)
       .filter(col("bkey").isin(qKeys: _*))
       .filter(shiftright(col("bkey"), bandBits) === Lsh.firstMatchingBand(

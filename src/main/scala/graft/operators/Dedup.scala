@@ -1882,14 +1882,21 @@ object Dedup {
     * (only the batch side shuffles) → exact-Jaccard verify against
     * persisted gram sets → LEFT ANTI drop. Same stages, same kernels,
     * same band geometry as the registered d13; AnnIndexSpec pins result
-    * equality. */
+    * equality.
+    *
+    * `exactSurv` feeds three consumers (the band table, the gram sets
+    * and the final anti-join) but is not cut: all three sit in one plan,
+    * where its exchange is reused, and a cut would cost its own job. The
+    * final anti-join broadcasts `dupIds`, which holds at most one batch
+    * of ids (only batch-side doc ids survive the verify), and planning
+    * the broadcast up front spares AQE the two shuffle stages it would
+    * run before flipping the join to a broadcast itself. */
   def incrementalDedupOnLayout(spark: SparkSession, prefix: String, batch: DataFrame,
       shingleN: Int = 3, bands: Int = 8, rows: Int = 4): DataFrame = {
     val exactSurv = batch
       .withColumn("h", md5(col("text")))
       .join(spark.table(s"${prefix}_hashes").select(col("h")), Seq("h"), "left_anti")
       .drop("h")
-      .localCheckpoint() // feeds the band table AND the final anti-join
     val cands = Lsh.minhashBandTable(exactSurv, shingleN, bands, rows).as("a")
       .join(spark.table(s"${prefix}_bands").as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
@@ -1899,7 +1906,7 @@ object Dedup {
     val dupIds = Lsh.jaccardVerifiedPairsHs(
         cands, batHs, spark.table(s"${prefix}_grams"), 0.9)
       .select(col("a_id").as("doc_id"))
-    exactSurv.join(dupIds, Seq("doc_id"), "left_anti")
+    exactSurv.join(broadcast(dupIds), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("source"), col("n_chars"))
   }
 

@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, SparkPlan}
+import org.apache.spark.sql.graft.ParamLiteral
 import org.apache.spark.sql.graft.TextHash.{MinHashSignature, QualityFeaturesExpr, ShingleHashSet, SimHash64}
 import org.apache.spark.sql.graft.VectorExpressions.{CosineSimilarity, CosineVsConstant, DotProduct, L2Norm}
 import org.apache.spark.sql.types.{ArrayType, FloatType}
@@ -14,6 +16,11 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
   * optimizer/function-catalog seam (andb/sql/optimizer/transformations.py,
   * andb/catalog/function.py): SQL-callable vector functions plus a
   * logical-plan rewrite, injected without forking Spark.
+  *
+  * Rules: two optimizer rewrites ([[NormalizeConstantCosine]],
+  * [[ThresholdedLevenshtein]]) and one physical rule,
+  * [[StableFilterLiterals]], which keeps filter code literal-free so a
+  * new binding reuses the compiled class instead of compiling its own.
   *
   * [[graft.GraftSession]] installs it on every session it builds; a
   * session built elsewhere enables it with
@@ -63,6 +70,50 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       es => QualityFeaturesExpr(es(0), strArrayArg(es, 1), boolArg(es, 2, default = true))))
     ext.injectOptimizerRule(_ => NormalizeConstantCosine)
     ext.injectOptimizerRule(_ => ThresholdedLevenshtein)
+    ext.injectColumnar(_ => StableFilterLiterals.AsColumnarRule)
+  }
+}
+
+/** Literal-stable filter code: swaps the primitive literals that are
+  * operands of a comparison, an `IN` list or arithmetic inside a
+  * `FilterExec` condition for a [[ParamLiteral]], whose generated code
+  * reads the value from the class's `references` array. One compiled
+  * class then serves every binding of a filter, where Spark would
+  * otherwise compile a fresh one per new value: each append range, crawl
+  * batch, SQL literal and probe signature on the serve path.
+  *
+  * It runs as a pre-transition columnar rule: on Spark 4.1 that is
+  * inside `ApplyColumnarRulesAndInsertTransitions`, before
+  * `CollapseCodegenStages`, on the whole plan without AQE and on every
+  * query stage with it. By then scans have already taken their pushed
+  * filters and partition/bucket pruning from the logical plan, so those
+  * keep real literals. Projections and aggregates are left alone: their
+  * literals are mostly fixed per query shape, so rewriting them would
+  * add per-plan work and save few compiles.
+  */
+object StableFilterLiterals extends Rule[SparkPlan] {
+  import org.apache.spark.sql.catalyst.expressions.{BinaryArithmetic, BinaryComparison, In}
+  import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType}
+
+  object AsColumnarRule extends ColumnarRule {
+    override def preColumnarTransitions: Rule[SparkPlan] = StableFilterLiterals
+  }
+
+  private def param(e: Expression): Expression = e match {
+    case Literal(v, t @ (IntegerType | LongType | DoubleType | FloatType | ShortType | ByteType))
+        if v != null => ParamLiteral(v, t)
+    case other => other
+  }
+
+  private def stabilize(cond: Expression): Expression = cond.transformUp {
+    case e @ (_: BinaryComparison | _: BinaryArithmetic | _: In) =>
+      e.withNewChildren(e.children.map(param))
+  }
+
+  override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
+    case f: FilterExec =>
+      val cond = stabilize(f.condition)
+      if (cond fastEquals f.condition) f else f.copy(condition = cond)
   }
 }
 

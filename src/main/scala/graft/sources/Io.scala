@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Source/sink surface: how graft tables get on and off disk.
   *
@@ -93,6 +94,14 @@ object Io {
 
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
+
+  /** The schema a parquet read of `df` written with `partitionCols`
+    * gives back: every column nullable, partition columns last. A reader
+    * handed this schema skips footer inference, which is a Spark job. */
+  def readBackSchema(df: DataFrame, partitionCols: Seq[String]): StructType = {
+    val (parts, data) = df.schema.fields.partition(f => partitionCols.contains(f.name))
+    StructType((data ++ parts).map(_.copy(nullable = true)))
+  }
 
   /** Schema-explicit CSV read (inference costs a full extra pass at
     * scale; always pass the schema in production paths). */

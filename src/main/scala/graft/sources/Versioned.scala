@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned table with transactional visibility — the Spark/lakehouse
   * answer to the reference's transaction manager
@@ -40,7 +41,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * A manifest is a text file listing the data directories composing
   * that version (append = base dirs + staged dir; replace = staged dir
-  * only). Layout under `path/`:
+  * only). Lines starting with `#` are commit metadata, not layout:
+  * `#delta=<base>` (below), `#txn=<appId>/<batchId>` (the streaming
+  * ledger) and `#schema=<json>`, the schema of the rows [[stage]]
+  * wrote, as `StructType.json` on one line (partition columns last, the
+  * order partition discovery gives them). A reader of that version
+  * plans with the recorded schema, so it runs no footer-inference job;
+  * a manifest without the line (written before it existed, or by a
+  * commit that staged in another process) reads through inference as
+  * before. Layout under `path/`:
   * {{{
   *   _versions/00000000000000000001.manifest   -- one per committed version
   *   data/txn-<uuid>/part-*.parquet            -- one dir per writer
@@ -76,6 +85,8 @@ object Versioned {
     * wins; the loser [[rebase]]s and retries). */
   final case class Txn(path: String, id: String, base: Long) {
     def stagingDir: String = s"$path/data/txn-$id"
+    /** What [[stage]] wrote, recorded by the commit as `#schema=`. */
+    @volatile private[sources] var stagedSchema: Option[StructType] = None
   }
 
   final class ConflictException(msg: String) extends RuntimeException(msg)
@@ -118,19 +129,31 @@ object Versioned {
   val CheckpointEvery: Long = 16L
 
   private val DeltaRe = "#delta=([0-9]+)".r
+  private val SchemaPrefix = "#schema="
 
   /** Data directories of version `v` ("#"-prefixed lines are commit
     * metadata — e.g. the streaming batch tag or the delta base pointer —
     * not layout). A delta manifest resolves against its base, walking at
     * most [[CheckpointEvery]] files before hitting a full manifest. */
-  private def readManifest(spark: SparkSession, path: String, v: Long): Seq[String] = {
-    val lines = readManifestLines(spark, path, v)
+  private def readManifest(spark: SparkSession, path: String, v: Long): Seq[String] =
+    resolveDirs(spark, path, readManifestLines(spark, path, v))
+
+  private def resolveDirs(spark: SparkSession, path: String, lines: Seq[String]): Seq[String] = {
     val dirs = lines.filterNot(_.startsWith("#"))
     lines.collectFirst { case DeltaRe(b) => b.toLong } match {
       case Some(base) => readManifest(spark, path, base) ++ dirs
       case None => dirs
     }
   }
+
+  /** A parquet reader for one version: with the schema its manifest
+    * records, or inferring from footers when the manifest has none. */
+  private def reader(spark: SparkSession, lines: Seq[String]): DataFrameReader =
+    lines.collectFirst { case l if l.startsWith(SchemaPrefix) => l.stripPrefix(SchemaPrefix) }
+      .fold(spark.read)(json => spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]))
+
+  private def schemaMeta(txn: Txn): Seq[String] =
+    txn.stagedSchema.map(SchemaPrefix + _.json).toSeq
 
   /** Publish an APPEND commit's manifest: a 2-line delta against `base`
     * normally, a full self-contained snapshot on checkpoint versions
@@ -267,8 +290,11 @@ object Versioned {
     * staged files are untouched (they were never version-bound), only
     * the commit target moves. The caller re-validates its read set if
     * the statement's semantics demand it (an append rarely does). */
-  def rebase(spark: SparkSession, txn: Txn): Txn =
-    txn.copy(base = versions(spark, txn.path).lastOption.getOrElse(0L))
+  def rebase(spark: SparkSession, txn: Txn): Txn = {
+    val moved = txn.copy(base = versions(spark, txn.path).lastOption.getOrElse(0L))
+    moved.stagedSchema = txn.stagedSchema
+    moved
+  }
 
   /** Write rows into the transaction's staging directory. May be called
     * repeatedly (overwrite semantics — restaging replaces the stage, it
@@ -282,6 +308,7 @@ object Versioned {
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(txn.stagingDir)
+    txn.stagedSchema = Some(Io.readBackSchema(df, partitionCols))
   }
 
   /** COMMIT of an INSERT: version base+1 = base's dirs + staged dir.
@@ -289,7 +316,7 @@ object Versioned {
     * serializes them, the loser throws [[ConflictException]]. */
   def commitAppend(spark: SparkSession, txn: Txn): Long = {
     require(txn.base >= 1, s"cannot append to unborn table ${txn.path}")
-    writeAppendManifest(spark, txn.path, txn.base, s"data/txn-${txn.id}")
+    writeAppendManifest(spark, txn.path, txn.base, s"data/txn-${txn.id}", schemaMeta(txn))
   }
 
   /** COMMIT of an UPDATE/DELETE/overwrite rewrite: version base+1 is
@@ -299,7 +326,7 @@ object Versioned {
     * concurrent committer's rows. */
   def commitReplace(spark: SparkSession, txn: Txn): Long = {
     val next = txn.base + 1
-    writeManifest(spark, txn.path, next, Seq(s"data/txn-${txn.id}"))
+    writeManifest(spark, txn.path, next, Seq(s"data/txn-${txn.id}"), schemaMeta(txn))
     next
   }
 
@@ -322,8 +349,8 @@ object Versioned {
     * immutable and never deleted by commits), which is also what makes
     * "read after abort" trivially correct. */
   def readAsOf(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val dirs = dataDirs(spark, path, version)
-    spark.read.parquet(dirs: _*)
+    val lines = readManifestLines(spark, path, version)
+    reader(spark, lines).parquet(resolveDirs(spark, path, lines).map(d => s"$path/$d"): _*)
   }
 
   /** Data directories composing `version`, absolute. For readers that
@@ -398,7 +425,7 @@ object Versioned {
       try {
         // batch 0 of a fresh table CREATES it (base dirs empty).
         return Some(writeAppendManifest(spark, path, txn.base,
-          s"data/txn-${txn.id}", meta = Seq(batchTag(appId, batchId))))
+          s"data/txn-${txn.id}", meta = batchTag(appId, batchId) +: schemaMeta(txn)))
       } catch {
         case _: ConflictException =>
           // Someone committed under us — if it was our own replayed
@@ -436,14 +463,16 @@ object Versioned {
     val fromDirs =
       if (fromVersion == 0) Set.empty[String]
       else readManifest(spark, path, fromVersion).toSet
-    val toDirs = readManifest(spark, path, toVersion)
+    val toLines = readManifestLines(spark, path, toVersion)
+    val toDirs = resolveDirs(spark, path, toLines)
     require(fromDirs.subsetOf(toDirs.toSet),
       s"version $toVersion is not an append descendant of $fromVersion " +
         "(a replace commit rewrote the layout) — read the full version " +
         "or diff rows explicitly")
     val added = toDirs.filterNot(fromDirs)
-    if (added.isEmpty) spark.read.parquet(s"$path/${toDirs.head}").limit(0)
-    else spark.read.parquet(added.map(d => s"$path/$d"): _*)
+    val read = reader(spark, toLines)
+    if (added.isEmpty) read.parquet(s"$path/${toDirs.head}").limit(0)
+    else read.parquet(added.map(d => s"$path/$d"): _*)
   }
 
   /** OPTIMIZE analog: rewrite the current version's rows into

@@ -114,7 +114,8 @@ object VectorExpressions {
     * ~2.5× slower on the IVF argmax (16 constants × one row vector).
     * Semantics identical to CosineSimilarity: length mismatch → null,
     * zero norm (either side) → 0.0. The constant is held as Seq so equal
-    * rewrites canonicalize equal; codegen embeds it as a float[] ref. */
+    * rewrites canonicalize equal; codegen passes it (and ‖c‖) through
+    * `references`, so the generated source is the same for every vector. */
   case class CosineVsConstant(child: Expression, vec: Seq[Float])
       extends UnaryExpression with ExpectsInputTypes {
     override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
@@ -142,6 +143,12 @@ object VectorExpressions {
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, x => {
         val c = ctx.addReferenceObj("cvec", arr, "float[]")
+        // ‖c‖ reaches the class through `references` too, never as a
+        // spliced double constant, so every query vector of one plan
+        // shape shares one compiled class.
+        val normRef = ctx.addReferenceObj("cnorm", cNorm, "java.lang.Double")
+        val cn = ctx.addMutableState("double", "cnorm",
+          v => s"$v = $normRef.doubleValue();", forceInline = true)
         val i = ctx.freshName("i"); val dot = ctx.freshName("dot")
         val nx = ctx.freshName("nx"); val xi = ctx.freshName("xi")
         s"""
@@ -153,8 +160,8 @@ object VectorExpressions {
               double $xi = (double) $x.getFloat($i);
               $dot += $xi * (double) $c[$i]; $nx += $xi * $xi;
             }
-            ${ev.value} = ($nx == 0.0 || $cNorm == 0.0) ? 0.0
-              : $dot / (java.lang.Math.sqrt($nx) * $cNorm);
+            ${ev.value} = ($nx == 0.0 || $cn == 0.0) ? 0.0
+              : $dot / (java.lang.Math.sqrt($nx) * $cn);
           }
         """
       })

@@ -231,6 +231,37 @@ class DdlSpec extends AnyFunSuite {
     Seq("emb_lsh_bands", "emb_lsh_vectors").foreach(Ddl.dropManagedTable(spark, _))
   }
 
+  test("index probes run no footer or prologue job and compile no class for a new query vector") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ddl-probe").toString
+    val e = Tables.embeddings(spark, TestSpark.sf)
+    val vs = e.filter(col("vec_id") < 3).orderBy(col("vec_id")).select(col("embedding"))
+      .collect().map(_.getSeq[Float](0).toArray)
+    Ddl.createIndex(spark, "probe_ivf", e, "ivf", s"$tmp/ivf", k = 16)
+    Ddl.createIndex(spark, "probe_lsh", e, "lsh", location = "", bandBits = 8, nBands = 8)
+    def compilations: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    try {
+      for ((name, jobsPerProbe) <- Seq("probe_ivf" -> 1, "probe_lsh" -> 2)) {
+        def probe(v: Array[Float]) = org.apache.spark.graft.JobCounter(spark.sparkContext)(
+          Ddl.probeIndex(spark, name, v, k = 10).collect().map(_.getLong(0)))
+        val (first, jobs) = probe(vs(0))
+        assert(first.head == 0L)
+        // IVF: the layout reads with its recorded schema (no footer job);
+        // LSH: the query's band keys are evaluated on the driver (no
+        // 1-row job), beside the broadcast of the candidates.
+        assert(jobs == jobsPerProbe, s"$name ran $jobs jobs")
+        probe(vs(1))
+        val c0 = compilations
+        val (third, _) = probe(vs(2))
+        assert(third.head == 2L)
+        assert(compilations == c0, s"$name compiled ${compilations - c0} classes for a new vector")
+      }
+    } finally {
+      Ddl.dropIndex("probe_ivf"); Ddl.dropIndex("probe_lsh")
+      Seq("probe_lsh_bands", "probe_lsh_vectors").foreach(Ddl.dropManagedTable(spark, _))
+    }
+  }
+
   test("graft.sql front door: index DDL, pruned probe, EXPLAIN and CHECKPOINT from statement text alone") {
     // The reference's interaction shape — everything is SQL text through
     // one entry point — end to end: CREATE INDEX ... USING ivf builds

@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParamLiteral
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
-class ExtensionsSpec extends AnyFunSuite {
+class ExtensionsSpec extends AnyFunSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   private val spark = TestSpark.spark
   import spark.implicits._
 
@@ -120,5 +124,68 @@ class ExtensionsSpec extends AnyFunSuite {
     val rules = spark.sessionState.optimizer.extendedOperatorOptimizationRules
     assert(rules.contains(graft.plans.NormalizeConstantCosine))
     assert(rules.contains(graft.plans.ThresholdedLevenshtein))
+    assert(spark.sessionState.columnarRules.contains(graft.plans.StableFilterLiterals.AsColumnarRule))
+  }
+
+  private def compilations: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  private def filtersOf(df: org.apache.spark.sql.DataFrame) =
+    collect(df.queryExecution.executedPlan) { case f: org.apache.spark.sql.execution.FilterExec => f }
+
+  test("StableFilterLiterals: a filter that differs only in a literal compiles no new class") {
+    val orders = Tables.orders(spark, TestSpark.sf)
+    def q(k: Int, lo: Double) = orders
+      .filter(col("o_custkey") % 64 === k && col("o_totalprice") > lo)
+      .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    rows(q(3, 10.0)) // compiles the plan shape once
+    val c0 = compilations
+    val got = q(4, 25.5)
+    val r = rows(got)
+    assert(compilations == c0, s"${compilations - c0} classes compiled for a new literal")
+    // Same rows as a locally filtered reference.
+    val expected = orders.select("o_custkey", "o_totalprice", "o_orderpriority").collect()
+      .filter(x => x.getLong(0) % 64 == 4 && x.getDouble(1) > 25.5)
+      .groupBy(_.getString(2)).map { case (k, xs) => k -> xs.length.toLong }
+    assert(r == expected)
+    val conds = filtersOf(got).map(_.condition)
+    assert(conds.exists(_.exists(_.isInstanceOf[ParamLiteral])), conds.mkString(";"))
+    assert(!conds.exists(_.exists {
+      case Literal(_, t) => t == IntegerType || t == LongType || t == DoubleType
+      case _ => false
+    }), conds.mkString(";"))
+  }
+
+  test("StableFilterLiterals leaves the scan's pushed filters with the real literal") {
+    val df = Tables.orders(spark, TestSpark.sf).filter(col("o_custkey") === 1234567L)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters: [IsNotNull(o_custkey), EqualTo(o_custkey,1234567)]"), plan)
+    assert(filtersOf(df).exists(_.condition.exists(_.isInstanceOf[ParamLiteral])), plan)
+  }
+
+  test("StableFilterLiterals: branches that differ only in a literal are not reused as one exchange") {
+    val orders = Tables.orders(spark, TestSpark.sf)
+    def branch(k: Long) = orders.filter(col("o_custkey") % 7 === k)
+      .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
+      .withColumn("k", lit(k))
+    def reused(df: org.apache.spark.sql.DataFrame) = {
+      df.collect()
+      df.queryExecution.executedPlan.toString.contains("ReusedExchange")
+    }
+    val distinct = branch(1L).unionByName(branch(2L))
+    assert(!reused(distinct), distinct.queryExecution.executedPlan.toString)
+    val got = distinct.collect().map(r => (r.getAs[Long]("k"), r.getAs[String]("o_orderpriority")) ->
+      r.getAs[Long]("n")).toMap
+    val expected = orders.select("o_custkey", "o_orderpriority").collect()
+      .filter(x => x.getLong(0) % 7 == 1 || x.getLong(0) % 7 == 2)
+      .groupBy(x => (x.getLong(0) % 7, x.getString(1))).map { case (k, xs) => k -> xs.length.toLong }
+    assert(got == expected)
+    // Control: equal values still canonicalize equal and reuse the exchange.
+    val same = orders.filter(col("o_custkey") % 7 === 1L)
+      .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
+    assert(reused(same.unionByName(same)))
   }
 }

@@ -188,6 +188,68 @@ class VersionedSpec extends AnyFunSuite {
     assert(Versioned.vacuum(spark, path, minAgeMs = 0) == 0)
   }
 
+  private def jobs[T](body: => T): (T, Int) =
+    org.apache.spark.graft.JobCounter(spark.sparkContext)(body)
+
+  private def manifests(path: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    Files.list(java.nio.file.Paths.get(path, "_versions")).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".manifest")).toSeq
+  }
+
+  test("reads, change feeds and optimize plan from the manifest's schema: no inference job") {
+    val path = freshTable()
+    Versioned.create(spark, path, baseDf)
+    val txn = Versioned.begin(spark, path)
+    Versioned.stage(txn, Seq((5, "e5")).toDF("a", "b"))
+    Versioned.commitAppend(spark, txn)
+    assert(manifests(path).forall(m => Files.readString(m).contains("#schema=")))
+    val (read, readJobs) = jobs(Versioned.read(spark, path))
+    assert(readJobs == 0, s"planning a versioned read ran $readJobs job(s)")
+    assert(read.schema.fieldNames.toSeq == Seq("a", "b"))
+    assert(rows(path) == (base :+ ((5, Some("e5")))).sortBy(r => (r._1, r._2)))
+    assert(jobs(Versioned.changesBetween(spark, path, 1L, 2L))._2 == 0)
+    // optimize: only the rewrite itself, no footer inference before it.
+    val (v, optJobs) = jobs(Versioned.optimize(spark, path))
+    assert(v.contains(3L) && optJobs == 1, s"optimize ran $optJobs jobs")
+    assert(rows(path) == (base :+ ((5, Some("e5")))).sortBy(r => (r._1, r._2)))
+    // A manifest without the schema line (an older table) still reads,
+    // through footer inference.
+    manifests(path).foreach { m =>
+      Files.writeString(m, Files.readString(m).linesIterator
+        .filterNot(_.startsWith("#schema=")).map(_ + "\n").mkString)
+    }
+    val (_, inferJobs) = jobs(Versioned.read(spark, path))
+    assert(inferJobs == 1, s"an unrecorded schema should infer with one job, ran $inferJobs")
+    assert(rows(path) == (base :+ ((5, Some("e5")))).sortBy(r => (r._1, r._2)))
+    assert(Versioned.readAsOf(spark, path, 1).count() == 4)
+  }
+
+  test("hive-partitioned stages record partition columns last and read back correctly") {
+    val path = freshTable()
+    Versioned.commitBatchAppend(spark, path, "w", 0L,
+      Seq((1, 10, "x"), (2, 20, "y")).toDF("p", "a", "b"), partitionCols = Seq("p"))
+    // One commit: the version reads directly, with the schema footer
+    // inference plus partition discovery would give, and prunes on p.
+    val (df, readJobs) = jobs(Versioned.read(spark, path))
+    assert(readJobs == 0)
+    assert(df.schema == spark.read.parquet(Versioned.dataDirs(spark, path, 1L): _*).schema)
+    assert(df.schema.fieldNames.toSeq == Seq("a", "b", "p"))
+    val pruned = df.filter($"p" === 1)
+    assert(pruned.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSeq == Seq((10, "x", 1)))
+    val scanned = pruned.queryExecution.executedPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.metrics("numFiles").value
+    }
+    assert(scanned == Seq(1L), pruned.queryExecution.executedPlan.toString)
+    // Several commits: each txn dir is its own partitioned root, read per
+    // directory and unioned (Versioned.dataDirs), as before.
+    Versioned.commitBatchAppend(spark, path, "w", 1L,
+      Seq((1, 30, "z"), (3, 40, "w")).toDF("p", "a", "b"), partitionCols = Seq("p"))
+    val got = Versioned.dataDirs(spark, path, 2L).map(spark.read.parquet(_)).reduce(_ unionByName _)
+      .collect().map(r => (r.getAs[Int]("a"), r.getAs[String]("b"), r.getAs[Int]("p"))).sortBy(_._1).toSeq
+    assert(got == Seq((10, "x", 1), (20, "y", 2), (30, "z", 1), (40, "w", 3)))
+  }
+
   test("concurrent committers: exactly one wins, the loser gets a conflict") {
     val path = freshTable()
     Versioned.create(spark, path, baseDf)
