@@ -1,24 +1,44 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Benchmark main: one JSON line with per-query seconds at
-  * SPARK_GRAFT_SF_DIR. A warmup pass at sf0.001 first runs every query so
-  * the timed pass measures execution, not JVM JIT + codegen compilation
-  * (both are per-plan-shape caches that a long-lived cluster app would
-  * have warm). The full line also carries `codegen_compilations`, each
-  * query's count of classes compiled during its timed reps (the compact
-  * tail line carries their sum). */
+  * SPARK_GRAFT_SF_DIR. A warmup pass at sf0.001 first runs every query,
+  * so the timed pass starts with JIT-compiled code and with every plan
+  * shape's generated classes in Spark's codegen cache, which graft sizes
+  * to hold all 254 queries' classes (`CodegenCache`). The full line also
+  * carries `codegen_compilations`, each query's count of classes compiled
+  * during its timed reps (the compact tail line carries their sum). */
 object Bench {
   /** SPARK_GRAFT_CPUS as a positive core count (default 32). Any other
     * value fails naming the variable: it sizes the session, and it names
     * the per-core `bench_full_c<cpus>.json` table. */
   def cpusFromEnv(): Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
 
-  private[graft] def parseCpus(raw: Option[String]): Int = raw match {
-    case None => 32
+  private[graft] def parseCpus(raw: Option[String]): Int =
+    positiveInt("SPARK_GRAFT_CPUS", raw, 32)
+
+  /** The value of env variable `name` as a positive integer, `default`
+    * when unset; any other value fails naming the variable. */
+  private[graft] def positiveInt(name: String, raw: Option[String], default: Int): Int = raw match {
+    case None => default
     case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS='$v' must be a positive integer core count"))
+      throw new IllegalArgumentException(s"$name='$v' must be a positive integer"))
   }
+
+  /** Runs `f`, labelled `what` (a query name, or the pass it is in). A
+    * non-fatal failure goes to stderr and gives None, so the run goes on
+    * and reports the query; a JVM error ends the run, naming `what`. */
+  private[graft] def attempt[T](what: String)(f: => T): Option[T] =
+    try Some(f) catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $what failed: ${e.getClass.getName}: " +
+          s"${String.valueOf(e.getMessage).take(300)}")
+        None
+      case e: Throwable =>
+        System.err.println(s"[bench] $what: fatal ${e.getClass.getName}, ending the run")
+        throw e
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -27,9 +47,19 @@ object Bench {
     // scale-attribution legs: does a superlinear octave row linearize
     // when partitions scale with the corpus, the way a real cluster
     // would scale them? (BASELINE.md "Round 11: Bench integrity".)
+    val partitions = positiveInt("SPARK_GRAFT_SHUFFLE_PARTITIONS",
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"), cpus)
+    // Three timed reps, report min: same query, same plan — min is the
+    // machine-noise-robust steady-state capability (the first rep also
+    // absorbs the cold file-cache read of the target SF).
+    // SPARK_GRAFT_BENCH_REPS overrides for big-SF one-pass sweeps where
+    // 3× the surface doesn't fit a session (the durable-minima protocol
+    // then merges several single-rep runs instead).
+    // A value that is not a positive integer stops the run before the
+    // session starts, naming the variable.
+    val reps = positiveInt("SPARK_GRAFT_BENCH_REPS", sys.env.get("SPARK_GRAFT_BENCH_REPS"), 3)
     val spark = GraftSession.builder("graft-bench", cpus)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus.toString))
+      .config("spark.sql.shuffle.partitions", partitions.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Deterministic name-sorted order for BOTH the warm-up and the timed
@@ -48,38 +78,8 @@ object Bench {
     // its own), but it is never silent: stderr, plus "warm_failed" in both
     // JSON lines — a query that throws at sf0.001 reaches its timed reps
     // with cold JIT/codegen caches, which taints its number.
-    val warmFailed = ordered.flatMap { case (name, fn) =>
-      try { fn(spark, warmDir).count(); None }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warm-up $name failed: ${e.getClass.getName}: " +
-          s"${String.valueOf(e.getMessage).take(300)}")
-        Some(name)
-      }
-    }
-    // Three timed reps, report min: same query, same plan — min is the
-    // machine-noise-robust steady-state capability (the first rep also
-    // absorbs the cold file-cache read of the target SF).
-    // SPARK_GRAFT_BENCH_REPS overrides for big-SF one-pass sweeps where
-    // 3× the surface doesn't fit a session (the durable-minima protocol
-    // then merges several single-rep runs instead).
-    // Clamped to ≥1 and tolerant of junk: a mistyped value must degrade
-    // to the default, not crash the whole sweep with an empty times seq.
-    val reps = math.max(1,
-      sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption).getOrElse(3))
-    // Matched-conditions legs (r11, verdict item 2): the r9/r10
-    // adjudications kept finding per-query numbers moved 1.7–20× with
-    // the BENCH CONTEXT — whichever query ran before the target leaves
-    // its JIT/page-cache/GC state behind, so two legs are comparable
-    // only if they share a predecessor or both run standalone
-    // (BASELINE.md r10, "harness order is part of the measurement").
-    // SPARK_GRAFT_BENCH_PRED=<query-name> pins that context: the named
-    // query runs once, UNTIMED, at the target SF immediately before
-    // every selected query's timed reps. Octave/regression rows in
-    // BASELINE.md should come from either FILTER-standalone legs or
-    // PRED-pinned legs — never from two different full-surface runs.
-    val pred = sys.env.get("SPARK_GRAFT_BENCH_PRED").map { p =>
-      SparkEntry.queries.getOrElse(p,
-        throw new IllegalArgumentException(s"SPARK_GRAFT_BENCH_PRED=$p is not a query name"))
+    val warmFailed = ordered.collect {
+      case (name, fn) if attempt(s"warm-up $name")(fn(spark, warmDir).count()).isEmpty => name
     }
     // Calibration probes (r12, verdict item 2): two fixed synthetic jobs —
     // one CPU/codegen-bound (wide range + arithmetic, no I/O), one
@@ -121,13 +121,6 @@ object Bench {
     }
     scanJob(); shuffleJob() // warm the two plan shapes once, untimed
     val probePre = calibrationProbe()
-    // Queries whose pinned predecessor THREW (r12 advice): stderr alone is
-    // not loud enough — the stdout consumer captures only this process's
-    // tail, so a leg that silently degraded to unpinned would post its
-    // timings indistinguishably from a controlled one. The names land in
-    // the JSON as "pred_failed" so every downstream table sees the
-    // degradation next to the numbers it taints.
-    val predFailed = scala.collection.mutable.ArrayBuffer.empty[String]
     // Interleaved probe points: immediately before the queries at the
     // 1/4, 1/2, 3/4 marks of the (name-sorted, deterministic) timed
     // order. This inserts a tiny synthetic predecessor in front of
@@ -144,16 +137,6 @@ object Bench {
     val compiled = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val results = ordered.zipWithIndex.map { case ((name, fn), idx) =>
       if (interleaveAt(idx)) probeSample()
-      pred.foreach { pf =>
-        // A pred failure must be LOUD: if the pinned predecessor throws at
-        // the target SF the leg silently degrades to unpinned, which is
-        // exactly the uncontrolled comparison PRED exists to prevent.
-        try pf(spark, sfDir).count() catch { case e: Throwable =>
-          predFailed += name
-          System.err.println(s"[bench] pred failed before $name: " +
-            s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}")
-        }
-      }
       // A failed rep must NOT post its (near-zero) wall as the query's
       // min — the r11 sf4.0 leg showed a throwing query landing as
       // "0.006 s", which reads as FAST in every downstream table. Failed
@@ -162,17 +145,13 @@ object Bench {
       // goes to stderr.
       def timedRep(): Option[Double] = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getClass.getName}: " +
-            s"${String.valueOf(e.getMessage).take(300)}")
-          None
-        }
+        attempt(name)(fn(spark, sfDir).count()).map(_ => (System.nanoTime() - t0) / 1e9)
       }
       // Classes Janino compiled during the timed reps (Spark's process-
-      // wide CodegenMetrics counter): the warm-up ran the same plan
-      // shapes at sf0.001, so a non-zero count is code that differs by
-      // data-dependent literals or plan choices, not first-run cost.
+      // wide CodegenMetrics counter): the warm-up compiled the same plan
+      // shapes at sf0.001 and the sized cache still holds them, so a
+      // non-zero count is code that differs at the target scale
+      // (data-dependent literals or plan choices), not first-run cost.
       val c0 = compilations
       val times = (1 to reps).flatMap(_ => timedRep())
       compiled(name) = compilations - c0
@@ -213,7 +192,7 @@ object Bench {
       else noisyReps.map { case (k, ts) => entry(k, ts.map(f3).mkString("[", ",", "]")) }
         .mkString(",\"noisy_reps\":{", ",", "}")
     val probes = s""""probe_pre":${probeJson(probePre)},"probe_post":${probeJson(probePost)}""" +
-      probeBand + nameList("pred_failed", predFailed.toSeq) + nameList("warm_failed", warmFailed)
+      probeBand + nameList("warm_failed", warmFailed)
     val qs = results.map { case (k, v) => entry(k, f3(v)) }.mkString("{", ",", "}")
     val compiledJson = compiled.map { case (k, c) => entry(k, c.toString) }
       .mkString(",\"codegen_compilations\":{", ",", "}")

@@ -8,7 +8,15 @@ import org.apache.spark.sql.SparkSession
   * `.config(...)` on the returned builder (a later `.config` wins).
   *
   *  - `local[cores]` with `shuffle.partitions = cores`
-  *  - the library's own rules and functions ([[graft.plans.GraftExtensions]])
+  *  - the library's own rules and functions ([[graft.plans.GraftExtensions]]),
+  *    which also size Spark's JVM-wide compiled-class cache to graft's
+  *    working set (`org.apache.spark.sql.graft.CodegenCache`) unless the
+  *    Spark conf sets `spark.sql.codegen.cache.maxEntries`. The cache is
+  *    sized once, when the builder installs the extension: a value given
+  *    by `.config(...)` on this builder comes too late for the first
+  *    session (set it in the SparkConf: spark-submit `--conf` or a
+  *    `-Dspark.` system property), and a JVM that ran Spark codegen
+  *    before any graft session keeps Spark's size
   *  - UTC session time zone
   *  - `nanosAsLong` + `inferTimestampNTZ=false`: the testdata carries
   *    TIMESTAMP(NANOS) or TIMESTAMP(MICROS, isAdjustedToUTC=false)

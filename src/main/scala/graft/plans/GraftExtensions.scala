@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, SparkPlan}
-import org.apache.spark.sql.graft.ParamLiteral
+import org.apache.spark.sql.graft.{CodegenCache, ParamLiteral}
 import org.apache.spark.sql.graft.TextHash.{MinHashSignature, QualityFeaturesExpr, ShingleHashSet, SimHash64}
 import org.apache.spark.sql.graft.VectorExpressions.{CosineSimilarity, CosineVsConstant, DotProduct, L2Norm}
 import org.apache.spark.sql.types.{ArrayType, FloatType}
@@ -21,6 +21,12 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
   * [[ThresholdedLevenshtein]]) and one physical rule,
   * [[StableFilterLiterals]], which keeps filter code literal-free so a
   * new binding reuses the compiled class instead of compiling its own.
+  *
+  * Installing it also sizes Spark's compiled-class cache for graft's
+  * working set, once per JVM ([[CodegenCache]]; Spark's own
+  * `spark.sql.codegen.cache.maxEntries`, when the Spark conf sets it,
+  * wins). A JVM that ran Spark codegen before the first graft session
+  * keeps Spark's size of 100.
   *
   * [[graft.GraftSession]] installs it on every session it builds; a
   * session built elsewhere enables it with
@@ -71,6 +77,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => NormalizeConstantCosine)
     ext.injectOptimizerRule(_ => ThresholdedLevenshtein)
     ext.injectColumnar(_ => StableFilterLiterals.AsColumnarRule)
+    CodegenCache.sizeOnce()
   }
 }
 

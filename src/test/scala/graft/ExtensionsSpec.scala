@@ -130,6 +130,31 @@ class ExtensionsSpec extends AnyFunSuite
   private def compilations: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
+  test("the codegen cache outlasts Spark's 100 entries: a re-run plan compiles no class") {
+    // Each literal is spliced into its plan's generated code, so every
+    // plan compiles its own class; 150 of them overflow Spark's default.
+    def run(i: Int): Unit =
+      assert(spark.range(1).selectExpr(s"id * $i + 1 AS x").collect().head.getLong(0) == 1L)
+    (0 until 150).foreach(run)
+    val c0 = compilations
+    run(0)
+    assert(compilations == c0, s"${compilations - c0} classes recompiled for the first plan")
+  }
+
+  test("CodegenCache.entries: Spark's own conf value wins, else graft's size") {
+    import org.apache.spark.sql.graft.CodegenCache
+    assert(CodegenCache.entries(None) == CodegenCache.GraftEntries)
+    assert(CodegenCache.entries(Some("500")) == 500)
+    assert(CodegenCache.entries(Some("0")) == 0)
+    Seq("-1", "many", "").foreach { bad =>
+      val e = intercept[IllegalArgumentException](CodegenCache.entries(Some(bad)))
+      assert(e.getMessage.contains("spark.sql.codegen.cache.maxEntries") ||
+        e.getMessage.contains("must not be negative"), e.getMessage)
+    }
+    // Nothing in the suite's JVM sets the conf: the suite session runs at graft's size.
+    assert(CodegenCache.sizeOnce() == CodegenCache.GraftEntries)
+  }
+
   private def filtersOf(df: org.apache.spark.sql.DataFrame) =
     collect(df.queryExecution.executedPlan) { case f: org.apache.spark.sql.execution.FilterExec => f }
 

@@ -131,4 +131,21 @@ class UtilitySpec extends AnyFunSuite {
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS"))
     }
   }
+
+  test("Bench parses its rep count and shuffle partitions strictly") {
+    for (v <- Seq("SPARK_GRAFT_BENCH_REPS", "SPARK_GRAFT_SHUFFLE_PARTITIONS")) {
+      assert(Bench.positiveInt(v, None, 3) == 3)
+      assert(Bench.positiveInt(v, Some(" 12 "), 3) == 12)
+      Seq("0", "-1", "3x", "two", "").foreach { bad =>
+        val e = intercept[IllegalArgumentException](Bench.positiveInt(v, Some(bad), 3))
+        assert(e.getMessage.contains(v) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
+    }
+  }
+
+  test("Bench.attempt reports a failed query and goes on, but a JVM error ends the run") {
+    assert(Bench.attempt("q")(41 + 1).contains(42))
+    assert(Bench.attempt("q")(throw new IllegalStateException("boom")).isEmpty)
+    intercept[OutOfMemoryError](Bench.attempt("q")(throw new OutOfMemoryError("simulated")))
+  }
 }
