@@ -638,12 +638,12 @@ object Ann {
           .orderBy(col("simq").desc, col("vec_id").asc)
           .limit(30)
           .localCheckpoint()
-        var selected = pool
+        val first = pool
           .orderBy(col("simq").desc, col("vec_id").asc).limit(1)
           .select(col("vec_id"), col("embedding"), col("simq"),
             lit(1).as("pick"), (lit(0.5) * col("simq")).as("mmr_score"))
           .localCheckpoint()
-        for (step <- 2 to k) {
+        Graph.unroll(first, k - 1) { (selected, round) =>
           val remaining = pool
             .join(selected.select(col("vec_id")), Seq("vec_id"), "left_anti")
           val red = remaining
@@ -656,12 +656,9 @@ object Ann {
               lit(0.5) * col("simq") - lit(0.5) * col("maxred"))
             .orderBy(col("mmr_score").desc, col("vec_id").asc).limit(1)
             .select(col("vec_id"), col("embedding"), col("simq"),
-              lit(step).as("pick"), col("mmr_score"))
-          // Lazy cut (r14, the loop-family discipline — Graph.pageRankLoop):
-          // lineage truncated, per-step result job deferred; no unpersist.
-          selected = selected.union(pick).localCheckpoint(eager = false)
-        }
-        selected.select(col("pick"), col("vec_id"),
+              lit(round + 1).as("pick"), col("mmr_score"))
+          selected.union(pick)
+        }.select(col("pick"), col("vec_id"),
           col("simq").as("cos_sim"), col("mmr_score"))
       },
       Some(mmrOracle(10))),
@@ -1281,10 +1278,10 @@ object Ann {
       (s, d) => {
         val e = Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
           .select(col("vec_id"), col("embedding")).localCheckpoint()
-        var v: DataFrame = s.range(1).select(
+        val v0 = s.range(1).select(
           expr(s"transform(sequence(1, $SqDim), i -> CAST(0.125 AS DOUBLE))").as("pv"),
           lit(0.0).as("nrm"))
-        for (_ <- 1 to PowerIters) {
+        Graph.unroll(v0, PowerIters) { (v, _) =>
           val scored = e.crossJoin(broadcast(v.select(col("pv"))))
             .select(col("embedding"), Graph.grid9(expr(
               "aggregate(zip_with(embedding, pv, (x, y) -> x * y), " +
@@ -1293,7 +1290,7 @@ object Ann {
             .select(posexplode(col("embedding")), col("sc"))
             .groupBy(col("pos"))
             .agg(Graph.grid9(avg(col("col") * col("sc"))).as("nv"))
-          v = dims
+          dims
             .agg(sort_array(collect_list(struct(col("pos"), col("nv")))).as("a"))
             .select(expr("transform(a, x -> x.nv)").as("raw"))
             .select(col("raw"), Graph.grid9(sqrt(expr(
@@ -1302,11 +1299,7 @@ object Ann {
             .select(expr(
               "transform(raw, x -> FLOOR(x / nrm * 1000000000 + 0.5) / 1000000000)")
               .as("pv"), col("nrm"))
-            // Lazy cut (r14, the loop-family discipline): the next
-            // iteration's broadcast build materializes it; no unpersist.
-            .localCheckpoint(eager = false)
-        }
-        v.select(col("nrm").as("lambda"), posexplode(col("pv")))
+        }.select(col("nrm").as("lambda"), posexplode(col("pv")))
           .select(col("pos"), col("col").as("loading"), col("lambda"))
       },
       Some(powerIterationOracle(PowerIters))),

@@ -380,16 +380,12 @@ object AnnIndex {
   def probeLshVersioned(spark: SparkSession, path: String, qv: Array[Float],
       bandBits: Int, nBands: Int, k: Int): DataFrame = {
     val (qsig, qKeys) = queryBandKeys(spark, qv, bandBits, nBands)
-    // Per-commit-dir reads unioned (each txn dir is its own
-    // hive-partitioned root); the bkey filter pushes into every child
-    // scan, so each commit's directories prune independently. The IN
-    // list must carry the INFERRED partition type (int — hive discovery
-    // reads "bkey=52" as IntegerType): a long literal would wrap the
-    // partition column in a cast, which defeats partition pruning.
-    val v = graft.sources.Versioned.currentVersion(spark, path)
-    graft.sources.Versioned.dataDirs(spark, path, v)
-      .map(spark.read.parquet(_)).reduce(_ unionByName _)
-      .filter(col("bkey").isin(qKeys.map(_.toInt): _*))
+    // The version reads one hive-partitioned scan per commit directory;
+    // the bkey filter pushes into every one of them, so each commit's
+    // directories prune independently. bkey reads as the long the
+    // manifest's recorded schema says, so the IN list is longs too.
+    graft.sources.Versioned.read(spark, path)
+      .filter(col("bkey").isin(qKeys: _*))
       .filter(shiftright(col("bkey").cast("long"), bandBits) ===
         Lsh.firstMatchingBand(col("sig").bitwiseXOR(lit(qsig)), bandBits, nBands))
       .select(col("vec_id"), cosine(col("embedding"), lit(qv)).as("cos_sim"))

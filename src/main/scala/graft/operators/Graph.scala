@@ -24,8 +24,8 @@ import graft.Tables
   * Scale design, per PageRank iteration: ranks⋈edges is the ONLY
   * corpus-sized join, hash-partitioned on the join key; the dangling-mass
   * and node count are 1-row aggregates broadcast by crossJoin; lineage is
-  * cut with localCheckpoint every iteration (the d06/d09 CC-loop
-  * discipline — without it Catalyst re-plans a 10-deep join tree). On a
+  * cut every iteration ([[unroll]] — without it Catalyst re-plans a
+  * 10-deep join tree). On a
   * cluster the edge table is written ONCE bucketed by src (sources/Io
   * bucketing), so the per-iteration join shuffles only the rank side —
   * the same standing-layout argument AnnIndexSpec proves for the ANN
@@ -69,6 +69,33 @@ object Graph {
     * discipline can't drift between operators. */
   private[operators] def grid9(c: Column): Column =
     floor(c * 1000000000L + 0.5) / 1000000000L
+
+  /** The fixed-round loop every unrolled DataFrame loop of the operator
+    * families runs through: `step` applied `rounds` times to `init`,
+    * given the state and the 1-based round. This is the one statement of
+    * their lineage-cut policy:
+    *   - the returned state is cut after every `cutEvery`-th round and
+    *     after the last one, so a loop's plan stays constant-size instead
+    *     of Catalyst re-planning a join tree as deep as the loop;
+    *   - the cut is LAZY (`localCheckpoint(eager = false)`): the RDD is
+    *     built at call time (under AQE its shuffle stages even
+    *     materialize here), but the result job is deferred to the state's
+    *     next consumer, so the loop itself runs no result job. Measured
+    *     on g01 (OPTIMIZATION_r14.md §8, one JVM interleaved, 7 reps at
+    *     sf0.1): lazy min/median 2.59/2.85 s vs eager 2.76/3.09 s,
+    *     results bit-identical;
+    *   - `cutEvery > 1` is safe only for a step that references its state
+    *     once: lineage between cuts then grows linearly, not 2^depth;
+    *   - nothing is unpersisted here, so the order of the lazy cuts and
+    *     their consumers cannot matter.
+    * Cuts inside a step (g05's `keep`) belong to that step. */
+  private[graft] def unroll(init: DataFrame, rounds: Int, cutEvery: Int = 1)(
+      step: (DataFrame, Int) => DataFrame): DataFrame =
+    (1 to rounds).foldLeft(init) { (state, round) =>
+      val next = step(state, round)
+      if (round % cutEvery == 0 || round == rounds) next.localCheckpoint(eager = false)
+      else next
+    }
 
   /** Temporal-proximity edges: consecutive distinct actors in each
     * event_type stream acting within `gapUs` of each other — ONE
@@ -133,11 +160,9 @@ object Graph {
     * anti-join + global agg + crossJoin per iteration changes NOTHING in
     * the result — only the per-iteration fixed cost. It also makes each
     * iteration reference the previous ranks ONCE (the dangling term was
-    * the second reference), which is what makes `cutEvery > 1` safe:
-    * lineage between checkpoints grows linearly, not 2^depth, so cutting
-    * every second iteration halves the number of eager materialization
-    * jobs without recompute amplification. Dangling graphs keep
-    * `cutEvery = 1` (two references per iteration → cut every round). */
+    * the second reference), which is what makes `cutEvery > 1` safe
+    * ([[unroll]]). Dangling graphs cut every round whatever `cutEvery`
+    * says (two references per iteration). */
   private[graft] def pageRankLoop(
       nodes: DataFrame, edges: DataFrame, iters: Int,
       dangling: Boolean = true, cutEvery: Int = 1): DataFrame = {
@@ -170,44 +195,33 @@ object Graph {
           .select(col("id"), coalesce(col("has_out"), lit(false)).as("has_out"))
           .localCheckpoint()
       else nodesC
-    var ranks =
+    val ranks0 =
       if (dangling)
         nodesD.select(col("id"), (lit(1.0) / lit(nVal)).as("r"), col("has_out"))
           .localCheckpoint()
       else
         nodesD.select(col("id"), (lit(1.0) / lit(nVal)).as("r")).localCheckpoint()
-    for (i <- 1 to iters) {
+    unroll(ranks0, iters, if (dangling) 1 else cutEvery) { (ranks, _) =>
       val contribs = edgesW
         .join(ranks.select(col("id").as("src"), col("r")), "src")
         .groupBy(col("dst")).agg(sum(col("r") * col("w") / col("wdeg")).as("cin"))
-      ranks =
-        if (dangling) {
-          val dang = ranks.filter(!col("has_out"))
-            .agg(coalesce(sum(col("r")), lit(0.0)).as("dang"))
-          nodesD.crossJoin(dang)
-            .join(contribs, col("id") === col("dst"), "left")
-            .select(col("id"),
-              grid9(lit(0.15) / lit(nVal) +
-                lit(0.85) * (coalesce(col("cin"), lit(0.0)) + col("dang") / lit(nVal))).as("r"),
-              col("has_out"))
-        } else {
-          nodesD
-            .join(contribs, col("id") === col("dst"), "left")
-            .select(col("id"),
-              grid9(lit(0.15) / lit(nVal) +
-                lit(0.85) * coalesce(col("cin"), lit(0.0))).as("r"))
-        }
-      if (dangling || i % cutEvery == 0 || i == iters)
-        // LAZY cut (r14, commit fd1e1c0): the cut still truncates
-        // lineage (the RDD is built at call time — under AQE its shuffle
-        // stages even materialize here) but skips the per-iteration
-        // RESULT materialization job, deferring it to the next consumer.
-        // Measured on g01 (OPTIMIZATION_r14.md §8, one-JVM interleaved,
-        // 7 reps at sf0.1): lazy min/median 2.59/2.85 vs eager
-        // 2.76/3.09 s, results bit-identical.
-        ranks = ranks.localCheckpoint(eager = false)
-    }
-    ranks.select(col("id"), col("r"))
+      if (dangling) {
+        val dang = ranks.filter(!col("has_out"))
+          .agg(coalesce(sum(col("r")), lit(0.0)).as("dang"))
+        nodesD.crossJoin(dang)
+          .join(contribs, col("id") === col("dst"), "left")
+          .select(col("id"),
+            grid9(lit(0.15) / lit(nVal) +
+              lit(0.85) * (coalesce(col("cin"), lit(0.0)) + col("dang") / lit(nVal))).as("r"),
+            col("has_out"))
+      } else {
+        nodesD
+          .join(contribs, col("id") === col("dst"), "left")
+          .select(col("id"),
+            grid9(lit(0.15) / lit(nVal) +
+              lit(0.85) * coalesce(col("cin"), lit(0.0))).as("r"))
+      }
+    }.select(col("id"), col("r"))
   }
 
   /** The per-iteration (contrib, dangling, rank) CTE triples of
@@ -738,7 +752,7 @@ object Graph {
     // < k until fixpoint — what survives is the 3-core, the standard
     // spam/community-density substrate (Seidman 1983). Each round is one
     // degree aggregate + two semi-joins (edges keep both endpoints),
-    // localCheckpoint'd like every iterative-family loop; the round count
+    // cut like every iterative-family loop ([[unroll]]); the round count
     // is FIXED at [[KcoreRounds]] so the DuckDB oracle can replay the
     // identical unroll, and a driver-side scalar check fails LOUDLY if
     // the peel hasn't converged by then (an unconverged core silently
@@ -751,19 +765,14 @@ object Graph {
     ("g05_kcore",
       (s, d) => {
         val k = 3
-        var e = undirectedEdges(s, d)
-        for (_ <- 1 to KcoreRounds) {
-          // Lazy cuts (r14, the loop-family discipline — see
-          // pageRankLoop): lineage still truncated per peel, result
-          // jobs deferred to the next consumer; no unpersist in this
-          // loop, so ordering is trivially safe.
+        val e = unroll(undirectedEdges(s, d), KcoreRounds) { (e, _) =>
           val keep = e.select(col("u").as("x")).union(e.select(col("v").as("x")))
             .groupBy(col("x")).agg(count(lit(1)).as("dg"))
             .filter(col("dg") >= k)
             .select(col("x")).localCheckpoint(eager = false)
-          e = e.join(keep.select(col("x").as("u")), Seq("u"), "left_semi")
+          e.join(keep.select(col("x").as("u")), Seq("u"), "left_semi")
             .join(keep.select(col("x").as("v")), Seq("v"), "left_semi")
-            .select(col("u"), col("v")).localCheckpoint(eager = false)
+            .select(col("u"), col("v"))
         }
         val mdRow = e.select(col("u").as("x")).union(e.select(col("v").as("x")))
           .groupBy(col("x")).agg(count(lit(1)).as("dg"))
@@ -1233,7 +1242,7 @@ object Graph {
     // a seed set). Seeds are every graph node with user_id ≡ 0 (mod 50);
     // 6 relaxation rounds bound the horizon, unreached nodes are absent
     // (not NULL rows). Each round is ONE hash-keyed join + ONE min
-    // aggregate with lineage cut (the CC-loop discipline); full-edge
+    // aggregate with lineage cut ([[unroll]]); full-edge
     // relaxation keeps the round a pure replayable plan — a production
     // run at 100 TB sends only the CHANGED frontier into the join
     // (frontier ⋈ edges instead of dist ⋈ edges), same plan shape with a
@@ -1245,19 +1254,15 @@ object Graph {
         val sym = und.select(col("u").as("x"), col("v").as("y"))
           .union(und.select(col("v").as("x"), col("u").as("y")))
           .localCheckpoint()
-        var dist = sym.select(col("x").as("node")).distinct()
+        val dist0 = sym.select(col("x").as("node")).distinct()
           .filter(col("node") % 50 === 0)
           .withColumn("dist", lit(0L)).localCheckpoint()
-        for (_ <- 1 to BfsRounds) {
+        unroll(dist0, BfsRounds) { (dist, _) =>
           val hop = sym.join(dist, sym("x") === dist("node"))
             .select(col("y").as("node"), (col("dist") + 1L).as("dist"))
-          dist = dist.union(hop)
+          dist.union(hop)
             .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-            // Lazy cut (r14, the loop-family discipline): no unpersist
-            // in this loop, ordering trivially safe.
-            .localCheckpoint(eager = false)
-        }
-        dist.select(col("node").as("user_id"), col("dist"))
+        }.select(col("node").as("user_id"), col("dist"))
       },
       Some {
         val head =
@@ -1297,7 +1302,7 @@ object Graph {
     // argmax is ONE max(struct) aggregate (cnt, then -label), not a
     // window: per-iteration work is labels⋈edges (hash-keyed on the
     // node id, the g01 shape) + two map-side-combined aggregates,
-    // lineage cut per sweep (CC-loop discipline). Scale: state is one
+    // lineage cut per sweep ([[unroll]]). Scale: state is one
     // (node,label) row per node; the join shuffles only the label side
     // once edges are bucketed by source ([[graft.sources.Io]] standing
     // layout); counts never materialize more than (node, distinct
@@ -1312,19 +1317,15 @@ object Graph {
         val sym = und.select(col("u").as("x"), col("v").as("y"))
           .union(und.select(col("v").as("x"), col("u").as("y")))
           .localCheckpoint()
-        var lbl = sym.select(col("x").as("node")).distinct()
+        val lbl0 = sym.select(col("x").as("node")).distinct()
           .withColumn("label", col("node")).localCheckpoint()
-        for (_ <- 1 to LpaRounds) {
-          lbl = sym.join(lbl, sym("y") === lbl("node"))
+        unroll(lbl0, LpaRounds) { (lbl, _) =>
+          sym.join(lbl, sym("y") === lbl("node"))
             .groupBy(col("x"), col("label")).agg(count(lit(1)).as("cnt"))
             .groupBy(col("x"))
             .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
             .select(col("x").as("node"), (-col("m.nl")).as("label"))
-            // Lazy cut (r14, the loop-family discipline): no unpersist
-            // in this loop, ordering trivially safe.
-            .localCheckpoint(eager = false)
-        }
-        lbl.groupBy(col("label").as("community"))
+        }.groupBy(col("label").as("community"))
           .agg(count(lit(1)).as("n_users"))
       },
       Some {

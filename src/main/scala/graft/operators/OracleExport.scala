@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Shared plumbing for the "model fed to the oracle as a table" pattern
   * (t17/Bpe's judge-sanctioned design, factored for reuse): an operator
@@ -43,7 +44,9 @@ object OracleExport {
             org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
         }
       }
-    } catch { case _: Throwable => () }
+    } catch {
+      case NonFatal(e) => System.err.println(s"[export] sweep of $base failed: $e")
+    }
     // GRAFT_EXPORT_ROOT pins the root across processes — the multi-step
     // scale-gate workflow (full Verify, then targeted re-compares in
     // later processes) needs later runs to read/write the SAME export

@@ -1103,14 +1103,16 @@ object Relational {
     // The config-table-in-the-query idiom: a literal VALUES relation
     // (priority → rank, discount policy) joined against the fact table —
     // the lookup every engine must broadcast rather than shuffle (5 rows
-    // vs the orders corpus). The
-    // discounted sum is floored at cents — integer exact for the
-    // comparison while the per-row math stays codegen'd doubles.
+    // vs the orders corpus). Each row's discounted price is rounded to
+    // integer cents BEFORE the sum, so the total is exact in any
+    // summation order while the per-row math stays codegen'd doubles
+    // (rounding a double sum would turn a last-ulp order difference
+    // into a one-cent step).
     bound("q72_inline_lookup",
       """SELECT prio_rank, o_orderpriority,
                      CAST(count(*) AS BIGINT) AS n_orders,
-                     CAST(FLOOR(sum(o_totalprice * (1.0 - discount)) * 100 + 0.5)
-                       AS BIGINT) AS disc_cents
+                     CAST(sum(CAST(FLOOR(o_totalprice * (1.0 - discount) * 100 + 0.5)
+                       AS BIGINT)) AS BIGINT) AS disc_cents
               FROM orders
               JOIN (VALUES ('1-URGENT', CAST(1 AS BIGINT), CAST(0.0 AS DOUBLE)),
                            ('2-HIGH', 2, 0.05), ('3-MEDIUM', 3, 0.1),

@@ -758,10 +758,10 @@ object TextAnalysis {
         // exactly 0.0 every iteration (the oracle's g-CTEs compute the
         // same empty-sum 0.0): the dangling=false path is bit-identical
         // and drops an anti-join + global agg + crossJoin per iteration;
-        // cutEvery=5 cuts the eager materialization jobs from ten to
-        // two (safe: one ranks reference per iteration on this path, so
-        // lineage between cuts grows linearly — measured best of the
-        // 2/5/10 sweep, commit 4a6ac04).
+        // cutEvery=5 cuts the ranks twice instead of ten times (safe:
+        // one ranks reference per iteration on this path, see
+        // [[Graph.unroll]] — measured best of the 2/5/10 sweep, commit
+        // 4a6ac04).
         Graph.pageRankLoop(nodes, edges, TrIters, dangling = false, cutEvery = 5)
           .orderBy(col("r").desc, col("id").asc).limit(30)
           .select(col("id").as("word"), col("r").as("textrank"))

@@ -1,8 +1,9 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
+import scala.util.control.NonFatal
 
 /** Versioned table with transactional visibility — the Spark/lakehouse
   * answer to the reference's transaction manager
@@ -43,9 +44,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * that version (append = base dirs + staged dir; replace = staged dir
   * only). Lines starting with `#` are commit metadata, not layout:
   * `#delta=<base>` (below), `#txn=<appId>/<batchId>` (the streaming
-  * ledger) and `#schema=<json>`, the schema of the rows [[stage]]
+  * ledger), `#schema=<json>`, the schema of the rows [[stage]]
   * wrote, as `StructType.json` on one line (partition columns last, the
-  * order partition discovery gives them). A reader of that version
+  * order partition discovery gives them), and `#partitionCols=<a,b>`
+  * when the stage was hive-partitioned. A reader of that version
   * plans with the recorded schema, so it runs no footer-inference job;
   * a manifest without the line (written before it existed, or by a
   * commit that staged in another process) reads through inference as
@@ -85,8 +87,9 @@ object Versioned {
     * wins; the loser [[rebase]]s and retries). */
   final case class Txn(path: String, id: String, base: Long) {
     def stagingDir: String = s"$path/data/txn-$id"
-    /** What [[stage]] wrote, recorded by the commit as `#schema=`. */
-    @volatile private[sources] var stagedSchema: Option[StructType] = None
+    /** What [[stage]] wrote, recorded by the commit: its `#schema=` and
+      * `#partitionCols=` lines. */
+    @volatile private[sources] var stagedMeta: Seq[String] = Nil
   }
 
   final class ConflictException(msg: String) extends RuntimeException(msg)
@@ -130,6 +133,7 @@ object Versioned {
 
   private val DeltaRe = "#delta=([0-9]+)".r
   private val SchemaPrefix = "#schema="
+  private val PartitionColsPrefix = "#partitionCols="
 
   /** Data directories of version `v` ("#"-prefixed lines are commit
     * metadata — e.g. the streaming batch tag or the delta base pointer —
@@ -146,14 +150,27 @@ object Versioned {
     }
   }
 
-  /** A parquet reader for one version: with the schema its manifest
-    * records, or inferring from footers when the manifest has none. */
-  private def reader(spark: SparkSession, lines: Seq[String]): DataFrameReader =
-    lines.collectFirst { case l if l.startsWith(SchemaPrefix) => l.stripPrefix(SchemaPrefix) }
-      .fold(spark.read)(json => spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]))
+  private def metaValue(lines: Seq[String], prefix: String): Option[String] =
+    lines.collectFirst { case l if l.startsWith(prefix) => l.stripPrefix(prefix) }
 
-  private def schemaMeta(txn: Txn): Seq[String] =
-    txn.stagedSchema.map(SchemaPrefix + _.json).toSeq
+  private def partitionColsOf(lines: Seq[String]): Seq[String] =
+    metaValue(lines, PartitionColsPrefix).toSeq.flatMap(_.split(','))
+
+  /** Read `dirs` (relative to `path`) as one version whose manifest
+    * lines are `lines`: with the schema the manifest records, or
+    * inferring from footers when it has none. Each directory of a
+    * hive-partitioned version is its own partition root, which Spark's
+    * multi-root partition discovery refuses, so those directories are
+    * read one by one and unioned; filters still push into every child
+    * scan, so partition pruning survives the union. */
+  private def load(spark: SparkSession, path: String, lines: Seq[String],
+      dirs: Seq[String]): DataFrame = {
+    val reader = metaValue(lines, SchemaPrefix).fold(spark.read)(json =>
+      spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]))
+    val abs = dirs.map(d => s"$path/$d")
+    if (partitionColsOf(lines).isEmpty) reader.parquet(abs: _*)
+    else abs.map(reader.parquet(_)).reduce(_ unionByName _)
+  }
 
   /** Publish an APPEND commit's manifest: a 2-line delta against `base`
     * normally, a full self-contained snapshot on checkpoint versions
@@ -268,7 +285,9 @@ object Versioned {
             s"version $v at $path was committed concurrently: $e")
       }
     } finally {
-      if (!renamed) try f.delete(tmp, true) catch { case _: Throwable => () }
+      if (!renamed)
+        try f.delete(tmp, true)
+        catch { case NonFatal(e) => System.err.println(s"[versioned] could not delete $tmp: $e") }
     }
   }
 
@@ -292,7 +311,7 @@ object Versioned {
     * the statement's semantics demand it (an append rarely does). */
   def rebase(spark: SparkSession, txn: Txn): Txn = {
     val moved = txn.copy(base = versions(spark, txn.path).lastOption.getOrElse(0L))
-    moved.stagedSchema = txn.stagedSchema
+    moved.stagedMeta = txn.stagedMeta
     moved
   }
 
@@ -303,12 +322,14 @@ object Versioned {
     * hive-partitioned INSIDE the txn directory — readers of any version
     * then get directory pruning on those columns through every commit's
     * dir (the streaming ANN ingest's probe path), with zero change to
-    * the commit protocol (the manifest still names one dir). */
+    * the commit protocol (the manifest still names one dir, and records
+    * the columns so readers of the version know to read per dir). */
   def stage(txn: Txn, df: DataFrame, partitionCols: Seq[String] = Nil): Unit = {
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(txn.stagingDir)
-    txn.stagedSchema = Some(Io.readBackSchema(df, partitionCols))
+    txn.stagedMeta = (SchemaPrefix + Io.readBackSchema(df, partitionCols).json) +:
+      (if (partitionCols.isEmpty) Nil else Seq(PartitionColsPrefix + partitionCols.mkString(",")))
   }
 
   /** COMMIT of an INSERT: version base+1 = base's dirs + staged dir.
@@ -316,7 +337,7 @@ object Versioned {
     * serializes them, the loser throws [[ConflictException]]. */
   def commitAppend(spark: SparkSession, txn: Txn): Long = {
     require(txn.base >= 1, s"cannot append to unborn table ${txn.path}")
-    writeAppendManifest(spark, txn.path, txn.base, s"data/txn-${txn.id}", schemaMeta(txn))
+    writeAppendManifest(spark, txn.path, txn.base, s"data/txn-${txn.id}", txn.stagedMeta)
   }
 
   /** COMMIT of an UPDATE/DELETE/overwrite rewrite: version base+1 is
@@ -326,7 +347,7 @@ object Versioned {
     * concurrent committer's rows. */
   def commitReplace(spark: SparkSession, txn: Txn): Long = {
     val next = txn.base + 1
-    writeManifest(spark, txn.path, next, Seq(s"data/txn-${txn.id}"), schemaMeta(txn))
+    writeManifest(spark, txn.path, next, Seq(s"data/txn-${txn.id}"), txn.stagedMeta)
     next
   }
 
@@ -350,17 +371,8 @@ object Versioned {
     * "read after abort" trivially correct. */
   def readAsOf(spark: SparkSession, path: String, version: Long): DataFrame = {
     val lines = readManifestLines(spark, path, version)
-    reader(spark, lines).parquet(resolveDirs(spark, path, lines).map(d => s"$path/$d"): _*)
+    load(spark, path, lines, resolveDirs(spark, path, lines))
   }
-
-  /** Data directories composing `version`, absolute. For readers that
-    * must plan per-directory — hive-partitioned staged layouts (see
-    * [[stage]]'s partitionCols), where Spark's multi-root partition
-    * discovery refuses conflicting structures; union the per-dir reads
-    * instead (filters still push into every child scan, so partition
-    * pruning survives the union). */
-  def dataDirs(spark: SparkSession, path: String, version: Long): Seq[String] =
-    readManifest(spark, path, version).map(d => s"$path/$d")
 
   // ---- streaming sink: exactly-once appends keyed by (appId, batchId) --
 
@@ -425,7 +437,7 @@ object Versioned {
       try {
         // batch 0 of a fresh table CREATES it (base dirs empty).
         return Some(writeAppendManifest(spark, path, txn.base,
-          s"data/txn-${txn.id}", meta = batchTag(appId, batchId) +: schemaMeta(txn)))
+          s"data/txn-${txn.id}", meta = batchTag(appId, batchId) +: txn.stagedMeta))
       } catch {
         case _: ConflictException =>
           // Someone committed under us — if it was our own replayed
@@ -470,14 +482,14 @@ object Versioned {
         "(a replace commit rewrote the layout) — read the full version " +
         "or diff rows explicitly")
     val added = toDirs.filterNot(fromDirs)
-    val read = reader(spark, toLines)
-    if (added.isEmpty) read.parquet(s"$path/${toDirs.head}").limit(0)
-    else read.parquet(added.map(d => s"$path/$d"): _*)
+    if (added.isEmpty) load(spark, path, toLines, toDirs.take(1)).limit(0)
+    else load(spark, path, toLines, added)
   }
 
   /** OPTIMIZE analog: rewrite the current version's rows into
     * right-sized files (the Io.compact sizing rule) and publish as a
-    * REPLACE commit — same rows, compacted layout, atomically visible;
+    * REPLACE commit — same rows, compacted layout (partitioned by the
+    * same columns the version's manifest records), atomically visible;
     * prior versions keep the old layout (time travel unaffected). A
     * writer landing mid-compaction wins: the compaction conflicts,
     * ABORTS and returns None rather than clobbering the newer commit —
@@ -490,10 +502,11 @@ object Versioned {
     val txn = begin(spark, path)
     require(txn.base >= 1, s"cannot optimize unborn table $path")
     val f = fs(spark, path)
-    val bytes = readManifest(spark, path, txn.base)
-      .map(d => f.getContentSummary(new Path(s"$path/$d")).getLength).sum
+    val lines = readManifestLines(spark, path, txn.base)
+    val dirs = resolveDirs(spark, path, lines)
+    val bytes = dirs.map(d => f.getContentSummary(new Path(s"$path/$d")).getLength).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    stage(txn, readAsOf(spark, path, txn.base).coalesce(n))
+    stage(txn, load(spark, path, lines, dirs).coalesce(n), partitionColsOf(lines))
     try Some(commitReplace(spark, txn))
     catch { case _: ConflictException => abort(spark, txn); None }
   }

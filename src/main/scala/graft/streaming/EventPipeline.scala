@@ -290,6 +290,23 @@ object EventPipeline {
     out.iterator
   }
 
+  /** The horizon-sealing rule of the hour-ordered streaming twins
+    * (CUSUM, EWMA, concurrency): hand `seal` every hour from `nextHr`
+    * through the last one the 2 h watermark can no longer admit rows
+    * for, in order, with its pending value (`empty` when none arrived),
+    * and return what `seal` made of them, the next hour to seal and the
+    * still-pending hours. A row in hour h arrives while watermark <
+    * end(h), i.e. while maxEventTime < (h+1)+2 hours, so hour h is sealed
+    * once the newest hour seen reaches h+3 (h+2 could still gain rows;
+    * sealing it early would silently drop them and diverge from batch). */
+  private def sealHours[P, O](nextHr: Long, pending: Map[Long, P], empty: P)(
+      seal: (Long, P) => O): (Seq[O], Long, Map[Long, P]) = {
+    val sealThrough = (pending.keySet + (nextHr - 1)).max - 3
+    val hours = nextHr to sealThrough
+    (hours.map(h => seal(h, pending.getOrElse(h, empty))),
+      math.max(nextHr, sealThrough + 1), pending -- hours)
+  }
+
   /** s10's streaming twin: online CUSUM change-point detection. The
     * batch form self-calibrates (T = Σx, H = hour count) from the whole
     * corpus; a stream cannot, so the reference parameters arrive as
@@ -328,25 +345,13 @@ object EventPipeline {
     incoming.foreach { case (h, c) =>
       if (h >= st.nextHr) pending = pending.updated(h, pending.getOrElse(h, 0L) + c)
     }
-    val maxSeen = (pending.keySet + (st.nextHr - 1)).max
-    // Finalize only hours the watermark can no longer admit rows for: a
-    // row in hour h arrives while watermark < end(h), i.e. while
-    // maxEventTime < (h+1)+2 hours — so hour h is sealed once maxSeen
-    // reaches h+3 (maxSeen-2 could still gain counts; emitting it early
-    // would silently drop them and diverge from batch).
-    val finalizeThrough = maxSeen - 3
     val slack = tTot / 2
-    val out = scala.collection.mutable.ArrayBuffer[CusumOut]()
     var s = st.s
-    var h = st.nextHr
-    while (h <= finalizeThrough) {
-      val x = pending.getOrElse(h, 0L)
+    val (out, nextHr, rest) = sealHours(st.nextHr, pending, 0L) { (h, x) =>
       s = math.max(0L, s + x * hTot - tTot - slack)
-      out += CusumOut(h, eventType, x, s, s > 3 * tTot)
-      pending -= h
-      h += 1
+      CusumOut(h, eventType, x, s, s > 3 * tTot)
     }
-    state.update(CusumState(h, s, pending))
+    state.update(CusumState(nextHr, s, rest))
     out.iterator
   }
 
@@ -386,24 +391,15 @@ object EventPipeline {
     incoming.foreach { case (h, c) =>
       if (h >= st.nextHr) pending = pending.updated(h, pending.getOrElse(h, 0L) + c)
     }
-    val maxSeen = (pending.keySet + (st.nextHr - 1)).max
-    // Same sealing bound as the CUSUM twin: hour h is safe once maxSeen
-    // reaches h+3 — the 2 h watermark then rejects any row for h.
-    val finalizeThrough = maxSeen - 3
-    val out = scala.collection.mutable.ArrayBuffer[EwmaOut]()
     var ew = st.ew
     var window = st.window
-    var h = st.nextHr
-    while (h <= finalizeThrough) {
-      val x = pending.getOrElse(h, 0L)
+    val (out, nextHr, rest) = sealHours(st.nextHr, pending, 0L) { (h, x) =>
       val retiring = if (window.size == 48) window.head else 0L
       ew = x * (1L << 47) + (ew - retiring) / 2
       window = (if (window.size == 48) window.tail else window) :+ x
-      out += EwmaOut(h, eventType, x, ew)
-      pending -= h
-      h += 1
+      EwmaOut(h, eventType, x, ew)
     }
-    state.update(EwmaState(h, ew, window, pending))
+    state.update(EwmaState(nextHr, ew, window, rest))
     out.iterator
   }
 
@@ -446,23 +442,15 @@ object EventPipeline {
       fold(t / hourUs, ConcDelta(t, 1L))
       fold((t + spanUs) / hourUs, ConcDelta(t + spanUs, -1L))
     }
-    val maxSeen = (pending.keySet + (st.nextHr - 1)).max
-    val finalizeThrough = maxSeen - 3
-    val out = scala.collection.mutable.ArrayBuffer[ConcurrencyOut]()
     var carry = st.carry
-    var h = st.nextHr
-    while (h <= finalizeThrough) {
-      val ds = pending.getOrElse(h, Vector.empty)
-        .sortBy(d => (d.t_us, d.delta))
+    val (out, nextHr, rest) = sealHours(st.nextHr, pending, Seq.empty[ConcDelta]) { (h, ds) =>
       var run = carry
       var peak = carry
-      ds.foreach { d => run += d.delta; peak = math.max(peak, run) }
-      out += ConcurrencyOut(h * hourUs, eventType, peak, run)
+      ds.sortBy(d => (d.t_us, d.delta)).foreach { d => run += d.delta; peak = math.max(peak, run) }
       carry = run
-      pending -= h
-      h += 1
+      ConcurrencyOut(h * hourUs, eventType, peak, run)
     }
-    state.update(ConcurrencyState(h, carry, pending))
+    state.update(ConcurrencyState(nextHr, carry, rest))
     out.iterator
   }
 

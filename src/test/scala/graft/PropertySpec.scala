@@ -312,4 +312,37 @@ class PropertySpec extends AnyFunSuite {
     // component (the chain spans it), so exactly 3 labels, each the min id.
     assert(ref.map(_._2).distinct.sorted == Seq(0L, 1000L, 2000L))
   }
+
+  test("unroll equals the uncut fold and cuts lazily every cutEvery rounds and after the last") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    import org.apache.spark.sql.execution.LogicalRDD
+    // Each step adds exactly one Project, so the Projects above a state's
+    // LogicalRDD leaf are the step applications since its last cut.
+    def steps(p: LogicalPlan): Int = p match {
+      case Project(_, child) => 1 + steps(child)
+      case _: LogicalRDD => 0
+      case other => fail(s"unexpected node above the cut: ${other.nodeName}")
+    }
+    def step(df: DataFrame, round: Int): DataFrame =
+      df.select(((col("x") * 31 + round) % 1000003).as("x"))
+    val init = sample(Gen.chooseNum(0L, 1000000L), 40, seed = 131L).toDF("x").localCheckpoint()
+    for (cutEvery <- Seq(1, 2, 5); rounds <- Seq(1, 7, 10)) {
+      val seen = scala.collection.mutable.ArrayBuffer[Int]()
+      val (got, jobs) = org.apache.spark.graft.JobCounter(spark.sparkContext)(
+        operators.Graph.unroll(init, rounds, cutEvery) { (state, round) =>
+          seen += steps(state.queryExecution.analyzed)
+          step(state, round)
+        })
+      val label = s"cutEvery=$cutEvery rounds=$rounds"
+      assert(jobs == 0, s"$label: the loop ran $jobs job(s)")
+      // Round r sees the steps since the last multiple of cutEvery, so no
+      // state ever holds more than cutEvery of them; the result is cut.
+      assert(seen == (1 to rounds).map(r => (r - 1) % cutEvery), label)
+      assert(steps(got.queryExecution.analyzed) == 0, label)
+      val ref = (1 to rounds).foldLeft(init)(step)
+      assert(got.collect().map(_.getLong(0)).sorted.sameElements(
+        ref.collect().map(_.getLong(0)).sorted), label)
+    }
+  }
 }

@@ -719,9 +719,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // Exactly-once: every vector banded exactly nBands times — the
     // replays committed nothing (ledger hit), appended nothing.
-    val v = graft.sources.Versioned.currentVersion(spark, path)
-    val table = graft.sources.Versioned.dataDirs(spark, path, v)
-      .map(spark.read.parquet(_)).reduce(_ unionByName _)
+    val table = graft.sources.Versioned.read(spark, path)
     assert(table.count() == total * nBands,
       s"expected ${total * nBands} band rows, got ${table.count()}")
     assert(table.select(col("vec_id")).distinct().count() == total)
@@ -777,9 +775,7 @@ class StreamingSpec extends AnyFunSuite {
     sink(parts(2), 2L)
     sink(parts(2), 2L) // and again
 
-    val v = graft.sources.Versioned.currentVersion(spark, outPath)
-    val streamed = graft.sources.Versioned.dataDirs(spark, outPath, v)
-      .map(spark.read.parquet(_)).reduce(_ unionByName _)
+    val streamed = graft.sources.Versioned.read(spark, outPath)
       .collect().map(_.toString).toSeq
     // Exactly-once: the replayed epochs committed nothing — no document
     // admitted twice across the whole stream.

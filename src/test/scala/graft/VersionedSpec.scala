@@ -233,21 +233,45 @@ class VersionedSpec extends AnyFunSuite {
     // inference plus partition discovery would give, and prunes on p.
     val (df, readJobs) = jobs(Versioned.read(spark, path))
     assert(readJobs == 0)
-    assert(df.schema == spark.read.parquet(Versioned.dataDirs(spark, path, 1L): _*).schema)
+    val Seq(txnDir) = Files.list(java.nio.file.Paths.get(path, "data")).toArray.toSeq
+    assert(df.schema == spark.read.parquet(txnDir.toString).schema)
     assert(df.schema.fieldNames.toSeq == Seq("a", "b", "p"))
     val pruned = df.filter($"p" === 1)
     assert(pruned.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSeq == Seq((10, "x", 1)))
-    val scanned = pruned.queryExecution.executedPlan.collect {
+    assert(scannedFiles(pruned) == Seq(1L), pruned.queryExecution.executedPlan.toString)
+  }
+
+  /** Files each parquet scan of `df`'s executed plan read. */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f.metrics("numFiles").value
     }
-    assert(scanned == Seq(1L), pruned.queryExecution.executedPlan.toString)
-    // Several commits: each txn dir is its own partitioned root, read per
-    // directory and unioned (Versioned.dataDirs), as before.
+
+  test("a multi-commit hive-partitioned table reads and optimizes with partition pruning") {
+    val path = freshTable()
+    Versioned.commitBatchAppend(spark, path, "w", 0L,
+      Seq((1, 10, "x"), (2, 20, "y")).toDF("p", "a", "b"), partitionCols = Seq("p"))
     Versioned.commitBatchAppend(spark, path, "w", 1L,
       Seq((1, 30, "z"), (3, 40, "w")).toDF("p", "a", "b"), partitionCols = Seq("p"))
-    val got = Versioned.dataDirs(spark, path, 2L).map(spark.read.parquet(_)).reduce(_ unionByName _)
-      .collect().map(r => (r.getAs[Int]("a"), r.getAs[String]("b"), r.getAs[Int]("p"))).sortBy(_._1).toSeq
-    assert(got == Seq((10, "x", 1), (20, "y", 2), (30, "z", 1), (40, "w", 3)))
+    def prunedRows(v: Long): (Seq[(Int, String, Int)], Seq[Long]) = {
+      val df = Versioned.readAsOf(spark, path, v).filter($"p" === 1)
+      (df.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2))).sortBy(_._1).toSeq,
+        scannedFiles(df))
+    }
+    val all = Seq((10, "x", 1), (20, "y", 2), (30, "z", 1), (40, "w", 3))
+    // Each commit directory is its own partition root: one scan per
+    // commit, each reading only its p=1 files.
+    assert(Versioned.read(spark, path).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2))).sortBy(_._1).toSeq == all)
+    assert(prunedRows(2L) == ((Seq((10, "x", 1), (30, "z", 1)), Seq(1L, 1L))))
+    assert(manifests(path).forall(m => Files.readString(m).contains("#partitionCols=p\n")))
+    // optimize restages by p: one directory, still pruned to one file.
+    assert(Versioned.optimize(spark, path).contains(3L))
+    assert(Versioned.read(spark, path).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2))).sortBy(_._1).toSeq == all)
+    assert(prunedRows(3L) == ((Seq((10, "x", 1), (30, "z", 1)), Seq(1L))))
+    // The change feed of a partitioned append reads per directory too.
+    assert(Versioned.changesBetween(spark, path, 0L, 2L).count() == 4)
   }
 
   test("concurrent committers: exactly one wins, the loser gets a conflict") {
