@@ -4,10 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-/** The reference's DDL surface (CREATE/DROP/ALTER TABLE, CREATE INDEX/
-  * VIEW/DATABASE, andb/sql/parser/lexer.py:13-17) and its ANALYZE-style
-  * statistics collection (andb/sql/optimizer/statistic/) mapped onto
-  * Spark's catalog.
+/** The reference's DDL surface (CREATE/DROP/ALTER TABLE, CREATE INDEX,
+  * andb/sql/parser/lexer.py:13-17) and its ANALYZE-style statistics
+  * collection (andb/sql/optimizer/statistic/) mapped onto Spark's
+  * catalog. The statements Spark speaks itself — CREATE/DROP VIEW,
+  * CREATE/DROP DATABASE, USE — are text through [[graft.sql]]; this
+  * object holds only what Spark's SQL does not say.
   *
   * On Spark + parquet the catalog entry IS the table: registering a
   * parquet path as a view gives scans with pushdown and pruning; "CREATE
@@ -36,17 +38,18 @@ object Ddl {
     * LOGICAL schema: events' TIMESTAMP(NANOS) storage quirk is normalized
     * to a timestamp here (Tables.table), exactly as the reference's
     * catalog maps storage types to query types (andb/catalog/type.py) —
-    * SQL text over `events` sees `ts` as a timestamp, not raw nanos. */
+    * SQL text over `events` sees `ts` as a timestamp, not raw nanos.
+    * Drops the session's cached statement plans ([[PlanCache]]). */
   def createTable(spark: SparkSession, name: String, sfDir: String): Unit =
-    Tables.table(spark, sfDir, name).createOrReplaceTempView(name)
+    register(spark, name, Tables.table(spark, sfDir, name))
 
-  /** CREATE VIEW v AS <df>. */
-  def createView(df: DataFrame, name: String): Unit =
+  /** (Re-)register `df` as view `name`; a statement plan cached against
+    * the old view would read it, so the session's are dropped. */
+  private def register(spark: SparkSession, name: String, df: DataFrame): DataFrame = {
     df.createOrReplaceTempView(name)
-
-  /** DROP TABLE/VIEW. */
-  def drop(spark: SparkSession, name: String): Boolean =
-    spark.catalog.dropTempView(name)
+    PlanCache.dropStatements(spark)
+    df
+  }
 
   /** CREATE INDEX analog: on immutable parquet the "index" is data
     * layout. Returns the writer-side recipe (sort columns) that makes the
@@ -61,48 +64,20 @@ object Ddl {
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     Tables.names.foreach(createTable(spark, _, sfDir))
 
-  // ---- database namespace (lexer.py:13-17 DATABASE, USE) ---------------
-
-  /** CREATE DATABASE analog: a catalog namespace. On a cluster this is
-    * the unit of access control and of per-team table layout; here it
-    * scopes table names exactly as the reference's database does. */
-  def createDatabase(spark: SparkSession, name: String): Unit =
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS ${ident(name)}")
-
-  /** USE <db> analog — unqualified table names resolve here afterwards. */
-  def useDatabase(spark: SparkSession, name: String): Unit =
-    spark.catalog.setCurrentDatabase(name)
-
-  def currentDatabase(spark: SparkSession): String =
-    spark.catalog.currentDatabase
-
-  /** DROP DATABASE ... CASCADE analog. */
-  def dropDatabase(spark: SparkSession, name: String): Unit =
-    spark.sql(s"DROP DATABASE IF EXISTS ${ident(name)} CASCADE")
-
   // ---- ALTER TABLE analogs (catalog-only; no data rewrite) -------------
 
   /** ALTER TABLE name RENAME COLUMN from TO to. */
-  def alterRenameColumn(spark: SparkSession, name: String, from: String, to: String): DataFrame = {
-    val df = spark.table(name).withColumnRenamed(from, to)
-    df.createOrReplaceTempView(name)
-    df
-  }
+  def alterRenameColumn(spark: SparkSession, name: String, from: String, to: String): DataFrame =
+    register(spark, name, spark.table(name).withColumnRenamed(from, to))
 
   /** ALTER TABLE name ADD COLUMN colName AS expr (expr supplies the
     * value for existing rows — the parquet files are never rewritten). */
-  def alterAddColumn(spark: SparkSession, name: String, colName: String, expr: Column): DataFrame = {
-    val df = spark.table(name).withColumn(colName, expr)
-    df.createOrReplaceTempView(name)
-    df
-  }
+  def alterAddColumn(spark: SparkSession, name: String, colName: String, expr: Column): DataFrame =
+    register(spark, name, spark.table(name).withColumn(colName, expr))
 
   /** ALTER TABLE name DROP COLUMN colName. */
-  def alterDropColumn(spark: SparkSession, name: String, colName: String): DataFrame = {
-    val df = spark.table(name).drop(colName)
-    df.createOrReplaceTempView(name)
-    df
-  }
+  def alterDropColumn(spark: SparkSession, name: String, colName: String): DataFrame =
+    register(spark, name, spark.table(name).drop(colName))
 
   // ---- CREATE INDEX ... USING <type> → ANN index layouts ---------------
   // The reference's parser accepts an index METHOD
@@ -218,18 +193,6 @@ object Ddl {
         p.books, p.m, p.ksub, nProbe, rerank = math.max(8 * k, 64), k)
     case None => throw new IllegalArgumentException(s"no such index: $name")
   }
-
-  /** CHECKPOINT analog — the reference's one runtime command
-    * (CommandOperator 'checkpoint', andb/executor/operator/physical/
-    * utility.py:163, flushing its WAL via xact_manager.checkpoint()).
-    * Spark has no WAL; the durability/recovery point is a materialized
-    * lineage cut: `localCheckpoint` pins the dataset's partitions to
-    * executor storage and truncates the logical plan (what the iterative
-    * d06 loop uses so each round stops re-deriving the last), while
-    * `Dataset.checkpoint` under a configured checkpoint dir is the
-    * cross-failure durable form on a real cluster. */
-  def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame =
-    df.localCheckpoint(eager)
 
   // ---- ANALYZE (optimizer statistics) ----------------------------------
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.CommandResult
 
 /** Plan-cache analog of the reference's
   * `andb/sql/optimizer/plan_cache/__init__.py` (an LRU of optimized
@@ -8,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * On Spark the expensive per-statement work is parse + analyze +
   * optimize; a `DataFrame` IS the reusable plan. Caching the DataFrame
-  * per (session, current database, statement text) makes repeated
+  * per (session, current database, query text) makes repeated
   * submissions of the same text skip the whole front end — execution
   * still runs fresh each time (same as the reference, which caches
   * plans, not results). For result caching, the Spark-native seat is
@@ -20,11 +21,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     two sessions never see each other's plans, and the current
   *     database is part of the key, so `USE db` switches never resolve
   *     a cached unqualified name against the wrong namespace.
-  *   - DDL that redefines a table the cached plan references (DROP +
-  *     re-CREATE with a new schema) is NOT auto-detected — the same
-  *     limitation the reference's cache has. Call [[invalidate]] after
-  *     schema-changing DDL (graft's own Ddl.alter* helpers re-register
-  *     views, which callers should follow with invalidate()).
+  *   - Only queries are cached. A command (INSERT, CREATE/DROP VIEW,
+  *     USE, ...) runs on every call — Spark executes it when the
+  *     statement is analyzed, so a cached one would silently not run —
+  *     and it drops the session's cached statement plans, since it may
+  *     have changed what their names resolve to or the data they list.
+  *     `Ddl.createTable` and `Ddl.alter*` re-register views and drop them
+  *     too. A view replaced any other way (`createOrReplaceTempView` on
+  *     a DataFrame) is not detected: call [[invalidate]] after it.
+  *   - Path plans ([[path]]) are keyed by file path, which no view
+  *     change touches, so statements and view re-registrations leave
+  *     them in place.
   *
   * The LRU bound (`maxEntries`, TOTAL across sessions for a shared
   * instance) keeps a statement-generating workload from growing the
@@ -35,7 +42,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * text, bind afterwards.
   */
 class PlanCache(maxEntries: Int = 128) {
-  private case class Key(session: SparkSession, db: String, text: String)
+  /** `db` is the current database of a statement, None for a path. */
+  private case class Key(session: SparkSession, db: Option[String], text: String)
   private val lru = new java.util.LinkedHashMap[Key, DataFrame](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[Key, DataFrame]): Boolean =
       this.size() > maxEntries
@@ -43,15 +51,34 @@ class PlanCache(maxEntries: Int = 128) {
   private var hitCount = 0L
   private var missCount = 0L
 
-  /** The cached analyzed/optimizable plan for `text`, building it on
-    * first sight. Thread-safe; same (session, database, text) ⇒ same
+  /** The cached analyzed/optimizable plan for query `text`, building it
+    * on first sight. Thread-safe; same (session, database, text) ⇒ same
     * DataFrame object. The miss path runs spark.sql OUTSIDE the lock
     * (double-checked put): one slow parse/analyze must not serialize
     * every other session's cache hits — that would be the cache
     * blocking the very work it amortizes. A racing duplicate build is
-    * possible and harmless (last put wins). */
-  def sql(spark: SparkSession, text: String): DataFrame =
-    lookup(Key(spark, spark.catalog.currentDatabase, text), spark.sql(text))
+    * possible and harmless (the first put wins). A command is run,
+    * never cached, and drops the session's statement plans. */
+  def sql(spark: SparkSession, text: String): DataFrame = {
+    val key = Key(spark, Some(spark.catalog.currentDatabase), text)
+    cached(key).getOrElse {
+      val df = spark.sql(text)
+      if (isCommand(df)) { dropStatements(spark); df } else store(key, df)
+    }
+  }
+
+  /** Parameterized `text`, run uncached: the key is the text and the
+    * bindings vary per call. A command still drops the session's
+    * statement plans. */
+  def sql(spark: SparkSession, text: String, params: Map[String, Any]): DataFrame = {
+    val df = spark.sql(text, params)
+    if (isCommand(df)) dropStatements(spark)
+    df
+  }
+
+  /** Spark ran `df`'s statement as a command while analyzing it. */
+  private def isCommand(df: DataFrame): Boolean =
+    df.queryExecution.commandExecuted.isInstanceOf[CommandResult]
 
   /** The cached DataFrame for a parquet PATH (r14): a bare
     * `spark.read.parquet(p)` pays directory listing + footer schema
@@ -66,28 +93,36 @@ class PlanCache(maxEntries: Int = 128) {
     * [[invalidate]]d (the repo's generators write corpora before any
     * session reads them, and the managed-table paths never route
     * through this). */
-  def path(spark: SparkSession, p: String): DataFrame =
-    lookup(Key(spark, "", "path:" + p), spark.read.parquet(p))
-
-  /** The double-checked LRU lookup behind [[sql]] and [[path]]: `build`
-    * runs outside the lock, only on a miss. */
-  private def lookup(key: Key, build: => DataFrame): DataFrame = {
-    synchronized {
-      val cached = lru.get(key)
-      if (cached != null) { hitCount += 1; return cached }
-    }
-    val df = build
-    synchronized {
-      val cached = lru.get(key)
-      if (cached != null) { hitCount += 1; cached }
-      else { missCount += 1; lru.put(key, df); df }
-    }
+  def path(spark: SparkSession, p: String): DataFrame = {
+    val key = Key(spark, None, p)
+    cached(key).getOrElse(store(key, spark.read.parquet(p)))
   }
 
-  /** Drop every entry belonging to `spark` — call after schema-changing
-    * DDL or before stopping the session. */
+  /** The hit half of the double-checked lookup behind [[sql]] and
+    * [[path]]; their build runs outside the lock, only on a miss. */
+  private def cached(key: Key): Option[DataFrame] = synchronized {
+    val df = lru.get(key)
+    if (df != null) hitCount += 1
+    Option(df)
+  }
+
+  /** The miss half: keep `df` unless a racing build stored one first. */
+  private def store(key: Key, df: DataFrame): DataFrame = synchronized {
+    val raced = lru.get(key)
+    if (raced != null) { hitCount += 1; raced }
+    else { missCount += 1; lru.put(key, df); df }
+  }
+
+  /** Drop every entry belonging to `spark` — call after replacing a view
+    * outside graft's DDL, after rewriting a cached path, or before
+    * stopping the session. */
   def invalidate(spark: SparkSession): Unit = synchronized {
     lru.keySet().removeIf(_.session eq spark)
+  }
+
+  /** Drop `spark`'s statement plans, keeping its path plans. */
+  private[graft] def dropStatements(spark: SparkSession): Unit = synchronized {
+    lru.keySet().removeIf(k => (k.session eq spark) && k.db.isDefined)
   }
 
   def hits: Long = synchronized(hitCount)

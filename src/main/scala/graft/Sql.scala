@@ -7,7 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * entry point, andb/cmd/ → parser → planner → executor). `graft.sql`
   * gives the same single-string surface: statements Spark itself speaks
   * (SELECT/DML/DDL/ANALYZE/USE/CREATE DATABASE...) pass through
-  * `spark.sql` via the [[PlanCache]]; the reference's statements Spark
+  * `spark.sql` via the [[PlanCache]], which keeps query plans and runs
+  * every command each time; the reference's statements Spark
   * does NOT speak are routed to their graft analogs —
   *
   *   - `CREATE INDEX n ON t USING ivf|lsh|ivfpq (col) [LOCATION '...']`
@@ -24,14 +25,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     over the recursively-routed statement (so EXPLAIN works on PROBE
   *     INDEX too, which Spark's own EXPLAIN could never parse).
   *   - `CHECKPOINT` (utility.py:163's WAL flush) → a status row naming
-  *     the Spark seat of the durability point ([[Ddl.checkpoint]] /
-  *     `Dataset.checkpoint` — there is no WAL to flush; lineage cuts
-  *     are per-dataset, not global).
+  *     the Spark seat of the durability point: a materialized lineage
+  *     cut, `Dataset.localCheckpoint` (executor storage) or
+  *     `Dataset.checkpoint` under a checkpoint dir (durable across
+  *     failures). There is no WAL to flush; cuts are per-dataset, not
+  *     global.
   *
   * Parameterized text (`:name` markers) forwards `params` to Spark's
-  * native named-parameter binding and skips the plan cache (the cache
-  * key is the text; bindings vary per call — RelationalSql.bind's
-  * contract).
+  * native named-parameter binding and is not cached (the cache key is
+  * the text; bindings vary per call — RelationalSql.bind's contract).
   */
 object GraftSql {
 
@@ -82,10 +84,10 @@ object GraftSql {
           Option(mode).map(_.toLowerCase).getOrElse("formatted"))
       case CheckpointRe() =>
         Seq(("checkpoint", "ok",
-          "durability point on Spark = Dataset.checkpoint / localCheckpoint " +
-            "(Ddl.checkpoint); no global WAL to flush"))
+          "durability point on Spark = Dataset.checkpoint / " +
+            "Dataset.localCheckpoint; no global WAL to flush"))
           .toDF("command", "status", "detail")
-      case _ if params.nonEmpty => spark.sql(text, params)
+      case _ if params.nonEmpty => PlanCache.sql(spark, text, params)
       case _ => PlanCache.sql(spark, text)
     }
   }

@@ -260,7 +260,7 @@ object AnnIndex {
       nProbe: Int, rerank: Int, k: Int): DataFrame = {
     val (dotL, nrmL) = Pq.luts(qv, books, m, ksub)
     val cells = probeCells(qv, cents, nProbe)
-    def pruned = Io.readParquet(spark, path).filter(col("cell").isin(cells: _*))
+    def pruned = spark.read.parquet(path).filter(col("cell").isin(cells: _*))
     val cands = pruned
       .select(col("vec_id"), org.apache.spark.sql.graft.VectorExpressions
         .pqAdcCosine(col("codes"), dotL.toSeq,

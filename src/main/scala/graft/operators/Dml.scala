@@ -28,12 +28,6 @@ object Dml {
     base.union(aligned)
   }
 
-  /** Generic INSERT of an arbitrary new-rows frame with the same columns. */
-  def insertInto(base: DataFrame, newRows: DataFrame): DataFrame = {
-    val aligned = newRows.select(base.schema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType)): _*)
-    base.union(aligned)
-  }
-
   /** DELETE FROM base WHERE cond. SQL DELETE removes only rows where the
     * predicate is TRUE; rows where it is NULL survive — hence the
     * null-safe keep-filter (NOT cond OR cond IS NULL). */

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.BoundSql
 import graft.Tables
 
@@ -21,29 +20,22 @@ import graft.Tables
   * to the data directory by [[org.apache.spark.sql.graft.BoundSql]] — the
   * text parses through the same Catalyst front end as a DataFrame plan,
   * so pushdown, pruning, join selection, partial aggregation and
-  * whole-stage codegen are the same either way. Seventeen queries keep a
-  * DataFrame plan, because the plan does something the text cannot:
+  * whole-stage codegen are the same either way. Where the oracle text
+  * plans more work, the Spark text spells the cheaper shape (see
+  * [[RelationalSql.overrides]]). Nine queries keep a DataFrame plan,
+  * because the plan does something the text cannot:
   *   - q26/q27/q28/q38 run the Dml rewrites, and q33/q81 write the sketch
   *     export their oracle reads;
-  *   - q37 runs the GroupedTopK operator;
-  *   - q42/q51/q60/q64/q77/q85/q86/q97/q98/q99 spell a cheaper plan than
-  *     their text gets (fewer exchanges, scans, joins or codegen spans,
-  *     a broadcast join, or hand-decomposed prefilters).
+  *   - q37 runs the GroupedTopK operator, which SQL cannot name;
+  *   - q97/q99 cut their shared aggregate with localCheckpoint, so the
+  *     final plan reads it back (`Scan ExistingRDD`) instead of scanning
+  *     lineitem once per consumer — a text has no lineage cut.
   * No collect(), no UDFs, no RDDs. At 100 TB: fact-fact joins
   * hash-partition on join keys (AQE re-plans skew), fact-dim joins
   * broadcast, and every aggregate here is map-side-combinable.
   */
 object Relational {
   type Q = (SparkSession, String) => DataFrame
-
-  /** Deterministic truncation to a fixed grid for float aggregates whose
-    * exact bits depend on summation order (Spark and DuckDB associate
-    * differently; measured drift ≤ 3e-9 abs). floor(x*100+0.5)/100
-    * (round-half-up, boundary offset from the data's own cent grid) is
-    * IEEE-identical on both engines for equal inputs, so a hash-compare
-    * of the results is stable; mirrored as FLOOR(x*100+0.5)/100 in the
-    * oracle SQL. */
-  private def cents(c: org.apache.spark.sql.Column) = floor(c * 100 + 0.5) / 100
 
   /** A query whose Spark form is its SQL text, bound to the data
     * directory; `oracle` is its DuckDB text. */
@@ -340,27 +332,17 @@ object Relational {
 
     // ---- q42: LATERAL correlated subquery ----------------------------
     // The per-outer-row subquery shape (DuckDB/Postgres LATERAL, Spark 4
-    // LATERAL). DataFrame form = the decorrelated aggregate-then-join
-    // plan Catalyst itself rewrites a lateral into — at scale ONE
-    // aggregate over the inner table plus a broadcast join, never a
-    // subquery per row. LEFT join, not inner: a scalar aggregate in a
-    // LATERAL returns exactly one row per outer row — (r_name, NULL)
-    // for a region with no customers — so the decorrelated form must
-    // keep unmatched outer rows.
-    ("q42_lateral",
-      (s, d) => {
-        val maxBal = Tables.customer(s, d)
-          .join(Tables.nation(s, d), col("c_nationkey") === col("n_nationkey"))
-          .groupBy(col("n_regionkey"))
-          .agg(max(col("c_acctbal")).as("max_bal"))
-        Tables.region(s, d)
-          .join(maxBal, col("r_regionkey") === col("n_regionkey"), "left")
-          .select(col("r_name"), col("max_bal"))
-      },
-      Some("""SELECT r_name, t.max_bal FROM region,
+    // LATERAL). The Spark text (RelationalSql) is the decorrelated
+    // aggregate-then-LEFT-join — at scale ONE aggregate over the inner
+    // table plus a broadcast join, never a subquery per row. LEFT join,
+    // not inner: a scalar aggregate in a LATERAL returns exactly one row
+    // per outer row — (r_name, NULL) for a region with no customers — so
+    // the decorrelated form must keep unmatched outer rows.
+    bound("q42_lateral",
+      """SELECT r_name, t.max_bal FROM region,
               LATERAL (SELECT max(c_acctbal) AS max_bal
                        FROM customer JOIN nation ON c_nationkey = n_nationkey
-                       WHERE n_regionkey = r_regionkey) t""")),
+                       WHERE n_regionkey = r_regionkey) t"""),
 
     // ---- RANGE-frame window (value-based sliding aggregate) ------------
     // 30-day trailing spend per customer: RANGE frames bound by VALUE
@@ -608,23 +590,12 @@ object Relational {
     // Collection types as first-class columns (the reference's vector is
     // its only collection; this is the general array toolkit). Arrays are
     // built, sorted, dedup'd, sliced and searched entirely map-side
-    // inside codegen; outputs collapse to scalars (joined strings) so the
-    // cross-engine comparison is on exact values, not engine-specific
-    // array renderings.
-    ("q51_array_funcs",
-      (s, d) => {
-        val toks = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
-        val sorted = array_sort(array_distinct(toks))
-        Tables.documents(s, d).select(
-          col("doc_id"),
-          size(toks).cast("long").as("n_toks"),
-          size(array_distinct(toks)).cast("long").as("n_uniq"),
-          array_join(slice(sorted, 1, 5), "|").as("first5"),
-          array_contains(toks, "spark").as("has_spark"),
-          element_at(sorted, 3).as("third_sorted"),
-          array_join(reverse(slice(toks, 1, 3)), "|").as("head3_rev"))
-      },
-      Some("""WITH m AS (SELECT doc_id,
+    // inside codegen — the Spark text inlines each array expression, so
+    // the row is one projection, one codegen span. Outputs collapse to
+    // scalars (joined strings) so the cross-engine comparison is on exact
+    // values, not engine-specific array renderings.
+    bound("q51_array_funcs",
+      """WITH m AS (SELECT doc_id,
                      regexp_extract_all(text, '[a-z0-9]+') AS toks,
                      list_sort(list_distinct(regexp_extract_all(text, '[a-z0-9]+'))) AS sorted
                    FROM documents)
@@ -635,7 +606,7 @@ object Relational {
                      list_contains(toks, 'spark') AS has_spark,
                      sorted[3] AS third_sorted,
                      array_to_string(list_reverse(list_slice(toks, 1, 3)), '|') AS head3_rev
-              FROM m""")),
+              FROM m"""),
 
     // ---- q52: correlated EXISTS / NOT EXISTS -----------------------------
     // EXISTS with a NON-EQUI correlated predicate (l_shipdate more than
@@ -785,28 +756,14 @@ object Relational {
     // Neither Spark nor DuckDB supports DISTINCT aggregates in window
     // frames; the standard rewrite marks each (user, event_type)'s FIRST
     // occurrence with row_number()=1, then running-sums the marks per user.
-    // The explicit repartition(user_id) makes ONE exchange serve BOTH
-    // windows: HashPartitioning(user_id) satisfies the (user_id, event_type)
-    // window's ClusteredDistribution (a user's rows are all co-located), so
-    // the second window adds only a local sort — without it Spark plans two
+    // The Spark text's REPARTITION(user_id) hint, placed under the first
+    // window, makes ONE exchange serve BOTH windows: HashPartitioning
+    // (user_id) satisfies the (user_id, event_type) window's
+    // ClusteredDistribution (a user's rows are all co-located), so the
+    // second window adds only a local sort — without it Spark plans two
     // exchanges (plan-gated in PlanShapeSpec). Integer-only math.
-    ("q60_window_distinct",
-      (s, d) => {
-        val wFirst = Window.partitionBy(col("user_id"), col("event_type"))
-          .orderBy(col("ts_us").asc, col("event_id").asc)
-        val wCum = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts_us").asc, col("event_id").asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        Tables.events(s, d)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            unix_micros(col("ts")).as("ts_us"))
-          .repartition(col("user_id"))
-          .withColumn("first_seen",
-            when(row_number().over(wFirst) === 1, 1L).otherwise(0L))
-          .withColumn("types_so_far", sum(col("first_seen")).over(wCum))
-          .select(col("event_id"), col("user_id"), col("ts_us"), col("types_so_far"))
-      },
-      Some("""WITH e AS (
+    bound("q60_window_distinct",
+      """WITH e AS (
                 SELECT event_id, user_id, event_type, epoch_us(ts::TIMESTAMP) AS ts_us
                 FROM events),
               m AS (
@@ -819,7 +776,7 @@ object Relational {
                      CAST(sum(first_seen) OVER (PARTITION BY user_id
                        ORDER BY ts_us ASC, event_id ASC
                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS types_so_far
-              FROM m""")),
+              FROM m"""),
 
     // ---- q61: SCD Type-2 merge (versioned dimension history) -------------
     // The Kimball slowly-changing-dimension pattern q38's MERGE can't
@@ -926,24 +883,15 @@ object Relational {
     // classes tighten the requirement automatically. Shape at scale: ONE
     // customer-keyed aggregate (countDistinct rides the same exchange —
     // Spark plans the expand internally), the |divisor| side is a 1-row
-    // crossJoin broadcast, and the filter drops rows post-aggregate —
-    // nothing corpus-sized survives the aggregate.
-    ("q64_division",
-      (s, d) => {
-        val ord = Tables.orders(s, d)
-        val np = ord.agg(countDistinct(col("o_orderpriority")).as("np"))
-        ord.groupBy(col("o_custkey"))
-          .agg(countDistinct(col("o_orderpriority")).as("n_prio"),
-            count(lit(1)).as("n_orders"))
-          .crossJoin(broadcast(np))
-          .filter(col("n_prio") === col("np"))
-          .select(col("o_custkey"), col("n_orders"))
-      },
-      Some("""WITH np AS (SELECT count(DISTINCT o_orderpriority) AS np FROM orders)
+    // broadcast the Spark text CROSS JOINs after the aggregate, and the
+    // filter drops rows post-aggregate — nothing corpus-sized survives
+    // the aggregate.
+    bound("q64_division",
+      """WITH np AS (SELECT count(DISTINCT o_orderpriority) AS np FROM orders)
               SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders
               FROM orders CROSS JOIN np
               GROUP BY o_custkey, np.np
-              HAVING count(DISTINCT o_orderpriority) = np.np""")),
+              HAVING count(DISTINCT o_orderpriority) = np.np"""),
 
     // ---- q65: reorder latency (consecutive-order gaps) -------------------
     // HOW LONG between a customer's consecutive orders — the repurchase-
@@ -1232,23 +1180,15 @@ object Relational {
 
     // ---- q77: GROUP BY ALL / ORDER BY ALL -------------------------------
     // The analyst-ergonomics surface both modern engines converged on:
-    // every non-aggregate select item becomes a grouping key. The
-    // DataFrame form is the explicit groupBy it desugars to; the SQL-text
-    // twin (RelationalSql) uses the literal GROUP BY ALL / ORDER BY ALL
-    // syntax and SqlParitySpec pins them equal — the desugaring is
-    // syntax, not a different plan. One hash-aggregate.
-    ("q77_group_by_all",
-      (s, d) => Tables.lineitem(s, d)
-        .select(col("l_returnflag"), col("l_linestatus"),
-          year(col("l_shipdate")).as("ship_year"),
-          col("l_quantity"), col("l_extendedprice"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"), col("ship_year"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("l_quantity")).as("sum_qty"),
-          cents(sum(col("l_extendedprice"))).as("sum_price")),
-      Some("""SELECT l_returnflag, l_linestatus, year(l_shipdate) AS ship_year,
+    // every non-aggregate select item becomes a grouping key — syntax,
+    // not a different plan. The Spark text keeps GROUP BY ALL and drops
+    // ORDER BY ALL (the oracle gate sorts rows itself), so the plan is
+    // one hash-aggregate and no sort.
+    bound("q77_group_by_all",
+      """SELECT l_returnflag, l_linestatus, year(l_shipdate) AS ship_year,
                      count(*) AS n_rows, sum(l_quantity) AS sum_qty,
                      FLOOR(sum(l_extendedprice) * 100 + 0.5) / 100 AS sum_price
-              FROM lineitem GROUP BY ALL ORDER BY ALL""")),
+              FROM lineitem GROUP BY ALL ORDER BY ALL"""),
 
     // ---- q78: DISTINCT ON / latest-row-per-key --------------------------
     // "The latest order per customer" — the semantics DuckDB/Postgres
@@ -1506,23 +1446,10 @@ object Relational {
     // Q18: large-volume customers — the HAVING-subquery IN becomes a
     // LEFT SEMI against the per-order quantity aggregate, applied to
     // ORDERS (the small side) before the fact join, so the lineitem
-    // re-join only sees surviving orders.
-    ("q85_tpch_q18",
-      (s, d) => {
-        val li = Tables.lineitem(s, d)
-        val big = li.groupBy(col("l_orderkey"))
-          .agg(sum(col("l_quantity")).as("sq")).filter(col("sq") > 300)
-        Tables.orders(s, d)
-          .join(big, col("o_orderkey") === col("l_orderkey"), "left_semi")
-          .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-          .join(li, col("o_orderkey") === col("l_orderkey"))
-          .groupBy(col("c_name"), col("c_custkey"), col("o_orderkey"),
-            col("o_orderdate"), col("o_totalprice"))
-          .agg(sum(col("l_quantity")).as("sum_qty"))
-          .orderBy(col("o_totalprice").desc, col("o_orderdate"), col("o_orderkey"))
-          .limit(100)
-      },
-      Some("""SELECT c_name, c_custkey, o_orderkey, o_orderdate,
+    // re-join only sees surviving orders. The Spark text spells that
+    // order: orders LEFT SEMI big orders, then customer, then lineitem.
+    bound("q85_tpch_q18",
+      """SELECT c_name, c_custkey, o_orderkey, o_orderdate,
                      o_totalprice, sum(l_quantity) AS sum_qty
               FROM customer, orders, lineitem
               WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
@@ -1531,45 +1458,19 @@ object Relational {
                 AND c_custkey = o_custkey AND o_orderkey = l_orderkey
               GROUP BY 1, 2, 3, 4, 5
               ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
-              LIMIT 100""")),
+              LIMIT 100"""),
 
     // Q21: suppliers solely at fault in multi-supplier failed orders.
     // The canonical form is a double-correlated EXISTS / NOT EXISTS
-    // battery (the oracle and the SQL twin keep it — DuckDB and
-    // Spark's correlated-subquery planner both prove the rewrite);
-    // the DataFrame form is the one-shuffle scalable rewrite: a
+    // battery (the oracle keeps it, so DuckDB proves the rewrite);
+    // the Spark text is the one-shuffle scalable rewrite: a
     // per-order aggregate (distinct suppliers, distinct at-fault
     // suppliers) replaces BOTH lineitem self-joins — EXISTS(other
     // supplier) ⟺ n_supp ≥ 2, NOT EXISTS(other at-fault) ⟺ the
     // at-fault set is exactly {this supplier}, i.e. n_fault = 1
     // (l1 itself is at fault, so its supplier is always counted).
-    ("q86_tpch_q21",
-      (s, d) => {
-        val li = Tables.lineitem(s, d)
-        // Two-level aggregate instead of the double countDistinct (r14):
-        // two distinct aggregates over one grouping make Spark plan an
-        // Expand that doubles every lineitem row through the exchange.
-        // Pre-deduping on (orderkey, suppkey) with a has-R flag computes
-        // the same two counts — countDistinct(when(R, suppkey)) is
-        // exactly "distinct suppkeys with ≥1 R row" — while shuffling
-        // each distinct pair once (partial agg map-side), no Expand.
-        val perOrder = li
-          .groupBy(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
-          .agg(max((col("l_returnflag") === "R").cast("long")).as("has_r"))
-          .groupBy(col("ok"))
-          .agg(count(lit(1)).as("n_supp"), sum(col("has_r")).as("n_fault"))
-        li.filter(col("l_returnflag") === "R")
-          .select(col("l_orderkey"), col("l_suppkey"))
-          .join(Tables.orders(s, d).filter(col("o_orderstatus") === "F")
-            .select(col("o_orderkey")), col("l_orderkey") === col("o_orderkey"))
-          .join(perOrder, col("l_orderkey") === col("ok"))
-          .filter(col("n_supp") >= 2 && col("n_fault") === 1)
-          .join(broadcast(Tables.supplier(s, d)),
-            col("l_suppkey") === col("s_suppkey"))
-          .groupBy(col("s_name")).agg(count(lit(1)).as("numwait"))
-          .orderBy(col("numwait").desc, col("s_name")).limit(100)
-      },
-      Some("""SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
+    bound("q86_tpch_q21",
+      """SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
               FROM supplier, lineitem l1, orders
               WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
                 AND o_orderstatus = 'F' AND l1.l_returnflag = 'R'
@@ -1582,7 +1483,7 @@ object Relational {
                                   AND l3.l_returnflag = 'R')
               GROUP BY s_name
               ORDER BY numwait DESC, s_name
-              LIMIT 100""")),
+              LIMIT 100"""),
 
     // Q10: returned-item customer revenue top-20 — star topk whose
     // quarter window lands on the orders scan and whose returnflag
@@ -1793,29 +1694,11 @@ object Relational {
     // quantities 1–30 — so each scan reads the union of what any
     // disjunct can accept (supersets; the exact OR still applies after
     // the join), and the brand IN + size range land in the part scan's
-    // PushedFilters instead of the join output. Plan-gated: part-side
+    // PushedFilters instead of the join output. The Spark text spells
+    // both prefilters and broadcasts part. Plan-gated: part-side
     // prefilter broadcast, no SMJ.
-    ("q98_tpch_q19",
-      (s, d) => {
-        val p = Tables.part(s, d)
-          .filter(col("p_brand").isin("Brand#12", "Brand#23", "Brand#34") &&
-                  col("p_size") >= 1 && col("p_size") <= 15)
-          .select(col("p_partkey"), col("p_brand"), col("p_size"))
-        Tables.lineitem(s, d)
-          .filter(col("l_quantity") >= 1 && col("l_quantity") <= 30)
-          .select(col("l_partkey"), col("l_quantity"),
-            (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-          .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-          .filter(
-            (col("p_brand") === "Brand#12" && col("p_size").between(1, 5) &&
-              col("l_quantity").between(1, 11)) ||
-            (col("p_brand") === "Brand#23" && col("p_size").between(1, 10) &&
-              col("l_quantity").between(10, 20)) ||
-            (col("p_brand") === "Brand#34" && col("p_size").between(1, 15) &&
-              col("l_quantity").between(20, 30)))
-          .agg(cents(sum(col("rev"))).as("revenue"))
-      },
-      Some("""SELECT FLOOR(sum(l_extendedprice * (1 - l_discount))
+    bound("q98_tpch_q19",
+      """SELECT FLOOR(sum(l_extendedprice * (1 - l_discount))
                            * 100 + 0.5) / 100 AS revenue
               FROM lineitem, part
               WHERE p_partkey = l_partkey
@@ -1824,7 +1707,7 @@ object Relational {
                   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
                       AND l_quantity BETWEEN 10 AND 20)
                   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
-                      AND l_quantity BETWEEN 20 AND 30))""")),
+                      AND l_quantity BETWEEN 20 AND 30))"""),
 
     // Q20: potential part promotion — the nested-subquery supplier
     // screen. The canonical inner term (ps_availqty > 0.5 · shipped

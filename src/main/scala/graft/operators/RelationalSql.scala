@@ -8,14 +8,15 @@ import org.apache.spark.sql.SparkSession
   * (andb/sql/parser/lexer.py:11-131).
   *
   * One text per query: a query's text is its DuckDB oracle text unless
-  * [[overrides]] holds a Spark spelling for it. The TPC-H twins q86, q90
-  * and q94 thus keep the canonical correlated EXISTS / scalar-subquery
-  * forms, and Spark's decorrelator plans them.
+  * [[overrides]] holds a Spark spelling for it. The TPC-H twins q90 and
+  * q94 thus keep the canonical correlated EXISTS / scalar-subquery
+  * forms, and Spark's decorrelator plans them; q86's EXISTS battery
+  * stays the oracle's, and its Spark text is the per-order aggregate.
   *
-  * For 82 of the 99 queries this text IS the registered query:
+  * For 90 of the 99 queries this text IS the registered query:
   * [[Relational.defs]] runs it through
   * [[org.apache.spark.sql.graft.BoundSql]], which binds its table names
-  * to the data directory. The other 17 keep a DataFrame plan in
+  * to the data directory. The other 9 keep a DataFrame plan in
   * [[Relational.defs]] (see its header for why), and their text is the
   * same query spelled in SQL. SqlParitySpec asserts, for every entry,
   * that the registered query and this text run over the catalog give
@@ -72,9 +73,6 @@ object RelationalSql {
     "q30_having_expr" -> Map("min_parts" -> 50, "min_price" -> 40000)
   )
 
-  def bindSession(spark: SparkSession, name: String): org.apache.spark.sql.DataFrame =
-    bind(spark, name, defaultArgs(name))
-
   /** [[sql]] with the q81 precondition made EXPLICIT: its twin reads the
     * frozen sketch export (so approx-sketch merge-order nondeterminism
     * cannot split the DataFrame/SQL compare), which exists only after
@@ -115,6 +113,15 @@ object RelationalSql {
         |       count(*) AS n_rows,
         |       FLOOR(sum(l_quantity) * 100 + 0.5) / 100 AS sum_qty
         |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
+
+    // The decorrelated LATERAL: aggregate once, then LEFT JOIN (a region
+    // with no customers keeps its NULL row).
+    "q42_lateral" ->
+      """SELECT r_name, max_bal
+        |FROM region LEFT JOIN (
+        |  SELECT n_regionkey, max(c_acctbal) AS max_bal
+        |  FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |  GROUP BY n_regionkey) m ON r_regionkey = n_regionkey""".stripMargin,
 
     "q43_grouping_sets" ->
       """SELECT l_returnflag, l_linestatus, grouping_id() AS gid,
@@ -187,19 +194,21 @@ object RelationalSql {
         |       array_join(array_sort(collect_set(c_mktsegment)), ',') AS segs
         |FROM customer GROUP BY c_nationkey""".stripMargin,
 
+    // Each array expression inlined, so Catalyst keeps one projection
+    // (a CTE column used several times stays a second project).
     "q51_array_funcs" ->
-      """WITH m AS (SELECT doc_id,
-        |       regexp_extract_all(text, '[a-z0-9]+', 0) AS toks,
-        |       array_sort(array_distinct(regexp_extract_all(text, '[a-z0-9]+', 0))) AS sorted
-        |     FROM documents)
-        |SELECT doc_id,
-        |       CAST(size(toks) AS BIGINT) AS n_toks,
-        |       CAST(size(array_distinct(toks)) AS BIGINT) AS n_uniq,
-        |       array_join(slice(sorted, 1, 5), '|') AS first5,
-        |       array_contains(toks, 'spark') AS has_spark,
-        |       element_at(sorted, 3) AS third_sorted,
-        |       array_join(reverse(slice(toks, 1, 3)), '|') AS head3_rev
-        |FROM m""".stripMargin,
+      """SELECT doc_id,
+        |  CAST(size(regexp_extract_all(text, '[a-z0-9]+', 0)) AS BIGINT) AS n_toks,
+        |  CAST(size(array_distinct(regexp_extract_all(text, '[a-z0-9]+', 0))) AS BIGINT)
+        |    AS n_uniq,
+        |  array_join(slice(array_sort(array_distinct(
+        |    regexp_extract_all(text, '[a-z0-9]+', 0))), 1, 5), '|') AS first5,
+        |  array_contains(regexp_extract_all(text, '[a-z0-9]+', 0), 'spark') AS has_spark,
+        |  element_at(array_sort(array_distinct(
+        |    regexp_extract_all(text, '[a-z0-9]+', 0))), 3) AS third_sorted,
+        |  array_join(reverse(slice(regexp_extract_all(text, '[a-z0-9]+', 0), 1, 3)), '|')
+        |    AS head3_rev
+        |FROM documents""".stripMargin,
 
     "q55_map_funcs" ->
       """SELECT o_custkey,
@@ -230,12 +239,15 @@ object RelationalSql {
         |       percentile_disc(0.5) WITHIN GROUP (ORDER BY l_extendedprice) AS med_price_disc
         |FROM lineitem GROUP BY l_returnflag""".stripMargin,
 
+    // REPARTITION(user_id) under the first window: one exchange serves
+    // both windows.
     "q60_window_distinct" ->
       """WITH e AS (
-        |  SELECT event_id, user_id, event_type, unix_micros(ts) AS ts_us
+        |  SELECT /*+ REPARTITION(user_id) */ event_id, user_id, event_type,
+        |         unix_micros(ts) AS ts_us
         |  FROM events),
         |m AS (
-        |  SELECT /*+ REPARTITION(user_id) */ event_id, user_id, ts_us,
+        |  SELECT event_id, user_id, ts_us,
         |         CASE WHEN row_number() OVER (PARTITION BY user_id, event_type
         |                                      ORDER BY ts_us ASC, event_id ASC) = 1
         |              THEN 1L ELSE 0L END AS first_seen
@@ -268,6 +280,17 @@ object RelationalSql {
         |SELECT user_id, count(*) AS n_islands, max(len) AS longest_run,
         |       sum(len) AS active_hours
         |FROM islands GROUP BY user_id""".stripMargin,
+
+    // Aggregate per customer first, then CROSS JOIN the broadcast
+    // one-row divisor count (the oracle joins before it aggregates).
+    "q64_division" ->
+      """WITH np AS (SELECT count(DISTINCT o_orderpriority) AS np FROM orders)
+        |SELECT /*+ BROADCAST(np) */ o_custkey, n_orders
+        |FROM (SELECT o_custkey, count(DISTINCT o_orderpriority) AS n_prio,
+        |             count(1) AS n_orders
+        |      FROM orders GROUP BY o_custkey) c
+        |CROSS JOIN np
+        |WHERE n_prio = np.np""".stripMargin,
 
     "q65_reorder_gap" ->
       """WITH o AS (SELECT o_custkey, o_orderkey,
@@ -404,6 +427,14 @@ object RelationalSql {
         |      GROUP BY o_custkey)
         |WHERE size(arr) >= 2""".stripMargin,
 
+    // No ORDER BY ALL: the result is a set, and a sort is a second
+    // exchange.
+    "q77_group_by_all" ->
+      """SELECT l_returnflag, l_linestatus, year(l_shipdate) AS ship_year,
+        |       count(1) AS n_rows, sum(l_quantity) AS sum_qty,
+        |       FLOOR(sum(l_extendedprice) * 100 + 0.5) / 100 AS sum_price
+        |FROM lineitem GROUP BY ALL""".stripMargin,
+
     "q78_distinct_on" ->
       """SELECT o_custkey, o_orderkey AS last_orderkey,
         |       unix_micros(o_orderdate) AS last_order_us,
@@ -488,6 +519,45 @@ object RelationalSql {
         |         <= CAST(n AS DOUBLE) / accuracy + 1 AS within_bound
         |FROM r""".stripMargin,
 
+    // The IN subquery as a LEFT SEMI of orders against the big-order
+    // aggregate, before customer and the lineitem re-join.
+    "q85_tpch_q18" ->
+      """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
+        |       sum(l_quantity) AS sum_qty
+        |FROM orders
+        |  LEFT SEMI JOIN (SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
+        |                  HAVING sum(l_quantity) > 300) big
+        |    ON o_orderkey = big.l_orderkey
+        |  JOIN customer ON o_custkey = c_custkey
+        |  JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
+        |ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
+        |LIMIT 100""".stripMargin,
+
+    // The EXISTS / NOT EXISTS battery as one per-order aggregate:
+    // n_supp >= 2 is EXISTS(other supplier), n_fault = 1 is NOT
+    // EXISTS(other at-fault supplier). Two levels (dedupe (order,
+    // supplier) with a has-R flag, then count) instead of two
+    // count(DISTINCT)s, which would plan an Expand that doubles every
+    // lineitem row through the exchange.
+    "q86_tpch_q21" ->
+      """WITH per_order AS (
+        |  SELECT ok, count(1) AS n_supp, sum(has_r) AS n_fault
+        |  FROM (SELECT l_orderkey AS ok, l_suppkey AS sk,
+        |               max(CAST(l_returnflag = 'R' AS BIGINT)) AS has_r
+        |        FROM lineitem GROUP BY l_orderkey, l_suppkey)
+        |  GROUP BY ok)
+        |SELECT /*+ BROADCAST(supplier) */ s_name, count(1) AS numwait
+        |FROM (SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_returnflag = 'R') l1
+        |  JOIN (SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F') o
+        |    ON l_orderkey = o_orderkey
+        |  JOIN per_order ON l_orderkey = ok
+        |  JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE n_supp >= 2 AND n_fault = 1
+        |GROUP BY s_name
+        |ORDER BY numwait DESC, s_name
+        |LIMIT 100""".stripMargin,
+
     "q97_tpch_q15" ->
       """WITH revenue AS (
         |  SELECT l_suppkey AS supplier_no,
@@ -501,6 +571,24 @@ object RelationalSql {
         |FROM supplier JOIN revenue ON s_suppkey = supplier_no
         |WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
         |ORDER BY s_suppkey""".stripMargin,
+
+    // Each side's residue of the OR applied before the join (part: the
+    // three brands at sizes 1-15; lineitem: quantities 1-30), part
+    // broadcast, the exact OR after the join.
+    "q98_tpch_q19" ->
+      """SELECT /*+ BROADCAST(p) */ FLOOR(sum(rev) * 100 + 0.5) / 100 AS revenue
+        |FROM (SELECT l_partkey, l_quantity, l_extendedprice * (1 - l_discount) AS rev
+        |      FROM lineitem WHERE l_quantity >= 1 AND l_quantity <= 30) l
+        |  JOIN (SELECT p_partkey, p_brand, p_size FROM part
+        |        WHERE p_brand IN ('Brand#12', 'Brand#23', 'Brand#34')
+        |          AND p_size >= 1 AND p_size <= 15) p
+        |    ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#12' AND p_size >= 1 AND p_size <= 5
+        |       AND l_quantity >= 1 AND l_quantity <= 11)
+        |   OR (p_brand = 'Brand#23' AND p_size >= 1 AND p_size <= 10
+        |       AND l_quantity >= 10 AND l_quantity <= 20)
+        |   OR (p_brand = 'Brand#34' AND p_size >= 1 AND p_size <= 15
+        |       AND l_quantity >= 20 AND l_quantity <= 30)""".stripMargin,
 
     "q99_tpch_q20" ->
       """WITH pq AS (

@@ -19,7 +19,6 @@ import org.apache.spark.sql.types.StructType
   *                            at 100 TB this converts every recurring
   *                            fact-fact join on the same key from a
   *                            full-table shuffle into local merges
-  *   - csv / json           — interchange formats for ingest/export
   *
   * All writers take explicit paths/tables and overwrite idempotently —
   * re-running a round never double-appends.
@@ -35,14 +34,11 @@ object Io {
     df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
 
   /** Bucketed + sorted table (requires a catalog table, not a bare path).
-    * `buckets` should match the downstream join parallelism. */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    writeBucketedBy(df, table, Seq(key), buckets)
-
-  /** Multi-key bucketing — e.g. an LSH band table bucketed by
-    * (band, bucket-value) so band-bucket joins and probes read
-    * pre-shuffled data. Join keys must cover the bucket keys exactly for
-    * the exchange to be elided. */
+    * `buckets` should match the downstream join parallelism. Multi-key
+    * bucketing — e.g. an LSH band table bucketed by (band, bucket-value)
+    * — lets band-bucket joins and probes read pre-shuffled data. Join
+    * keys must cover the bucket keys exactly for the exchange to be
+    * elided. */
   def writeBucketedBy(df: DataFrame, table: String, keys: Seq[String], buckets: Int): Unit =
     df.write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
@@ -79,21 +75,7 @@ object Io {
       .format("parquet").saveAsTable(table)
   }
 
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
-
-  /** ORC — the other columnar interchange format (predicate pushdown and
-    * column pruning apply the same as parquet). */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(path)
-
   // ---- sources --------------------------------------------------------
-
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** The schema a parquet read of `df` written with `partitionCols`
     * gives back: every column nullable, partition columns last. A reader
@@ -102,17 +84,6 @@ object Io {
     val (parts, data) = df.schema.fields.partition(f => partitionCols.contains(f.name))
     StructType((data ++ parts).map(_.copy(nullable = true)))
   }
-
-  /** Schema-explicit CSV read (inference costs a full extra pass at
-    * scale; always pass the schema in production paths). */
-  def readCsv(spark: SparkSession, path: String, schemaDdl: String): DataFrame =
-    spark.read.option("header", "true").schema(schemaDdl).csv(path)
-
-  def readJson(spark: SparkSession, path: String, schemaDdl: String): DataFrame =
-    spark.read.schema(schemaDdl).json(path)
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
 
   /** Raw-file ingest for the multimodal pipeline: Spark's `binaryFile`
     * source reads whole files as rows of (path, modificationTime, length,
@@ -126,45 +97,6 @@ object Io {
     * corpus may contain outlier blobs. */
   def readBinaryFiles(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
     spark.read.format("binaryFile").option("pathGlobFilter", glob).load(dir)
-
-  /** Schema-evolution read: a corpus written over months gains columns
-    * (new quality signals, new metadata) without rewriting old files.
-    * `mergeSchema` unions the footer schemas across all files — old
-    * files surface the new columns as NULL, new files keep them — at
-    * the cost of reading every file footer at planning time, so at
-    * 100 TB prefer declaring the SUPERSET schema explicitly (the
-    * `schemaDdl` overload below: no footer sweep, same null-fill
-    * semantics) and reserve mergeSchema for exploration. */
-  def readParquetMerged(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
-  /** Production form of schema evolution: pin the superset schema —
-    * planning cost is O(1) in file count and column types are enforced
-    * rather than inferred from whichever footers happen to exist. */
-  def readParquetAs(spark: SparkSession, path: String, schemaDdl: String): DataFrame =
-    spark.read.schema(schemaDdl).parquet(path)
-
-  // ---- layout maintenance ----------------------------------------------
-
-  /** Small-file compaction — the housekeeping pass every streaming/
-    * incremental sink needs: K tiny files become ceil(bytes/target) right-
-    * sized ones. `shuffle = false` (default) uses coalesce — NO exchange,
-    * adjacent input splits merge in place, the cheap path when input
-    * sizes are roughly even; `shuffle = true` pays one round-robin
-    * exchange for exactly-even output files (skewed inputs). Writes to a
-    * fresh directory and never mutates the source — swap is the caller's
-    * atomic rename. Returns the target file count. */
-  def compact(spark: SparkSession, srcPath: String, destPath: String,
-      targetFileBytes: Long = 128L << 20, shuffle: Boolean = false): Int = {
-    val p = new org.apache.hadoop.fs.Path(srcPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(p).getLength
-    val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val df = spark.read.parquet(srcPath)
-    val sized = if (shuffle) df.repartition(n) else df.coalesce(n)
-    sized.write.mode(SaveMode.Overwrite).parquet(destPath)
-    n
-  }
 
   // ---- standing bucketed-layout compaction (r13) ------------------------
   //

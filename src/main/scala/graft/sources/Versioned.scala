@@ -487,7 +487,7 @@ object Versioned {
   }
 
   /** OPTIMIZE analog: rewrite the current version's rows into
-    * right-sized files (the Io.compact sizing rule) and publish as a
+    * ceil(bytes / target) files (coalesced, no shuffle) and publish as a
     * REPLACE commit — same rows, compacted layout (partitioned by the
     * same columns the version's manifest records), atomically visible;
     * prior versions keep the old layout (time travel unaffected). A

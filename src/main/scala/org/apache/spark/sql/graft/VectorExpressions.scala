@@ -4,7 +4,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -403,20 +403,4 @@ object VectorExpressions {
     mk(PqEncode(ex(a), books, m, ksub))
   def pqAdcCosine(codes: Column, dotLut: Seq[Double], nrmLut: Seq[Double],
       m: Int, ksub: Int): Column = mk(PqAdcCosine(ex(codes), dotLut, nrmLut, m, ksub))
-
-  /** SQL registration (idempotent) so `spark.sql("... graft_cosine(a,b) ...")`
-    * works on any session, mirroring the reference's function catalog
-    * (andb/catalog/function.py:72 register_builtin_function). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    def info(name: String) = new ExpressionInfo(getClass.getCanonicalName, name)
-    reg.createOrReplaceTempFunction("graft_cosine",
-      (es: Seq[Expression]) => CosineSimilarity(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_dot",
-      (es: Seq[Expression]) => DotProduct(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_l2norm",
-      (es: Seq[Expression]) => L2Norm(es(0)), "scala_udf")
-    val _ = info("graft_cosine") // keep ExpressionInfo construction exercised
-  }
 }

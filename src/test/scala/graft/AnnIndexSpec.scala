@@ -44,7 +44,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // 2. Execution-level proof: every file that produced rows lives in a
     //    probed cell's directory, and the probe touched ≤ nProbe of the
     //    cell directories.
-    val filesRead = Io.readParquet(spark, s"$tmp/ivf")
+    val filesRead = spark.read.parquet(s"$tmp/ivf")
       .filter(col("cell").isin(cells.toSeq: _*))
       .select(input_file_name().as("f")).distinct().collect().map(_.getString(0))
     val cellsTouched = filesRead.map { f =>

@@ -28,49 +28,101 @@ class DdlSpec extends AnyFunSuite {
   }
 
   test("create/use/drop database scope unqualified table names") {
-    Ddl.dropDatabase(spark, "graft_db")
-    Ddl.createDatabase(spark, "graft_db")
-    val prev = Ddl.currentDatabase(spark)
+    def count(table: String) =
+      graft.sql(spark, s"SELECT count(*) FROM $table").head().getLong(0)
+    graft.sql(spark, "DROP DATABASE IF EXISTS graft_db CASCADE")
+    graft.sql(spark, "CREATE DATABASE graft_db")
+    val prev = spark.catalog.currentDatabase
     try {
-      Ddl.useDatabase(spark, "graft_db")
-      assert(Ddl.currentDatabase(spark) == "graft_db")
+      graft.sql(spark, "USE graft_db")
+      assert(spark.catalog.currentDatabase == "graft_db")
       // A table created while USE graft_db is active lands in — and
       // resolves unqualified from — that namespace.
-      spark.sql(s"CREATE TABLE marker USING parquet LOCATION '${TestSpark.sf}/nation.parquet'")
-      assert(spark.table("marker").count() == 25)
-      assert(spark.table("graft_db.marker").count() == 25)
-      Ddl.useDatabase(spark, prev)
+      graft.sql(spark,
+        s"CREATE TABLE marker USING parquet LOCATION '${TestSpark.sf}/nation.parquet'")
+      assert(count("marker") == 25)
+      assert(count("graft_db.marker") == 25)
+      graft.sql(spark, s"USE `$prev`")
       // Unqualified resolution no longer sees it; qualified still does.
-      assert(intercept[Exception](spark.table("marker").collect()) != null)
-      assert(spark.table("graft_db.marker").count() == 25)
+      assert(intercept[Exception](count("marker")) != null)
+      assert(count("graft_db.marker") == 25)
     } finally {
-      Ddl.useDatabase(spark, prev)
-      Ddl.dropDatabase(spark, "graft_db")
+      spark.catalog.setCurrentDatabase(prev)
+      graft.sql(spark, "DROP DATABASE IF EXISTS graft_db CASCADE")
       assert(!spark.catalog.databaseExists("graft_db"))
     }
   }
 
-  test("hostile database names cannot break out of the DDL statement") {
-    // A raw splice of this name would parse as TWO statements (or a
-    // CASCADE drop of the wrong database); the quoted form treats the
-    // whole string as one identifier, so it either round-trips as a
-    // literal name or is rejected by the catalog's name validation —
-    // never executed as SQL. The sibling database must survive.
-    Ddl.dropDatabase(spark, "graft_sibling")
-    Ddl.createDatabase(spark, "graft_sibling")
-    val hostile = "x` CASCADE; DROP DATABASE graft_sibling; --"
+  test("hostile column names cannot break out of analyzeTable's statement") {
+    // analyzeTable splices column names into ANALYZE ... FOR COLUMNS. A
+    // raw splice of this name would end the identifier and parse the
+    // rest as SQL; the quoted form keeps the whole string one
+    // identifier, which the catalog rejects as an unknown column. The
+    // sibling database must survive either way.
+    graft.sql(spark, "CREATE DATABASE IF NOT EXISTS graft_sibling")
+    val hostile = "n_name`; DROP DATABASE graft_sibling CASCADE; --"
     try {
-      try {
-        Ddl.createDatabase(spark, hostile)
-        Ddl.dropDatabase(spark, hostile)
-      } catch {
-        case e: Exception => // catalog-level invalid-name rejection is fine
-          assert(!e.isInstanceOf[org.apache.spark.sql.catalyst.parser.ParseException] ||
-            e.getMessage.contains("`"), s"broke out of the statement: ${e.getMessage}")
-      }
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        Ddl.analyzeTable(spark, "nation", TestSpark.sf, cols = Seq(hostile)))
+      assert(!e.isInstanceOf[org.apache.spark.sql.catalyst.parser.ParseException],
+        s"broke out of the statement: ${e.getMessage}")
       assert(spark.catalog.databaseExists("graft_sibling"),
         "hostile name executed a DROP on a different database")
-    } finally Ddl.dropDatabase(spark, "graft_sibling")
+    } finally {
+      graft.sql(spark, "DROP DATABASE IF EXISTS graft_sibling CASCADE")
+      spark.sql("DROP TABLE IF EXISTS nation_analyzed")
+    }
+  }
+
+  test("graft.sql runs every command and re-plans the queries a command changes") {
+    // A cached command would run once, and a query plan cached across a
+    // command would read what the command replaced.
+    def one(text: String) = graft.sql(spark, text).head()
+    val tmp = java.nio.file.Files.createTempDirectory("graft-pc").toString
+    val home = spark.catalog.currentDatabase
+    try {
+      graft.sql(spark, s"CREATE TABLE pc_t (a INT) USING parquet LOCATION '$tmp/pc_t'")
+      graft.sql(spark, "INSERT INTO pc_t VALUES (1)")
+      assert(one("SELECT count(*) FROM pc_t").getLong(0) == 1)
+      graft.sql(spark, "INSERT INTO pc_t VALUES (1)")
+      assert(one("SELECT count(*) FROM pc_t").getLong(0) == 2)
+
+      graft.sql(spark, "CREATE OR REPLACE TEMP VIEW pc_v AS SELECT 1 AS x")
+      assert(one("SELECT x FROM pc_v").getInt(0) == 1)
+      graft.sql(spark, "CREATE OR REPLACE TEMP VIEW pc_v AS SELECT 2 AS x")
+      assert(one("SELECT x FROM pc_v").getInt(0) == 2)
+      graft.sql(spark, "CREATE OR REPLACE TEMP VIEW pc_v AS SELECT :x AS x", Map("x" -> 4))
+      assert(one("SELECT x FROM pc_v").getInt(0) == 4)
+
+      graft.sql(spark, "DROP VIEW IF EXISTS pc_v")
+      graft.sql(spark, "CREATE OR REPLACE TEMP VIEW pc_v AS SELECT 3 AS x")
+      graft.sql(spark, "DROP VIEW IF EXISTS pc_v")
+      assert(!spark.catalog.tableExists("pc_v"))
+
+      graft.sql(spark, "CREATE DATABASE IF NOT EXISTS pc_db")
+      graft.sql(spark, "USE pc_db")
+      graft.sql(spark, s"USE `$home`")
+      graft.sql(spark, "USE pc_db")
+      assert(spark.catalog.currentDatabase == "pc_db")
+    } finally {
+      spark.catalog.setCurrentDatabase(home)
+      spark.sql("DROP TABLE IF EXISTS pc_t")
+      spark.sql("DROP VIEW IF EXISTS pc_v")
+      spark.sql("DROP DATABASE IF EXISTS pc_db CASCADE")
+    }
+  }
+
+  test("Ddl's view re-registration drops cached statement plans, not path plans") {
+    Ddl.createTable(spark, "nation", TestSpark.sf)
+    val text = "SELECT * FROM nation"
+    val before = graft.sql(spark, text)
+    val path = Tables.nation(spark, TestSpark.sf)
+    Ddl.alterDropColumn(spark, "nation", "n_regionkey")
+    val after = graft.sql(spark, text)
+    assert(before.columns.contains("n_regionkey") && !after.columns.contains("n_regionkey"))
+    assert(Tables.nation(spark, TestSpark.sf) eq path)
+    Ddl.createTable(spark, "nation", TestSpark.sf)
+    assert(graft.sql(spark, text).columns.contains("n_regionkey"))
   }
 
   test("plan cache returns the identical plan object on repeat statements") {
@@ -97,15 +149,6 @@ class DdlSpec extends AnyFunSuite {
     val expected = Tables.nation(spark, TestSpark.sf).count()
     assert(rowCount.contains(BigInt(expected)), s"rowCount=$rowCount expected=$expected")
     spark.sql("DROP TABLE IF EXISTS nation_analyzed")
-  }
-
-  test("checkpoint materializes and truncates lineage") {
-    val df = Tables.nation(spark, TestSpark.sf).filter(col("n_regionkey") === 1)
-    val cp = Ddl.checkpoint(df)
-    assert(cp.count() == df.count())
-    // The checkpointed plan no longer derives from the parquet scan.
-    assert(cp.queryExecution.optimizedPlan.toString.contains("LogicalRDD"),
-      cp.queryExecution.optimizedPlan.toString)
   }
 
   test("CBO + ANALYZE stats reorder a badly-ordered multijoin into the selective-first tree") {

@@ -14,7 +14,7 @@ class IoSpec extends AnyFunSuite {
     val events = Tables.events(spark, TestSpark.sf)
       .select(col("event_id"), col("event_type"), col("value"))
     Io.writePartitioned(events, s"$tmp/events_part", Seq("event_type"))
-    val back = Io.readParquet(spark, s"$tmp/events_part")
+    val back = spark.read.parquet(s"$tmp/events_part")
       .filter(col("event_type") === "click")
     val expected = events.filter(col("event_type") === "click").count()
     assert(back.count() == expected)
@@ -25,7 +25,7 @@ class IoSpec extends AnyFunSuite {
   test("bucketed table join runs without an exchange on the bucketed side") {
     val orders = Tables.orders(spark, TestSpark.sf)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    Io.writeBucketed(orders, "orders_bkt", "o_custkey", buckets = 4)
+    Io.writeBucketedBy(orders, "orders_bkt", Seq("o_custkey"), buckets = 4)
     val customers = Tables.customer(spark, TestSpark.sf)
       .select(col("c_custkey"), col("c_mktsegment"))
     val joined = spark.table("orders_bkt")
@@ -62,59 +62,6 @@ class IoSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS bands_bkt")
   }
 
-  test("csv and json roundtrip preserve values") {
-    val nation = Tables.nation(spark, TestSpark.sf)
-      .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-    val schema = "n_nationkey INT, n_name STRING, n_regionkey INT"
-    Io.writeCsv(nation, s"$tmp/nation_csv")
-    Io.writeJson(nation, s"$tmp/nation_json")
-    val csvBack = Io.readCsv(spark, s"$tmp/nation_csv", schema)
-    val jsonBack = Io.readJson(spark, s"$tmp/nation_json", schema)
-    val orig = nation.collect().map(_.toSeq).toSet
-    assert(csvBack.collect().map(_.toSeq).toSet == orig)
-    assert(jsonBack.collect().map(_.toSeq).toSet == orig)
-  }
-
-  test("orc roundtrip preserves values and pushes filters to the scan") {
-    val orders = Tables.orders(spark, TestSpark.sf)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    Io.writeOrc(orders, s"$tmp/orders_orc")
-    val back = Io.readOrc(spark, s"$tmp/orders_orc")
-      .filter(col("o_totalprice") > 100000.0)
-    assert(back.count() ==
-      orders.filter(col("o_totalprice") > 100000.0).count())
-    val plan = back.queryExecution.executedPlan.treeString
-    assert(plan.contains("PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice"),
-      plan.take(500))
-  }
-
-  test("compaction merges small files without losing rows") {
-    val orders = Tables.orders(spark, TestSpark.sf)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    // Simulate a streaming sink's droppings: 40 tiny files.
-    orders.repartition(40).write.mode("overwrite").parquet(s"$tmp/orders_small")
-    def parquetFiles(p: String) =
-      new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles(s"$tmp/orders_small") == 40)
-    // Target well above the total size ⇒ everything fits in one file.
-    val n = Io.compact(spark, s"$tmp/orders_small", s"$tmp/orders_compact",
-      targetFileBytes = 1L << 30)
-    assert(n == 1)
-    assert(parquetFiles(s"$tmp/orders_compact") == 1)
-    val back = Io.readParquet(spark, s"$tmp/orders_compact")
-    assert(back.count() == orders.count())
-    assert(back.agg(sum(col("o_orderkey"))).head().getLong(0) ==
-      orders.agg(sum(col("o_orderkey"))).head().getLong(0))
-    // Shuffled variant: exactly-even output across ~4 files (target =
-    // a quarter of the measured input bytes).
-    val total = new java.io.File(s"$tmp/orders_small").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-    val n4 = Io.compact(spark, s"$tmp/orders_small", s"$tmp/orders_compact4",
-      targetFileBytes = math.max(1L, total / 4), shuffle = true)
-    assert(n4 >= 4 && n4 <= 6, s"n4=$n4")
-    assert(parquetFiles(s"$tmp/orders_compact4") == n4)
-  }
-
   test("z-order layout prunes on BOTH columns where a single-key sort serves one") {
     val orders = Tables.orders(spark, TestSpark.sf)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -127,7 +74,7 @@ class IoSpec extends AnyFunSuite {
     // Per-file min/max of the SECOND column — exactly the stats parquet
     // row-group/file skipping consults for a predicate on o_totalprice.
     def fileRanges(p: String): Seq[(Double, Double)] =
-      Io.readParquet(spark, p)
+      spark.read.parquet(p)
         .groupBy(input_file_name())
         .agg(min(col("o_totalprice")).as("lo"), max(col("o_totalprice")).as("hi"))
         .collect().map(r => (r.getDouble(1), r.getDouble(2))).toSeq
@@ -175,32 +122,6 @@ class IoSpec extends AnyFunSuite {
     assert(byDims.keySet == Set((16, 8), (10, 10)))
     assert(math.abs(byDims((16, 8))(0) - 1.0f) < 1e-3) // red channel mean
     assert(math.abs(byDims((10, 10))(1) - 1.0f) < 1e-3) // green channel mean
-  }
-
-  test("schema evolution: old files null-fill new columns under both read forms") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-evo").toString
-    // Month 1: (doc_id, text). Month 2 adds a quality column.
-    Seq((1L, "old doc")).toDF("doc_id", "text")
-      .write.mode("append").parquet(dir)
-    Seq((2L, "new doc", 0.9)).toDF("doc_id", "text", "quality")
-      .write.mode("append").parquet(dir)
-    // Exploration form: footer-merged union schema.
-    val merged = Io.readParquetMerged(spark, dir)
-    assert(merged.columns.toSet == Set("doc_id", "text", "quality"))
-    val rows = merged.collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        (if (r.isNullAt(r.fieldIndex("quality"))) None
-         else Some(r.getAs[Double]("quality")))).toMap
-    assert(rows == Map(1L -> None, 2L -> Some(0.9)))
-    // Production form: pinned superset schema — same semantics, no
-    // footer sweep, and a plain read (which would pick ONE footer and
-    // either miss the column or fail) is avoided.
-    val pinned = Io.readParquetAs(spark, dir,
-      "doc_id BIGINT, text STRING, quality DOUBLE")
-    assert(pinned.columns.toSet == Set("doc_id", "text", "quality"))
-    assert(pinned.filter($"doc_id" === 1L && $"quality".isNull).count() == 1)
-    assert(pinned.filter($"doc_id" === 2L && $"quality" === 0.9).count() == 1)
   }
 
   test("bucketed appends refuse to create a missing table") {

@@ -97,7 +97,7 @@ class SqlParitySpec extends AnyFunSuite {
       assert(text.contains(":"), s"$name: no parameter markers in text")
       assert(!text.matches("(?s).*\\b\\d{2,}.*"),
         s"$name: parameterized text still contains a multi-digit literal")
-      val bound = RelationalSql.bindSession(spark, name)
+      val bound = RelationalSql.bind(spark, name, RelationalSql.defaultArgs(name))
         .collect().map(_.toString).sorted.toSeq
       val literal = spark.sql(RelationalSql.sql(name))
         .collect().map(_.toString).sorted.toSeq
