@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.graft.VectorExpressions.{cosine, dot, hyperplaneSig, l2norm}
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, dim 64).
@@ -588,10 +588,10 @@ object Ann {
         // measured 2.8 s → 1.1 s at sf0.1 from this cut alone. This is
         // also the operator's own at-scale shape: writeCells persists
         // the assignment and the pair join reads it back (AnnIndexSpec);
-        // localCheckpoint is the in-memory twin of that materialization.
+        // the cut is the in-memory twin of that materialization.
         semDedup(e.select(col("vec_id"),
           AnnIndex.cellOfModel(col("embedding"), model).as("cell"), col("embedding"))
-          .localCheckpoint())
+          .cut)
       },
       Some(s"""WITH cm AS MATERIALIZED (
                  SELECT lvl, cell, centroid::DOUBLE[] AS c
@@ -618,7 +618,7 @@ object Ann {
     // candidate pool so results trade relevance against redundancy —
     // pick = argmax λ·sim(q,d) − (1−λ)·max_{s∈S} sim(d,s). The pool is
     // the TOP-30 brute-force candidates (TakeOrdered — the distributed
-    // part), localCheckpoint'd once; the greedy selection is 10 UNROLLED
+    // part), cut once; the greedy selection is 10 UNROLLED
     // declarative steps over ≤30 rows — each an anti-join + a ≤30×10
     // redundancy join + argmax — never driver-side float math, so the
     // kernel is the same codegen'd cosine the oracle's
@@ -637,12 +637,12 @@ object Ann {
             cosine(col("embedding"), col("qv")).as("simq"))
           .orderBy(col("simq").desc, col("vec_id").asc)
           .limit(30)
-          .localCheckpoint()
+          .cut
         val first = pool
           .orderBy(col("simq").desc, col("vec_id").asc).limit(1)
           .select(col("vec_id"), col("embedding"), col("simq"),
             lit(1).as("pick"), (lit(0.5) * col("simq")).as("mmr_score"))
-          .localCheckpoint()
+          .cut
         Graph.unroll(first, k - 1) { (selected, round) =>
           val remaining = pool
             .join(selected.select(col("vec_id")), Seq("vec_id"), "left_anti")
@@ -724,7 +724,7 @@ object Ann {
             Graph.grid9(avg(when(col("vec_id") <= col("thr"), col("col")))).as("ma"),
             Graph.grid9(avg(when(col("vec_id") > col("thr"), col("col")))).as("mb"))
           .withColumn("dsq", (col("ma") - col("mb")) * (col("ma") - col("mb")))
-          .localCheckpoint() // feeds the total AND the argmax
+          .cut // feeds the total AND the argmax
         ds.agg(Graph.grid9(sum(col("dsq"))).as("drift_sq"))
           .crossJoin(ds.orderBy(col("dsq").desc, col("pos").asc).limit(1)
             .select(col("pos").as("max_dim"), col("dsq").as("max_dsq")))
@@ -1009,7 +1009,7 @@ object Ann {
           .withColumn("er", row_number().over(
             org.apache.spark.sql.expressions.Window.orderBy(col("cs").desc, col("vec_id").asc)))
           .select(col("vec_id"), col("er"))
-        val joined = exTop.join(sqTop, "vec_id").localCheckpoint()
+        val joined = exTop.join(sqTop, "vec_id").cut
         val ks = Seq(1, 5, 10, 20).map(k => s.range(k, k + 1).select(col("id").cast("int").as("k")))
           .reduce(_ union _)
         // LEFT join on true (not crossJoin): if the frames ever shared
@@ -1051,7 +1051,7 @@ object Ann {
     // a probe read to hit the recall target? This operator answers it
     // the way v19 answers quantization loss — an eval harness over the
     // production operators themselves: ONE cell-assignment pass
-    // (localCheckpoint'd — the sweep re-filters it, never re-assigns),
+    // (cut — the sweep re-filters it, never re-assigns),
     // then per sweep point a partition-pruned scan → exact top-20 →
     // recall against brute force. Driver sees 20 ids and two scalars
     // per point (the spark.ml eval pattern, same as AnnIndexSpec's
@@ -1076,7 +1076,7 @@ object Ann {
           .select(col("embedding")).head.getSeq[Float](0).toArray
         val assigned = e.filter(col("vec_id") =!= 0)
           .withColumn("cell", AnnIndex.cellOf(col("embedding"), cents))
-          .localCheckpoint()
+          .cut
         val total = assigned.count()
         def top20(df: DataFrame): Set[Long] = df
           .select(col("vec_id"), cosine(col("embedding"), lit(qv)).as("cs"))
@@ -1277,7 +1277,7 @@ object Ann {
     ("v24_power_iteration",
       (s, d) => {
         val e = Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
-          .select(col("vec_id"), col("embedding")).localCheckpoint()
+          .select(col("vec_id"), col("embedding")).cut
         val v0 = s.range(1).select(
           expr(s"transform(sequence(1, $SqDim), i -> CAST(0.125 AS DOUBLE))").as("pv"),
           lit(0.0).as("nrm"))
@@ -1336,7 +1336,7 @@ object Ann {
               org.apache.spark.sql.graft.VectorExpressions.pqEncode(
                 col("embedding"), books.toSeq, m, ksub),
               dotL.toSeq, nrmL.toSeq, m, ksub).as("adc"))
-          .localCheckpoint()
+          .cut
         val total = adc.count()
         def top20(df: DataFrame): Set[Long] = df
           .select(col("vec_id"), cosine(col("embedding"), lit(qv)).as("cs"))
@@ -1646,7 +1646,7 @@ object Ann {
     // is all-integer: keep ⌈n/4⌉ vectors total, ⌈that/8⌉ per cluster —
     // the global count rides in as a broadcast 1-row aggregate. Plan:
     // ONE vec_id-keyed argmax exchange, materialized once
-    // (localCheckpoint — three downstream consumers would otherwise
+    // (cut — three downstream consumers would otherwise
     // re-run the assignment pass each), then one (cluster,
     // bucket)-keyed rank exchange; everything else broadcast.
     ("v29_balanced_sample",
@@ -1657,7 +1657,7 @@ object Ann {
         val gInt = floor(cosine(col("embedding"), col("semb")) * 1000000 + 0.5)
           .cast("long")
         val packed = (gInt + 1000000L) * 8L + (lit(7L) - col("seed_id"))
-        // localCheckpoint: the argmax aggregate feeds THREE consumers
+        // Cut: the argmax aggregate feeds THREE consumers
         // (bucket offsets, the global count, the rank pass) and Spark
         // re-plans shared subtrees per consumer — without the cut the
         // corpus-scale assignment pass runs 3× (caught by ExplainAudit:
@@ -1668,7 +1668,7 @@ object Ann {
           .groupBy(col("vec_id")).agg(max(col("pk")).as("pk"))
           .select(col("vec_id"), (lit(7L) - col("pk") % 8).as("cluster"),
             md5(col("vec_id").cast("string")).as("h"))
-          .localCheckpoint()
+          .cut
         val tot = assigned.agg(count(lit(1)).as("n_total"))
         Pipeline.splitRank(assigned, Seq("cluster"), "vec_id")
           .crossJoin(broadcast(tot))
@@ -1726,13 +1726,13 @@ object Ann {
           .orderBy(col("cs").desc, col("vec_id").asc).limit(10)
           .select(lit(dim.toLong).as("dim"), col("vec_id"))
         // The dim=64 branch IS the truth: the 40-row union materializes
-        // ONCE (localCheckpoint — the v21 eval-harness pattern), its 64
+        // ONCE (cut — the v21 eval-harness pattern), its 64
         // rows collect as the truth ids (bounded like p19's LUT), and
         // hit-marking is a literal isin over the checkpointed rows — so
         // the corpus is scanned exactly 4 times total, with no 5th
         // truth pass and no join.
         val tops = Seq(8, 16, 32, 64).map(top10).reduce(_ unionAll _)
-          .localCheckpoint()
+          .cut
         val truthIds = tops.filter(col("dim") === 64)
           .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
         tops.groupBy(col("dim"))

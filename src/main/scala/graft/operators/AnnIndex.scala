@@ -23,7 +23,7 @@ import org.apache.spark.sql.graft.VectorExpressions.{cosine, hyperplaneSig}
   *     (band << bandBits | bv). Spark's bucket pruning applies only to
   *     single-column bucket specs, which is exactly why the key is
   *     packed; a probe's `bkey IN (...)` then reads nBands buckets out
-  *     of B ("SelectedBucketsCount" in the scan), and candidates are
+  *     of B (the files the executed scan reads), and candidates are
   *     re-ranked by exact cosine via a candidate-sized join back to the
   *     vectors — never a scan of the band table.
   *
@@ -408,50 +408,25 @@ object AnnIndex {
       keys.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq)
   }
 
-  /** The LSH probe's conf clone of `spark`, one per caller session.
-    * Spark keys its compiled-class cache by the session's class loader,
-    * so a fresh clone per probe recompiled every class of the probe plan
-    * (three per call, whatever the vector) instead of reusing them. */
-  private def probeSessionFor(spark: SparkSession): SparkSession =
-    probeSessions.computeIfAbsent(spark, { s =>
-      val clone = s.newSession()
-      clone.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      clone
-    })
-
-  private val probeSessions = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, SparkSession]())
-
   /** Probe the bucketed band table: `bkey IN (query's nBands keys)` reads
     * only the matching buckets (bucket pruning — asserted in
     * AnnIndexSpec), first-matching-band drops duplicate candidates
     * map-side, and a candidate-sized join back to `vectors` re-ranks by
     * exact cosine. The band table itself is never scanned in full.
     *
-    * Plans under `autoBucketedScan=false`, on a CLONED session: Spark's
-    * DisableUnnecessaryBucketedScan planner rule only credits bucketing
-    * when a downstream operator needs the partitioning — it cannot see
-    * bucket-FILTER pruning, so with it on, a probe falls back to a full
-    * scan ("Bucketed: false (disabled by query planner)"). Rather than
-    * flipping the caller's session conf (a race for any other query
-    * planning concurrently on the same session), the probe plans on
-    * `spark.newSession()` — shared catalog and cluster, isolated conf —
-    * so the rule stays enabled for everything else and the returned
-    * DataFrame (and any plan derived from it: added filters, .count())
-    * keeps pruning under the clone's conf. The clone is made once per
-    * caller session and reused ([[probeSessionFor]]). */
+    * Spark's DisableUnnecessaryBucketedScan planner rule turns the
+    * bucketed read off (nothing downstream needs the partitioning), but
+    * the scan still reads only the matching buckets' files: Spark 4.1's
+    * non-bucketed file listing drops files outside the pruned bucket
+    * set. AnnIndexSpec counts the files the executed scan reads. */
   def probeLsh(spark: SparkSession, table: String, vectors: DataFrame,
       qv: Array[Float], bandBits: Int, nBands: Int, k: Int): DataFrame = {
     val (qsig, qKeys) = queryBandKeys(spark, qv, bandBits, nBands)
-    val probeSession = probeSessionFor(spark)
-    val cands = probeSession.table(table)
+    val cands = spark.table(table)
       .filter(col("bkey").isin(qKeys: _*))
       .filter(shiftright(col("bkey"), bandBits) === Lsh.firstMatchingBand(
         col("sig").bitwiseXOR(lit(qsig)), bandBits, nBands))
       .select(col("vec_id"))
-    // `cands` is the left side, so the combined plan is analyzed and
-    // planned under the probe session's conf; `vectors`' logical plan is
-    // a session-free tree that joins in as-is.
     cands.join(vectors.select(col("vec_id"), col("embedding")), "vec_id")
       .select(col("vec_id"), cosine(col("embedding"), lit(qv)).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id").asc)

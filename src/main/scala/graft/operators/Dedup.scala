@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.graft.VectorExpressions.{cosine, hyperplaneSig}
 import org.apache.spark.sql.graft.TextHash.{gramHashList, minHashSignature, qualityFeaturesCol, shingleHashSet, simHash64}
 
@@ -137,19 +137,19 @@ object Dedup {
     * floating form `(na+nb) · (t/(1+t))` rounds ABOVE the exact bound
     * for t = 0.2 (0.2/1.2 has no finite binary form) and would silently
     * drop true pairs sitting exactly on the threshold. The gram-set
-    * table is localCheckpoint'd: one kernel pass feeds candidate
+    * table is cut: one kernel pass feeds candidate
     * generation, the prefilter stats, and the verify (at 100 TB this is
     * "write the shingle table once per corpus"). */
   /** Shared candidate-generation core for the exact gram-overlap family
     * (d04 Jaccard, d16 containment): per-doc gram-hash sets
-    * (localCheckpoint'd — one kernel pass feeds candidates, prefilter
+    * (cut — one kernel pass feeds candidates, prefilter
     * stats, and verify), the df-capped cold-gram stream (df computed by a
     * count window on the join's own exchange), and per-doc hot-gram
     * counts for the no-false-drop prefilter. */
   private def gramIndex(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     val hs = Tables.documents(s, d)
       .select(col("doc_id"), shingleHashSet(col("text")).as("hs"))
-      .localCheckpoint()
+      .cut
     val ex = hs.select(col("doc_id"), size(col("hs")).as("n"), explode(col("hs")).as("h"))
     // Hot-gram exclusion rides the SAME hash-on-gram exchange the
     // self-join needs anyway: a count window over partitionBy(h) yields
@@ -496,7 +496,7 @@ object Dedup {
         // sig) stream — ~0.1% of corpus bytes, MEMORY_AND_DISK — the
         // same narrow-materialization trade d13's standing layout makes
         // durably, applied in-query.
-        val buckets = Lsh.minhashBandTable(docsT, 3, bands, rows).localCheckpoint()
+        val buckets = Lsh.minhashBandTable(docsT, 3, bands, rows).cut
         val cands = buckets.as("a").join(buckets.as("b"),
             col("a.band") === col("b.band") && col("a.sig") === col("b.sig")
               && col("a.doc_id") < col("b.doc_id"))
@@ -1049,7 +1049,7 @@ object Dedup {
         val docsT = Tables.documents(s, d)
         val isBatch = col("doc_id") % 5 === 0
         // Stage 1: exact cascade — drop batch docs whose raw text already
-        // exists in the corpus, BEFORE any signature work. localCheckpoint
+        // exists in the corpus, BEFORE any signature work. Cut
         // because the survivor set feeds BOTH the band table and the final
         // anti-join (the ngramPairs pattern — without it the md5 anti-join
         // subtree plans and executes twice).
@@ -1058,7 +1058,7 @@ object Dedup {
           .join(docsT.filter(!isBatch).select(md5(col("text")).as("h")),
             Seq("h"), "left_anti")
           .drop("h")
-          .localCheckpoint()
+          .cut
         // Stage 2: MinHash-LSH candidates, batch-survivors × corpus —
         // band table + exact-Jaccard verify shared verbatim with d02
         // (Lsh.minhashBandTable/jaccardVerifiedPairs), so the band
@@ -1306,7 +1306,7 @@ object Dedup {
         // shingling + 32-minhash kernel. The checkpointed stream is the
         // narrow (doc_id, bsig, band, sig) projection.
         val buckets = Lsh.minhashBandTable(Tables.documents(s, d), 3, 8, 4)
-          .localCheckpoint()
+          .cut
         OracleExport.writeOnce(
           buckets.select(col("doc_id"), col("band"), col("sig")),
           OracleExport.MinHashBandPath, OracleExport.docKeyFor(Tables.documents(s, d), d))
@@ -1316,9 +1316,9 @@ object Dedup {
           .filter(col("a.band") ===
             Lsh.firstMatchingBandArrays(col("a.bsig"), col("b.bsig")))
           .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-          .localCheckpoint()
+          .cut
         val exact = ngramPairs(s, d, 9, 10)
-          .select(col("a_id"), col("b_id")).localCheckpoint()
+          .select(col("a_id"), col("b_id")).cut
         val hits = exact.join(cands, Seq("a_id", "b_id"), "left_semi")
         exact.agg(count(lit(1)).as("n_true_pairs"))
           .crossJoin(cands.agg(count(lit(1)).as("n_candidates")))
@@ -1379,13 +1379,13 @@ object Dedup {
         val mh = docs.select(col("doc_id"),
           org.apache.spark.sql.graft.TextHash
             .minHashSignature(col("text"), 3, 32).as("mh"))
-          .localCheckpoint()
+          .cut
         val bands = geoms.map { case (b, r) =>
           mh.select(lit(s"${b}x$r").as("geom"), col("doc_id"),
               posexplode(array((0 until b).map(i =>
                 xxhash64(slice(col("mh"), i * r + 1, r))): _*)))
             .withColumnsRenamed(Map("pos" -> "band", "col" -> "sig"))
-        }.reduce(_ unionAll _).localCheckpoint()
+        }.reduce(_ unionAll _).cut
         OracleExport.writeOnce(
           bands.select(col("geom"), col("doc_id"), col("band"), col("sig")),
           OracleExport.BandSweepPath, OracleExport.docKeyFor(docs, d))
@@ -1394,9 +1394,9 @@ object Dedup {
               && col("a.sig") === col("b.sig") && col("a.doc_id") < col("b.doc_id"))
           .select(col("a.geom").as("geom"),
             col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-          .distinct().localCheckpoint()
+          .distinct().cut
         val exact = ngramPairs(s, d, 9, 10)
-          .select(col("a_id"), col("b_id")).localCheckpoint()
+          .select(col("a_id"), col("b_id")).cut
         val hits = cands.join(exact, Seq("a_id", "b_id"), "left_semi")
           .groupBy(col("geom")).agg(count(lit(1)).as("n_hits"))
         val per = cands.groupBy(col("geom")).agg(count(lit(1)).as("n_candidates"))
@@ -1501,7 +1501,7 @@ object Dedup {
     // the contract uniform). Plan: selection is ONE map-side HOF pass
     // (array_distinct before explode — no distinct exchange ever);
     // df rides the self-join's own fp exchange as a count window; the
-    // selected stream is localCheckpoint'd once and feeds candidates,
+    // selected stream is cut once and feeds candidates,
     // both join sides, and the per-doc sizes. At 100 TB the shuffled
     // stream is the ~w-fold-sparsified fingerprint sample, not the gram
     // stream — winnowing's whole point, and why MOSS screens giant
@@ -1514,7 +1514,7 @@ object Dedup {
         val wFp = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
         val cold = ex.withColumn("df", count(lit(1)).over(wFp))
           .filter(col("df") <= 1000).drop("df")
-          .localCheckpoint()
+          .cut
         val nc = cold.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
         cold.as("a")
           .join(cold.as("b"),
@@ -2028,9 +2028,9 @@ object Dedup {
     if (doneV.exists(_ >= v)) return None // fully-replayed fold
     val delta = Versioned.changesBetween(spark, admittedPath,
         doneV.getOrElse(0L), v)
-      .select(col("doc_id")).localCheckpoint() // feeds 3 row families + count
+      .select(col("doc_id")).cut // feeds 3 row families + count
     // Every exit below — including the require()s and any append/commit
-    // failure — must free the localCheckpoint blocks, or a long-lived
+    // failure — must free the cut blocks, or a long-lived
     // stream→fold session leaks exactly the blocks the checkpoints
     // pinned (r13 advice). docs is registered once it is created.
     var docsCp: DataFrame = null
@@ -2059,7 +2059,7 @@ object Dedup {
     Versioned.commitBatchAppend(spark, admittedPath, intentApp, v,
       Versioned.read(spark, admittedPath).limit(0))
     val docs = delta.join(texts.select(col("doc_id"), col("text")), Seq("doc_id"))
-      .localCheckpoint() // feeds all three kernels
+      .cut // feeds all three kernels
     docsCp = docs
     val bt = Lsh.minhashBandTable(docs, shingleN, bands, rows)
     val hs = docs.select(col("doc_id"), shingleHashSet(col("text")).as("hs"))

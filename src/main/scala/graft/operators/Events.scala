@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Cut, Tables}
 
 /** Batch twins of the streaming pipeline (graft.streaming.EventPipeline):
   * event-time tumbling-window aggregation and gap-based sessionization
@@ -310,7 +310,7 @@ object Events {
     // not decorative. Shape at 100 TB: the corpus crosses ONE
     // hash-aggregate down to (hour × type) cardinality — and that is
     // the ONLY corpus pass: bounds and the type domain derive from the
-    // dimension-sized aggregate itself, which is localCheckpoint'd
+    // dimension-sized aggregate itself, which is cut
     // because it fans out to three consumers (fill join + bounds +
     // type domain) — the p06/ngramPairs pattern; without the cut Spark
     // re-plans the corpus scan per consumer (the measured 3-scan trap).
@@ -326,7 +326,7 @@ object Events {
           .select(date_trunc("hour", col("ts")).as("hr"), col("event_type"), col("value"))
           .groupBy(col("hr"), col("event_type"))
           .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
-          .localCheckpoint()
+          .cut
         val spine = hourly.agg(min(col("hr")).as("lo"), max(col("hr")).as("hi"))
           .select(explode(sequence(col("lo"), col("hi"), expr("INTERVAL 1 HOUR"))).as("hr"))
           .crossJoin(hourly.select(col("event_type")).distinct())
@@ -493,7 +493,7 @@ object Events {
     //
     // Shape at 100 TB: ONE corpus aggregate down to (type × hour)
     // cardinality (the s08 spine pattern, zero-filled gaps,
-    // localCheckpoint'd against the 3-consumer re-plan trap); the
+    // cut against the 3-consumer re-plan trap); the
     // windows run on the dimension-scale series, partitioned by type
     // (H ≈ 720 for a 30-day window; types scale out, H doesn't).
     ("s10_cusum",
@@ -502,7 +502,7 @@ object Events {
           .select(date_trunc("hour", col("ts")).as("hr"), col("event_type"))
           .groupBy(col("hr"), col("event_type"))
           .agg(count(lit(1)).as("x"))
-          .localCheckpoint()
+          .cut
         val spine = hourly.agg(min(col("hr")).as("lo"), max(col("hr")).as("hi"))
           .select(explode(sequence(col("lo"), col("hi"), expr("INTERVAL 1 HOUR"))).as("hr"))
           .crossJoin(hourly.select(col("event_type")).distinct())
@@ -893,7 +893,7 @@ object Events {
           .agg(min(col("ts_us")).as("t0"),
             min(when(col("event_type") === "purchase", col("ts_us"))).as("tp"),
             max(col("ts_us")).as("tl"))
-          .localCheckpoint()
+          .cut
         val nb = pu.agg(max(col("tl")).as("tmax"),
           count(lit(1)).cast("long").as("n_users"))
         val byT = pu.crossJoin(broadcast(nb))
@@ -1018,7 +1018,7 @@ object Events {
           .select(col("user_id"),
             (unix_micros(date_trunc("day", col("ts"))) / dayUs).cast("long").as("day"))
           .distinct()
-          .localCheckpoint()
+          .cut
         val bounds = pres.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
         pres.crossJoin(broadcast(bounds))
           .select(col("user_id"),
@@ -1065,7 +1065,7 @@ object Events {
           .groupBy(col("hr"), col("event_type"))
           .agg(count(lit(1)).as("x"))
           .select(col("event_type"), unix_micros(col("hr")).as("hour_us"), col("x"))
-          .localCheckpoint()
+          .cut
         val hourUs = 3600000000L
         val bounds = hourly.agg(max(col("hour_us")).as("hi"))
         val contrib = hourly.crossJoin(broadcast(bounds))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Cut, Tables}
 
 /** Graph analytics over the event stream — the iterative-join family.
   *
@@ -77,13 +77,8 @@ object Graph {
     *   - the returned state is cut after every `cutEvery`-th round and
     *     after the last one, so a loop's plan stays constant-size instead
     *     of Catalyst re-planning a join tree as deep as the loop;
-    *   - the cut is LAZY (`localCheckpoint(eager = false)`): the RDD is
-    *     built at call time (under AQE its shuffle stages even
-    *     materialize here), but the result job is deferred to the state's
-    *     next consumer, so the loop itself runs no result job. Measured
-    *     on g01 (OPTIMIZATION_r14.md §8, one JVM interleaved, 7 reps at
-    *     sf0.1): lazy min/median 2.59/2.85 s vs eager 2.76/3.09 s,
-    *     results bit-identical;
+    *   - the cut is [[graft.Cut.cut]], so the loop itself runs no result
+    *     job;
     *   - `cutEvery > 1` is safe only for a step that references its state
     *     once: lineage between cuts then grows linearly, not 2^depth;
     *   - nothing is unpersisted here, so the order of the lazy cuts and
@@ -93,7 +88,7 @@ object Graph {
       step: (DataFrame, Int) => DataFrame): DataFrame =
     (1 to rounds).foldLeft(init) { (state, round) =>
       val next = step(state, round)
-      if (round % cutEvery == 0 || round == rounds) next.localCheckpoint(eager = false)
+      if (round % cutEvery == 0 || round == rounds) next.cut
       else next
     }
 
@@ -166,19 +161,19 @@ object Graph {
   private[graft] def pageRankLoop(
       nodes: DataFrame, edges: DataFrame, iters: Int,
       dangling: Boolean = true, cutEvery: Int = 1): DataFrame = {
-    val nodesC = nodes.localCheckpoint()
-    val edgesC = edges.localCheckpoint()
-    val deg = edgesC.groupBy(col("src")).agg(sum(col("w")).as("wdeg")).localCheckpoint()
+    val nodesC = nodes.cut
+    val edgesC = edges.cut
+    val deg = edgesC.groupBy(col("src")).agg(sum(col("w")).as("wdeg")).cut
     // deg is loop-invariant — join it into the edge list ONCE instead of
     // re-paying an edges⋈deg shuffle inside every iteration (per-row
     // values are untouched; only where the join happens moves).
-    val edgesW = edgesC.join(deg, "src").localCheckpoint()
+    val edgesW = edgesC.join(deg, "src").cut
     // r15 (commit 0b0bd51): the loop family is scheduler-latency bound
     // at gate SF (SF-invariant fixed cost, r14 adjudication), and two
     // of the per-iteration jobs were LOOP-INVARIANT work re-planned
     // every round: (a) the node-count aggregate + its crossJoin
-    // broadcast — n never changes, so it is counted ONCE on the
-    // already-materialized checkpoint and folded in as a literal
+    // broadcast — n never changes, so it is counted ONCE on the cut
+    // node table and folded in as a literal
     // (ConstantFolding evaluates 0.15/n with the identical IEEE
     // division the per-row form used — bit-identical by construction);
     // (b) the dangling-mass ANTI-JOIN against deg — whether a node has
@@ -193,14 +188,14 @@ object Graph {
         nodesC.join(deg.select(col("src").as("id"), lit(true).as("has_out")),
             Seq("id"), "left")
           .select(col("id"), coalesce(col("has_out"), lit(false)).as("has_out"))
-          .localCheckpoint()
+          .cut
       else nodesC
     val ranks0 =
       if (dangling)
         nodesD.select(col("id"), (lit(1.0) / lit(nVal)).as("r"), col("has_out"))
-          .localCheckpoint()
+          .cut
       else
-        nodesD.select(col("id"), (lit(1.0) / lit(nVal)).as("r")).localCheckpoint()
+        nodesD.select(col("id"), (lit(1.0) / lit(nVal)).as("r")).cut
     unroll(ranks0, iters, if (dangling) 1 else cutEvery) { (ranks, _) =>
       val contribs = edgesW
         .join(ranks.select(col("id").as("src"), col("r")), "src")
@@ -254,7 +249,7 @@ object Graph {
 
   /** Generic min-label-propagation connected components over an
     * undirected edge list `(a_id, b_id)`: one join + one aggregate per
-    * round, localCheckpoint lineage cuts, scalar-only fixpoint checks
+    * round, lineage cuts, scalar-only fixpoint checks
     * on the driver — ONE machinery for near-dup document groups
     * (d06/d09 via Dedup.ccLabels) and event-graph communities
     * (g03/g10/g12).
@@ -292,40 +287,38 @@ object Graph {
   private[graft] def minLabelPropagation(
       edges: DataFrame, maxIter: Int = 50,
       chaseAfter: Int = DefaultChaseAfter): DataFrame = {
-    val e = edges.select(col("a_id"), col("b_id")).localCheckpoint()
+    val e = edges.select(col("a_id"), col("b_id")).cut
     val sym = e.union(e.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
     var labels = sym.groupBy(col("a_id"))
       .agg(min(col("b_id")).as("mn"))
       .select(col("a_id").as("doc_id"), least(col("a_id"), col("mn")).as("label"))
-      .localCheckpoint()
+      .cut
     var changed = 1L
     var iter = 0
+    // Label tables a chase superseded: freed with `labels` after the
+    // next round's count, the first action that reads the chase's cut.
+    var superseded = Seq.empty[DataFrame]
     while (changed > 0 && iter < maxIter) {
       val nbr = sym.join(labels, sym("b_id") === labels("doc_id"))
         .groupBy(col("a_id")).agg(min(col("label")).as("nbr_min"))
       // Carry the previous label through the update so the fixpoint check
-      // is a narrow filter-count over the checkpoint — not another join
+      // is a narrow filter-count over the cut — not another join
       // (which would re-shuffle the label table every round).
       val step = labels.join(nbr, labels("doc_id") === nbr("a_id"), "left")
         .select(col("doc_id"),
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"),
           col("label").as("old"))
-      // Lazy cut (r14): the fixpoint count on the next line is the
-      // materializing action anyway — an eager cut here paid one extra
-      // full-pass job per round. The unpersist ordering below stays
-      // safe: `changed` has materialized `next` before the previous
-      // round's blocks are dropped. The CHASE's cut (further down)
-      // stays EAGER — it must be materialized before `next`'s blocks
-      // are unpersisted, or its lineage-truncated read would fail.
-      val next = step.localCheckpoint(eager = false)
+      val next = step.cut // loop state
       changed = next.filter(col("label") =!= col("old")).count()
-      // Each round supersedes the previous round's checkpoint — without
+      // Each round supersedes the previous round's table — without
       // freeing it a deep graph caches one (or, with the chase, two) full
       // label tables PER ROUND, linear memory growth the fixpoint never
-      // reads again. Safe because the superseding checkpoint is
-      // materialized before the old one is dropped, so no live plan
-      // recomputes through the truncated lineage.
-      graft.unpersistCheckpoint(labels) // previous round's table, superseded by next
+      // reads again. Safe only now: the count has read `next`, so its
+      // blocks (and those of the chase's cut it read) exist and no plan
+      // still to run recomputes through the freed ones. Freeing right
+      // after the chase would drop the blocks its cut has yet to read.
+      (labels +: superseded).foreach(graft.unpersistCheckpoint)
+      superseded = Nil
       labels = next.select(col("doc_id"), col("label"))
       iter += 1
       if (changed > 0 && iter >= chaseAfter) {
@@ -344,9 +337,8 @@ object Graph {
             .select(col("doc_id"),
               least(col("label"), coalesce(col("lv"), col("label"))).as("label"))
         }
-        val chasedCp = chased.localCheckpoint()
-        graft.unpersistCheckpoint(labels) // next's checkpoint, superseded by the chase
-        labels = chasedCp
+        superseded = Seq(labels) // next's table, superseded by the chase
+        labels = chased.cut
       }
     }
     // Propagation advances min labels ONE HOP per round, so a component
@@ -366,7 +358,7 @@ object Graph {
     * [[interactionEdges]] — the Suri & Vassilvitskii machinery shared by
     * g02 (triangle census) and g04 (clustering coefficients), ONE
     * definition so the orientation rule can't drift between the two.
-    * Returns (und(u,v), deg(x,dg), dir(a,b)) — all localCheckpoint'd
+    * Returns (und(u,v), deg(x,dg), dir(a,b)) — all cut
     * (each feeds ≥2 downstream joins; without the cut Catalyst re-plans
     * the whole lag-window extraction per consumer). */
   private def orientedEdges(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
@@ -379,29 +371,29 @@ object Graph {
       .join(deg.select(col("x").as("v"), col("dg").as("dv")), "v")
       .select(when(lower, col("u")).otherwise(col("v")).as("a"),
               when(lower, col("v")).otherwise(col("u")).as("b"))
-      .localCheckpoint()
+      .cut
     (und, deg, dir)
   }
 
   /** Undirected distinct edge set (u < v) — ONE definition of the
     * undirected-dedup rule, shared by [[orientedEdges]] (g02/g04) and
     * g05's peel so a future change (e.g. a self-loop filter) can't
-    * drift between consumers. localCheckpoint'd: every caller feeds it
+    * drift between consumers. Cut: every caller feeds it
     * to ≥2 downstream joins. */
   private def undirectedEdges(s: SparkSession, d: String): DataFrame =
     interactionEdges(s, d)
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct().localCheckpoint()
+      .distinct().cut
 
   /** Undirected degrees `deg(x, dg)` of an `und(u, v)` edge frame — the
     * one definition of the degree rule, shared by [[orientedEdges]]
     * (g02/g04) and g08's histogram. g08 takes this directly rather than
-    * calling orientedEdges: localCheckpoint is EAGER, so the tuple form
-    * would materialize the `dir` double-join g08 never reads. */
+    * calling orientedEdges: the tuple form's `dir` cut would run the
+    * shuffle stages of a double join g08 never reads ([[graft.Cut]]). */
   private def degreesOf(und: DataFrame): DataFrame =
     und.select(col("u").as("x")).union(und.select(col("v").as("x")))
-      .groupBy(col("x")).agg(count(lit(1)).as("dg")).localCheckpoint()
+      .groupBy(col("x")).agg(count(lit(1)).as("dg")).cut
 
   /** g09 core with the HUB CAP promoted to a parameter — the knob that
     * bounds the co-neighbor pair work (Σ_w deg(w)² over kept nodes) the
@@ -428,13 +420,13 @@ object Graph {
     val und = undirectedEdges(s, d)
     val deg = degreesOf(und)
     val keep = deg.filter(col("dg") <= capDeg)
-      .select(col("x"), col("dg")).localCheckpoint()
+      .select(col("x"), col("dg")).cut
     // adjacency of the capped subgraph: BOTH endpoints must survive
     val adj = und
       .join(keep.select(col("x").as("u")), "u")
       .join(keep.select(col("x").as("v")), "v")
       .select(col("u"), col("v"))
-      .localCheckpoint()
+      .cut
     // capped-subgraph degrees (≠ deg: a kept node may lose capped
     // neighbors), one node-keyed aggregate. It feeds both the deg_a and
     // deg_b joins; materializing it once was A/B-measured a WASH inside
@@ -769,7 +761,7 @@ object Graph {
           val keep = e.select(col("u").as("x")).union(e.select(col("v").as("x")))
             .groupBy(col("x")).agg(count(lit(1)).as("dg"))
             .filter(col("dg") >= k)
-            .select(col("x")).localCheckpoint(eager = false)
+            .select(col("x")).cut
           e.join(keep.select(col("x").as("u")), Seq("u"), "left_semi")
             .join(keep.select(col("x").as("v")), Seq("v"), "left_semi")
             .select(col("u"), col("v"))
@@ -808,7 +800,7 @@ object Graph {
     // (bounded by the type DOMAIN, not their event count), and ordered
     // pairs explode from the array map-side — ≤ C(|types|,2) rows per
     // user, linear in users whatever the stream volume. The collected
-    // frame is user-sized and localCheckpoint'd once (the p06/d13
+    // frame is user-sized and cut once (the p06/d13
     // shared-subtree discipline: both the pair aggregate and the
     // per-type audience counts consume it — without the cut the
     // corpus-sized collect_set subtree re-plans per consumer). Audience
@@ -820,7 +812,7 @@ object Graph {
         val sets = Tables.events(s, d)
           .groupBy(col("user_id"))
           .agg(sort_array(collect_set(col("event_type"))).as("ts"))
-          .localCheckpoint()
+          .cut
         val pairs = sets
           .select(explode(expr(
             """flatten(transform(ts, (x, i) ->
@@ -832,7 +824,7 @@ object Graph {
         // joins) — checkpointed so the audience aggregate runs once.
         val tc = sets.select(explode(col("ts")).as("et"))
           .groupBy(col("et")).agg(count(lit(1)).as("nu"))
-          .localCheckpoint()
+          .cut
         pairs
           .join(broadcast(tc.select(col("et").as("type_a"), col("nu").as("na"))), "type_a")
           .join(broadcast(tc.select(col("et").as("type_b"), col("nu").as("nb"))), "type_b")
@@ -868,15 +860,15 @@ object Graph {
     // Scale, per iteration: TWO corpus-edge joins (vs PageRank's one —
     // the price of mutual recursion), each hash-keyed on its join column;
     // the L1 norm is a 1-row aggregate broadcast by crossJoin; lineage
-    // cut per half-step (the iterative-family localCheckpoint
+    // cut per half-step (the iterative-family cut
     // discipline). On a cluster the edge table is written once bucketed
     // by src (and its dst-keyed twin by dst) so each half-step shuffles
     // only the score side. Top-20 by authority via TakeOrdered.
     ("g07_hits",
       (s, d) => {
         val nodesC = Tables.events(s, d).select(col("user_id").as("id"))
-          .distinct().localCheckpoint()
-        val edgesC = interactionEdges(s, d).localCheckpoint()
+          .distinct().cut
+        val edgesC = interactionEdges(s, d).cut
         var h = nodesC.select(col("id"), lit(1.0).as("h"))
         var a: DataFrame = null
         for (_ <- 1 to HitsIters) {
@@ -891,13 +883,13 @@ object Graph {
           // shared by the norm and the normalized join).
           val ain = edgesC.join(h.withColumnRenamed("id", "src"), "src")
             .groupBy(col("dst")).agg(sum(col("h")).as("ain"))
-            .localCheckpoint(false)
+            .cut
           val sa = ain.agg(sum(col("ain")).as("s"))
           a = ain.crossJoin(sa)
             .select(col("dst").as("id"), grid9(col("ain") / col("s")).as("a"))
           val hout = edgesC.join(a.withColumnRenamed("id", "dst"), "dst")
             .groupBy(col("src")).agg(sum(col("a")).as("hout"))
-            .localCheckpoint(false)
+            .cut
           val sh = hout.agg(sum(col("hout")).as("s"))
           h = hout.crossJoin(sh)
             .select(col("src").as("id"), grid9(col("hout") / col("s")).as("h"))
@@ -932,7 +924,7 @@ object Graph {
       (s, d) => {
         val deg = degreesOf(undirectedEdges(s, d))
         val h = deg.groupBy(col("dg")).agg(count(lit(1)).as("n_nodes"))
-          .localCheckpoint()
+          .cut
         val wTail = Window.orderBy(col("dg").desc)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val fit = h.agg(
@@ -1029,7 +1021,7 @@ object Graph {
       (s, d) => {
         val labels =
           minLabelPropagation(proximityEdges(s, d, 10L * 1000000L))
-            .localCheckpoint()
+            .cut
         val und = undirectedEdges(s, d)
         val sym = und.select(col("u").as("x"), col("v").as("y"))
           .union(und.select(col("v").as("x"), col("u").as("y")))
@@ -1179,7 +1171,7 @@ object Graph {
       (s, d) => {
         val labels =
           minLabelPropagation(proximityEdges(s, d, 10L * 1000000L))
-            .localCheckpoint()
+            .cut
         val und = undirectedEdges(s, d)
         val lab = labels.select(col("doc_id"), col("label"))
         val ein = und
@@ -1253,10 +1245,10 @@ object Graph {
         val und = undirectedEdges(s, d)
         val sym = und.select(col("u").as("x"), col("v").as("y"))
           .union(und.select(col("v").as("x"), col("u").as("y")))
-          .localCheckpoint()
+          .cut
         val dist0 = sym.select(col("x").as("node")).distinct()
           .filter(col("node") % 50 === 0)
-          .withColumn("dist", lit(0L)).localCheckpoint()
+          .withColumn("dist", lit(0L)).cut
         unroll(dist0, BfsRounds) { (dist, _) =>
           val hop = sym.join(dist, sym("x") === dist("node"))
             .select(col("y").as("node"), (col("dist") + 1L).as("dist"))
@@ -1313,12 +1305,12 @@ object Graph {
         val und = proximityEdges(s, d, 300L * 1000000L)
           .select(least(col("a_id"), col("b_id")).as("u"),
             greatest(col("a_id"), col("b_id")).as("v"))
-          .distinct().localCheckpoint()
+          .distinct().cut
         val sym = und.select(col("u").as("x"), col("v").as("y"))
           .union(und.select(col("v").as("x"), col("u").as("y")))
-          .localCheckpoint()
+          .cut
         val lbl0 = sym.select(col("x").as("node")).distinct()
-          .withColumn("label", col("node")).localCheckpoint()
+          .withColumn("label", col("node")).cut
         unroll(lbl0, LpaRounds) { (lbl, _) =>
           sym.join(lbl, sym("y") === lbl("node"))
             .groupBy(col("x"), col("label")).agg(count(lit(1)).as("cnt"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Cut
 
 /** Shared banded-LSH plumbing.
   *
@@ -219,7 +220,7 @@ object Lsh {
     // output is what fans out, so the cut lands after the cap filter.
     bucketCap match {
       case None =>
-        pairsOf(banded0.localCheckpoint())
+        pairsOf(banded0.cut)
           .filter(col("band") === firstMatchingBand(col("xor"), bandBits, nBands))
           .select(col("a_id"), col("b_id"), bit_count(col("xor")).as("hamming"))
       case Some(cap) =>
@@ -227,7 +228,7 @@ object Lsh {
           .partitionBy(col("band"), col("bv"))
         val capped = banded0.withColumn("pop", count(lit(1)).over(w))
           .filter(col("pop") <= cap).drop("pop")
-        pairsOf(capped.localCheckpoint())
+        pairsOf(capped.cut)
           .select(col("a_id"), col("b_id"), bit_count(col("xor")).as("hamming"))
           .distinct()
     }

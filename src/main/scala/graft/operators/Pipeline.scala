@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.graft.TextHash.{qualityFeaturesCol, shingleHashSet}
 
 /** The operators composed as one curation flow — the shape this library
@@ -301,7 +301,7 @@ object Pipeline {
     // aggregate + main path) and the train set to two more (cumsum +
     // bucket totals), and Spark re-plans a shared subtree per consumer
     // (4 corpus scans, 0 reused exchanges — measured) — so both shared
-    // frames are localCheckpoint'd, the d13/ngramPairs pattern: the
+    // frames are cut, the d13/ngramPairs pattern: the
     // gate+keeper subtree executes exactly once.
     ("p06_pipeline_e2e",
       (s, d) => {
@@ -327,7 +327,7 @@ object Pipeline {
         val kept = norm.withColumn("keeper", min(col("doc_id")).over(wKeep))
           .filter(col("doc_id") === col("keeper"))
           .select(col("doc_id"), col("source"), col("n_chars"), col("n_tokens"))
-          .localCheckpoint()
+          .cut
         // 3: per-source thinning (p03).
         val rates = kept.groupBy(col("source"))
           .agg(sum(col("n_chars")).as("tc"))
@@ -346,7 +346,7 @@ object Pipeline {
         val t = tagged.filter(col("split") === "train")
           .withColumn("skey", md5(concat(lit("order:"), col("doc_id").cast("string"))))
           .withColumn("bkt", substring(col("skey"), 1, 2))
-          .localCheckpoint()
+          .cut
         val wLocal = Window.partitionBy(col("bkt"))
           .orderBy(col("skey"), col("doc_id"))
           .rowsBetween(Window.unboundedPreceding, -1)
@@ -435,7 +435,7 @@ object Pipeline {
     // docs each, readable in shard order by the trainer.
     ("p07_curriculum",
       (s, d) => {
-        // localCheckpoint: `scored` feeds BOTH the per-group row_number
+        // Cut: `scored` feeds BOTH the per-group row_number
         // and the group-total offsets — without the cut each consumer
         // re-runs the classifier kernel over the whole corpus (the
         // s08/p06 multi-consumer re-plan trap).
@@ -445,7 +445,7 @@ object Pipeline {
               .when(col("logit") > -1, 2).otherwise(3).as("stage"),
             md5(concat(lit("cur:"), col("doc_id").cast("string"))).as("skey"))
           .withColumn("bkt", substring(col("skey"), 1, 2))
-          .localCheckpoint()
+          .cut
         val wLocal = Window.partitionBy(col("stage"), col("bkt"))
           .orderBy(col("skey").asc, col("doc_id").asc)
         val local = scored.withColumn("local_rn",
@@ -832,7 +832,7 @@ object Pipeline {
               .bpeTokenCountCol(col("text"), Bpe.mergeStrings(s, d)).as("n_tokens"))
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("tok"))
-          .localCheckpoint()
+          .cut
         val tot = bySrc.agg(sum(col("tok")).as("tot"),
           sum(sqrt(col("tok").cast("double"))).as("wsum"))
         bySrc.crossJoin(broadcast(tot))
@@ -892,7 +892,7 @@ object Pipeline {
             org.apache.spark.sql.graft.TextHash
               .bpeTokenCountCol(col("text"), Bpe.mergeStrings(s, d)).as("tok"))
           .withColumn("band", col("tok"))
-          .localCheckpoint()
+          .cut
         val wLocal = Window.partitionBy(col("band"))
           .orderBy(col("tok").asc, col("doc_id").asc)
           .rowsBetween(Window.unboundedPreceding, -1)
@@ -1190,7 +1190,7 @@ object Pipeline {
     * [[dsirScore]] runs that kernel over the whole corpus TWICE — once
     * to build the model, once to score against it. Here the per-doc
     * BUCKET ARRAY (ints — the md5 pass's entire output) is
-    * materialized once (localCheckpoint — the d02/d04
+    * materialized once (cut — the d02/d04
     * kernel-materialization pattern); the model build explodes the
     * checkpointed int arrays (the bucket multiset and log-ratio
     * expression order of a build over the text, so the micronat LUT
@@ -1206,7 +1206,7 @@ object Pipeline {
     val bkArr = dsirGrams(docs)
       .select(col("doc_id"), col("lang"),
         transform(col("gs"), gm => dsirBucket(gm)).as("bks"))
-      .localCheckpoint()
+      .cut
     val model = bkArr.select(col("lang"), explode(col("bks")).as("bucket"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("cr"),

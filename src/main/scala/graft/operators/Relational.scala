@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.BoundSql
-import graft.Tables
+import graft.{Cut, Tables}
 
 /** The reference engine's relational surface, re-expressed Spark-first.
   *
@@ -27,7 +27,7 @@ import graft.Tables
   *   - q26/q27/q28/q38 run the Dml rewrites, and q33/q81 write the sketch
   *     export their oracle reads;
   *   - q37 runs the GroupedTopK operator, which SQL cannot name;
-  *   - q97/q99 cut their shared aggregate with localCheckpoint, so the
+  *   - q97/q99 cut their shared aggregate (`graft.Cut`), so the
   *     final plan reads it back (`Scan ExistingRDD`) instead of scanning
   *     lineitem once per consumer — a text has no lineage cut.
   * No collect(), no UDFs, no RDDs. At 100 TB: fact-fact joins
@@ -1645,7 +1645,7 @@ object Relational {
     // depend on sum order.
     ("q97_tpch_q15",
       (s, d) => {
-        // localCheckpoint = the VIEW: rev feeds both the supplier join
+        // The cut = the VIEW: rev feeds both the supplier join
         // and the max, and without the cut each consumer would re-run
         // the whole quarter scan of lineitem (Catalyst does not
         // materialize shared subplans). The cut stores one narrow row
@@ -1663,7 +1663,7 @@ object Relational {
           .groupBy(col("l_suppkey").as("supplier_no"))
           .agg(floor(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))) * 100
             + 0.5).cast("long").as("rev_cents"))
-          .localCheckpoint()
+          .cut
         val mx = rev.agg(max(col("rev_cents")).as("mx"))
         Tables.supplier(s, d)
           .join(rev, col("s_suppkey") === col("supplier_no"))
@@ -1724,7 +1724,7 @@ object Relational {
       (s, d) => {
         val pk = Tables.part(s, d).filter(col("p_name").startsWith("red"))
           .select(col("p_partkey"))
-        // localCheckpoint: pq feeds both itself and its pt rollup — the
+        // Cut: pq feeds both itself and its pt rollup — the
         // cut holds the narrow (partkey, suppkey, sq) aggregate so the
         // year-windowed lineitem scan runs ONCE, not once per consumer.
         val pq = Tables.lineitem(s, d)
@@ -1733,7 +1733,7 @@ object Relational {
           .join(broadcast(pk), col("l_partkey") === col("p_partkey"))
           .groupBy(col("l_partkey"), col("l_suppkey"))
           .agg(sum(col("l_quantity")).as("sq"))
-          .localCheckpoint()
+          .cut
         val pt = pq.groupBy(col("l_partkey")).agg(sum(col("sq")).as("tot"))
         val dom = pq.join(pt, "l_partkey")
           .filter(col("sq") > col("tot") * 0.3)

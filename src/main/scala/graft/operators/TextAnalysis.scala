@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Cut, Tables}
 
 /** Text analysis over the `documents` table — language ID, quality
   * scoring, token counting, fingerprinting. The training-data-pipeline
@@ -662,7 +662,7 @@ object TextAnalysis {
         val wPos = Window.orderBy(col("score").desc, col("doc_id").asc)
         val wIdeal = Window.orderBy(col("rel").desc, col("doc_id").asc)
         val ln2 = log(lit(2.0))
-        // localCheckpoint: `pos` (20 rows) fans out to the DCG and IDCG
+        // Cut: `pos` (20 rows) fans out to the DCG and IDCG
         // branches — without the cut each branch re-plans the whole BM25
         // subtree (itself two corpus scans): 4 corpus scans where the
         // checkpoint needs 2 (the multi-consumer discipline of s08/p06).
@@ -674,7 +674,7 @@ object TextAnalysis {
             when(col("rel") === 3, 7.0).when(col("rel") === 2, 3.0).otherwise(1.0))
           .withColumn("pos", row_number().over(wPos).cast("long"))
           .withColumn("ipos", row_number().over(wIdeal).cast("long"))
-          .localCheckpoint()
+          .cut
         val dcg = pos.withColumn("dcg_cum",
           micro(sum(col("gain") / log(col("pos") + 1) * ln2)
             .over(Window.orderBy(col("pos"))
@@ -741,7 +741,7 @@ object TextAnalysis {
           .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
         // Min-support on the SYMMETRIZED weight (the quantity the
         // algorithm ranks by) — thresholding directed counts first would
-        // drop a 2+2 pair while keeping a 3+0 one. localCheckpoint: sym
+        // drop a 2+2 pair while keeping a 3+0 one. Cut: sym
         // fans out to both union branches AND the loop's nodes/edges
         // materializations — without the cut the corpus bigram
         // extraction re-executes per consumer.
@@ -750,7 +750,7 @@ object TextAnalysis {
             greatest(col("w1"), col("w2")).as("v"), col("c"))
           .groupBy(col("u"), col("v")).agg(sum(col("c")).as("w"))
           .filter(col("w") >= 3)
-          .localCheckpoint()
+          .cut
         val edges = sym.select(col("u").as("src"), col("v").as("dst"), col("w"))
           .union(sym.select(col("v").as("src"), col("u").as("dst"), col("w")))
         val nodes = edges.select(col("src").as("id")).distinct()
@@ -903,7 +903,7 @@ object TextAnalysis {
     // vocabulary-sized is broadcast or joined), per-source totals and
     // the top-5 rank ride one source-keyed exchange; T and V are a
     // 1-row broadcast. The (source, word) frame feeds three consumers
-    // (totals, windows), so it is localCheckpoint'd once — the
+    // (totals, windows), so it is cut once — the
     // p06/d13 shared-subtree cut; without it each consumer re-plans
     // the corpus explode. Post-checkpoint exchange budget: 3 (word
     // window, source window — the rank reuses its clustering — and
@@ -919,7 +919,7 @@ object TextAnalysis {
           .select(col("source"), explode(words(col("text"))).as("word"))
           .groupBy(col("source"), col("word"))
           .agg(count(lit(1)).as("c"))
-          .localCheckpoint()
+          .cut
         val totals = sw.agg(sum(col("c")).as("t"),
           countDistinct(col("word")).as("v"))
         sw.withColumn("g", sum(col("c")).over(wWord))
@@ -1098,7 +1098,7 @@ object TextAnalysis {
           .withColumn("rnk", row_number().over(wRank))
           .filter(col("rnk") <= 100)
           .select(col("source"), col("word"))
-          .localCheckpoint()
+          .cut
         val sizes = prof.groupBy(col("source")).agg(count(lit(1)).as("sz"))
         val common = prof.select(col("source").as("source_a"), col("word"))
           .join(prof.select(col("source").as("source_b"), col("word")), "word")

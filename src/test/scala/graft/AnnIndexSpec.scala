@@ -157,25 +157,19 @@ class AnnIndexSpec extends AnyFunSuite {
         .forEach(p => Files.delete(p))
     AnnIndex.writeLsh(e, bandBits, nBands, "lsh_band_idx", buckets)
 
-    val callerConf = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
     val probe = AnnIndex.probeLsh(spark, "lsh_band_idx", e, queryVec,
       bandBits, nBands, k = 21)
-    // The probe plans on a cloned session — the caller's conf is never
-    // touched (no restore window for concurrent planners to race).
-    assert(spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled") == callerConf)
-    val plan = probe.queryExecution.executedPlan.treeString
-    // Bucket pruning fired: the scan reads the query's ≤ nBands buckets,
-    // never all of them.
-    val sel = "SelectedBucketsCount: ([0-9]+) out of ([0-9]+)".r.findFirstMatchIn(plan)
-      .getOrElse(fail(s"no bucket pruning in plan:\n${plan.take(800)}"))
-    assert(sel.group(1).toInt <= nBands && sel.group(1).toInt < sel.group(2).toInt,
-      s"read ${sel.group(1)} of ${sel.group(2)} buckets")
-
     // Same candidates, same ranking as the in-memory v03 form (which
     // excludes the query vector itself; the index probe naturally finds
     // it at rank 1 with cos 1, so drop it before comparing).
     val got = probe.collect().map(r => (r.getLong(0), r.getDouble(1)))
       .filter(_._1 != 0L).take(20).toSeq
+    // Bucket pruning fired: the executed scan read the files of the
+    // query's ≤ nBands buckets, never all of them.
+    val read = TestSpark.buckets(TestSpark.filesRead(probe, "lsh_band_idx"))
+    val all = TestSpark.buckets(spark.table("lsh_band_idx").inputFiles)
+    assert(read.nonEmpty && read.size <= nBands && read.size < all.size,
+      s"read ${read.size} of ${all.size} buckets")
     val v03 = SparkEntry.queries("v03_knn_lsh")(spark, TestSpark.sf)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == v03)
@@ -219,10 +213,12 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(top("lsh_inc_idx").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
       top("lsh_full_idx").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
     // Bucket pruning survives the append (old + new files, probed ids only).
-    val plan = top("lsh_inc_idx").queryExecution.executedPlan.treeString
-    val sel = "SelectedBucketsCount: ([0-9]+) out of ([0-9]+)".r.findFirstMatchIn(plan)
-      .getOrElse(fail(s"no bucket pruning after append:\n${plan.take(800)}"))
-    assert(sel.group(1).toInt <= nBands && sel.group(1).toInt < sel.group(2).toInt)
+    val incProbe = top("lsh_inc_idx")
+    incProbe.collect()
+    val read = TestSpark.buckets(TestSpark.filesRead(incProbe, "lsh_inc_idx"))
+    val all = TestSpark.buckets(spark.table("lsh_inc_idx").inputFiles)
+    assert(read.nonEmpty && read.size <= nBands && read.size < all.size,
+      s"read ${read.size} of ${all.size} buckets after append")
     Seq("lsh_inc_idx", "lsh_full_idx").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 

@@ -252,12 +252,12 @@ class DdlSpec extends AnyFunSuite {
     // CREATE INDEX emb_lsh ON embeddings USING lsh (embedding)
     Ddl.createIndex(spark, "emb_lsh", e, "lsh", location = "", bandBits = 8, nBands = 8)
     val lshProbe = Ddl.probeIndex(spark, "emb_lsh", qv, k = 10)
-    val lshPlan = lshProbe.queryExecution.executedPlan.treeString
-    val sel = "SelectedBucketsCount: ([0-9]+) out of ([0-9]+)".r.findFirstMatchIn(lshPlan)
-    assert(sel.exists(m => m.group(1).toInt < m.group(2).toInt),
-      "LSH probe not bucket-pruned: " + lshPlan.take(600))
     // The query vector itself is its own nearest neighbor in every band.
     assert(lshProbe.collect().map(_.getLong(0)).contains(0L))
+    val read = TestSpark.buckets(TestSpark.filesRead(lshProbe, "emb_lsh_bands"))
+    val all = TestSpark.buckets(spark.table("emb_lsh_bands").inputFiles)
+    assert(read.nonEmpty && read.size < all.size,
+      s"LSH probe not bucket-pruned: read ${read.size} of ${all.size} buckets")
 
     // CREATE INDEX emb_pq ON embeddings USING ivfpq — the composed
     // layout: pruned directories, codes-only ADC, exact re-rank.

@@ -149,4 +149,35 @@ class UtilitySpec extends AnyFunSuite {
     assert(Bench.attempt("q")(throw new IllegalStateException("boom")).isEmpty)
     intercept[OutOfMemoryError](Bench.attempt("q")(throw new OutOfMemoryError("simulated")))
   }
+
+  test("a cut nothing reads runs no job") {
+    val input = spark.range(0, 1000, 1, 4).select((col("id") * 7).as("x"))
+    val (_, jobs) = org.apache.spark.graft.JobCounter(spark.sparkContext)(input.cut)
+    assert(jobs == 0, s"building the cut ran $jobs job(s)")
+  }
+
+  test("a cut read by two actions computes its input once") {
+    val computed = spark.sparkContext.longAccumulator("cut input rows")
+    val tick = udf { (x: Long) => computed.add(1); x }.asNondeterministic()
+    val c = spark.range(0, 100, 1, 4).select(tick(col("id")).as("x")).cut
+    assert(c.count() == 100)
+    assert(c.agg(sum(col("x"))).head().getLong(0) == 4950L)
+    assert(computed.value == 100L, s"the cut's input ran ${computed.value / 100.0} times")
+  }
+
+  test("no code line under src/main/scala calls localCheckpoint( outside the cut helper") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root, not ${root.getAbsolutePath}")
+    import scala.jdk.CollectionConverters._
+    val calls = java.nio.file.Files.walk(root.toPath).iterator.asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if !line.trim.startsWith("*") && !line.trim.startsWith("/*") &&
+              line.split("//")(0).contains("localCheckpoint(") => s"${root.toPath.relativize(f)}:${i + 1}"
+        }
+      }
+    assert(calls.size == 1 && calls.head.startsWith("graft/package.scala:"),
+      s"localCheckpoint( outside graft.Cut: ${calls.mkString(", ")}")
+  }
 }
