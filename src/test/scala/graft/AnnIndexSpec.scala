@@ -157,8 +157,12 @@ class AnnIndexSpec extends AnyFunSuite {
         .forEach(p => Files.delete(p))
     AnnIndex.writeLsh(e, bandBits, nBands, "lsh_band_idx", buckets)
 
+    val callerConf = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
     val probe = AnnIndex.probeLsh(spark, "lsh_band_idx", e, queryVec,
       bandBits, nBands, k = 21)
+    // The probe plans on the caller's session and must not change its
+    // settings.
+    assert(spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled") == callerConf)
     // Same candidates, same ranking as the in-memory v03 form (which
     // excludes the query vector itself; the index probe naturally finds
     // it at rank 1 with cos 1, so drop it before comparing).
@@ -166,10 +170,8 @@ class AnnIndexSpec extends AnyFunSuite {
       .filter(_._1 != 0L).take(20).toSeq
     // Bucket pruning fired: the executed scan read the files of the
     // query's ≤ nBands buckets, never all of them.
-    val read = TestSpark.buckets(TestSpark.filesRead(probe, "lsh_band_idx"))
-    val all = TestSpark.buckets(spark.table("lsh_band_idx").inputFiles)
-    assert(read.nonEmpty && read.size <= nBands && read.size < all.size,
-      s"read ${read.size} of ${all.size} buckets")
+    val (read, all) = TestSpark.bucketsRead(probe, "lsh_band_idx")
+    assert(read > 0 && read <= nBands && read < all, s"read $read of $all buckets")
     val v03 = SparkEntry.queries("v03_knn_lsh")(spark, TestSpark.sf)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == v03)
@@ -215,10 +217,8 @@ class AnnIndexSpec extends AnyFunSuite {
     // Bucket pruning survives the append (old + new files, probed ids only).
     val incProbe = top("lsh_inc_idx")
     incProbe.collect()
-    val read = TestSpark.buckets(TestSpark.filesRead(incProbe, "lsh_inc_idx"))
-    val all = TestSpark.buckets(spark.table("lsh_inc_idx").inputFiles)
-    assert(read.nonEmpty && read.size <= nBands && read.size < all.size,
-      s"read ${read.size} of ${all.size} buckets after append")
+    val (read, all) = TestSpark.bucketsRead(incProbe, "lsh_inc_idx")
+    assert(read > 0 && read <= nBands && read < all, s"read $read of $all buckets after append")
     Seq("lsh_inc_idx", "lsh_full_idx").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 

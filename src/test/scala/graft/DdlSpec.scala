@@ -254,10 +254,8 @@ class DdlSpec extends AnyFunSuite {
     val lshProbe = Ddl.probeIndex(spark, "emb_lsh", qv, k = 10)
     // The query vector itself is its own nearest neighbor in every band.
     assert(lshProbe.collect().map(_.getLong(0)).contains(0L))
-    val read = TestSpark.buckets(TestSpark.filesRead(lshProbe, "emb_lsh_bands"))
-    val all = TestSpark.buckets(spark.table("emb_lsh_bands").inputFiles)
-    assert(read.nonEmpty && read.size < all.size,
-      s"LSH probe not bucket-pruned: read ${read.size} of ${all.size} buckets")
+    val (read, all) = TestSpark.bucketsRead(lshProbe, "emb_lsh_bands")
+    assert(read > 0 && read < all, s"LSH probe not bucket-pruned: read $read of $all buckets")
 
     // CREATE INDEX emb_pq ON embeddings USING ivfpq — the composed
     // layout: pruned directories, codes-only ADC, exact re-rank.

@@ -14,19 +14,20 @@ object TestSpark extends AdaptiveSparkPlanHelper {
 
   val sf: String = "/root/testdata/sf0.001"
 
-  /** The data files that the scans of catalog table `table` in `df`'s
-    * executed plan read: the files of each scan's input partitions, after
-    * partition and bucket pruning. EXPLAIN prints `SelectedBucketsCount`
-    * only for a bucketed scan; a scan of a bucketed table whose bucketed
-    * read the planner turned off still drops the files outside the
-    * pruned bucket set. */
-  def filesRead(df: DataFrame, table: String): Set[String] =
-    collect(df.queryExecution.executedPlan) {
+  /** (buckets read, buckets in the table) for catalog table `table` in
+    * `df`'s executed plan: the bucket ids of the files in the input
+    * partitions of the table's scans, after partition and bucket pruning,
+    * against those of all the table's files. EXPLAIN prints
+    * `SelectedBucketsCount` only for a bucketed scan; a scan of a bucketed
+    * table whose bucketed read the planner turned off still drops the
+    * files outside the pruned bucket set. */
+  def bucketsRead(df: DataFrame, table: String): (Int, Int) = {
+    def ids(files: Iterable[String]): Set[Int] =
+      files.flatMap(f => BucketingUtils.getBucketId(new org.apache.hadoop.fs.Path(f).getName)).toSet
+    val read = collect(df.queryExecution.executedPlan) {
       case s: FileSourceScanExec if s.tableIdentifier.exists(_.table == table) =>
         s.inputRDD.partitions.toSeq.flatMap { case p: FilePartition => p.files.toSeq }
-    }.flatten.map(_.filePath.toString).toSet
-
-  /** The bucket ids of bucketed-table `files` (their `_NNNNN` suffix). */
-  def buckets(files: Iterable[String]): Set[Int] =
-    files.flatMap(f => BucketingUtils.getBucketId(new org.apache.hadoop.fs.Path(f).getName)).toSet
+    }.flatten.map(_.filePath.toString)
+    (ids(read).size, ids(df.sparkSession.table(table).inputFiles).size)
+  }
 }
