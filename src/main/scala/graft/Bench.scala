@@ -1,6 +1,8 @@
 package graft
 
+import scala.util.Try
 import scala.util.control.NonFatal
+import scala.util.matching.Regex
 
 /** Benchmark main: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR. A warmup pass at sf0.001 first runs every query,
@@ -20,11 +22,22 @@ object Bench {
 
   /** The value of env variable `name` as a positive integer, `default`
     * when unset; any other value fails naming the variable. */
-  private[graft] def positiveInt(name: String, raw: Option[String], default: Int): Int = raw match {
-    case None => default
-    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(s"$name='$v' must be a positive integer"))
-  }
+  private[graft] def positiveInt(name: String, raw: Option[String], default: Int): Int =
+    parsed(name, raw, "a positive integer")(v => Try(v.trim.toInt).filter(_ > 0))
+      .getOrElse(default)
+
+  /** SPARK_GRAFT_BENCH_FILTER as the regex that picks queries by name,
+    * None when unset; a pattern that does not compile fails naming the
+    * variable. */
+  private[graft] def filterRegex(raw: Option[String]): Option[Regex] =
+    parsed("SPARK_GRAFT_BENCH_FILTER", raw, "a regular expression")(v => Try(v.r))
+
+  /** Env variable `name`'s value parsed by `parse`; a value it rejects
+    * fails naming the variable, with the parse error as the cause. */
+  private def parsed[T](name: String, raw: Option[String], what: String)(
+      parse: String => Try[T]): Option[T] =
+    raw.map(v => parse(v).fold(
+      e => throw new IllegalArgumentException(s"$name='$v' must be $what", e), identity))
 
   /** Runs `f`, labelled `what` (a query name, or the pass it is in). A
     * non-fatal failure goes to stderr and gives None, so the run goes on
@@ -58,6 +71,10 @@ object Bench {
     // A value that is not a positive integer stops the run before the
     // session starts, naming the variable.
     val reps = positiveInt("SPARK_GRAFT_BENCH_REPS", sys.env.get("SPARK_GRAFT_BENCH_REPS"), 3)
+    // Optional subset (regex on query name) for controlled A/B runs —
+    // e.g. SPARK_GRAFT_BENCH_FILTER='^(s0[1-9]|t0[1-9]|t1[0-6])' replays
+    // exactly the block a drift was observed on.
+    val filter = filterRegex(sys.env.get("SPARK_GRAFT_BENCH_FILTER"))
     val spark = GraftSession.builder("graft-bench", cpus)
       .config("spark.sql.shuffle.partitions", partitions.toString)
       .getOrCreate()
@@ -67,10 +84,6 @@ object Bench {
     // identically run-to-run, so per-query numbers are comparable across
     // rounds (the r2 driver run had a 7.9x one-off on whichever query ran
     // cold first).
-    // Optional subset (regex on query name) for controlled A/B runs —
-    // e.g. SPARK_GRAFT_BENCH_FILTER='^(s0[1-9]|t0[1-9]|t1[0-6])' replays
-    // exactly the block a drift was observed on.
-    val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => filter.forall(_.findFirstIn(n).isDefined) }
     val warmDir = "/root/testdata/sf0.001"

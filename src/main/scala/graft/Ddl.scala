@@ -39,15 +39,15 @@ object Ddl {
     * to a timestamp here (Tables.table), exactly as the reference's
     * catalog maps storage types to query types (andb/catalog/type.py) —
     * SQL text over `events` sees `ts` as a timestamp, not raw nanos.
-    * Drops the session's cached statement plans ([[PlanCache]]). */
+    * The scan underneath is the session's cached path plan
+    * ([[Tables.load]]); queries over the view plan fresh. */
   def createTable(spark: SparkSession, name: String, sfDir: String): Unit =
     register(spark, name, Tables.table(spark, sfDir, name))
 
-  /** (Re-)register `df` as view `name`; a statement plan cached against
-    * the old view would read it, so the session's are dropped. */
+  /** (Re-)register `df` as view `name`; the next statement over `name`
+    * is planned against it. */
   private def register(spark: SparkSession, name: String, df: DataFrame): DataFrame = {
     df.createOrReplaceTempView(name)
-    PlanCache.dropStatements(spark)
     df
   }
 

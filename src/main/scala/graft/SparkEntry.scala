@@ -9,7 +9,7 @@ import graft.operators._
   * (SparkSession, sfDir) => DataFrame plus, where the semantics are
   * ANSI-SQL-expressible, an equivalent DuckDB oracle query. Column names
   * are aliased identically on both sides (driver hash-compares by sorted
-  * column name). 90 of the relational queries (q01–q99) build their
+  * column name). 91 of the relational queries (q01–q99) build their
   * DataFrame from their Spark SQL text bound to sfDir
   * (org.apache.spark.sql.graft.BoundSql), so for them the oracle gate
   * checks one SQL spelling on two engines; every other entry is a

@@ -6,10 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * INTERACTION shape (everything in AnDB arrives as SQL text through one
   * entry point, andb/cmd/ → parser → planner → executor). `graft.sql`
   * gives the same single-string surface: statements Spark itself speaks
-  * (SELECT/DML/DDL/ANALYZE/USE/CREATE DATABASE...) pass through
-  * `spark.sql` via the [[PlanCache]], which keeps query plans and runs
-  * every command each time; the reference's statements Spark
-  * does NOT speak are routed to their graft analogs —
+  * (SELECT/DML/DDL/ANALYZE/USE/CREATE DATABASE...) go straight to
+  * `spark.sql`, planned fresh on every call (why no statement plan is
+  * cached: [[PlanCache]]); the reference's statements Spark does NOT
+  * speak are routed to their graft analogs —
   *
   *   - `CREATE INDEX n ON t USING ivf|lsh|ivfpq (col) [LOCATION '...']`
   *     (parser_.py:554's `using <method>` form) → [[Ddl.createIndex]]
@@ -32,8 +32,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     global.
   *
   * Parameterized text (`:name` markers) forwards `params` to Spark's
-  * native named-parameter binding and is not cached (the cache key is
-  * the text; bindings vary per call — RelationalSql.bind's contract).
+  * native named-parameter binding.
   */
 object GraftSql {
 
@@ -87,8 +86,7 @@ object GraftSql {
           "durability point on Spark = Dataset.checkpoint / " +
             "Dataset.localCheckpoint; no global WAL to flush"))
           .toDF("command", "status", "detail")
-      case _ if params.nonEmpty => PlanCache.sql(spark, text, params)
-      case _ => PlanCache.sql(spark, text)
+      case _ => spark.sql(text, params)
     }
   }
 }

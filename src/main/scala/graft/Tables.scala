@@ -19,7 +19,8 @@ object Tables {
     * bench/verify run stops re-paying directory listing + parquet
     * footer schema inference on every one of its ~1000 query
     * evaluations (~50–75 ms per call, measured). Execution semantics
-    * are unchanged: every action still scans the parquet files fresh.
+    * are unchanged: each Dataset built on the scan plans its own
+    * QueryExecution, so every action scans the parquet files fresh.
     * This is the metastore seam a production catalog provides. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     PlanCache.path(spark, s"$dir/$name.parquet")

@@ -7,6 +7,10 @@ import org.apache.spark.sql.SparkSession
   * Exits 1 when any query failed to dump. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    if (args.length < 2) {
+      System.err.println("usage: graft.Verify <sfDir> <outDir> [query,query,...]")
+      sys.exit(2)
+    }
     val (sfDir, outDir) = (args(0), args(1))
     // Optional third arg: comma-separated query names — dump only those
     // (fast single-operator iteration through tools/local_verify.py).

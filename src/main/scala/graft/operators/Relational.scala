@@ -22,14 +22,17 @@ import graft.{Cut, Tables}
   * so pushdown, pruning, join selection, partial aggregation and
   * whole-stage codegen are the same either way. Where the oracle text
   * plans more work, the Spark text spells the cheaper shape (see
-  * [[RelationalSql.overrides]]). Nine queries keep a DataFrame plan,
+  * [[RelationalSql.overrides]]). Eight queries keep a DataFrame plan,
   * because the plan does something the text cannot:
   *   - q26/q27/q28/q38 run the Dml rewrites, and q33/q81 write the sketch
   *     export their oracle reads;
   *   - q37 runs the GroupedTopK operator, which SQL cannot name;
-  *   - q97/q99 cut their shared aggregate (`graft.Cut`), so the
-  *     final plan reads it back (`Scan ExistingRDD`) instead of scanning
-  *     lineitem once per consumer — a text has no lineage cut.
+  *   - q97 cuts its shared aggregate (`graft.Cut`), so the final plan
+  *     reads it back (`Scan ExistingRDD`) instead of scanning lineitem
+  *     once per consumer: its text plans the scalar subquery over the
+  *     aggregate apart, and a text has no lineage cut. (q99's two
+  *     consumers share one exchange, which Spark reuses, so q99 runs
+  *     from its text.)
   * No collect(), no UDFs, no RDDs. At 100 TB: fact-fact joins
   * hash-partition on join keys (AQE re-plans skew), fact-dim joins
   * broadcast, and every aggregate here is map-side-combinable.
@@ -1718,32 +1721,12 @@ object Relational {
     // the dominant-supplier screen. Quantities are integral doubles, so
     // both sums are exact and the 0.3·tot compare is order-free. The
     // part prefilter broadcasts into the year-windowed fact scan; the
-    // two aggregates reuse ONE shuffle (partkey, suppkey) → (partkey);
-    // the supplier screen is a LEFT SEMI (never a distinct + inner).
-    ("q99_tpch_q20",
-      (s, d) => {
-        val pk = Tables.part(s, d).filter(col("p_name").startsWith("red"))
-          .select(col("p_partkey"))
-        // Cut: pq feeds both itself and its pt rollup — the
-        // cut holds the narrow (partkey, suppkey, sq) aggregate so the
-        // year-windowed lineitem scan runs ONCE, not once per consumer.
-        val pq = Tables.lineitem(s, d)
-          .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-                  col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-          .join(broadcast(pk), col("l_partkey") === col("p_partkey"))
-          .groupBy(col("l_partkey"), col("l_suppkey"))
-          .agg(sum(col("l_quantity")).as("sq"))
-          .cut
-        val pt = pq.groupBy(col("l_partkey")).agg(sum(col("sq")).as("tot"))
-        val dom = pq.join(pt, "l_partkey")
-          .filter(col("sq") > col("tot") * 0.3)
-          .select(col("l_suppkey"))
-        Tables.supplier(s, d)
-          .join(dom, col("s_suppkey") === col("l_suppkey"), "left_semi")
-          .select(col("s_suppkey"), col("s_name"))
-          .orderBy(col("s_suppkey"))
-      },
-      Some("""WITH pq AS MATERIALIZED (
+    // two aggregates reuse ONE shuffle (partkey, suppkey) → (partkey),
+    // so Spark's exchange reuse scans lineitem once for both consumers
+    // of pq; the supplier screen is a LEFT SEMI (never a distinct +
+    // inner).
+    bound("q99_tpch_q20",
+      """WITH pq AS MATERIALIZED (
                 SELECT l_partkey, l_suppkey, sum(l_quantity) AS sq
                 FROM lineitem JOIN part ON p_partkey = l_partkey
                 WHERE p_name LIKE 'red%'
@@ -1756,7 +1739,7 @@ object Relational {
               WHERE s_suppkey IN (SELECT l_suppkey FROM pq
                                   JOIN pt USING (l_partkey)
                                   WHERE sq > tot * 0.3)
-              ORDER BY s_suppkey"""))
+              ORDER BY s_suppkey""")
   )
 
   /** q81's reference-quantile sample size: bounds BOTH the TakeOrdered

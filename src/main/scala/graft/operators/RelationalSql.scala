@@ -13,10 +13,10 @@ import org.apache.spark.sql.SparkSession
   * forms, and Spark's decorrelator plans them; q86's EXISTS battery
   * stays the oracle's, and its Spark text is the per-order aggregate.
   *
-  * For 90 of the 99 queries this text IS the registered query:
+  * For 91 of the 99 queries this text IS the registered query:
   * [[Relational.defs]] runs it through
   * [[org.apache.spark.sql.graft.BoundSql]], which binds its table names
-  * to the data directory. The other 9 keep a DataFrame plan in
+  * to the data directory. The other 8 keep a DataFrame plan in
   * [[Relational.defs]] (see its header for why), and their text is the
   * same query spelled in SQL. SqlParitySpec asserts, for every entry,
   * that the registered query and this text run over the catalog give

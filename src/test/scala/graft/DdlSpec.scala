@@ -99,6 +99,25 @@ class DdlSpec extends AnyFunSuite {
       graft.sql(spark, "DROP VIEW IF EXISTS pc_v")
       assert(!spark.catalog.tableExists("pc_v"))
 
+      // Changes made outside graft.sql: the same text run again sees
+      // them too. `collect()` runs the returned DataFrame's own
+      // QueryExecution, so a DataFrame reused across calls would return
+      // the rows its first run's shuffle materialized.
+      def collected(text: String) = graft.sql(spark, text).collect().head
+      spark.sql("SELECT 5 AS x").createOrReplaceTempView("pc_df")
+      assert(collected("SELECT x FROM pc_df").getInt(0) == 5)
+      spark.sql("SELECT 6 AS x").createOrReplaceTempView("pc_df")
+      assert(collected("SELECT x FROM pc_df").getInt(0) == 6)
+
+      spark.sql("CREATE OR REPLACE TEMP VIEW pc_sv AS SELECT 7 AS x")
+      assert(collected("SELECT x FROM pc_sv").getInt(0) == 7)
+      spark.sql("CREATE OR REPLACE TEMP VIEW pc_sv AS SELECT 8 AS x")
+      assert(collected("SELECT x FROM pc_sv").getInt(0) == 8)
+
+      assert(collected("SELECT count(*) FROM pc_t").getLong(0) == 2)
+      spark.sql("INSERT INTO pc_t VALUES (1)")
+      assert(collected("SELECT count(*) FROM pc_t").getLong(0) == 3)
+
       graft.sql(spark, "CREATE DATABASE IF NOT EXISTS pc_db")
       graft.sql(spark, "USE pc_db")
       graft.sql(spark, s"USE `$home`")
@@ -108,11 +127,13 @@ class DdlSpec extends AnyFunSuite {
       spark.catalog.setCurrentDatabase(home)
       spark.sql("DROP TABLE IF EXISTS pc_t")
       spark.sql("DROP VIEW IF EXISTS pc_v")
+      spark.sql("DROP VIEW IF EXISTS pc_df")
+      spark.sql("DROP VIEW IF EXISTS pc_sv")
       spark.sql("DROP DATABASE IF EXISTS pc_db CASCADE")
     }
   }
 
-  test("Ddl's view re-registration drops cached statement plans, not path plans") {
+  test("Ddl's view re-registration changes the answer and keeps path plans") {
     Ddl.createTable(spark, "nation", TestSpark.sf)
     val text = "SELECT * FROM nation"
     val before = graft.sql(spark, text)
@@ -125,21 +146,24 @@ class DdlSpec extends AnyFunSuite {
     assert(graft.sql(spark, text).columns.contains("n_regionkey"))
   }
 
-  test("plan cache returns the identical plan object on repeat statements") {
-    Ddl.createTable(spark, "nation", TestSpark.sf)
+  test("plan cache returns the identical plan object on repeat paths") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-pc-path").toString
+    val Seq(a, b, c) = Seq(3, 4, 5).map { n =>
+      val p = s"$tmp/t$n"
+      spark.range(n).write.parquet(p)
+      p
+    }
     val pc = new PlanCache(maxEntries = 2)
-    val text = "SELECT n_regionkey, count(*) AS n FROM nation GROUP BY n_regionkey"
-    val first = pc.sql(spark, text)
-    val second = pc.sql(spark, text)
-    // Same object ⇒ parse/analyze/optimize ran once for the two calls.
+    val first = pc.path(spark, a)
+    val second = pc.path(spark, a)
+    // Same object ⇒ listing and footer inference ran once for the two calls.
     assert(first eq second)
     assert(pc.hits == 1 && pc.misses == 1)
-    assert(second.collect().length == 5)
-    // LRU bound: two more distinct texts evict the eldest.
-    pc.sql(spark, "SELECT 1 AS a")
-    pc.sql(spark, "SELECT 2 AS a")
+    assert(second.count() == 3)
+    // LRU bound: two more distinct paths evict the eldest.
+    assert(pc.path(spark, b).count() == 4 && pc.path(spark, c).count() == 5)
     assert(pc.size == 2)
-    assert(!(pc.sql(spark, text) eq first), "evicted entry must rebuild")
+    assert(!(pc.path(spark, a) eq first), "evicted entry must rebuild")
   }
 
   test("analyzeTable computes real row counts for the cost model") {
@@ -342,13 +366,8 @@ class DdlSpec extends AnyFunSuite {
     // Spark seat of the durability point.
     assert(graft.sql(spark, "CHECKPOINT").collect().head.getString(1) == "ok")
 
-    // Plain statements pass through the plan cache: same text, same
-    // session -> the SAME reusable plan object, and a cache hit.
-    val h0 = PlanCache.hits
+    // Plain statements pass through to spark.sql.
     val a = graft.sql(spark, "SELECT count(*) AS n FROM emb_sqlfd")
-    val b = graft.sql(spark, "SELECT count(*) AS n FROM emb_sqlfd")
-    assert(a eq b)
-    assert(PlanCache.hits == h0 + 1)
     assert(a.collect().head.getLong(0) == Tables.embeddings(spark, TestSpark.sf).count())
 
     // Parameterized text binds through Spark's native named parameters.

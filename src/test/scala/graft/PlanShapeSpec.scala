@@ -965,11 +965,23 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p98.contains("BroadcastHashJoin") && !p98.contains("SortMergeJoin"),
       "q98 lost its broadcast prefilter")
     // Q20: supplier screen is a LEFT SEMI over the dominant-supplier
-    // set, and the pq aggregate feeds both consumers from ONE pass
-    // (localCheckpoint — no lineitem scan may survive into this plan).
+    // set, and the pq aggregate feeds both consumers from ONE pass: the
+    // final adaptive plan scans lineitem once, and the second consumer
+    // reads that scan's exchange back (ReusedExchange).
     val p99 = planOf("q99_tpch_q20")
     assert(p99.contains("LeftSemi"), "q99 supplier screen must be semi")
-    assert(!p99.contains("lineitem"), "q99 re-scans lineitem per consumer")
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val q99 = SparkEntry.queries("q99_tpch_q20")(spark, TestSpark.sf)
+    q99.collect()
+    val done = q99.queryExecution.executedPlan
+    val lineitemScans = TestSpark.collect(done) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName == "lineitem.parquet") => s
+    }
+    val reused = TestSpark.collect(done) { case r: ReusedExchangeExec => r }
+    assert(lineitemScans.size == 1 && reused.size == 1,
+      s"q99 scans lineitem ${lineitemScans.size}x with ${reused.size} reused exchanges:\n" +
+        done.treeString.take(1500))
   }
 
   test("q86 rewrite scans lineitem twice, not the canonical three times") {

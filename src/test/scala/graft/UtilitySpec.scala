@@ -144,6 +144,17 @@ class UtilitySpec extends AnyFunSuite {
     }
   }
 
+  test("Bench rejects a SPARK_GRAFT_BENCH_FILTER that does not compile, naming it") {
+    assert(Bench.filterRegex(None).isEmpty)
+    assert(Bench.filterRegex(Some("^q9[79]")).exists(_.findFirstIn("q99_tpch_q20").isDefined))
+    Seq("(", "q[0-", "*q").foreach { bad =>
+      val e = intercept[IllegalArgumentException](Bench.filterRegex(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_FILTER") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+      assert(e.getCause.isInstanceOf[java.util.regex.PatternSyntaxException])
+    }
+  }
+
   test("Bench.attempt reports a failed query and goes on, but a JVM error ends the run") {
     assert(Bench.attempt("q")(41 + 1).contains(42))
     assert(Bench.attempt("q")(throw new IllegalStateException("boom")).isEmpty)
