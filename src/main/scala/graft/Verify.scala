@@ -4,7 +4,8 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB compare (tools/local_verify.py).
-  * Exits 1 when any query failed to dump. */
+  * Exits 1 when any query failed to dump, and 2, printing its usage,
+  * when given fewer than two arguments. */
 object Verify {
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
