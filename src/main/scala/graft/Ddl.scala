@@ -160,12 +160,18 @@ object Ddl {
     d
   }
 
+  /** The warehouse location of a table named `name`:
+    * `<warehouse dir>/<name lower-cased>`, where Spark puts a managed
+    * table and graft puts a path-addressed table it names. */
+  private[graft] def warehousePath(spark: SparkSession, name: String): String =
+    new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase).toString
+
   /** Drop a MANAGED table's catalog entry and its warehouse location,
     * whether or not the entry survived the JVM that created it. */
   private[graft] def dropManagedTable(spark: SparkSession, name: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS ${ident(name)}")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase)
+    val loc = new org.apache.hadoop.fs.Path(warehousePath(spark, name))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
     ()

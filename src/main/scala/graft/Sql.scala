@@ -59,9 +59,7 @@ object GraftSql {
         val method = Option(usingPre).orElse(Option(usingPost))
           .map(_.toLowerCase).getOrElse("btree")
         if (method == "ivf" || method == "lsh" || method == "ivfpq") {
-          val location = Option(loc).getOrElse(
-            new org.apache.hadoop.fs.Path(
-              spark.conf.get("spark.sql.warehouse.dir"), s"${name}_layout").toString)
+          val location = Option(loc).getOrElse(Ddl.warehousePath(spark, s"${name}_layout"))
           val d = Ddl.createIndex(spark, name, spark.table(table), method, location)
           Seq((name, table, d.using, location))
             .toDF("index", "table", "method", "location")

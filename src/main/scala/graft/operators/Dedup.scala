@@ -1835,16 +1835,19 @@ object Dedup {
   // written ONCE at ingest and only PROBED per crawl. These entry points
   // are that layout (proven equal to the in-memory form, with a
   // shuffle-free corpus side, in AnnIndexSpec). All three tables are
-  // plain bucketed tables:
+  // bucketed Versioned tables: table `t` lives at
+  // `<warehouse dir>/<t lower-cased>` (Ddl.warehousePath) with no catalog
+  // entry, and its manifest records its bucket spec, so every commit of
+  // the table (fold appends, compaction) keeps the layout:
   //
   //   - `<prefix>_bands`  — the MinHash band table, BUCKETED by
   //     (band, sig): the corpus is pre-shuffled on the band-join key, so
   //     the per-crawl join shuffles ONLY the batch side.
-  //   - `<prefix>_hashes` — (doc_id, md5) bucketed by hash: the stage-1
-  //     exact anti-join reads the corpus pre-shuffled on its key.
   //   - `<prefix>_grams`  — (doc_id, shingle-hash-set) bucketed by
   //     doc_id: exact-Jaccard verification joins candidates to persisted
   //     gram sets — the corpus TEXT is never re-read, never re-shingled.
+  //   - `<prefix>_hashes` — (doc_id, md5) bucketed by hash: the stage-1
+  //     exact anti-join reads the corpus pre-shuffled on its key.
   //
   // Why the band table is NOT also partitioned by a hash of (band, sig)
   // so a crawl reads only "its" directories: a batch of B docs emits
@@ -1865,16 +1868,45 @@ object Dedup {
   // the SAME kernels the in-memory d02/d13 use (minhashBandTable / md5 /
   // shingleHashSet), so geometry cannot drift between the layout and
   // the operators measured on it.
+
+  /** One table of the corpus dedup layout: its name suffix, its bucket
+    * (and sort) key, and the kernel deriving its rows from
+    * (doc_id, text) rows with the given (shingleN, bands, rows). */
+  private[graft] final case class LayoutTable(suffix: String, key: Seq[String],
+      kernel: (DataFrame, Int, Int, Int) => DataFrame) {
+    def path(spark: SparkSession, prefix: String): String =
+      graft.Ddl.warehousePath(spark, s"${prefix}_$suffix")
+    def read(spark: SparkSession, prefix: String): DataFrame =
+      graft.sources.Versioned.read(spark, path(spark, prefix))
+  }
+
+  /** The layout's tables, in the order a fold commits them. */
+  private[graft] val LayoutTables: Seq[LayoutTable] = Seq(
+    LayoutTable("bands", Seq("band", "sig"),
+      (docs, shingleN, bands, rows) => Lsh.minhashBandTable(docs, shingleN, bands, rows)),
+    LayoutTable("grams", Seq("doc_id"),
+      (docs, _, _, _) => docs.select(col("doc_id"), shingleHashSet(col("text")).as("hs"))),
+    LayoutTable("hashes", Seq("h"),
+      (docs, _, _, _) => docs.select(col("doc_id"), md5(col("text")).as("h"))))
+
+  /** The app id a fold commits under on each layout table's ledger. */
+  private val FoldApp = "fold"
+
+  /** Write the layout of `corpus` (doc_id, text, ...) under `prefix`,
+    * each table with `buckets` buckets. An earlier layout under the
+    * prefix is deleted first, fold ledgers included: its ledger tags
+    * name versions of another admitted log, and a fold that read them
+    * would skip admissions the new layout does not hold. */
   def writeCorpusDedupLayout(corpus: DataFrame, prefix: String,
       shingleN: Int = 3, bands: Int = 8, rows: Int = 4,
       buckets: Int = 8): Unit = {
-    import graft.sources.Io
-    Io.writeBucketedBy(Lsh.minhashBandTable(corpus, shingleN, bands, rows),
-      s"${prefix}_bands", Seq("band", "sig"), buckets)
-    Io.writeBucketedBy(corpus.select(col("doc_id"), md5(col("text")).as("h")),
-      s"${prefix}_hashes", Seq("h"), buckets)
-    Io.writeBucketedBy(corpus.select(col("doc_id"), shingleHashSet(col("text")).as("hs")),
-      s"${prefix}_grams", Seq("doc_id"), buckets)
+    val spark = corpus.sparkSession
+    LayoutTables.foreach { t =>
+      graft.Ddl.dropManagedTable(spark, s"${prefix}_${t.suffix}")
+      graft.sources.Versioned.create(spark, t.path(spark, prefix),
+        t.kernel(corpus, shingleN, bands, rows),
+        Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(buckets, t.key, t.key)))
+    }
   }
 
   /** d13's cascade probing the persisted corpus layout: exact md5 anti
@@ -1882,7 +1914,7 @@ object Dedup {
     * (only the batch side shuffles) → exact-Jaccard verify against
     * persisted gram sets → LEFT ANTI drop. Same stages, same kernels,
     * same band geometry as the registered d13; AnnIndexSpec pins result
-    * equality.
+    * equality. Each table is read at its current version.
     *
     * `exactSurv` feeds three consumers (the band table, the gram sets
     * and the final anti-join) but is not cut: all three sit in one plan,
@@ -1893,18 +1925,18 @@ object Dedup {
     * run before flipping the join to a broadcast itself. */
   def incrementalDedupOnLayout(spark: SparkSession, prefix: String, batch: DataFrame,
       shingleN: Int = 3, bands: Int = 8, rows: Int = 4): DataFrame = {
+    val Seq(bandsT, gramsT, hashesT) = LayoutTables.map(_.read(spark, prefix))
     val exactSurv = batch
       .withColumn("h", md5(col("text")))
-      .join(spark.table(s"${prefix}_hashes").select(col("h")), Seq("h"), "left_anti")
+      .join(hashesT.select(col("h")), Seq("h"), "left_anti")
       .drop("h")
     val cands = Lsh.minhashBandTable(exactSurv, shingleN, bands, rows).as("a")
-      .join(spark.table(s"${prefix}_bands").as("b"),
+      .join(bandsT.as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
       .filter(col("a.band") === Lsh.firstMatchingBandArrays(col("a.bsig"), col("b.bsig")))
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
     val batHs = exactSurv.select(col("doc_id"), shingleHashSet(col("text")).as("hs"))
-    val dupIds = Lsh.jaccardVerifiedPairsHs(
-        cands, batHs, spark.table(s"${prefix}_grams"), 0.9)
+    val dupIds = Lsh.jaccardVerifiedPairsHs(cands, batHs, gramsT, 0.9)
       .select(col("a_id").as("doc_id"))
     exactSurv.join(broadcast(dupIds), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("source"), col("n_chars"))
@@ -1924,10 +1956,12 @@ object Dedup {
     * never against other crawl docs — so the union of per-epoch
     * admissions over any micro-batch split of a crawl equals the
     * one-shot cascade on the whole crawl (StreamingSpec pins this,
-    * replays included). At 100 TB the corpus side stays a bucketed
-    * standing layout probed per epoch: per-epoch cost is O(batch), the
-    * admitted table is an append-only versioned log a compaction /
-    * corpus-refresh job can fold back into the layout offline. Use as:
+    * replays included). The probe reads each layout table at its
+    * current version, so a fold or compaction committing meanwhile
+    * needs no recovery step here. At 100 TB the corpus side stays a
+    * bucketed standing layout probed per epoch: per-epoch cost is
+    * O(batch), the admitted table is an append-only versioned log
+    * [[refreshCorpusLayout]] folds back into the layout offline. Use as:
     * {{{
     * crawl.writeStream.foreachBatch(
     *   Dedup.streamingIncrementalDedupSink("corpus", path, "crawl-app")).start()
@@ -1935,14 +1969,6 @@ object Dedup {
   def streamingIncrementalDedupSink(prefix: String, outPath: String,
       appId: String): (DataFrame, Long) => Unit =
     (batch, batchId) => {
-      // Writer-entry torn-swap recovery (r14): the sink restarts after
-      // ANY service crash — including one that died inside a layout
-      // table's compaction swap, which leaves the table renamed away and
-      // the probe's spark.table() failing until recovery. Every WRITER
-      // entry point finishes the swap first (the fold does the same);
-      // read-only probes (the d13 query surface) stay pure.
-      layoutTables(prefix)
-        .foreach(graft.sources.Io.finishTornCompaction(batch.sparkSession, _))
       val surv = incrementalDedupOnLayout(batch.sparkSession, prefix, batch)
       graft.sources.Versioned.commitBatchAppend(
         batch.sparkSession, outPath, appId, batchId, surv)
@@ -1951,7 +1977,7 @@ object Dedup {
 
   /** The corpus-refresh FOLD-BACK the streaming seam's Scaladoc promises:
     * read the versioned admitted log, compute the newly admitted docs'
-    * md5 / band / gram rows with the SAME kernels the layout was built
+    * band / gram / md5 rows with the SAME kernels the layout was built
     * with, and append them to the three standing layout tables — after
     * which the next epoch's probes reject duplicates of the folded docs
     * without the admitted log ever being consulted on the hot path.
@@ -1959,167 +1985,99 @@ object Dedup {
     * The admitted log records corpus MEMBERSHIP (doc_id, source,
     * n_chars), not text — at 100 TB one does not copy the corpus into
     * its own changelog — so the fold joins the delta's doc_ids back to
-    * `texts` (the crawl/document store; only the delta's rows are read,
-    * O(delta) via a broadcast-able id set).
+    * `texts` (the crawl/document store; only the delta's rows are read).
     *
-    * Exactly-once across replays, with no fold-side state beyond the
-    * admitted log itself (the lakehouse maintenance-job pattern):
+    * Exactly-once across replays and crashes comes from each layout
+    * table's own (appId, batchId) ledger: the fold reads the admitted
+    * log's current version `v`, and commits to table `t` one append
+    * tagged ("fold", `v`) holding the kernel of the admissions in
+    * (done_t, v], where done_t is the last version folded into `t`. A
+    * table whose ledger already holds `v` is skipped, so a replayed
+    * fold is a no-op and a fold that died after committing to some
+    * tables finishes the others on the next run, each from its own
+    * done_t. On the clean path all three tables share one delta and one
+    * cut. A doc_id admitted twice is folded twice, just as a rebuild on
+    * corpus + admissions includes it twice.
     *
-    *   - WHAT was folded is recorded in the admitted log's own
-    *     (appId, batchId) ledger — a fold brackets its table appends
-    *     between two zero-row marker commits, `<prefix>.fold.intent`
-    *     and `<prefix>.fold.done`, each tagged with the admitted-log
-    *     version `v` the fold read. A fully-replayed fold (same or
-    *     older `v`) short-circuits on the done marker; the delta of the
-    *     next fold is `changesBetween(doneV, v]` — each admitted row
-    *     folds exactly once.
-    *   - An intent with NO matching done marker means a previous fold
-    *     DIED between its table appends (each append is job-atomic —
-    *     a killed job publishes nothing) — the recovery fold re-runs
-    *     the delta WITH per-table anti-join guards, so rows a torn fold
-    *     already published are not appended twice: grams guard on
-    *     doc_id (corpus side bucketed by doc_id — exchange-free),
-    *     hashes guard on h (bucketed by h — exchange-free; an admitted
-    *     doc whose h was already folded is probe-equivalent either
-    *     way), bands guard on (doc_id, band) against the whole band
-    *     table. The clean path pays none of these scans — that is what
-    *     the intent marker buys.
-    *   - Concurrent folds are NOT supported (one maintenance job at a
-    *     time — the same operational contract as Versioned.optimize);
-    *     crash recovery and replays are.
+    * What three tables give up against one shared manifest is
+    * cross-table atomic visibility: a reader between two of a fold's
+    * commits sees the fold in some tables only. Three sequential
+    * appends have always had that window; the probe stays correct in
+    * it, only less complete. Concurrent folds are NOT supported (one
+    * maintenance job at a time); crash recovery and replays are, and
+    * a compaction that races a fold loses ([[compactCorpusLayout]]).
     *
-    * PRECONDITION — admitted doc_ids are globally FRESH (r12 advice):
-    * the torn-recovery guards anti-join on doc_id (grams) and
-    * (doc_id, band) (bands), which is correct only because a delta
-    * doc_id can never already exist in the standing layout. The
-    * admission cascade guarantees this for well-behaved producers (a
-    * standing-corpus duplicate is rejected, so an id is admitted at
-    * most once per text), but a producer that REUSES an id for
-    * different text would fold inconsistently: appended on the clean
-    * path, silently dropped on the recovery path, breaking
-    * fold ≡ rebuild. The fold therefore asserts the checkable half
-    * cheaply before marking intent — no delta doc_id may repeat within
-    * the window or appear in the already-folded admitted history
-    * (O(admitted log), membership rows only — never a layout scan, so
-    * the clean path still pays zero guard scans over corpus tables).
-    *
-    * Returns the done-commit's version, or None when there was nothing
-    * new to fold. AnnIndexSpec pins fold ≡ from-scratch rebuild on
-    * corpus+admissions (clean, replayed, and torn-recovery folds);
+    * Returns `Some(v)`, or None when there was nothing new to fold.
+    * AnnIndexSpec pins fold ≡ from-scratch rebuild on corpus+admissions
+    * (clean, replayed, part-committed and reused-doc_id folds);
     * StreamingSpec extends the d13 chain one link (stream → fold →
     * next-epoch probe rejects duplicates of folded docs). */
   def refreshCorpusLayout(spark: SparkSession, prefix: String,
       admittedPath: String, texts: DataFrame,
-      shingleN: Int = 3, bands: Int = 8, rows: Int = 4,
-      buckets: Int = 8): Option[Long] = {
-    import graft.sources.{Io, Versioned}
-    val intentApp = s"$prefix.fold.intent"
-    val doneApp = s"$prefix.fold.done"
-    // A compaction that died in its DROP→RENAME window leaves a layout
-    // table with no catalog entry; the appends below refuse to create
-    // a missing table (Io.requireStanding), so finish the swap FIRST —
-    // otherwise a recoverable torn compaction would either fail the
-    // fold or (before r14's append guard) silently recreate the table
-    // with only the delta rows and lose the standing corpus on the
-    // NEXT compaction's rollback (r13 advice).
-    layoutTables(prefix).foreach(Io.finishTornCompaction(spark, _))
+      shingleN: Int = 3, bands: Int = 8, rows: Int = 4): Option[Long] =
+    foldInto(spark, prefix, LayoutTables, admittedPath, texts, shingleN, bands, rows)
+
+  /** [[refreshCorpusLayout]] over `tables` only: a fold that stopped
+    * after committing to the first n layout tables is this call on
+    * `LayoutTables.take(n)`. */
+  private[graft] def foldInto(spark: SparkSession, prefix: String,
+      tables: Seq[LayoutTable], admittedPath: String, texts: DataFrame,
+      shingleN: Int, bands: Int, rows: Int): Option[Long] = {
+    import graft.sources.Versioned
     val v = Versioned.currentVersion(spark, admittedPath)
-    val doneV = Versioned.lastCommittedBatch(spark, admittedPath, doneApp)
-    if (doneV.exists(_ >= v)) return None // fully-replayed fold
-    val delta = Versioned.changesBetween(spark, admittedPath,
-        doneV.getOrElse(0L), v)
-      .select(col("doc_id")).cut // feeds 3 row families + count
-    // Every exit below — including the require()s and any append/commit
-    // failure — must free the cut blocks, or a long-lived
-    // stream→fold session leaks exactly the blocks the checkpoints
-    // pinned (r13 advice). docs is registered once it is created.
-    var docsCp: DataFrame = null
-    try {
-    if (delta.isEmpty) return None
-    // Fresh-doc_id precondition (see Scaladoc): repeats within the window
-    // or against the already-folded history must fail LOUD before the
-    // intent marker lands — a violated precondition must not read as a
-    // torn fold to the next run.
-    val repeated = delta.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("c")).filter(col("c") > 1).limit(1).count()
-    require(repeated == 0L, s"refreshCorpusLayout($prefix): admitted delta " +
-      "contains a repeated doc_id — ids must be globally fresh (see Scaladoc)")
-    doneV.foreach { dv =>
-      val refolded = delta.join(
-          Versioned.changesBetween(spark, admittedPath, 0L, dv)
-            .select(col("doc_id")), Seq("doc_id"), "left_semi")
-        .limit(1).count()
-      require(refolded == 0L, s"refreshCorpusLayout($prefix): admitted delta " +
-        "reuses a doc_id already folded in a prior window — ids must be " +
-        "globally fresh (see Scaladoc)")
+    val behind = tables
+      .map(t => t -> Versioned.lastCommittedBatch(spark, t.path(spark, prefix), FoldApp)
+        .getOrElse(0L))
+      .filter(_._2 < v)
+    // Tables folded through the same version share one delta and one
+    // cut; only a fold that stopped part-way leaves two such groups.
+    val folded = behind.groupBy(_._2).toSeq.sortBy(_._1).map { case (done, group) =>
+      val docs = Versioned.changesBetween(spark, admittedPath, done, v)
+        .select(col("doc_id"))
+        .join(texts.select(col("doc_id"), col("text")), Seq("doc_id"))
+        .cut // feeds every table's kernel
+      // The finally drops the cut's blocks on every exit, or a
+      // long-lived stream→fold session leaks one delta per fold.
+      try !docs.isEmpty && {
+        group.foreach { case (t, _) =>
+          Versioned.commitBatchAppend(spark, t.path(spark, prefix), FoldApp, v,
+            t.kernel(docs, shingleN, bands, rows))
+        }
+        true
+      } finally graft.unpersistCheckpoint(docs)
     }
-    val torn = Versioned.lastCommittedBatch(spark, admittedPath, intentApp)
-      .exists(i => doneV.forall(_ < i))
-    // Mark intent BEFORE any table append, so OUR crash is detectable.
-    Versioned.commitBatchAppend(spark, admittedPath, intentApp, v,
-      Versioned.read(spark, admittedPath).limit(0))
-    val docs = delta.join(texts.select(col("doc_id"), col("text")), Seq("doc_id"))
-      .cut // feeds all three kernels
-    docsCp = docs
-    val bt = Lsh.minhashBandTable(docs, shingleN, bands, rows)
-    val hs = docs.select(col("doc_id"), shingleHashSet(col("text")).as("hs"))
-    val hh = docs.select(col("doc_id"), md5(col("text")).as("h"))
-    val (btNew, hsNew, hhNew) = if (!torn) (bt, hs, hh) else
-      (bt.join(spark.table(s"${prefix}_bands").select(col("doc_id"), col("band")),
-          Seq("doc_id", "band"), "left_anti"),
-        hs.join(spark.table(s"${prefix}_grams").select(col("doc_id")),
-          Seq("doc_id"), "left_anti"),
-        hh.join(spark.table(s"${prefix}_hashes").select(col("h")),
-          Seq("h"), "left_anti"))
-    // Bands FIRST (the torn-detection probe order the guards assume),
-    // then grams, then hashes, then the done marker.
-    Io.appendBucketedBy(btNew, s"${prefix}_bands", Seq("band", "sig"), buckets)
-    Io.appendBucketedBy(hsNew, s"${prefix}_grams", Seq("doc_id"), buckets)
-    Io.appendBucketedBy(hhNew, s"${prefix}_hashes", Seq("h"), buckets)
-    Versioned.commitBatchAppend(spark, admittedPath, doneApp, v,
-      Versioned.read(spark, admittedPath).limit(0))
-    // One fold per epoch in a long-lived session (the stream→fold→next-
-    // epoch chain): the finally below drops the per-fold checkpoint
-    // blocks on EVERY exit — success, precondition require(), or a
-    // failed append (a torn fold's retry re-derives them) — or they
-    // accumulate linearly (the minLabelPropagation lesson, r12 advice).
-    } finally {
-      if (docsCp != null) graft.unpersistCheckpoint(docsCp)
-      graft.unpersistCheckpoint(delta)
-    }
+    if (folded.contains(true)) Some(v) else None
   }
 
-  /** The maintenance half [[refreshCorpusLayout]] makes necessary (r12
-    * verdict): each fold appends up to `buckets` files to each of
-    * `<prefix>_bands`, `<prefix>_grams` and `<prefix>_hashes`, so at
+  /** The maintenance half [[refreshCorpusLayout]] makes necessary: each
+    * fold appends up to `buckets` files to each layout table, so at
     * production fold cadence the standing layout accumulates small
     * files without bound — the hot probe path degrades long before
-    * 100 TB. This pass rewrites each table whose file count crossed
-    * `maxFilesPerBucket` per bucket, and nothing else, through the one
-    * shadow-table + catalog-rename path
-    * ([[graft.sources.Io.compactBucketedTable]]), with torn-swap
-    * recovery on entry ([[graft.sources.Io.finishTornCompaction]]).
-    *
-    * Invariants, spec-pinned in AnnIndexSpec: the bucket spec survives
-    * (exchange elision after = before), probe results are
-    * byte-identical, and the FOLD LEDGER is untouched — compaction never
-    * reads or writes the admitted log, so a fold → compact → torn fold →
-    * recovery sequence stays exactly-once (the recovery guards anti-join
-    * the same rows they would have, just from fewer files). Same
-    * operational contract as the fold: one maintenance job at a time;
-    * crash recovery supported.
+    * 100 TB. This pass rewrites each table holding more than
+    * `maxFilesPerBucket` × buckets data files (the bucket count its
+    * manifest records), and nothing else, with
+    * [[graft.sources.Versioned.optimize]]: a replace commit that keeps
+    * the bucket spec and the rows, so exchange elision and probe
+    * results are unchanged (AnnIndexSpec pins both). The fold ledger
+    * rides along untouched: the replace manifest is a new version of
+    * the same table, and the next fold still finds its last fold
+    * version on the ledger. A fold committing while a table rewrites
+    * wins: that table's optimize aborts and it stays as it was, to be
+    * compacted by the next pass.
     *
     * Returns per-table (filesBefore, filesAfter) for the tables that
     * were actually rewritten. */
   def compactCorpusLayout(spark: SparkSession, prefix: String,
       targetFileBytes: Long = 128L << 20,
-      maxFilesPerBucket: Int = 2): Map[String, (Int, Int)] =
-    layoutTables(prefix).flatMap { t =>
-      graft.sources.Io.compactBucketedTable(spark, t, targetFileBytes, maxFilesPerBucket)
-        .map(t -> _)
+      maxFilesPerBucket: Int = 2): Map[String, (Int, Int)] = {
+    import graft.sources.Versioned
+    LayoutTables.flatMap { t =>
+      val path = t.path(spark, prefix)
+      val before = Versioned.fileCount(spark, path, Versioned.currentVersion(spark, path))
+      val buckets = Versioned.bucketSpec(spark, path).fold(1)(_.numBuckets)
+      if (before <= maxFilesPerBucket * buckets) None
+      else Versioned.optimize(spark, path, targetFileBytes)
+        .map(v => s"${prefix}_${t.suffix}" -> ((before, Versioned.fileCount(spark, path, v))))
     }.toMap
-
-  /** The three standing tables of the corpus dedup layout under `prefix`. */
-  private def layoutTables(prefix: String): Seq[String] =
-    Seq(s"${prefix}_bands", s"${prefix}_grams", s"${prefix}_hashes")
+  }
 }

@@ -46,18 +46,15 @@ object Io {
 
   /** An append is MAINTENANCE of a standing table, never its creation
     * (that is [[writeBucketedBy]]'s job) — but `SaveMode.Append` +
-    * `saveAsTable` happily CREATEs a missing table. After a compaction
-    * crash in the DROP→RENAME window the standing table has no catalog
-    * entry, and an append that silently recreates it with only the
-    * delta rows turns a recoverable torn swap into silent data loss:
-    * the next [[finishTornCompaction]] sees shadow + live "original"
-    * and drops the shadow holding the entire standing corpus (r13
-    * advice). Fail loud instead — the caller recovers the swap first. */
+    * `saveAsTable` happily CREATEs a missing table. The standing table
+    * is an index over a whole corpus; an append that created it would
+    * publish an index holding only the batch, and every probe of it
+    * would silently miss the rest. Fail loud instead. */
   private def requireStanding(spark: SparkSession, table: String): Unit =
     require(spark.catalog.tableExists(table),
-      s"append to '$table': table does not exist — appends never create " +
-        "(a missing standing table usually means a torn compaction swap; " +
-        "run Io.finishTornCompaction first, then retry)")
+      s"append to '$table': table does not exist — appends never create it, " +
+        "because a table created by an append would hold only the batch; " +
+        "write the whole table with Io.writeBucketedBy first")
 
   /** Append a batch to a standing bucketed table — the incremental-
     * maintenance write: new bucket files land beside the old ones (per
@@ -97,107 +94,6 @@ object Io {
     * corpus may contain outlier blobs. */
   def readBinaryFiles(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
     spark.read.format("binaryFile").option("pathGlobFilter", glob).load(dir)
-
-  // ---- standing bucketed-layout compaction (r13) ------------------------
-  //
-  // [[appendBucketedBy]] is the incremental-maintenance WRITE; this is
-  // the maintenance half it makes necessary: every fold/append lands new
-  // files BESIDE the standing ones (per bucket id), so at production
-  // cadence the hot read path accumulates small files without bound —
-  // listing cost, task-scheduling overhead, and row-group fragmentation
-  // degrade the probe long before 100 TB. Compaction rewrites the layout
-  // to size-bounded files while preserving the TWO properties the layout
-  // exists for: the catalog bucket spec (exchange elision) and row
-  // content (byte-identical probe results). AnnIndexSpec asserts both
-  // post-compaction.
-  //
-  // Crash-safety contract (same single-maintainer model as the fold
-  // itself — one maintenance job at a time, crash recovery supported):
-  // a table compacts via a __compact shadow table + catalog rename;
-  // [[finishTornCompaction]] rolls an interrupted swap forward (orig
-  // dropped → rename shadow in) or back (both present → drop shadow) and
-  // is called automatically on entry.
-
-  private def tableMeta(spark: SparkSession, table: String) =
-    spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-
-  /** (data file count, data bytes) under `dir`, recursively — `part-*`
-    * files only, so commit markers and staging dirs never count. */
-  private def dataFileStats(spark: SparkSession,
-      dir: org.apache.hadoop.fs.Path): (Int, Long) = {
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return (0, 0L)
-    val it = fs.listFiles(dir, true)
-    var n = 0; var bytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.startsWith("part-")) { n += 1; bytes += f.getLen }
-    }
-    (n, bytes)
-  }
-
-  /** Data-file count of a catalog table's location (spec/test surface). */
-  def tableFileCount(spark: SparkSession, table: String): Int =
-    dataFileStats(spark,
-      new org.apache.hadoop.fs.Path(tableMeta(spark, table).location))._1
-
-  /** Recover an interrupted [[compactBucketedTable]] swap: the shadow
-    * table is complete before the swap starts, so an orphaned shadow
-    * with the original gone rolls FORWARD (rename in), a shadow beside
-    * a live original rolls BACK (drop shadow — the next compaction just
-    * re-runs), and a shadow DIRECTORY with no catalog entry (a crash
-    * inside saveAsTable) is deleted so the rewrite can start clean. */
-  def finishTornCompaction(spark: SparkSession, table: String): Unit = {
-    val shadow = s"${table}__compact"
-    val hasShadow = spark.catalog.tableExists(shadow)
-    val hasOrig = spark.catalog.tableExists(table)
-    if (hasShadow && !hasOrig)
-      spark.sql(s"ALTER TABLE `$shadow` RENAME TO `$table`")
-    else if (hasShadow && hasOrig)
-      spark.sql(s"DROP TABLE `$shadow`")
-    else if (!hasShadow) {
-      // no catalog entry — clear any orphaned directory from a crash
-      // inside the shadow write itself (job output is not yet a table).
-      val dir = new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(shadow)))
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(dir)) fs.delete(dir, true)
-    }
-  }
-
-  /** Compact an UNPARTITIONED bucketed table in place when its file
-    * count exceeds `maxFilesPerBucket` per bucket. The rewrite reads the
-    * standing table once, coalesces to ceil(bytes / targetFileBytes)
-    * tasks (NO exchange — compaction is an I/O rewrite, not a shuffle),
-    * and writes a shadow table under the SAME bucket spec read from the
-    * catalog, then swaps it in by rename. Each write task emits one file
-    * per bucket id it holds, so the result is ≤ tasks × buckets files —
-    * at the one-task floor, exactly `buckets` files, the layout minimum.
-    * Returns (filesBefore, filesAfter), or None when under threshold. */
-  def compactBucketedTable(spark: SparkSession, table: String,
-      targetFileBytes: Long = 128L << 20,
-      maxFilesPerBucket: Int = 2): Option[(Int, Int)] = {
-    finishTornCompaction(spark, table)
-    val meta = tableMeta(spark, table)
-    val spec = meta.bucketSpec.getOrElse(sys.error(
-      s"compactBucketedTable($table): not a bucketed table"))
-    val (files, bytes) =
-      dataFileStats(spark, new org.apache.hadoop.fs.Path(meta.location))
-    if (files <= maxFilesPerBucket * spec.numBuckets) return None
-    val shadow = s"${table}__compact"
-    val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val keys = spec.bucketColumnNames
-    val w = spark.table(table).coalesce(n).write
-      .bucketBy(spec.numBuckets, keys.head, keys.tail: _*)
-    val ws = if (spec.sortColumnNames.nonEmpty)
-      w.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*) else w
-    ws.format("parquet").saveAsTable(shadow)
-    spark.sql(s"DROP TABLE `$table`")
-    spark.sql(s"ALTER TABLE `$shadow` RENAME TO `$table`")
-    Some((files, tableFileCount(spark, table)))
-  }
 
   /** Morton (Z-order) interleave of two ≤`bits`-bit non-negative longs:
     * bit i of `a` lands at position 2i, bit i of `b` at 2i+1. Bits never

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.graft.BucketedFiles
 import org.apache.spark.sql.types.{DataType, StructType}
 import scala.util.control.NonFatal
 
@@ -46,12 +48,20 @@ import scala.util.control.NonFatal
   * `#delta=<base>` (below), `#txn=<appId>/<batchId>` (the streaming
   * ledger), `#schema=<json>`, the schema of the rows [[stage]]
   * wrote, as `StructType.json` on one line (partition columns last, the
-  * order partition discovery gives them), and `#partitionCols=<a,b>`
-  * when the stage was hive-partitioned. A reader of that version
-  * plans with the recorded schema, so it runs no footer-inference job;
-  * a manifest without the line (written before it existed, or by a
-  * commit that staged in another process) reads through inference as
-  * before. Layout under `path/`:
+  * order partition discovery gives them), `#partitionCols=<a,b>`
+  * when the stage was hive-partitioned, and
+  * `#buckets=<n>;<bucket cols>;<sort cols>` when the table is bucketed.
+  * A reader of that version plans with the recorded schema, so it runs
+  * no footer-inference job; a manifest without the line (written before
+  * it existed, or by a commit that staged in another process) reads
+  * through inference as before. The bucket spec is chosen once, when
+  * [[create]] first writes the table; every later stage of the table
+  * (appends, [[optimize]]'s restage, an update's replace) takes it from
+  * its base version's manifest, so no commit can change it. A bucketed
+  * version reads as one relation over all of its directories that
+  * carries the spec: a join on the bucket key plans no exchange on that
+  * side, with no catalog entry. Manifests of unbucketed tables carry no
+  * such line. Layout under `path/`:
   * {{{
   *   _versions/00000000000000000001.manifest   -- one per committed version
   *   data/txn-<uuid>/part-*.parquet            -- one dir per writer
@@ -134,6 +144,7 @@ object Versioned {
   private val DeltaRe = "#delta=([0-9]+)".r
   private val SchemaPrefix = "#schema="
   private val PartitionColsPrefix = "#partitionCols="
+  private val BucketsPrefix = "#buckets="
 
   /** Data directories of version `v` ("#"-prefixed lines are commit
     * metadata — e.g. the streaming batch tag or the delta base pointer —
@@ -156,20 +167,39 @@ object Versioned {
   private def partitionColsOf(lines: Seq[String]): Seq[String] =
     metaValue(lines, PartitionColsPrefix).toSeq.flatMap(_.split(','))
 
+  private def bucketLine(spec: BucketSpec): String =
+    BucketsPrefix + Seq(spec.numBuckets.toString, spec.bucketColumnNames.mkString(","),
+      spec.sortColumnNames.mkString(",")).mkString(";")
+
+  private def bucketsOf(lines: Seq[String]): Option[BucketSpec] =
+    metaValue(lines, BucketsPrefix).map { v =>
+      val Array(n, keys, sorts) = v.split(";", -1)
+      def cols(s: String) = s.split(',').toSeq.filter(_.nonEmpty)
+      BucketSpec(n.toInt, cols(keys), cols(sorts))
+    }
+
   /** Read `dirs` (relative to `path`) as one version whose manifest
     * lines are `lines`: with the schema the manifest records, or
     * inferring from footers when it has none. Each directory of a
     * hive-partitioned version is its own partition root, which Spark's
     * multi-root partition discovery refuses, so those directories are
     * read one by one and unioned; filters still push into every child
-    * scan, so partition pruning survives the union. */
+    * scan, so partition pruning survives the union. A bucketed version
+    * reads as one bucketed relation over all of its directories. */
   private def load(spark: SparkSession, path: String, lines: Seq[String],
       dirs: Seq[String]): DataFrame = {
-    val reader = metaValue(lines, SchemaPrefix).fold(spark.read)(json =>
-      spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]))
+    val schema = metaValue(lines, SchemaPrefix)
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
     val abs = dirs.map(d => s"$path/$d")
-    if (partitionColsOf(lines).isEmpty) reader.parquet(abs: _*)
-    else abs.map(reader.parquet(_)).reduce(_ unionByName _)
+    bucketsOf(lines) match {
+      case Some(spec) =>
+        BucketedFiles.read(spark, abs, schema.getOrElse(throw new IllegalStateException(
+          s"bucketed manifest at $path records no schema")), spec)
+      case None =>
+        val reader = schema.fold(spark.read)(spark.read.schema)
+        if (partitionColsOf(lines).isEmpty) reader.parquet(abs: _*)
+        else abs.map(reader.parquet(_)).reduce(_ unionByName _)
+    }
   }
 
   /** Publish an APPEND commit's manifest: a 2-line delta against `base`
@@ -291,10 +321,14 @@ object Versioned {
     }
   }
 
-  /** CREATE TABLE ... AS: stages `df` and commits it as version 1. */
-  def create(spark: SparkSession, path: String, df: DataFrame): Long = {
+  /** CREATE TABLE ... AS: stages `df` and commits it as the table's
+    * first version (or, over an existing table, as a replace commit).
+    * `buckets` lays the files out bucketed and sorted by that spec; the
+    * manifest records it, and every later commit of the table keeps it. */
+  def create(spark: SparkSession, path: String, df: DataFrame,
+      buckets: Option[BucketSpec] = None): Long = {
     val txn = begin(spark, path)
-    stage(txn, df)
+    stageWith(txn, df, Nil, buckets)
     commitReplace(spark, txn)
   }
 
@@ -323,13 +357,30 @@ object Versioned {
     * then get directory pruning on those columns through every commit's
     * dir (the streaming ANN ingest's probe path), with zero change to
     * the commit protocol (the manifest still names one dir, and records
-    * the columns so readers of the version know to read per dir). */
+    * the columns so readers of the version know to read per dir). A
+    * bucketed table's stage is bucketed by the spec its base version
+    * records. */
   def stage(txn: Txn, df: DataFrame, partitionCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(txn.stagingDir)
+    val buckets = if (txn.base < 1) None
+      else bucketsOf(readManifestLines(df.sparkSession, txn.path, txn.base))
+    stageWith(txn, df, partitionCols, buckets)
+  }
+
+  private def stageWith(txn: Txn, df: DataFrame, partitionCols: Seq[String],
+      buckets: Option[BucketSpec]): Unit = {
+    buckets match {
+      case Some(spec) =>
+        require(partitionCols.isEmpty,
+          s"bucketed table ${txn.path} cannot also be hive-partitioned")
+        BucketedFiles.write(df, txn.stagingDir, spec)
+      case None =>
+        val w = df.write.mode(SaveMode.Overwrite)
+        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+          .parquet(txn.stagingDir)
+    }
     txn.stagedMeta = (SchemaPrefix + Io.readBackSchema(df, partitionCols).json) +:
-      (if (partitionCols.isEmpty) Nil else Seq(PartitionColsPrefix + partitionCols.mkString(",")))
+      ((if (partitionCols.isEmpty) Nil else Seq(PartitionColsPrefix + partitionCols.mkString(","))) ++
+        buckets.map(bucketLine))
   }
 
   /** COMMIT of an INSERT: version base+1 = base's dirs + staged dir.
@@ -372,6 +423,21 @@ object Versioned {
   def readAsOf(spark: SparkSession, path: String, version: Long): DataFrame = {
     val lines = readManifestLines(spark, path, version)
     load(spark, path, lines, resolveDirs(spark, path, lines))
+  }
+
+  /** The bucket spec the current version records, if the table is bucketed. */
+  def bucketSpec(spark: SparkSession, path: String): Option[BucketSpec] =
+    bucketsOf(readManifestLines(spark, path, currentVersion(spark, path)))
+
+  /** Data files (`part-*`) of `version`, over all its directories. */
+  def fileCount(spark: SparkSession, path: String, version: Long): Int = {
+    val f = fs(spark, path)
+    readManifest(spark, path, version).map { d =>
+      val it = f.listFiles(new Path(s"$path/$d"), true)
+      var n = 0
+      while (it.hasNext) if (it.next().getPath.getName.startsWith("part-")) n += 1
+      n
+    }.sum
   }
 
   // ---- streaming sink: exactly-once appends keyed by (appId, batchId) --
@@ -489,7 +555,9 @@ object Versioned {
   /** OPTIMIZE analog: rewrite the current version's rows into
     * ceil(bytes / target) files (coalesced, no shuffle) and publish as a
     * REPLACE commit — same rows, compacted layout (partitioned by the
-    * same columns the version's manifest records), atomically visible;
+    * same columns the version's manifest records; a bucketed table
+    * keeps its spec, and each of the ceil(bytes / target) write tasks
+    * emits one file per bucket it holds), atomically visible;
     * prior versions keep the old layout (time travel unaffected). A
     * writer landing mid-compaction wins: the compaction conflicts,
     * ABORTS and returns None rather than clobbering the newer commit —

@@ -272,6 +272,10 @@ class AnnIndexSpec extends AnyFunSuite {
         .forEach(p => Files.delete(p))
   }
 
+  /** Corpus dedup layout table `table`, read at its current version. */
+  private def layout(sess: org.apache.spark.sql.SparkSession, table: String) =
+    graft.sources.Versioned.read(sess, Ddl.warehousePath(sess, table))
+
   test("d13 probes a persisted corpus layout: corpus side shuffle-free, equal to in-memory") {
     import graft.operators.{Dedup, Lsh}
     val docs = Tables.documents(spark, TestSpark.sf)
@@ -295,7 +299,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val sess = spark.newSession()
     sess.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val batJ = Lsh.minhashBandTable(Tables.documents(sess, TestSpark.sf).filter(isBatch), 3, 8, 4)
-    val j = batJ.as("a").join(sess.table("graft_corpus_bands").as("b"),
+    val j = batJ.as("a").join(layout(sess, "graft_corpus_bands").as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
       .select(col("a.doc_id"), col("b.doc_id"))
     j.collect()
@@ -308,7 +312,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(jplan.contains("Bucketed: true"),
       s"corpus band scan must be bucketed:\n${jplan.take(4000)}")
     Seq("graft_corpus_bands", "graft_corpus_hashes", "graft_corpus_grams")
-      .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
+      .foreach(dropManaged)
   }
 
   test("band lattices beyond the 64-bit signature are rejected loudly") {
@@ -330,8 +334,8 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("corpus-refresh fold ≡ from-scratch rebuild — clean, replayed, and torn-recovery folds") {
-    import graft.operators.{Dedup, Lsh}
-    import graft.sources.{Io, Versioned}
+    import graft.operators.Dedup
+    import graft.sources.Versioned
     val docs = Tables.documents(spark, TestSpark.sf)
     val isBatch = col("doc_id") % 5 === 0
     val prefix = "graft_fold"
@@ -355,11 +359,17 @@ class AnnIndexSpec extends AnyFunSuite {
           w => concat(lit(pfx), w)), " ").as("text"),
         col("source"), col("n_chars"))
     val crawl2 = newVocabDocs("qq", 10000000L).localCheckpoint()
-    val textStore = docs.select(col("doc_id"), col("text"))
-      .unionByName(crawl2.select(col("doc_id"), col("text")))
+    // New texts under REUSED doc_ids: every word of a corpus doc
+    // rewritten, so the cascade admits it, under that doc's own id.
+    val crawl3 = corpus.filter(col("doc_id") % 7 === 1)
+      .select(col("doc_id"), array_join(transform(split(col("text"), " "),
+        w => concat(lit("rr"), w)), " ").as("text"), col("source"), col("n_chars"))
+      .localCheckpoint()
+    val textStore = Seq(docs, crawl2, crawl3).map(_.select(col("doc_id"), col("text")))
+      .reduce(_ unionByName _)
 
     def snap(p: String): Seq[Seq[String]] =
-      layoutTables(p).map(t => spark.table(t).collect().map(_.toString).sorted.toSeq)
+      layoutTables(p).map(t => layout(spark, t).collect().map(_.toString).sorted.toSeq)
     def rebuildOnAdmissions(): Seq[Seq[String]] = {
       layoutTables(rb).foreach(dropManaged)
       val admittedTexts = Versioned.read(spark, admitted).select(col("doc_id"))
@@ -377,34 +387,47 @@ class AnnIndexSpec extends AnyFunSuite {
     // 2. Replayed fold (nothing new): no-op, tables bit-identical.
     assert(Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore).isEmpty)
     assert(snap(prefix) == afterFold1, "replayed fold mutated the layout")
+    // Rewriting the layout starts its fold ledgers afresh: the next
+    // fold folds every admission into it again.
+    Dedup.writeCorpusDedupLayout(corpus, prefix)
+    assert(Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore).nonEmpty)
+    assert(snap(prefix) == afterFold1, "fold into a rewritten layout != rebuild")
 
     // 3. Torn-recovery: epoch 2 admits a new-vocabulary crawl; a fold
-    //    commits its INTENT marker and appends the bands family, then
-    //    "dies" (no grams/hashes, no done marker). The recovery fold
-    //    must detect the orphan intent, re-run the delta WITH guards,
-    //    and land exactly the rebuild state — no duplicated band rows.
+    //    commits to the bands table, then "dies" before grams and
+    //    hashes. The next fold must skip bands (its ledger holds the
+    //    version) and fold the others — no duplicated band rows.
     sink(crawl2.toDF(), 2L)
-    val v = Versioned.currentVersion(spark, admitted)
-    Versioned.commitBatchAppend(spark, admitted, s"$prefix.fold.intent", v,
-      Versioned.read(spark, admitted).limit(0))
-    val tornBands = Lsh.minhashBandTable(
-        crawl2.select(col("doc_id"), col("text")), 3, 8, 4)
-    Io.appendBucketedBy(tornBands, s"${prefix}_bands", Seq("band", "sig"), 8)
+    def foldBandsOnly() = Dedup.foldInto(spark, prefix, Dedup.LayoutTables.take(1),
+      admitted, textStore, 3, 8, 4)
+    assert(foldBandsOnly().nonEmpty)
     assert(Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore).nonEmpty)
     assert(snap(prefix) == rebuildOnAdmissions(), "torn-recovery fold != rebuild")
+
+    // 4. Reused doc_ids: epoch 3 admits new texts under corpus doc_ids.
+    //    A fold appends them on every path — here again one committed
+    //    to bands only, then finished — just as the rebuild includes
+    //    them.
+    sink(crawl3.toDF(), 3L)
+    val reused = crawl3.select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    assert(reused.nonEmpty && Versioned.read(spark, admitted).select(col("doc_id"))
+      .collect().map(_.getLong(0)).toSet.intersect(reused) == reused,
+      "the reused-id texts were not all admitted")
+    assert(foldBandsOnly().nonEmpty)
+    assert(Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore).nonEmpty)
+    assert(snap(prefix) == rebuildOnAdmissions(), "reused-doc_id fold != rebuild")
     (layoutTables(prefix) ++ layoutTables(rb)).foreach(dropManaged)
   }
 
   test("standing-layout compaction: files shrink, probes byte-identical, exchange elision survives, fold ledger intact") {
     import graft.operators.{Dedup, Lsh}
-    import graft.sources.{Io, Versioned}
+    import graft.sources.Versioned
     val docs = Tables.documents(spark, TestSpark.sf)
     val isBatch = col("doc_id") % 5 === 0
     val prefix = "graft_cmp"
     val rb = "graft_cmp_rb"
     def layoutTables(p: String) = Seq(s"${p}_bands", s"${p}_hashes", s"${p}_grams")
-    (layoutTables(prefix) ++ layoutTables(rb) ++
-      layoutTables(prefix).map(_ + "__compact")).foreach(dropManaged)
+    (layoutTables(prefix) ++ layoutTables(rb)).foreach(dropManaged)
     val corpus = docs.filter(!isBatch)
     Dedup.writeCorpusDedupLayout(corpus, prefix)
     val admitted = Files.createTempDirectory("graft-cmp").toString + "/admitted"
@@ -424,7 +447,11 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore).nonEmpty)
 
     def snap(p: String): Seq[Seq[String]] =
-      layoutTables(p).map(t => spark.table(t).collect().map(_.toString).sorted.toSeq)
+      layoutTables(p).map(t => layout(spark, t).collect().map(_.toString).sorted.toSeq)
+    def files(t: String): Int = {
+      val path = Ddl.warehousePath(spark, t)
+      Versioned.fileCount(spark, path, Versioned.currentVersion(spark, path))
+    }
     def probe(): Seq[String] =
       Dedup.incrementalDedupOnLayout(spark, prefix, crawl2.toDF())
         .collect().map(_.toString).sorted.toSeq
@@ -435,16 +462,15 @@ class AnnIndexSpec extends AnyFunSuite {
     //    bytes it returned before.
     val contentBefore = snap(prefix)
     val probeBefore = probe()
-    val filesBefore = layoutTables(prefix)
-      .map(t => t -> Io.tableFileCount(spark, t)).toMap
-    // maxFilesPerBucket = 0: every populated directory/table is over
+    val filesBefore = layoutTables(prefix).map(t => t -> files(t)).toMap
+    // maxFilesPerBucket = 0: every populated table is over
     // threshold, so the whole layout rewrites — the test exercises the
     // full machinery; production keeps the default threshold.
     val res = Dedup.compactCorpusLayout(spark, prefix, maxFilesPerBucket = 0)
     assert(res.keySet == layoutTables(prefix).toSet,
       s"expected all three tables rewritten, got ${res.keySet}")
     layoutTables(prefix).foreach { t =>
-      val after = Io.tableFileCount(spark, t)
+      val after = files(t)
       assert(after < filesBefore(t),
         s"$t: $after files after vs ${filesBefore(t)} before — no reduction")
     }
@@ -458,7 +484,7 @@ class AnnIndexSpec extends AnyFunSuite {
     sess.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val batJ = Lsh.minhashBandTable(
       sess.createDataFrame(crawl2.toDF().rdd, crawl2.schema), 3, 8, 4)
-    val j = batJ.as("a").join(sess.table(s"${prefix}_bands").as("b"),
+    val j = batJ.as("a").join(layout(sess, s"${prefix}_bands").as("b"),
       col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
     j.collect()
     val jplan = j.queryExecution.executedPlan.treeString.split("== Initial Plan ==")(0)
@@ -466,17 +492,14 @@ class AnnIndexSpec extends AnyFunSuite {
       && jplan.contains("Bucketed: true"),
       s"bucketed read degraded post-compaction:\n${jplan.take(3000)}")
 
-    // 3. The fold ledger is untouched: a TORN fold interrupted before
-    //    recovery, with a compaction running in between (the nastiest
-    //    legal interleaving — compaction must preserve the torn rows it
-    //    compacts), still recovers to exactly the from-scratch rebuild.
+    // 3. The fold ledger is untouched: a TORN fold (committed to the
+    //    bands table only), with a compaction running before its
+    //    recovery (the nastiest legal interleaving — the replace commit
+    //    must keep the fold's ledger tag reachable and its rows), still
+    //    recovers to exactly the from-scratch rebuild.
     sink(crawl2.toDF(), 2L)
-    val v = Versioned.currentVersion(spark, admitted)
-    Versioned.commitBatchAppend(spark, admitted, s"$prefix.fold.intent", v,
-      Versioned.read(spark, admitted).limit(0))
-    Io.appendBucketedBy(
-      Lsh.minhashBandTable(crawl2.select(col("doc_id"), col("text")), 3, 8, 4),
-      s"${prefix}_bands", Seq("band", "sig"), 8)
+    assert(Dedup.foldInto(spark, prefix, Dedup.LayoutTables.take(1),
+      admitted, textStore, 3, 8, 4).nonEmpty)
     assert(Dedup.compactCorpusLayout(spark, prefix, maxFilesPerBucket = 0).nonEmpty)
     assert(Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore).nonEmpty)
     def rebuildOnAdmissions(): Seq[Seq[String]] = {
@@ -488,110 +511,7 @@ class AnnIndexSpec extends AnyFunSuite {
       snap(rb)
     }
     assert(snap(prefix) == rebuildOnAdmissions(),
-      "fold → compact → torn fold → compact → recovery != rebuild")
-    (layoutTables(prefix) ++ layoutTables(rb)).foreach(dropManaged)
-  }
-
-  test("torn compaction swap recovery: roll forward, roll back, orphan dir") {
-    import graft.sources.Io
-    import spark.implicits._
-    Seq("cmp_swap", "cmp_swap__compact").foreach(dropManaged)
-    def mk(table: String, n: Int): Unit =
-      (0 until n).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-        .write.bucketBy(2, "k").sortBy("k").format("parquet").saveAsTable(table)
-    // Roll FORWARD: shadow complete, original already dropped — the
-    // crash window between DROP and RENAME must finish the swap.
-    mk("cmp_swap__compact", 10)
-    Io.finishTornCompaction(spark, "cmp_swap")
-    assert(spark.catalog.tableExists("cmp_swap")
-      && !spark.catalog.tableExists("cmp_swap__compact"))
-    assert(spark.table("cmp_swap").count() == 10)
-    // Roll BACK: shadow beside a live original — the original wins, the
-    // next compaction simply re-runs.
-    mk("cmp_swap__compact", 3)
-    Io.finishTornCompaction(spark, "cmp_swap")
-    assert(spark.table("cmp_swap").count() == 10
-      && !spark.catalog.tableExists("cmp_swap__compact"))
-    // Orphan DIRECTORY (crash inside the shadow write, no catalog
-    // entry): cleared so the rewrite can start clean — this is the
-    // failure mode that otherwise kills saveAsTable with
-    // LOCATION_ALREADY_EXISTS forever after.
-    val orphan = new File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      "cmp_swap__compact")
-    orphan.mkdirs()
-    Files.write(new File(orphan, "part-stale").toPath, Array[Byte](1, 2))
-    Io.finishTornCompaction(spark, "cmp_swap")
-    assert(!orphan.exists(), "orphan shadow directory not cleared")
-    assert(spark.table("cmp_swap").count() == 10)
-    dropManaged("cmp_swap")
-  }
-
-  test("torn compaction then fold: the fold finishes the swap first, fold == rebuild") {
-    // The r13-advice hole: a compaction dying between DROP TABLE and
-    // RENAME leaves a layout table with no catalog entry; a fold's append
-    // used to CREATE the table fresh with only the delta rows, and the
-    // next compaction's rollback then dropped the shadow holding the
-    // standing corpus. Pin the fix end-to-end: the fold rolls the swap
-    // forward on entry and lands exactly the from-scratch rebuild, and
-    // the sink (the other writer entry) rolls it forward before probing.
-    import graft.operators.Dedup
-    import graft.sources.Versioned
-    val docs = Tables.documents(spark, TestSpark.sf)
-    val isBatch = col("doc_id") % 5 === 0
-    val prefix = "graft_tc"
-    val rb = "graft_tc_rb"
-    def layoutTables(p: String) = Seq(s"${p}_bands", s"${p}_hashes", s"${p}_grams")
-    (layoutTables(prefix) ++ layoutTables(rb) ++
-      layoutTables(prefix).map(_ + "__compact")).foreach(dropManaged)
-    val corpus = docs.filter(!isBatch)
-    Dedup.writeCorpusDedupLayout(corpus, prefix)
-    val admitted = Files.createTempDirectory("graft-tc").toString + "/admitted"
-    val sink = Dedup.streamingIncrementalDedupSink(prefix, admitted, "tcapp")
-    val crawl = docs.filter(isBatch).localCheckpoint()
-    sink(crawl.toDF(), 0L)
-    def newVocabDocs(pfx: String, idShift: Long) = docs
-      .filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + idShift).as("doc_id"),
-        array_join(transform(split(col("text"), " "),
-          w => concat(lit(pfx), w)), " ").as("text"),
-        col("source"), col("n_chars"))
-    val crawl2 = newVocabDocs("tc", 30000000L).localCheckpoint()
-    val textStore = docs.select(col("doc_id"), col("text"))
-      .unionByName(crawl2.select(col("doc_id"), col("text")))
-    assert(Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore).nonEmpty)
-
-    // Next epoch admits new docs, THEN a compaction dies in its swap
-    // window: shadow complete, original dropped — the exact DROP→RENAME
-    // crash state, on ALL THREE layout tables, sitting between admission
-    // and fold (the interleaving the r13 advice called untested).
-    def tearSwaps(): Unit = layoutTables(prefix).foreach { t =>
-      spark.sql(s"ALTER TABLE `$t` RENAME TO `${t}__compact`")
-      assert(!spark.catalog.tableExists(t))
-    }
-    def assertSwapsFinished(writer: String): Unit = layoutTables(prefix).foreach { t =>
-      assert(spark.catalog.tableExists(t) &&
-        !spark.catalog.tableExists(s"${t}__compact"),
-        s"$t: torn swap not finished by the $writer")
-    }
-    sink(crawl2.toDF(), 1L)
-    tearSwaps()
-
-    // The fold must recover the swap, not recreate tables from the delta.
-    assert(Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore).nonEmpty)
-    assertSwapsFinished("fold")
-    // The sink must recover it before its probe reads the tables; the
-    // re-offered epoch is already folded, so it admits nothing.
-    tearSwaps()
-    sink(crawl2.toDF(), 2L)
-    assertSwapsFinished("sink")
-    def snap(p: String): Seq[Seq[String]] =
-      layoutTables(p).map(t => spark.table(t).collect().map(_.toString).sorted.toSeq)
-    val admittedTexts = Versioned.read(spark, admitted).select(col("doc_id"))
-      .join(textStore, Seq("doc_id"))
-    Dedup.writeCorpusDedupLayout(
-      corpus.select(col("doc_id"), col("text")).unionByName(admittedTexts), rb)
-    assert(snap(prefix) == snap(rb), "torn-compact → fold != rebuild")
+      "torn fold → compact → recovery != rebuild")
     (layoutTables(prefix) ++ layoutTables(rb)).foreach(dropManaged)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -9,65 +9,62 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Corpus-layout maintenance PROPERTY test (r13 verdict item 5):
   * VersionedOccPropertySpec pins the LEDGER invariants on generated
   * schedules; the layout's maintenance ops — fold, killed fold,
-  * compaction, TORN compaction (both crash windows of the shadow swap)
-  * — were only ever asserted in example-based AnnIndexSpec sequences.
-  * This spec generates random interleavings of the full maintenance
-  * surface against a real (tiny) corpus dedup layout and asserts, per
-  * schedule, the two invariants the whole machine exists for:
+  * compaction, killed compaction — were only ever asserted in
+  * example-based AnnIndexSpec sequences. This spec generates random
+  * interleavings of the full maintenance surface against a real (tiny)
+  * corpus dedup layout and asserts, per schedule, the invariants the
+  * whole machine exists for:
   *
   *   1. exactly-once admission — the admitted log holds EXACTLY the
   *      fresh slices (corpus duplicates rejected every time, nothing
   *      admitted twice), across any interleaving of folds, killed
-  *      folds, compactions, and torn compactions;
+  *      folds, compactions, and killed compactions;
   *   2. fold ≡ rebuild — after a closing fold, the standing layout is
-  *      row-identical to a from-scratch rebuild on corpus + admissions,
-  *      and no `__compact` shadow table is left behind.
+  *      row-identical to a from-scratch rebuild on corpus + admissions;
+  *   3. vacuum is safe — `Versioned.vacuum(minAgeMs = 0)` on every
+  *      layout table removes exactly the killed compactions' stages,
+  *      and every table reads the same rows after it as before.
   *
-  * Torn states are injected as the exact crash-window catalog states:
-  * TornFwd = shadow complete + original dropped (a death between DROP
-  * and RENAME — roll-forward territory); TornBack = shadow complete
-  * beside the live original (a death before DROP — roll-back
-  * territory). Writer entry points (sink, fold, compaction) must
-  * recover them in stride; the generator deliberately lets an Admit
-  * land right on a torn state, the interleaving the r13 advice called
-  * out as untested.
+  * The crash states are the ones the commit protocol can leave:
+  * KilledFold(n) = a fold that committed to the first n layout tables
+  * (bands, grams, hashes order) and died; KilledCompact = an optimize
+  * whose restage landed and whose commit never did. The generator
+  * deliberately lets an Admit land right after either.
   *
   * Fixed Gen seeds — deterministic run-to-run. GRAFT_LAYOUT_SCHEDULES
-  * overrides the schedule count (default sized for the CI suite; the
-  * big evidence leg is a one-off recorded in BASELINE.md). */
+  * overrides the schedule count (a positive integer; default sized for
+  * the CI suite, the big evidence leg is a one-off recorded in
+  * BASELINE.md). */
 class CorpusLayoutPropertySpec extends AnyFunSuite {
   private val spark = TestSpark.spark
-  import graft.operators.{Dedup, Lsh}
-  import graft.sources.{Io, Versioned}
+  import graft.operators.Dedup
+  import graft.sources.Versioned
 
   // Small geometry: same code paths as production (8 buckets), sized so
-  // a schedule is seconds, not minutes. The probe reads the bucket count
-  // from the catalog, so only layout writes and folds take it.
+  // a schedule is seconds, not minutes. Folds and compactions read the
+  // bucket count from each table's manifest, so only the layout writes
+  // take it.
   private val Buckets = 1
 
   private sealed trait Op
   private case object Admit extends Op
   private case object Fold extends Op
-  private case object KilledFold extends Op
+  private case class KilledFold(tables: Int) extends Op
   private case object Compact extends Op
-  private case class TornFwd(table: String) extends Op
-  private case class TornBack(table: String) extends Op
+  private case class KilledCompact(table: String) extends Op
 
-  /** Suffix of the layout table a torn swap hits. */
-  private val genLayoutTable: Gen[String] = Gen.oneOf("bands", "grams", "hashes")
   private val genOp: Gen[Op] = Gen.frequency(
     5 -> Gen.const(Admit),
     3 -> Gen.const(Fold),
-    1 -> Gen.const(KilledFold),
+    2 -> Gen.chooseNum(0, 2).map(KilledFold),
     2 -> Gen.const(Compact),
-    1 -> genLayoutTable.map(TornFwd),
-    1 -> genLayoutTable.map(TornBack))
+    1 -> Gen.oneOf(Dedup.LayoutTables.map(_.suffix)).map(KilledCompact))
   private val genSchedule: Gen[List[Op]] =
     Gen.chooseNum(4, 10).flatMap(n => Gen.listOfN(n, genOp))
 
   test("layout maintenance invariants hold over generated admit/fold/killed-fold/compact/torn-compact schedules") {
-    val schedules =
-      sys.env.get("GRAFT_LAYOUT_SCHEDULES").flatMap(_.toIntOption).getOrElse(6)
+    val schedules = Bench.positiveInt("GRAFT_LAYOUT_SCHEDULES",
+      sys.env.get("GRAFT_LAYOUT_SCHEDULES"), 6)
     val root = java.nio.file.Files.createTempDirectory("graft-layout-occ").toString
     val docs = Tables.documents(spark, TestSpark.sf)
       .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
@@ -78,21 +75,21 @@ class CorpusLayoutPropertySpec extends AnyFunSuite {
     for (s <- 0 until schedules) {
       val ops = genSchedule.pureApply(Gen.Parameters.default, Seed(9200L + s))
       val prefix = s"glp_$s"
+      val rb = s"${prefix}_rb"
       val admitted = s"$root/adm_$s"
-      def layoutTables = Seq(s"${prefix}_bands", s"${prefix}_hashes", s"${prefix}_grams")
-      (layoutTables ++ layoutTables.map(_ + "__compact") ++
-        layoutTables.map(_.replace(prefix, prefix + "_rb")))
+      def layoutTables(p: String) = Dedup.LayoutTables.map(t => s"${p}_${t.suffix}")
+      (layoutTables(prefix) ++ layoutTables(rb))
         .foreach(t => graft.Ddl.dropManagedTable(spark, t))
       Dedup.writeCorpusDedupLayout(corpus, prefix, buckets = Buckets)
 
       var epoch = 0
       val slices = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       val expectedAdmitted = scala.collection.mutable.Set.empty[Long]
+      val killedCompacts = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
       def textStore: DataFrame =
         (docs +: slices.toSeq).reduce(_ unionByName _).select(col("doc_id"), col("text"))
 
-      // One crawl epoch through the production sink: writer-entry torn
-      // recovery on all three tables, probe, ledger commit.
+      // One crawl epoch through the production sink: probe, ledger commit.
       val sink = Dedup.streamingIncrementalDedupSink(prefix, admitted, "glpapp")
       def admitOnce(): Unit = {
         epoch += 1
@@ -114,64 +111,31 @@ class CorpusLayoutPropertySpec extends AnyFunSuite {
         expectedAdmitted ++= fresh.select(col("doc_id")).collect().map(_.getLong(0))
         sink(batch, epoch.toLong)
       }
-      def unfoldedDelta: DataFrame = {
-        val v = Versioned.currentVersion(spark, admitted)
-        val doneV = Versioned.lastCommittedBatch(spark, admitted, s"$prefix.fold.done")
-        Versioned.changesBetween(spark, admitted, doneV.getOrElse(0L), v)
-          .select(col("doc_id"))
-      }
 
       ops.foreach {
         case Admit => admitOnce()
         case Fold =>
           if (epoch == 0) admitOnce()
-          Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore,
-            buckets = Buckets)
-        case KilledFold =>
+          Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore)
+        case KilledFold(n) =>
           if (epoch == 0) admitOnce()
-          val delta = unfoldedDelta.join(textStore, Seq("doc_id"))
-          if (!delta.isEmpty) {
-            // The fold's crash window: intent marker + a PARTIAL bands
-            // append, no grams/hashes, no done marker. The torn rows
-            // must be recovered (not duplicated) by whichever fold runs
-            // next. Recover swap state first — this is a writer too.
-            layoutTables.foreach(Io.finishTornCompaction(spark, _))
-            val v = Versioned.currentVersion(spark, admitted)
-            Versioned.commitBatchAppend(spark, admitted, s"$prefix.fold.intent", v,
-              Versioned.read(spark, admitted).limit(0))
-            val bt = Lsh.minhashBandTable(delta, 3, 8, 4)
-            Io.appendBucketedBy(bt.filter(col("band") % 2 === 0),
-              s"${prefix}_bands", Seq("band", "sig"), Buckets)
-          }
+          Dedup.foldInto(spark, prefix, Dedup.LayoutTables.take(n), admitted, textStore,
+            3, 8, 4)
         case Compact =>
           // maxFilesPerBucket=0 so every populated table rewrites — the
           // property is about interleaving safety, not thresholds.
           Dedup.compactCorpusLayout(spark, prefix, maxFilesPerBucket = 0)
-        case TornFwd(suffix) =>
-          val t = s"${prefix}_$suffix"
-          if (spark.catalog.tableExists(t) &&
-              !spark.catalog.tableExists(s"${t}__compact"))
-            spark.sql(s"ALTER TABLE `$t` RENAME TO `${t}__compact`")
-        case TornBack(suffix) =>
-          val t = s"${prefix}_$suffix"
-          if (spark.catalog.tableExists(t) &&
-              !spark.catalog.tableExists(s"${t}__compact")) {
-            val meta = spark.sessionState.catalog.getTableMetadata(
-              org.apache.spark.sql.catalyst.TableIdentifier(t))
-            val spec = meta.bucketSpec.get
-            val keys = spec.bucketColumnNames
-            spark.table(t).write
-              .bucketBy(spec.numBuckets, keys.head, keys.tail: _*)
-              .sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-              .format("parquet").saveAsTable(s"${t}__compact")
-          }
+        case KilledCompact(suffix) =>
+          val path = Ddl.warehousePath(spark, s"${prefix}_$suffix")
+          val txn = Versioned.begin(spark, path)
+          Versioned.stage(txn, Versioned.read(spark, path).coalesce(1))
+          killedCompacts(suffix) += 1
       }
 
-      // Closing fold: recovers any torn swap / torn fold and folds the
-      // remaining admissions, so the invariants compare settled states.
+      // Closing fold: finishes any killed fold and folds the remaining
+      // admissions, so the invariants compare settled states.
       if (epoch == 0) admitOnce()
-      Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore,
-        buckets = Buckets)
+      Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore)
 
       // ---- invariant 1: exactly-once admission -------------------------
       val got = Versioned.read(spark, admitted)
@@ -183,24 +147,27 @@ class CorpusLayoutPropertySpec extends AnyFunSuite {
           s"(missing=${(expectedAdmitted -- got.toSet).take(3)}, " +
           s"extra=${(got.toSet -- expectedAdmitted).take(3)})")
 
-      // ---- invariant 2: fold ≡ rebuild, no shadows left ----------------
-      layoutTables.foreach { t =>
-        assert(spark.catalog.tableExists(t), s"schedule $s: $t missing")
-        assert(!spark.catalog.tableExists(s"${t}__compact"),
-          s"schedule $s: shadow ${t}__compact left behind")
-      }
-      val rb = s"${prefix}_rb"
+      // ---- invariant 2: fold ≡ rebuild ---------------------------------
       val admittedTexts = Versioned.read(spark, admitted)
         .select(col("doc_id")).join(textStore, Seq("doc_id"))
       Dedup.writeCorpusDedupLayout(
         corpus.select(col("doc_id"), col("text")).unionByName(admittedTexts),
         rb, buckets = Buckets)
-      def snap(p: String): Seq[Seq[String]] =
-        Seq(s"${p}_bands", s"${p}_hashes", s"${p}_grams")
-          .map(t => spark.table(t).collect().map(_.toString).sorted.toSeq)
-      assert(snap(prefix) == snap(rb),
-        s"schedule $s (${ops.mkString(",")}): fold != rebuild")
-      (layoutTables ++ layoutTables.map(_.replace(prefix, rb)))
+      def snap(p: String): Seq[Seq[String]] = Dedup.LayoutTables
+        .map(_.read(spark, p).collect().map(_.toString).sorted.toSeq)
+      val folded = snap(prefix)
+      assert(folded == snap(rb), s"schedule $s (${ops.mkString(",")}): fold != rebuild")
+
+      // ---- invariant 3: vacuum removes only the killed stages ----------
+      Dedup.LayoutTables.foreach { t =>
+        val removed = Versioned.vacuum(spark, t.path(spark, prefix), minAgeMs = 0)
+        assert(removed == killedCompacts(t.suffix),
+          s"schedule $s (${ops.mkString(",")}): vacuum of ${t.suffix} removed " +
+            s"$removed directories, ${killedCompacts(t.suffix)} compactions were killed")
+      }
+      assert(snap(prefix) == folded,
+        s"schedule $s (${ops.mkString(",")}): vacuum changed the layout's rows")
+      (layoutTables(prefix) ++ layoutTables(rb))
         .foreach(t => graft.Ddl.dropManagedTable(spark, t))
       slices.foreach(graft.unpersistCheckpoint)
       slices.clear()

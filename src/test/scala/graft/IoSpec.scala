@@ -126,18 +126,16 @@ class IoSpec extends AnyFunSuite {
 
   test("bucketed appends refuse to create a missing table") {
     // SaveMode.Append + saveAsTable silently CREATEs a missing table —
-    // which turns a torn compaction swap into silent data loss (the
-    // recreated delta-only table reads as the "original" and the next
-    // rollback drops the shadow holding the standing corpus). Appends
-    // are maintenance, never creation: the layout append path must
-    // fail loud on a missing table.
+    // which would publish a standing index holding only the batch.
+    // Appends are maintenance, never creation: the bucketed append path
+    // must fail loud on a missing table.
     import spark.implicits._
     val df = Seq((1L, "a")).toDF("k", "v")
     spark.sql("DROP TABLE IF EXISTS io_no_create")
     val e = intercept[IllegalArgumentException] {
       Io.appendBucketedBy(df, "io_no_create", Seq("k"), 2)
     }
-    assert(e.getMessage.contains("finishTornCompaction"))
+    assert(e.getMessage.contains("would hold only the batch"))
     assert(!spark.catalog.tableExists("io_no_create"))
   }
 }

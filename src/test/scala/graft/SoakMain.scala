@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *     must swallow the duplicate — this is the real crash-recovery
   *     path, not a hand-driven re-invocation;
   *   - periodic folds ([[graft.operators.Dedup.refreshCorpusLayout]]),
-  *     one of them KILLED mid-flight (intent marker + partial bands
-  *     append, no done marker) and recovered by the next fold;
+  *     one of them KILLED mid-flight (committed to the bands table
+  *     only) and finished by the next fold;
   *   - THRESHOLD-TRIGGERED layout compactions
   *     ([[graft.operators.Dedup.compactCorpusLayout]] at the default
   *     threshold) after every fold — the production maintenance
@@ -44,8 +44,7 @@ object SoakMain {
 
     val prefix = "graft_soak"
     val tables = Seq(s"${prefix}_bands", s"${prefix}_hashes", s"${prefix}_grams")
-    (tables ++ tables.map(_ + "__compact") ++
-      Seq(s"${prefix}_rb_bands", s"${prefix}_rb_hashes", s"${prefix}_rb_grams"))
+    (tables ++ Seq(s"${prefix}_rb_bands", s"${prefix}_rb_hashes", s"${prefix}_rb_grams"))
       .foreach(t => graft.Ddl.dropManagedTable(spark, t))
 
     val docs = Tables.documents(spark, sfDir)
@@ -171,7 +170,7 @@ object SoakMain {
       val t = System.nanoTime()
       val r = graft.operators.Dedup.refreshCorpusLayout(spark, prefix, admitted, textStore)
       println(f"[soak] fold $label: ${(System.nanoTime() - t) / 1e9}%.2f s " +
-        s"(done-version $r)")
+        s"(folded through $r)")
       maybeCompact(label)
     }
 
@@ -200,27 +199,26 @@ object SoakMain {
     fold("steady")
 
     // Killed fold on a synthetic late admission: admit one more tiny
-    // epoch OUTSIDE the stream, mark intent, append partial bands, die.
+    // epoch OUTSIDE the stream, fold it into the bands table only, die.
     val late = freshIds(vocab(999, crawlPool.filter(col("doc_id") % 31 === 0)),
       500000000L).localCheckpoint() // id band disjoint from fresh/dup/echo
     baseSink(late, 1000L)
     val lateStore = textStore.unionByName(late.select(col("doc_id"), col("text")))
-    val v = graft.sources.Versioned.currentVersion(spark, admitted)
-    graft.sources.Versioned.commitBatchAppend(spark, admitted,
-      s"$prefix.fold.intent", v, graft.sources.Versioned.read(spark, admitted).limit(0))
-    graft.sources.Io.appendBucketedBy(
-      graft.operators.Lsh.minhashBandTable(
-        late.select(col("doc_id"), col("text")), 3, 8, 4),
-      s"${prefix}_bands", Seq("band", "sig"), 8)
-    println("[soak] fold killed after intent + partial bands append")
+    require(graft.operators.Dedup.foldInto(spark, prefix,
+      graft.operators.Dedup.LayoutTables.take(1), admitted, lateStore, 3, 8, 4).nonEmpty,
+      "killed fold committed nothing")
+    println("[soak] fold killed after its bands commit")
     val t2 = System.nanoTime()
     val rec = graft.operators.Dedup.refreshCorpusLayout(spark, prefix, admitted, lateStore)
     println(f"[soak] torn-recovery fold: ${(System.nanoTime() - t2) / 1e9}%.2f s " +
-      s"(done-version $rec)")
+      s"(folded through $rec)")
     require(rec.nonEmpty, "recovery fold was a no-op")
     maybeCompact("post-recovery")
-    println("[soak] final layout files: " + tables.map(t =>
-      s"$t=${graft.sources.Io.tableFileCount(spark, t)}").mkString(", "))
+    def layoutPath(t: String) = graft.Ddl.warehousePath(spark, t)
+    println("[soak] final layout files: " + tables.map { t =>
+      val v = graft.sources.Versioned.currentVersion(spark, layoutPath(t))
+      s"$t=${graft.sources.Versioned.fileCount(spark, layoutPath(t), v)}"
+    }.mkString(", "))
     val wallAll = (System.nanoTime() - tAll) / 1e9
 
     // ---- verdicts -------------------------------------------------------
@@ -247,7 +245,7 @@ object SoakMain {
         s"extra=${(admittedSet -- expectAdmit).take(5)}")
     // fold ≡ rebuild, order-independent checksum per layout table.
     def sig(t: String): (BigDecimal, Long) = {
-      val r = spark.table(t)
+      val r = graft.sources.Versioned.read(spark, layoutPath(t))
       // decimal(38) sum: exact, order-independent, and immune to the
       // ANSI long-overflow a plain sum of 64-bit hashes hits at scale.
       val row = r.select(xxhash64(to_json(struct(

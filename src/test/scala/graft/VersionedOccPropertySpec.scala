@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * VersionedSpec pins the protocol on hand-written examples; the
   * fold-back now rides the same ledger, so the invariants get pinned on
   * GENERATED schedules — random interleavings of committing writers,
-  * replayed batches, aborted transactions, fold marker pairs, and
-  * 3-writer parallel bursts that race the put-if-absent rename and
+  * replayed batches, aborted transactions, folds into a second table,
+  * and 3-writer parallel bursts that race the put-if-absent rename and
   * exercise the rebase path for real.
   *
   * Invariants asserted after every schedule, on the table's own state
@@ -21,11 +21,14 @@ import org.scalatest.funsuite.AnyFunSuite
   *   2. no lost commit / exactly-once: the table's rows are EXACTLY
   *      one copy of every first-time-committed batch payload — replays
   *      add nothing, aborts add nothing, racing writers all land;
-  *   3. fold windows partition the admissions: with done-marker
-  *      fold-through versions d1 < … < dk, changesBetween over (0,d1],
-  *      (d1,d2], …, (dk,current] covers every committed row exactly
-  *      once — the "no double fold / no skipped row" half of fold
-  *      exactly-once, independent of the layout kernels.
+  *   3. folds copy each row exactly once: a Fold appends the table's
+  *      changes in (d, v] to a second table under ledger tag v, where
+  *      d is the last tag that table's ledger holds (the per-table
+  *      discipline of Dedup.refreshCorpusLayout), and a replay of v is
+  *      skipped; after the schedule the second table holds exactly the
+  *      rows of the first table as of its last fold version — the "no
+  *      double fold / no skipped row" half of fold exactly-once,
+  *      independent of the layout kernels.
   *
   * Fixed Gen seeds — deterministic run-to-run. GRAFT_OCC_SCHEDULES
   * overrides the schedule count (default sized for the CI suite; the
@@ -51,23 +54,9 @@ class VersionedOccPropertySpec extends AnyFunSuite {
   private val genSchedule: Gen[List[Op]] =
     Gen.chooseNum(4, 12).flatMap(n => Gen.listOfN(n, genOp))
 
-  /** Every fold-through version a done marker committed, ascending.
-    * The manifest meta line format `#txn=<app>/<batchId>` is part of
-    * the documented commit protocol (Versioned Scaladoc), so the spec
-    * reads it directly — the ledger's own source of truth, not spec
-    * bookkeeping. */
-  private def doneFoldVersions(path: String): Seq[Long] = {
-    val dir = new java.io.File(s"$path/_versions")
-    if (!dir.exists()) return Seq.empty
-    dir.listFiles().toSeq.filter(_.getName.endsWith(".manifest"))
-      .flatMap { f =>
-        val src = scala.io.Source.fromFile(f)
-        try src.getLines().filter(_.startsWith("#txn=t.fold.done/"))
-          .map(_.stripPrefix("#txn=t.fold.done/").toLong).toList
-        finally src.close()
-      }
-      .distinct.sorted
-  }
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Int, Long, Long)] =
+    df.select(col("w"), col("b"), col("u"))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
 
   test("OCC ledger invariants hold over generated writer/replay/abort/fold/burst schedules") {
     val schedules =
@@ -80,6 +69,7 @@ class VersionedOccPropertySpec extends AnyFunSuite {
     for (s <- 0 until schedules) {
       val ops = genSchedule.pureApply(Gen.Parameters.default, Seed(7700L + s))
       val path = s"$root/t$s"
+      val foldPath = s"$root/f$s"
       var uid = 0L
       val nextBatch = scala.collection.mutable.Map(0 -> 0L, 1 -> 0L, 2 -> 0L)
       // (writer, batchId, uid) of every FIRST-TIME issued commit.
@@ -114,16 +104,15 @@ class VersionedOccPropertySpec extends AnyFunSuite {
           Versioned.abort(spark, txn)
         case Fold =>
           if (issued.isEmpty) commitOnce(1)
-          // refreshCorpusLayout's marker discipline verbatim: intent@v
-          // then done@v, short-circuit when already folded through v.
+          // refreshCorpusLayout's per-table ledger: commit (done, v]
+          // once under tag v; a replay of v is skipped.
           val v = Versioned.currentVersion(spark, path)
-          val doneV = Versioned.lastCommittedBatch(spark, path, "t.fold.done")
-          if (!doneV.exists(_ >= v)) {
-            Versioned.commitBatchAppend(spark, path, "t.fold.intent", v,
-              Versioned.read(spark, path).limit(0))
-            Versioned.commitBatchAppend(spark, path, "t.fold.done", v,
-              Versioned.read(spark, path).limit(0))
-          }
+          val done = Versioned.lastCommittedBatch(spark, foldPath, "fold").getOrElse(0L)
+          def foldOnce() = Versioned.commitBatchAppend(spark, foldPath, "fold", v,
+            Versioned.changesBetween(spark, path, done, v))
+          if (done < v)
+            assert(foldOnce().nonEmpty, s"schedule $s: first fold through $v was skipped")
+          assert(foldOnce().isEmpty, s"schedule $s: replayed fold through $v landed twice")
         case Burst =>
           // Three writers race begin→stage→rename concurrently; the
           // losers must rebase and land, not vanish. (First burst on an
@@ -143,28 +132,21 @@ class VersionedOccPropertySpec extends AnyFunSuite {
       assert(vs == (1L to vs.size.toLong),
         s"schedule $s: version chain $vs is not 1..${vs.size}")
       // ---- invariant 2: exactly-once, no lost commit -------------------
-      val got = Versioned.read(spark, path)
-        .select(col("w"), col("b"), col("u"))
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+      val got = rowsOf(Versioned.read(spark, path))
       assert(got.sorted == issued.toSeq.sorted,
         s"schedule $s: table rows != first-time commits " +
           s"(missing=${(issued.toSet -- got.toSet).take(3)}, " +
           s"extra=${(got.toSet -- issued.toSet).take(3)})")
-      // ---- invariant 3: fold windows partition the admissions ----------
-      val current = Versioned.currentVersion(spark, path)
-      val bounds = (doneFoldVersions(path) :+ current).distinct.sorted
-      val windowRows = (0L +: bounds).zip(bounds).map { case (lo, hi) =>
-        if (lo >= hi) Seq.empty
-        else Versioned.changesBetween(spark, path, lo, hi)
-          .select(col("w"), col("b"), col("u"))
-          .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+      // ---- invariant 3: folds copy each row exactly once ---------------
+      Versioned.lastCommittedBatch(spark, foldPath, "fold").foreach { lastFold =>
+        val folded = rowsOf(Versioned.read(spark, foldPath))
+        val source = rowsOf(Versioned.readAsOf(spark, path, lastFold))
+        assert(folded.size == folded.toSet.size,
+          s"schedule $s: a row was folded twice (double fold)")
+        assert(folded.sorted == source.sorted,
+          s"schedule $s: folds miss rows (skipped fold): " +
+            s"${(source.toSet -- folded.toSet).take(3)}")
       }
-      val all = windowRows.flatten
-      assert(all.size == all.toSet.size,
-        s"schedule $s: a row appears in two fold windows (double fold)")
-      assert(all.toSet == issued.toSet,
-        s"schedule $s: fold windows miss rows (skipped fold): " +
-          s"${(issued.toSet -- all.toSet).take(3)}")
     }
   }
 }

@@ -225,6 +225,44 @@ class VersionedSpec extends AnyFunSuite {
     assert(Versioned.readAsOf(spark, path, 1).count() == 4)
   }
 
+  test("a bucketed table keeps its spec through appends and optimize: exchange-free key joins, bucket-pruned key filters") {
+    import org.apache.spark.sql.catalyst.catalog.BucketSpec
+    import org.apache.spark.sql.functions.col
+    val path = freshTable()
+    val spec = BucketSpec(4, Seq("k"), Seq("k"))
+    def batch(lo: Int) = (lo until lo + 40).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+    Versioned.create(spark, path, batch(0), Some(spec))
+    assert(Versioned.commitBatchAppend(spark, path, "w", 0L, batch(40)).contains(2L))
+    assert(Versioned.commitBatchAppend(spark, path, "w", 1L, batch(80)).contains(3L))
+    val filesBefore = Versioned.fileCount(spark, path, 3L)
+    assert(Versioned.optimize(spark, path).contains(4L))
+    // 1. The spec survives every commit: the appends and the optimize
+    //    took it from their base manifest, and every file is bucketed.
+    assert(manifests(path).size == 4 && manifests(path).forall(m =>
+      Files.readString(m).linesIterator.contains("#buckets=4;k;k")))
+    assert(Versioned.bucketSpec(spark, path).contains(spec))
+    assert(Versioned.fileCount(spark, path, 4L) < filesBefore)
+    assert(Versioned.read(spark, path).inputFiles.forall(f =>
+      org.apache.spark.sql.execution.datasources.BucketingUtils
+        .getBucketId(new org.apache.hadoop.fs.Path(f).getName).isDefined))
+    assert(Versioned.read(spark, path).collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L until 120L))
+    // 2. A join on the key shuffles only the other side: the versioned
+    //    scan is bucketed and feeds the join with no exchange.
+    val sess = spark.newSession()
+    sess.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val j = Versioned.read(sess, path)
+      .join(sess.range(0, 200).select(col("id").as("k"), col("id").as("w")), "k")
+    assert(j.collect().length == 120)
+    val plan = j.queryExecution.executedPlan.treeString.split("== Initial Plan ==")(0)
+    assert(plan.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1 &&
+      plan.contains("Bucketed: true"), s"versioned side not read pre-shuffled:\n$plan")
+    // 3. A key filter reads one bucket of the four.
+    val f = Versioned.read(spark, path).filter(col("k") === 7L)
+    assert(f.collect().map(_.getString(1)).toSeq == Seq("v7"))
+    assert(TestSpark.bucketsRead(f, path) == ((1, 4)))
+  }
+
   test("hive-partitioned stages record partition columns last and read back correctly") {
     val path = freshTable()
     Versioned.commitBatchAppend(spark, path, "w", 0L,
